@@ -344,7 +344,7 @@ def q_doc_scores_fused(spark, sf_dir):
     # ONE tokenize EXPRESSION for the whole slot: the classifier fold
     # and the bigram LM consume the same lowercased-whitespace split.
     # r12: the r11 tk.persist is gone — the LM result is now fully lazy
-    # (window-count self_lm_score), so the only frame materialized at
+    # (self_lm_score persists nothing), so the only frame materialized at
     # build time is the checkpointed classifier scoring (5k small rows),
     # which reads the tokenize projection exactly once; caching a frame
     # with one live consumer only adds the cache write. The LM subtree

@@ -88,12 +88,38 @@ def resolve_scale_mode(explicit: bool | None = None,
     return _SCALE_MODE
 
 
+# Allowed values of the string-selected physical lanes shared by
+# several operators (single-operator lanes spell theirs at the call).
+HASH_FNS = ("xxhash64", "portable", "arrow")
+FOLD_GRAM = ("fold", "gram")
+
+
+def check_lane(value, allowed: tuple, lane: str):
+    """The one place lane names are validated: a value outside
+    ``allowed`` raises instead of silently taking some operator's
+    else-branch (a mistyped ``hash_fn`` would otherwise compute xxhash64
+    and be stamped into state under the mistyped name)."""
+    if value not in allowed:
+        raise ValueError(f"unknown {lane} {value!r}; expected one of "
+                         f"{', '.join(map(repr, allowed))}")
+    return value
+
+
 def resolve_backend(value: str | None, scale_value: str,
-                    parity_value: str = "fold") -> str:
-    """An explicit argument wins; ``None`` resolves from scale mode."""
-    if value is not None:
-        return value
-    return scale_value if _SCALE_MODE else parity_value
+                    parity_value: str = "fold", *,
+                    allowed: tuple[str, ...], lane: str) -> str:
+    """An explicit argument wins; ``None`` resolves from scale mode.
+    Either way the result is checked against ``allowed``."""
+    if value is None:
+        value = scale_value if _SCALE_MODE else parity_value
+    return check_lane(value, allowed, lane)
+
+
+def resolve_hash_fn(value: str | None) -> str:
+    """The MinHash/SimHash ``hash_fn`` lane: arrow at scale, xxhash64
+    otherwise."""
+    return resolve_backend(value, "arrow", "xxhash64", allowed=HASH_FNS,
+                           lane="hash_fn")
 
 
 def resolve_exact(value: bool | None) -> bool:

@@ -1087,10 +1087,14 @@ class Engine:
         memoized per corpus on this engine instance so steady-state
         microbatches pay no extra state scan.
         """
+        from sparvi_spark.config import HASH_FNS, check_lane
         from sparvi_spark.operators.dedup import (
             dedup_near, minhash_lsh_pairs, minhash_pairs_from_sigs,
             minhash_signed, scoped_caches)
 
+        # validated before anything reads or stamps state: the family
+        # string is what the store records for this corpus
+        check_lane(hash_fn, HASH_FNS, "hash_fn")
         run_at = run_at or _utcnow()
         self._check_sig_family(corpus_name, hash_fn, n, num_hashes)
         # A streaming microbatch often arrives in 1-2 input partitions

@@ -21,6 +21,9 @@ import threading
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sparvi_spark.config import (
+    FOLD_GRAM, check_lane, resolve_backend, resolve_hash_fn)
+
 # --------------------------------------------------------------------------
 # Scoped cache registry: LSH operators persist() internal frames (the banded
 # signature base) that the RESULT still references lazily, so they cannot
@@ -331,6 +334,7 @@ def dedup_near(
     (one max_by per component), so the cluster keeps its single
     best-quality member.
     """
+    check_lane(clustering, ("greedy", "components"), "clustering")
     if clustering == "components":
         comp = connected_components(pairs, max_iters=max_iters)
         if prefer_col is None:
@@ -352,8 +356,6 @@ def dedup_near(
                 .where(F.col("node") != F.col("__keep"))
                 .select(F.col("node").alias("__dup")).distinct())
         return df.join(dups, df[id_col] == F.col("__dup"), "left_anti")
-    if clustering != "greedy":
-        raise ValueError(f"unknown clustering {clustering!r}")
     if prefer_col is None:
         dups = pairs.select(F.col("id_b").alias("__dup")).distinct()
         if bounded:
@@ -540,9 +542,7 @@ def minhash_signatures(
     lets callers share a precomputed (__id, __grams) frame from
     ``_doc_gram_arrays`` (expr lanes only).
     """
-    from sparvi_spark.config import resolve_backend
-
-    hash_fn = resolve_backend(hash_fn, "arrow", "xxhash64")
+    hash_fn = resolve_hash_fn(hash_fn)
     if hash_fn == "arrow":
         if grams is not None:
             raise ValueError("hash_fn='arrow' computes its own gram "
@@ -564,9 +564,7 @@ def minhash_signed(df: DataFrame, id_col: str, text_col: str, n: int = 3,
     search + state append, see ``Engine.dedup_corpus_incremental``)
     persist this ONCE and pass it to ``minhash_lsh_pairs(signed=...)``
     instead of paying the gram+signature build per consumer."""
-    from sparvi_spark.config import resolve_backend
-
-    hash_fn = resolve_backend(hash_fn, "arrow", "xxhash64")
+    hash_fn = resolve_hash_fn(hash_fn)
     if hash_fn == "arrow":
         signed = _gram_hash_sig_arrow(df, id_col, text_col, n, num_hashes)
     else:
@@ -616,9 +614,7 @@ def minhash_lsh_pairs(
     same filter). Default False: a full-corpus self-join must never
     broadcast the corpus.
     """
-    from sparvi_spark.config import resolve_backend
-
-    hash_fn = resolve_backend(hash_fn, "arrow", "xxhash64")
+    hash_fn = resolve_hash_fn(hash_fn)
     rows_per_band = num_hashes // bands
     # One persisted frame carries the shingle SET, its size, and the banded
     # signature per doc — ALL computed as per-row projections (array_distinct
@@ -716,9 +712,7 @@ def minhash_lsh_pairs_cross(
     ``hash_fn`` as in ``minhash_lsh_pairs`` ("arrow" = vectorized numpy
     lane; ``None`` resolves from scale mode).
     """
-    from sparvi_spark.config import resolve_backend
-
-    hash_fn = resolve_backend(hash_fn, "arrow", "xxhash64")
+    hash_fn = resolve_hash_fn(hash_fn)
     rows_per_band = num_hashes // bands
     if hash_fn == "portable":
         band_hash = (f"aggregate(slice(sig, b * {rows_per_band} + 1, "
@@ -800,7 +794,6 @@ def minhash_pairs_from_sigs(
     hash_fn: str | None = None,
     small_side: str | None = None,
     ref_bands_col: str | None = None,
-    verify_broadcast: bool | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs between two SIGNATURE sets -> (id, ref_id,
     est_jaccard) — no text, no gram sets. Inputs: ``new_sigs`` as
@@ -810,10 +803,10 @@ def minhash_pairs_from_sigs(
     signatures ("portable" = oracle-reproducible polynomial; "xxhash64"
     and "arrow" both band with xxhash64 — the signatures are plain
     longs either way); ``None`` resolves from scale mode.
-    ``small_side`` ("new"/"ref"/None) declares which input is bounded:
-    that side broadcasts, so the other — typically a stored corpus far
-    too large to shuffle per call — only streams (see the join comment
-    below). None preserves planner choice for comparable-size inputs.
+    ``small_side="new"`` declares the new side bounded: it broadcasts,
+    so the stored side — far too large to shuffle per call — only
+    streams (see the join comment below). None preserves planner choice
+    for comparable-size inputs.
     ``ref_bands_col`` names a column on ``ref_sigs`` holding
     PRECOMPUTED band hashes (``band_hashes_expr``, stamped at state
     append): rows carrying a correctly-sized array skip the per-call
@@ -837,9 +830,8 @@ def minhash_pairs_from_sigs(
     comment); that lane assumes one signature row per ref_id (the state
     contract).
     """
-    from sparvi_spark.config import resolve_backend
-
-    hash_fn = resolve_backend(hash_fn, "arrow", "xxhash64")
+    hash_fn = resolve_hash_fn(hash_fn)
+    check_lane(small_side, ("new", None), "small_side")
     computed = band_hashes_expr(hash_fn, num_hashes, bands)
 
     def _bands_src(bands_col: str | None, bands: int, computed: str) -> str:
@@ -892,9 +884,7 @@ def minhash_pairs_from_sigs(
         # (bounded by batch size × collision rate, never by state) and
         # SPILLS under pressure — strictly safer than the r11 shape,
         # whose (cands × batch-sigs) verify broadcast could exceed the
-        # 8 GB broadcast cap on a collision-heavy batch
-        # (``verify_broadcast`` existed to opt out; this lane no longer
-        # broadcasts anything unbounded, so the flag is moot here).
+        # 8 GB broadcast cap on a collision-heavy batch.
         rbs = ref_sigs.selectExpr(
             "ref_id", "sig AS __sb",
             f"posexplode({_bands_src(ref_bands_col, bands, computed)}) "
@@ -908,21 +898,11 @@ def minhash_pairs_from_sigs(
             .where(F.col("est_jaccard") >= threshold)
         )
     rb = _banded(ref_sigs, "ref_id", "ref_id", bands_col=ref_bands_col)
-    if small_side == "ref":
-        rb = F.broadcast(rb)
     cands = (nb.join(rb, ["band", "bh"])
              .select("id", "ref_id").distinct())
-    verify = cands.join(new_side, "id")
-    # ``verify_broadcast``: broadcasting (cands × new sigs) lets the
-    # ref-side verify scan stream instead of shuffle when cands is
-    # known-bounded; None preserves planner choice (cands is NOT
-    # output-bounded — one row per band collision, each carrying a
-    # num_hashes-long signature, so a forced broadcast can exceed the
-    # 8 GB broadcast-table cap where a shuffle would complete slowly).
-    if verify_broadcast:
-        verify = F.broadcast(verify)
     return (
-        verify.join(ref_sigs.selectExpr("ref_id", "sig AS __sb"), "ref_id")
+        cands.join(new_side, "id")
+        .join(ref_sigs.selectExpr("ref_id", "sig AS __sb"), "ref_id")
         .selectExpr("id", "ref_id", f"{est} AS est_jaccard")
         .where(F.col("est_jaccard") >= threshold)
     )
@@ -991,9 +971,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str,
     the engine-wide scale mode (arrow at scale, xxhash64 otherwise).
     Returns (id, simhash: bigint).
     """
-    from sparvi_spark.config import resolve_backend
-
-    hash_fn = resolve_backend(hash_fn, "arrow", "xxhash64")
+    hash_fn = resolve_hash_fn(hash_fn)
     if hash_fn == "arrow":
         return _simhash_arrow(df, id_col, text_col, bits)
     if hash_fn == "portable":
@@ -1130,16 +1108,14 @@ def embedding_neardup_pairs(
     an EXPLICIT ``pair_backend="gram"`` without a bucket still raises,
     because the caller asked for a contradiction).
     """
-    from sparvi_spark.config import resolve_backend
     from sparvi_spark.operators.similarity import (
         _cosine_with_norms, lsh_bucket_expr, norm_expr)
 
-    if pair_backend is None:
-        pair_backend = resolve_backend(None, "gram")
-        if pair_backend == "gram" and not bucket_col and lsh_bits is None:
-            lsh_bits = 16
-    if pair_backend not in ("fold", "gram"):
-        raise ValueError(f"unknown pair_backend {pair_backend!r}")
+    auto = pair_backend is None
+    pair_backend = resolve_backend(pair_backend, "gram", allowed=FOLD_GRAM,
+                                   lane="pair_backend")
+    if auto and pair_backend == "gram" and not bucket_col and lsh_bits is None:
+        lsh_bits = 16
     cols = [F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"),
             norm_expr(vec_col).alias("__n")]
     if bucket_col:
@@ -1370,11 +1346,8 @@ def contamination(
     SCALING.md round-10 table): the hash build moves to vectorized
     numpy, ~µs-per-window interpreter cost drops to ~ns-per-window.
     """
-    from sparvi_spark.config import resolve_backend
-
-    backend = resolve_backend(backend, "arrow", "expr")
-    if backend not in ("expr", "arrow"):
-        raise ValueError(f"unknown contamination backend {backend!r}")
+    backend = resolve_backend(backend, "arrow", "expr",
+                              allowed=("expr", "arrow"), lane="backend")
     if backend == "arrow":
         doc_sh = (_shingle_hash_rows(df, id_col, text_col, n)
                   .withColumnRenamed("gram", "shingle"))
@@ -1449,15 +1422,12 @@ def semantic_dedup(
     "fold" in parity mode because its summation order is bit-stable
     against the SQL oracles, "gram" at scale).
     """
-    from sparvi_spark.config import resolve_backend
     from sparvi_spark.operators.similarity import (
         _l2_dists_expr, l2_argmin_expr)
 
-    pair_backend = resolve_backend(pair_backend, "gram")
-    if keep not in ("min_id", "far_from_centroid"):
-        raise ValueError(f"unknown keep policy {keep!r}")
-    if pair_backend not in ("fold", "gram"):
-        raise ValueError(f"unknown pair_backend {pair_backend!r}")
+    pair_backend = resolve_backend(pair_backend, "gram", allowed=FOLD_GRAM,
+                                   lane="pair_backend")
+    check_lane(keep, ("min_id", "far_from_centroid"), "keep")
     if centroids is None:
         from sparvi_spark.operators.similarity import kmeans_train_sampled
 
@@ -1619,13 +1589,10 @@ def duplicate_spans(
     a batch rolling combine. ``None`` resolves from scale mode
     (arrow at scale, hash otherwise).
     """
-    from sparvi_spark.config import resolve_backend
-
-    gram_mode = resolve_backend(gram_mode, "arrow", "hash")
-    if scope not in ("corpus", "cross_doc"):
-        raise ValueError(f"unknown scope {scope!r}")
-    if gram_mode not in ("hash", "exact", "arrow"):
-        raise ValueError(f"unknown gram_mode {gram_mode!r}")
+    gram_mode = resolve_backend(gram_mode, "arrow", "hash",
+                                allowed=("hash", "exact", "arrow"),
+                                lane="gram_mode")
+    check_lane(scope, ("corpus", "cross_doc"), "scope")
     if gram_mode == "arrow":
         pos = _window_hash_rows(df, id_col, text_col, n)
     else:

@@ -134,7 +134,6 @@ def self_lm_score(
     text_col: str = "text",
     round_to: int = 9,
     tokens_col: str | None = None,
-    shape: str | None = None,
 ) -> DataFrame:
     """Score a corpus against its own bigram statistics — the outlier
     screen: documents whose transitions are rare in-corpus (gibberish,
@@ -148,29 +147,22 @@ def self_lm_score(
     this function's own split; arrays must be the same lowercased-
     whitespace split for outputs to stay bit-identical.
 
-    ``shape`` picks the physical plan; every lane computes the SAME
-    integer counts, so outputs are bit-identical (same IEEE division,
-    same decimal rounding) and the choice is purely physical:
-
-    - ``"agg"`` (default, r13 — the skew-safe lane): c(w1,w2) is a
-      two-level aggregation of the bigram stream (map-side partial agg,
-      shuffle bounded by DISTINCT bigrams, never by stream length) and
-      c(w1·) = sum over w2 is a window over the AGGREGATED model frame
-      (a w1 partition there holds at most |vocab| one-row-per-bigram
-      rows, bounded regardless of corpus size). The model then joins
-      back onto the stream on (w1, w2) — a join AQE can broadcast when
-      the model is small and SKEW-SPLIT when one bigram is hot, which
-      no window over the raw stream can be. The r12 window lane put
-      count(1) OVER (PARTITION BY w1) on the FULL bigram stream: at
-      100 TB a natural-language corpus guarantees a hot "the" partition
-      that one task must sort alone (VERDICT r12 item 1). Cost: the
-      stream subtree is consumed twice (model build + join probe) — two
-      passes over the token arrays instead of one, which measures at
-      parity locally (see OPTIMIZATION_r13.md) and is the right trade
-      at scale, where a single straggler partition dominates wall.
-    - ``"window"`` (the r12 lane, kept for A/B and for corpora KNOWN to
-      have no hot context token): c1/c12 as two window counts sharing
-      one full-stream Exchange on w1.
+    Plan (r13, the skew-safe shape): c(w1,w2) is a two-level
+    aggregation of the bigram stream (map-side partial agg, shuffle
+    bounded by DISTINCT bigrams, never by stream length) and c(w1·) =
+    sum over w2 is a window over the AGGREGATED model frame (a w1
+    partition there holds at most |vocab| one-row-per-bigram rows,
+    bounded regardless of corpus size). The model then joins back onto
+    the stream on (w1, w2) — a join AQE can broadcast when the model is
+    small and SKEW-SPLIT when one bigram is hot, which no window over
+    the raw stream can be. The r12 plan put count(1) OVER (PARTITION BY
+    w1) on the FULL bigram stream: at 100 TB a natural-language corpus
+    guarantees a hot "the" partition that one task must sort alone
+    (VERDICT r12 item 1). Cost: the stream subtree is consumed twice
+    (model build + join probe) — two passes over the token arrays
+    instead of one, which measures at parity locally (see
+    OPTIMIZATION_r13.md) and is the right trade at scale, where a
+    single straggler partition dominates wall.
     """
     toks = f"`{tokens_col}`" if tokens_col else _toks(text_col)
     tk = df.selectExpr(f"`{id_col}` as __id", f"{toks} as __tk")
@@ -180,21 +172,11 @@ def self_lm_score(
     a = float(SMOOTH_A)
     prob = (f"((cast(c12 as double) + {a!r}d) / "
             f"(cast(c1 as double) + {a!r}d * cast(v as double)))")
-    shape = shape or "agg"
-    if shape == "agg":
-        model = (doc_bg.groupBy("w1", "w2")
-                 .agg(F.expr("count(1)").alias("c12"))
-                 .selectExpr("w1", "w2", "c12",
-                             "sum(c12) OVER (PARTITION BY w1) as c1"))
-        scored = doc_bg.join(model, ["w1", "w2"]).join(F.broadcast(vocab))
-    elif shape == "window":
-        scored = (doc_bg.join(F.broadcast(vocab))
-                  .selectExpr("__id",
-                              "count(1) OVER (PARTITION BY w1) as c1",
-                              "count(1) OVER (PARTITION BY w1, w2) as c12",
-                              "v"))
-    else:
-        raise ValueError(f"unknown self_lm_score shape {shape!r}")
+    model = (doc_bg.groupBy("w1", "w2")
+             .agg(F.expr("count(1)").alias("c12"))
+             .selectExpr("w1", "w2", "c12",
+                         "sum(c12) OVER (PARTITION BY w1) as c1"))
+    scored = doc_bg.join(model, ["w1", "w2"]).join(F.broadcast(vocab))
     return (scored
             .selectExpr("__id",
                         f"cast(round({prob}, 15) as {_DEC}) as __p")

@@ -146,7 +146,6 @@ def exact_percentiles(
     cols: list[str],
     ps: tuple[float, ...] = (0.25, 0.5, 0.75),
     round_to: int = 6,
-    strategy: str = "bucketed",
 ) -> DataFrame:
     """Exact linear-interpolation percentiles for many numeric columns at
     once -> (column_name, p25, p50, p75, ...) — P5 (app.py:3416-3421
@@ -157,24 +156,18 @@ def exact_percentiles(
     value->count OpenHashMap per partition per column and merges all of
     them on one reducer — measured 4-7s on 4 x 600k-row columns (the merge
     is single-threaded and proportional to partials x distinct values).
-    Both strategies here first melt the columns into (column_name, value)
-    rows and dedup to (column, value, cnt) with map-side partial
-    aggregation — O(sum of column cardinalities) from there on — then
-    assign every value its sorted position (cumulative count) and pick
-    each quantile's two interpolation neighbors with conditional
-    aggregates. They differ in how the cumulative count is produced:
-
-    - ``bucketed`` (default): fully distributed two-phase prefix sum —
-      bucket values by a linear key, cumulative-sum inside (column,
-      bucket) tasks in parallel, shift by broadcast per-bucket offsets.
-      No single task ever holds a whole column; bucket skew affects
-      balance, never correctness.
-    - ``ordered``: one running-sum window per column (PARTITION BY column
-      ORDER BY v) — a shorter chain (~9 vs ~18 stages, 2 vs 3 jobs) but
-      ONE sort task per column, so a high-cardinality column serializes
-      on one core (measured 2x slower than bucketed on a 583k-distinct
-      column at sf0.1). Right when profiling many low-cardinality
-      columns where chain latency dominates.
+    This operator first melts the columns into (column_name, value) rows
+    and dedups to (column, value, cnt) with map-side partial aggregation
+    — O(sum of column cardinalities) from there on — then assigns every
+    value its sorted position (cumulative count) and picks each
+    quantile's two interpolation neighbors with conditional aggregates.
+    The cumulative count is a fully distributed two-phase prefix sum:
+    bucket values by a monotone key, cumulative-sum inside (column,
+    bucket) tasks in parallel, shift by broadcast per-bucket offsets. No
+    single task ever holds a whole column; bucket skew affects balance,
+    never correctness. (A single running-sum window per column was
+    measured 2x slower on a 583k-distinct column at sf0.1: one sort
+    task per column serializes it on one core.)
 
     Scale note: at 100 TB the profiler's ``exact=False`` mode
     (percentile_approx sketches, one pass, mergeable) is the intended
@@ -207,54 +200,38 @@ def exact_percentiles(
         df.sparkSession, [(c, None, 0) for c in cols],
         "column_name string, v double, cnt bigint")
     counts = counts.unionAll(sentinels)
-    if strategy == "ordered":
-        # One running-sum window per column over the DEDUPED counts: the
-        # groupBy collapses the sort volume to the column's cardinality,
-        # and the running ROWS frame streams (O(1) frame memory; the
-        # partition buffer is Spark's spillable window array). One sort
-        # task per column — columns parallelize, a single 10^9-distinct
-        # column would serialize and belongs on `bucketed`.
-        totals = (counts.groupBy("column_name")
-                  .agg(F.expr("sum(cnt)").alias("n")))
-        cum = (counts.join(F.broadcast(totals), "column_name")
-               .selectExpr(
-                   "*",
-                   "sum(cnt) OVER (PARTITION BY column_name ORDER BY v "
-                   "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) "
-                   "AS cum"))
-    else:
-        # Two-phase distributed prefix sum — bucket values by a key that
-        # is (weakly) MONOTONE in v, run the cumulative sum inside each
-        # (column, bucket) in parallel, then shift each bucket by the
-        # total of the buckets before it (a per-bucket aggregate,
-        # broadcast back). The key is floor(asinh(v) * 8): asinh is
-        # strictly monotone over all reals (sign-symmetric log-compress,
-        # no min/max statistics needed — which saves the stats aggregate
-        # + broadcast join a linear (v-mn)/(mx-mn) key requires), spans
-        # ~±5.7k buckets over the full double range with ~37 buckets per
-        # decade-ish of spread. NaN (sorts LAST in Spark) maps to a
-        # sentinel top bucket; NULL (the zero-weight sentinel rows) to
-        # bucket 0 where its cnt=0 is inert. Bucket skew affects
-        # BALANCE, never correctness. Per-column totals ride along in
-        # the offsets frame (sum over the whole column partition) — one
-        # broadcast carries off + n both.
-        bkey = ("coalesce(cast(floor(nanvl(asinh(v) * 8, "
-                "cast(1.0e18 as double))) as bigint), 0)")
-        bucketed = counts.selectExpr("*", f"{bkey} AS b")
-        loc = bucketed.selectExpr(
-            "*",
-            "sum(cnt) OVER (PARTITION BY column_name, b ORDER BY v) AS lcum")
-        offs = (
-            bucketed.groupBy("column_name", "b")
-            .agg(F.expr("sum(cnt)").alias("bsum"))
-            .selectExpr(
-                "column_name", "b",
-                "sum(bsum) OVER (PARTITION BY column_name ORDER BY b) - bsum "
-                "AS off",
-                "sum(bsum) OVER (PARTITION BY column_name) AS n")
-        )
-        cum = (loc.join(F.broadcast(offs), ["column_name", "b"])
-               .selectExpr("*", "off + lcum AS cum"))
+    # Two-phase distributed prefix sum — bucket values by a key that
+    # is (weakly) MONOTONE in v, run the cumulative sum inside each
+    # (column, bucket) in parallel, then shift each bucket by the
+    # total of the buckets before it (a per-bucket aggregate,
+    # broadcast back). The key is floor(asinh(v) * 8): asinh is
+    # strictly monotone over all reals (sign-symmetric log-compress,
+    # no min/max statistics needed — which saves the stats aggregate
+    # + broadcast join a linear (v-mn)/(mx-mn) key requires), spans
+    # ~±5.7k buckets over the full double range with ~37 buckets per
+    # decade-ish of spread. NaN (sorts LAST in Spark) maps to a
+    # sentinel top bucket; NULL (the zero-weight sentinel rows) to
+    # bucket 0 where its cnt=0 is inert. Bucket skew affects
+    # BALANCE, never correctness. Per-column totals ride along in
+    # the offsets frame (sum over the whole column partition) — one
+    # broadcast carries off + n both.
+    bkey = ("coalesce(cast(floor(nanvl(asinh(v) * 8, "
+            "cast(1.0e18 as double))) as bigint), 0)")
+    bucketed = counts.selectExpr("*", f"{bkey} AS b")
+    loc = bucketed.selectExpr(
+        "*",
+        "sum(cnt) OVER (PARTITION BY column_name, b ORDER BY v) AS lcum")
+    offs = (
+        bucketed.groupBy("column_name", "b")
+        .agg(F.expr("sum(cnt)").alias("bsum"))
+        .selectExpr(
+            "column_name", "b",
+            "sum(bsum) OVER (PARTITION BY column_name ORDER BY b) - bsum "
+            "AS off",
+            "sum(bsum) OVER (PARTITION BY column_name) AS n")
+    )
+    cum = (loc.join(F.broadcast(offs), ["column_name", "b"])
+           .selectExpr("*", "off + lcum AS cum"))
     # A row (v, cnt, cum) covers sorted positions [cum-cnt, cum); quantile p
     # needs positions floor(p*(n-1)) and ceil(p*(n-1)).
     marker_cols, aggs, out = [], [], []

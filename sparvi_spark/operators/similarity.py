@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sparvi_spark.config import FOLD_GRAM, resolve_backend
+
 
 def dot_expr(a: str, b: str) -> Column:
     """Deterministic fold-based dot product of two float arrays."""
@@ -86,11 +88,8 @@ def cosine_topk(
     mode (``sparvi_spark.config``): "fold" in parity mode, "gram" at
     scale.
     """
-    from sparvi_spark.config import resolve_backend
-
-    backend = resolve_backend(backend, "gram")
-    if backend not in ("fold", "gram"):
-        raise ValueError(f"unknown backend {backend!r}")
+    backend = resolve_backend(backend, "gram", allowed=FOLD_GRAM,
+                              lane="backend")
     if backend == "gram":
         return _cosine_topk_gram(corpus, queries, id_col, vec_col, k,
                                  exclude_self, max_gram_queries)
@@ -438,11 +437,8 @@ def ivf_topk_trained(
     probed cells either way. ``assign_backend=None`` resolves from the
     engine-wide scale mode (``sparvi_spark.config``): "fold" in parity
     mode, "gram" at scale."""
-    from sparvi_spark.config import resolve_backend
-
-    assign_backend = resolve_backend(assign_backend, "gram")
-    if assign_backend not in ("fold", "gram"):
-        raise ValueError(f"unknown assign_backend {assign_backend!r}")
+    assign_backend = resolve_backend(assign_backend, "gram",
+                                     allowed=FOLD_GRAM, lane="assign_backend")
     if assign_backend == "gram":
         c = (numpy_probe_assign(
                 corpus.select(F.col(id_col), F.col(vec_col)),

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sparvi_spark.config import check_lane
 from sparvi_spark.operators.dedup import tokens_expr
 
 # Tiny per-language function-word lists for the n-gram/stopword heuristic.
@@ -509,8 +510,9 @@ def dedup_lines_expr(text_col: str) -> Column:
     Cost is O(L²) in LINES PER DOCUMENT (each line scans its prefix) —
     fine for web documents (L is tens to hundreds), quadratic on
     pathological 10k-line concatenations. ``dedup_lines_in_doc`` routes
-    such docs to a linear posexplode path automatically (mode="auto");
-    use it whenever document shape is not under your control."""
+    such docs to a linear posexplode path automatically (per-doc line
+    count vs ``line_cap``); use it whenever document shape is not under
+    your control."""
     lines = f"split({text_col}, '\\n')"
     kept = (f"filter({lines}, (l, i) -> "
             f"not array_contains(slice({lines}, 1, i), l))")
@@ -522,27 +524,24 @@ def dedup_lines_in_doc(
     id_col: str,
     text_col: str,
     out_col: str = "text_dedup",
-    mode: str = "auto",
     line_cap: int = 512,
 ) -> DataFrame:
     """Within-document line dedup (keep FIRST occurrence, order preserved)
     with a scale-safe execution choice — same semantics as
-    ``dedup_lines_expr`` on every input:
+    ``dedup_lines_expr`` on every input. Each document is routed by its
+    own line count:
 
-    - ``mode="expr"``: the shuffle-free O(L²)-per-doc column expression —
-      cheapest when every document is small (web pages: L in the tens).
-    - ``mode="explode"``: posexplode + first-occurrence window — one
+    - at or under ``line_cap`` lines: the shuffle-free O(L²)-per-doc
+      column expression — cheapest when documents are small (web pages:
+      L in the tens), no shuffle rows at all.
+    - over ``line_cap``: posexplode + first-occurrence window — one
       (doc, line)-keyed shuffle pair, LINEAR in lines/doc; the only safe
       shape for 10k-line concatenated documents (exactly what web corpora
       contain).
-    - ``mode="auto"`` (default): per-document routing — docs at or under
-      ``line_cap`` lines take the expr branch (no shuffle rows at all),
-      longer docs take the explode branch; the union preserves per-doc
-      results exactly. At 100 TB the explode branch's shuffle carries
-      only the oversized tail, not the corpus.
+
+    The union preserves per-doc results exactly. At 100 TB the explode
+    branch's shuffle carries only the oversized tail, not the corpus.
     """
-    if mode not in ("auto", "expr", "explode"):
-        raise ValueError(f"mode {mode!r} not in auto|expr|explode")
     lines = f"split(`{text_col}`, '\\n')"
 
     def _expr_branch(part: DataFrame) -> DataFrame:
@@ -567,10 +566,6 @@ def dedup_lines_in_doc(
                     f"else array_join({keep}, '\\n') end"))
                 .drop("__lid", "__drop"))
 
-    if mode == "expr":
-        return _expr_branch(df)
-    if mode == "explode":
-        return _explode_branch(df)
     # NULL text routes to the expr branch. size(NULL) is config-dependent:
     # -1 under the default spark.sql.legacy.sizeOfNull=true (routes NULL
     # docs through n <= line_cap), NULL under ANSI/legacy=false (falls
@@ -606,6 +601,7 @@ def dedup_lines_corpus(
     array. Strictly linear; both shuffles are map-side-partial
     aggregations on (key8) / (id, pos).
     """
+    check_lane(hash_mode, ("hash", "exact"), "hash_mode")
     lines = f"split(`{text_col}`, '\\n')"
     key = "xxhash64(l)" if hash_mode == "hash" else "l"
     pos = (df.selectExpr(f"`{id_col}` AS __lid",

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sparvi_spark.config import check_lane
 from sparvi_spark.operators.sampling import hash_expr
 
 
@@ -31,6 +32,7 @@ def shard_expr(id_col: str, n_shards: int, method: str = "xxhash") -> Column:
     bit-for-bit (valid for \\|key\\| < 3.47e9, see sampling.hash_expr).
     Both are pure projections: assignment never shuffles.
     """
+    check_lane(method, ("xxhash", "portable"), "method")
     if method == "portable":
         return F.pmod(hash_expr(id_col), F.lit(n_shards)).cast("int")
     return F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)).cast("int")

@@ -176,3 +176,102 @@ def test_scale_mode_semantic_dedup_parity_away_from_threshold(spark):
             df, "vec_id", "embedding", threshold=0.99,
             centroids=cents).collect())
     assert kept_parity == kept_scale == [0, 3, 6]
+
+
+def _bad_lane_calls():
+    """(id, call(spark)) per lane-bearing operator, each passing one
+    unknown lane name — near-misses of real values (case, spelling),
+    the typo class an else-branch would swallow."""
+    from sparvi_spark.operators import dedup as d
+    from sparvi_spark.operators import similarity as s
+    from sparvi_spark.operators.text import dedup_lines_corpus
+    from sparvi_spark.sources.export import shard_expr
+
+    def docs(spark):
+        return spark.createDataFrame(
+            [(1, "a b c d"), (2, "a b c e")], "doc_id int, text string")
+
+    def sigs(spark, id_col):
+        return spark.createDataFrame([(1, [1, 2, 3, 4])],
+                                     f"{id_col} int, sig array<bigint>")
+
+    def vecs(spark):
+        return spark.createDataFrame([(1, [1.0, 0.0]), (2, [0.0, 1.0])],
+                                     "vec_id int, embedding array<float>")
+
+    return [
+        ("minhash_signatures.hash_fn", lambda sp: d.minhash_signatures(
+            docs(sp), "doc_id", "text", hash_fn="xxHash64")),
+        ("minhash_signed.hash_fn", lambda sp: d.minhash_signed(
+            docs(sp), "doc_id", "text", hash_fn="Arrow")),
+        ("minhash_lsh_pairs.hash_fn", lambda sp: d.minhash_lsh_pairs(
+            docs(sp), "doc_id", "text", hash_fn="xxhash")),
+        ("minhash_lsh_pairs_cross.hash_fn",
+         lambda sp: d.minhash_lsh_pairs_cross(
+             docs(sp), docs(sp), "doc_id", "text", hash_fn="murmur3")),
+        ("minhash_pairs_from_sigs.hash_fn",
+         lambda sp: d.minhash_pairs_from_sigs(
+             sigs(sp, "id"), sigs(sp, "ref_id"), hash_fn="xxHash64")),
+        ("minhash_pairs_from_sigs.small_side",
+         lambda sp: d.minhash_pairs_from_sigs(
+             sigs(sp, "id"), sigs(sp, "ref_id"), small_side="New")),
+        ("simhash.hash_fn", lambda sp: d.simhash(
+            docs(sp), "doc_id", "text", hash_fn="xxHash64")),
+        ("simhash_pairs.hash_fn", lambda sp: d.simhash_pairs(
+            docs(sp), "doc_id", "text", hash_fn="Portable")),
+        ("contamination.backend", lambda sp: d.contamination(
+            docs(sp), docs(sp), "doc_id", "text", backend="Arrow")),
+        ("duplicate_spans.gram_mode", lambda sp: d.duplicate_spans(
+            docs(sp), "doc_id", "text", gram_mode="xxhash64")),
+        ("duplicate_spans.scope", lambda sp: d.duplicate_spans(
+            docs(sp), "doc_id", "text", scope="crossdoc")),
+        ("dedup_near.clustering", lambda sp: d.dedup_near(
+            docs(sp), sp.createDataFrame([(1, 2)], "id_a int, id_b int"),
+            "doc_id", clustering="component")),
+        ("embedding_neardup_pairs.pair_backend",
+         lambda sp: d.embedding_neardup_pairs(
+             vecs(sp), "vec_id", "embedding", pair_backend="blas")),
+        ("semantic_dedup.pair_backend", lambda sp: d.semantic_dedup(
+            vecs(sp), "vec_id", "embedding", centroids=[[1.0, 0.0]],
+            pair_backend="Gram")),
+        ("semantic_dedup.keep", lambda sp: d.semantic_dedup(
+            vecs(sp), "vec_id", "embedding", centroids=[[1.0, 0.0]],
+            keep="max_id")),
+        ("cosine_topk.backend", lambda sp: s.cosine_topk(
+            vecs(sp), vecs(sp), backend="Fold")),
+        ("ivf_topk_trained.assign_backend", lambda sp: s.ivf_topk_trained(
+            vecs(sp), vecs(sp), [(0, [1.0, 0.0])], assign_backend="blas")),
+        ("dedup_lines_corpus.hash_mode", lambda sp: dedup_lines_corpus(
+            docs(sp), "doc_id", "text", hash_mode="xxhash64")),
+        ("shard_expr.method", lambda sp: shard_expr("doc_id", 4,
+                                                    method="xxhash64")),
+    ]
+
+
+@pytest.mark.parametrize("call", [c for _i, c in _bad_lane_calls()],
+                         ids=[i for i, _c in _bad_lane_calls()])
+def test_unknown_lane_name_raises(spark, call):
+    """Every string-selected lane is validated in one place
+    (config.check_lane): an unknown name raises, naming the allowed
+    values, instead of silently running some other lane."""
+    with pytest.raises(ValueError, match="expected one of"):
+        call(spark)
+
+
+def test_intake_unknown_hash_fn_raises_and_stores_nothing(spark, tmp_path):
+    """The intake stamps ``hash_fn`` into the store as the corpus's
+    hash family, so an unknown name must fail before any signature row
+    is written."""
+    from pyspark.sql import functions as F
+
+    from sparvi_spark.engine import Engine
+
+    engine = Engine(spark, str(tmp_path / "wh"))
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog"),
+         (2, "compilers parse source text into syntax trees")],
+        "doc_id int, text string")
+    with pytest.raises(ValueError, match="hash_fn"):
+        engine.dedup_corpus_incremental(docs, "c", hash_fn="xxHash64")
+    assert engine.state.read("corpus_signatures").where(
+        F.col("corpus_name") == "c").count() == 0

@@ -608,12 +608,11 @@ def test_exact_percentiles_all_null_column_surfaces(spark):
 
     df = spark.createDataFrame(
         [(1.0, None), (2.0, None), (3.0, None)], "a double, b double")
-    for strategy in ("ordered", "bucketed"):
-        out = {r["column_name"]: r for r in
-               exact_percentiles(df, ["a", "b"], strategy=strategy).collect()}
-        assert set(out) == {"a", "b"}, strategy
-        assert out["a"]["p50"] == 2.0, strategy
-        assert out["b"]["p25"] is None and out["b"]["p50"] is None, strategy
+    out = {r["column_name"]: r for r in
+           exact_percentiles(df, ["a", "b"]).collect()}
+    assert set(out) == {"a", "b"}
+    assert out["a"]["p50"] == 2.0
+    assert out["b"]["p25"] is None and out["b"]["p50"] is None
     # empty input: every requested column still surfaces (weighted path
     # left-joins from the literal requested frame)
     empty = spark.createDataFrame([], "a double, b double")

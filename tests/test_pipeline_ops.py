@@ -1079,10 +1079,11 @@ def test_text_normalization_hand_cases(spark):
 
 
 def test_dedup_lines_in_doc_modes_agree_and_scale(spark):
-    """dedup_lines_in_doc: expr/explode/auto produce identical results on
-    mixed docs; the explode path handles a 10k-line doc (the O(L²) expr
-    path's pathological case) in bounded time, matching a Python
-    first-occurrence reference."""
+    """dedup_lines_in_doc: the expr branch (every doc under a large
+    line_cap), the explode branch (line_cap=0) and the default routing
+    produce identical results on mixed docs; the explode path handles a
+    10k-line doc (the O(L²) expr path's pathological case) in bounded
+    time, matching a Python first-occurrence reference."""
     import random
     import time
 
@@ -1108,11 +1109,11 @@ def test_dedup_lines_in_doc_modes_agree_and_scale(spark):
         return "\n".join(out)
 
     expected = {i: ref(t) for i, t in small_docs}
-    for mode in ("expr", "explode", "auto"):
+    for line_cap in (10**6, 0, 512):
         got = {r["doc_id"]: r["text_dedup"]
                for r in dedup_lines_in_doc(
-                   df, "doc_id", "text", mode=mode).collect()}
-        assert got == expected, mode
+                   df, "doc_id", "text", line_cap=line_cap).collect()}
+        assert got == expected, line_cap
 
     # pathological doc: 10_000 lines over a 500-line vocabulary
     big = "\n".join(f"boiler {rng.randint(0, 500)}" for _ in range(10_000))
@@ -1120,8 +1121,7 @@ def test_dedup_lines_in_doc_modes_agree_and_scale(spark):
                                 "doc_id int, text string")
     t0 = time.time()
     got = {r["doc_id"]: r["text_dedup"]
-           for r in dedup_lines_in_doc(
-               bdf, "doc_id", "text", mode="auto").collect()}
+           for r in dedup_lines_in_doc(bdf, "doc_id", "text").collect()}
     wall = time.time() - t0
     assert got == {1: ref(big), 2: "a\nb"}
     assert wall < 60, f"auto routing failed to keep 10k-line doc linear: {wall}s"

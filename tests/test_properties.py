@@ -167,13 +167,13 @@ def test_exact_percentiles_match_numpy(spark, vals):
     from sparvi_spark.operators.profile import exact_percentiles_refine
 
     df = spark.createDataFrame([(float(v),) for v in vals], "x double")
-    for strategy in ("ordered", "bucketed", "refine"):
+    for strategy in ("bucketed", "refine"):
         if strategy == "refine":
             # n < 3·accuracy here, so this also exercises the
             # uncovered-window fallback into the bucketed plan
             got = exact_percentiles_refine(df, ["x"]).collect()[0]
         else:
-            got = exact_percentiles(df, ["x"], strategy=strategy).collect()[0]
+            got = exact_percentiles(df, ["x"]).collect()[0]
         for p, name in ((0.25, "p25"), (0.5, "p50"), (0.75, "p75")):
             expect = float(np.percentile(np.array(vals, dtype="float64"),
                                          p * 100, method="linear"))
