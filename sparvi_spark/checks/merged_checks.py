@@ -246,15 +246,12 @@ def q_pair_scores_fused(spark, sf_dir):
         MH_HASHES,
         capped_docs,
     )
-    from sparvi_spark.operators.dedup import (
-        _persist,
-        minhash_lsh_pairs,
-        minhash_signed,
-    )
+    from sparvi_spark.operators.dedup import minhash_lsh_pairs, minhash_signed
+    from sparvi_spark.session import scoped_persist
 
     docs = capped_docs(spark, sf_dir)
-    base = _persist(minhash_signed(docs, "doc_id", "text", 1, MH_HASHES,
-                                   "portable"))
+    base = scoped_persist(minhash_signed(docs, "doc_id", "text", 1,
+                                         MH_HASHES, "portable"))
     # jaccard part over the shared base — unfiltered oracle semantics:
     # the per-doc set size is the gram-array size (a projection), and the
     # all-pairs shared counts come straight off the exploded sets

@@ -54,7 +54,7 @@ def q_schema_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r12: ONE spark.sql statement — the same single-Exchange diff
     ``operators.schema_diff.compare_schemas`` builds (its expression
     text is copied verbatim below), but rendered over inline VALUES in
-    one call instead of two local_df parallelizations plus a ~15-call
+    one call instead of two local_df frames plus a ~15-call
     builder chain (metadata-sized inputs; the py4j/build chatter was
     2/3 of the check's wall). ``compare_schemas`` stays the engine API
     for diffing arbitrary snapshot frames; parity is pinned by snapshot

@@ -22,6 +22,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sparvi_spark.functions import local_df
 from sparvi_spark.operators.anomalies import detect_anomalies
 from sparvi_spark.operators.profile import profile_table
 from sparvi_spark.operators.schema_diff import (
@@ -30,6 +31,7 @@ from sparvi_spark.operators.schema_diff import (
 )
 from sparvi_spark.operators.trends import profile_trends, retain_latest
 from sparvi_spark.operators.validation import Rule, run_rules
+from sparvi_spark.session import scoped_caches
 from sparvi_spark.sources.state import StateStore
 
 
@@ -156,7 +158,14 @@ class Engine:
         publish a validation_failure event (routes/validations.py:820-848).
         ``rules=None`` generates the default suite (V1-V20) from the
         DataFrame's schema + name heuristics, like the reference does from
-        warehouse introspection."""
+        warehouse introspection.
+
+        The rules run ONCE: their result (one row per rule, so bounded by
+        the driver-side rule list) is collected as Arrow and handed back
+        as a local relation, and the stored verdicts, the failure event
+        and the returned frame all come from those rows — a caller's
+        action never re-executes the rules against a source that may have
+        changed since. Pass A's cache is released before returning."""
         run_at = run_at or _utcnow()
         if rules is None:
             from sparvi_spark.operators.validation import (
@@ -183,14 +192,18 @@ class Engine:
             if prev_rows and prev_rows[0][0] is not None:
                 rules = rules + [row_growth_rule_vs(
                     table_name, int(prev_rows[0][0]))]
-        results = run_rules(df, rules, ref_tables=ref_tables)
+        with scoped_caches():
+            results = run_rules(df, rules, ref_tables=ref_tables)
+            rows = results.toArrow()
+        results = local_df(self.spark, rows, results.schema)
         stored = results.select(
             F.lit(table_name).alias("table_name"), "rule_name", "operator",
             "expected_lo", "expected_hi", "actual_value", "is_valid",
             F.lit(run_at).cast("timestamp").alias("run_at"))
         self.state.append("validation_results", stored)
-        failed = [r["rule_name"] for r in
-                  results.where(~F.col("is_valid")).select("rule_name").collect()]
+        failed = [n for n, ok in zip(rows["rule_name"].to_pylist(),
+                                     rows["is_valid"].to_pylist())
+                  if ok is False]
         if failed:
             self.publish_event("validation_failure", table_name,
                                ",".join(sorted(failed)), run_at)
@@ -202,29 +215,39 @@ class Engine:
                      as_of: str | None = None) -> DataFrame | None:
         """Schema tracking: snapshot current schema, diff against the stored
         baseline (S1-S8), store snapshot + changes. Returns the change rows
-        (None on baseline bootstrap)."""
+        (None on baseline bootstrap).
+
+        The diff runs ONCE, before this run's snapshot lands (a failed
+        diff stores no snapshot for the next run to diff against): its
+        rows (at most one per column of either snapshot plus one
+        primary-key row, so bounded by the driver-side schemas) are
+        collected as Arrow and handed back as a local relation; the
+        stored changes, the schema_change event and the returned frame
+        all come from them."""
         as_of = as_of or _utcnow()
         current = snapshot_from_dataframe(self.spark, df, table_name, primary_keys)
         prev_all = self.state.read("schema_snapshots").where(
             F.col("table_name") == table_name)
-        previous = None
-        if prev_all.limit(1).count() > 0:
-            latest_ts = prev_all.agg(F.max("collected_at")).collect()[0][0]
-            previous = prev_all.where(F.col("collected_at") == latest_ts) \
-                .select("table_name", "column_name", "col_type", "nullable",
-                        "pk_ordinal")
-        self.state.append("schema_snapshots", current.withColumn(
-            "collected_at", F.lit(as_of).cast("timestamp")))
+        # one job: the latest baseline instant, NULL when none is stored
+        latest_ts = prev_all.agg(F.max("collected_at")).collect()[0][0]
+        previous = None if latest_ts is None else prev_all.where(
+            F.col("collected_at") == latest_ts).select(
+            "table_name", "column_name", "col_type", "nullable", "pk_ordinal")
         changes = detect_changes(previous, current)
         if changes is not None:
-            stored = changes.withColumn(
-                "detected_at", F.lit(as_of).cast("timestamp"))
-            self.state.append("schema_changes", stored)
-            important = [r["change_type"] for r in
-                         changes.where(F.col("important")).collect()]
+            rows = changes.toArrow()
+            changes = local_df(self.spark, rows, changes.schema)
+        self.state.append("schema_snapshots", current.withColumn(
+            "collected_at", F.lit(as_of).cast("timestamp")))
+        if changes is not None:
+            self.state.append("schema_changes", changes.withColumn(
+                "detected_at", F.lit(as_of).cast("timestamp")))
+            important = {t for t, imp in zip(rows["change_type"].to_pylist(),
+                                             rows["important"].to_pylist())
+                         if imp}
             if important:
                 self.publish_event("schema_change", table_name,
-                                   ",".join(sorted(set(important))), as_of)
+                                   ",".join(sorted(important)), as_of)
         return changes
 
     def save_drift_baseline(self, df: DataFrame, table_name: str,
@@ -259,7 +282,6 @@ class Engine:
         (metric_type='drift') so the trend and anomaly machinery sees
         them like any other metric; psi above ``psi_alert`` publishes a
         distribution_drift engine event. Returns None with no baseline."""
-        from sparvi_spark.functions import local_df
         from sparvi_spark.operators.drift import bucket_expr, drift_metrics
 
         as_of = as_of or _utcnow()
@@ -356,7 +378,6 @@ class Engine:
         (metric_type='drift', column_name='__vocab__'); above
         ``tvd_alert`` a ``vocab_drift`` event publishes — the same
         consumer path numeric drift uses. None with no baseline."""
-        from sparvi_spark.functions import local_df
         from sparvi_spark.operators.dedup import tokens_expr
 
         as_of = as_of or _utcnow()
@@ -447,7 +468,6 @@ class Engine:
             cfg0 = members[0][1]
             rows = [(i, c["metric_name"], c.get("table_name", ""),
                      c.get("column_name") or None) for i, c in members]
-            from sparvi_spark.functions import local_df
             cfgdf = local_df(
                 self.spark,
                 rows, "cfg_id int, c_metric string, c_table string, "
@@ -1090,7 +1110,7 @@ class Engine:
         from sparvi_spark.config import HASH_FNS, check_lane
         from sparvi_spark.operators.dedup import (
             dedup_near, minhash_lsh_pairs, minhash_pairs_from_sigs,
-            minhash_signed, scoped_caches)
+            minhash_signed)
 
         # validated before anything reads or stamps state: the family
         # string is what the store records for this corpus

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sparvi_spark.functions import local_df
+
 
 def _joined(old: DataFrame, new: DataFrame,
             id_col: str, text_col: str) -> tuple[DataFrame, Column]:
@@ -74,7 +76,8 @@ def corpus_diff_summary(
     j, status = _joined(old, new, id_col, text_col)
     counts = (j.select(F.coalesce(status, F.lit("unchanged")).alias("status"))
               .groupBy("status").agg(F.count(F.lit(1)).alias("n_docs")))
-    spine = old.sparkSession.createDataFrame(
+    spine = local_df(
+        old.sparkSession,
         [("added",), ("removed",), ("modified",), ("unchanged",)],
         "status string")
     return (spine.join(counts, "status", "left")

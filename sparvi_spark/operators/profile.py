@@ -177,7 +177,7 @@ def exact_percentiles(
     # selectExpr/expr calls — the Column-object form of this plan cost ~690
     # py4j round trips (~0.2 s, GIL-serialized) per build (see anomalies.py
     # module docstring for the measurement; the resolved plan is identical).
-    from sparvi_spark.functions import values_df
+    from sparvi_spark.functions import local_df
 
     stack = ", ".join(f"'{c}', cast(`{c}` as double)" for c in cols)
     melted = (
@@ -194,9 +194,8 @@ def exact_percentiles(
     # and produces NULL markers — but guarantees the final groupBy emits a
     # row per column. Cheaper than the alternative (a right-join onto a
     # literal frame): no broadcast job, no join stage.
-    # values_df (r13): as a union leg, a parallelize-backed sentinel adds
-    # an RDD scan stage to the plan; a VALUES literal is a LocalRelation
-    sentinels = values_df(
+    # local_df: a LocalRelation union leg, no RDD scan stage
+    sentinels = local_df(
         df.sparkSession, [(c, None, 0) for c in cols],
         "column_name string, v double, cnt bigint")
     counts = counts.unionAll(sentinels)
@@ -347,7 +346,7 @@ def exact_percentiles_refine(
     import math
     from decimal import ROUND_HALF_UP, Decimal
 
-    from sparvi_spark.functions import values_df
+    from sparvi_spark.functions import local_df
 
     spark = df.sparkSession
     eps = 1.0 / accuracy
@@ -504,10 +503,9 @@ def exact_percentiles_refine(
                 for c in cols]
     schema = ("column_name string, "
               + ", ".join(f"p{int(p * 100)} double" for p in ps))
-    # values_df: the returned frame is the check's RESULT — an RDD-backed
-    # local frame costs a real job per downstream action (r13; see
-    # functions.values_df), a VALUES literal folds driver-side
-    return values_df(spark, out_rows, schema)
+    # the returned frame is the check's RESULT: a LocalRelation, so a
+    # downstream action starts no Python worker (see functions.local_df)
+    return local_df(spark, out_rows, schema)
 
 
 def numeric_exprs(c: str, exact: bool = True) -> list[Column]:

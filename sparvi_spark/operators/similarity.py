@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from sparvi_spark.config import FOLD_GRAM, resolve_backend
+from sparvi_spark.functions import local_df
 
 
 def dot_expr(a: str, b: str) -> Column:
@@ -135,7 +136,7 @@ def _cosine_topk_gram(corpus, queries, id_col, vec_col, k, exclude_self,
                   f" neighbor_id "
                   f"{corpus.schema[id_col].dataType.simpleString()},"
                   f" rank int, cosine double")
-        return corpus.sparkSession.createDataFrame([], schema)
+        return local_df(corpus.sparkSession, [], schema)
     qids = np.asarray([r[0] for r in qrows])
     Q = np.asarray([np.asarray(r[1], dtype=np.float64) for r in qrows])
     Qn = np.sqrt((Q * Q).sum(axis=1))
@@ -143,9 +144,9 @@ def _cosine_topk_gram(corpus, queries, id_col, vec_col, k, exclude_self,
     qids, Q, Qn = qids[live], Q[live], Qn[live]  # their inf/NaN cosines)
     if not len(qids):
         id_type = corpus.schema[id_col].dataType.simpleString()
-        return corpus.sparkSession.createDataFrame(
-            [], f"query_id {id_type}, neighbor_id {id_type}, "
-                f"rank int, cosine double")
+        return local_df(
+            corpus.sparkSession, [], f"query_id {id_type}, neighbor_id "
+                                     f"{id_type}, rank int, cosine double")
     id_type = corpus.schema[id_col].dataType.simpleString()
     out_schema = (f"query_id {id_type}, neighbor_id {id_type}, "
                   f"cosine double")

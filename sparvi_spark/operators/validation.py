@@ -25,6 +25,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sparvi_spark.functions import local_df
+from sparvi_spark.session import scoped_caches, scoped_persist
 from sparvi_spark.testdata import TableSpec
 
 DEFAULT_AS_OF = "2026-01-01 00:00:00"
@@ -423,7 +425,13 @@ def run_rules(
     concurrently in a single job. Pass A's one-row result feeds three
     subtrees (stack unpivot, outlier bounds, dominance total) whose
     projections differ, so ReusedExchange cannot dedup them; it is
-    persisted so the wide aggregation scan runs exactly once.
+    persisted so the wide aggregation scan runs exactly once. The
+    persist registers with ``session.scoped_caches``: a caller that
+    materializes the result inside ``with scoped_caches():`` releases
+    the entry on exit (``Engine.run_validations`` collects there, so a
+    monitor adds no CacheManager entry per table per day). Outside a
+    scope the entry stays, since the returned lazy result still reads
+    it; its payload is one row.
     """
     spark = spark or df.sparkSession
     ref_tables = ref_tables or {}
@@ -465,14 +473,9 @@ def run_rules(
         if multi_use:
             # One row; persisted because its consumers project different
             # columns (no ReusedExchange) — without this the full-table
-            # wide aggregation runs once per consumer. Never explicitly
-            # unpersisted: the returned (lazy) result still references it,
-            # and the cached payload is ONE row per call — repeated calls
-            # in a long session accumulate only entry metadata, evicted
-            # LRU under memory pressure. Callers cycling thousands of
-            # suites per session can spark.catalog.clearCache() between
-            # sweeps (the engine's prepared path reuses plans instead).
-            agg_a = agg_a.persist()
+            # wide aggregation runs once per consumer. Released by the
+            # caller's scoped_caches (see the docstring).
+            agg_a = scoped_persist(agg_a)
     if agg_rules:
         stack_a = ", ".join(f"'{_q(r.name)}', {_meta(r)}, a{i}"
                             for i, r in enumerate(agg_rules))
@@ -531,10 +534,9 @@ def run_rules(
     if not pieces:
         # empty rule list (or only unrecognized kinds): an empty result
         # frame, not an IndexError — callers treat "no rows" as "no rules"
-        sess = spark or df.sparkSession
-        return sess.createDataFrame(
-            [], "rule_name string, operator string, expected_lo double, "
-                "expected_hi double, actual_value double, is_valid boolean")
+        return local_df(
+            spark, [], "rule_name string, operator string, expected_lo double, "
+                       "expected_hi double, actual_value double, is_valid boolean")
     result = pieces[0]
     for p in pieces[1:]:
         result = result.unionAll(p)
@@ -781,9 +783,6 @@ def collect_rule_jobs(
     relation is built on ``spark``."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark.sql.types import (DoubleType, StringType, StructField,
-                                   StructType)
-
     rows: list[tuple] = []
     with ThreadPoolExecutor(max_concurrency) as pool:
         for (tname, piece_rules, _df), res in zip(
@@ -800,44 +799,18 @@ def collect_rule_jobs(
                                  rec["operator"], rec["expected_lo"],
                                  rec["expected_hi"], rec["actual_value"]))
 
-    if not rows:
-        schema = StructType([
-            StructField(tag_col, StringType()),
-            StructField("rule_name", StringType()),
-            StructField("operator", StringType()),
-            StructField("expected_lo", DoubleType()),
-            StructField("expected_hi", DoubleType()),
-            StructField("actual_value", DoubleType()),
-        ])
-        return (spark.createDataFrame([], schema)
-                .withColumn("is_valid", F.expr(IS_VALID_CASE))
-                .select(tag_col, "rule_name", "operator", "expected_lo",
-                        "expected_hi", "actual_value", "is_valid"))
-
-    # One VALUES statement instead of an RDD-backed local frame (r13):
-    # parallelize()-based local relations execute a real Spark job per
-    # downstream action (Python->JVM row ship + task), ~0.15s of the
-    # v00 run; a VALUES literal is a LocalRelation the driver folds.
-    # is_valid stays the SAME SQL CASE text, so verdicts are
-    # bit-identical to run_rules and the oracle.
-    def _d(v) -> str:
-        if v is None:
-            return "cast(null as double)"
-        v = float(v)
-        if v != v:
-            return "cast('NaN' as double)"
-        if v in (float("inf"), float("-inf")):
-            return f"cast('{'-' if v < 0 else ''}Infinity' as double)"
-        return f"cast({v!r} as double)"  # repr: shortest roundtrip
-
-    vals = ", ".join(
-        f"('{_q(t)}', '{_q(rn)}', '{_q(op)}', {_d(lo)}, {_d(hi)}, {_d(av)})"
-        for t, rn, op, lo, hi, av in rows)
-    return spark.sql(
-        f"SELECT `{tag_col}`, rule_name, operator, expected_lo, "
-        f"expected_hi, actual_value, {IS_VALID_CASE} AS is_valid "
-        f"FROM (VALUES {vals}) AS t(`{tag_col}`, rule_name, operator, "
-        f"expected_lo, expected_hi, actual_value)")
+    # One Arrow local relation (functions.local_df): values arrive as is,
+    # whatever quotes or backslashes a table or rule name holds, and no
+    # downstream action starts a Python worker. is_valid stays the SAME
+    # SQL CASE text, so verdicts are bit-identical to run_rules and the
+    # oracle.
+    return local_df(
+        spark, rows,
+        f"`{tag_col}` string, rule_name string, operator string, "
+        f"expected_lo double, expected_hi double, actual_value double",
+    ).selectExpr(f"`{tag_col}`", "rule_name", "operator", "expected_lo",
+                 "expected_hi", "actual_value",
+                 f"{IS_VALID_CASE} AS is_valid")
 
 
 def run_rules_multi(
@@ -865,8 +838,10 @@ def run_validations(
     (supabase_validation_manager.py:442-483 shape)."""
     ts = run_at or _dt.datetime.now(_dt.timezone.utc).isoformat()
     by_name = {r.name: r for r in rules}
+    with scoped_caches():
+        got = run_rules(df, rules, ref_tables).collect()
     out = []
-    for row in run_rules(df, rules, ref_tables).collect():
+    for row in got:
         r = by_name[row["rule_name"]]
         out.append({
             "rule_name": r.name,

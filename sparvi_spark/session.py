@@ -3,13 +3,16 @@
 Local testing runs on local[N]; the same configs are what we would set on a
 1000-executor cluster (AQE on, skew-join handling, sensible shuffle
 partitioning). Nothing here is local-mode-specific except the master URL.
+Also the session's scoped cache registry (``scoped_caches``).
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
+import threading
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "sparvi_spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -86,3 +89,47 @@ def get_spark(app_name: str = "sparvi_spark", shuffle_partitions: int | None = N
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# --------------------------------------------------------------------------
+# Scoped cache registry: operators persist() internal frames that their
+# RESULT still references lazily (the LSH banded signature base, run_rules'
+# pass A), so they cannot unpersist before returning. Long-running callers
+# (a streaming intake per microbatch, a monitor per table per day) would
+# otherwise accumulate one never-released CacheManager entry per call.
+# Callers wrap build+materialize in ``with scoped_caches():`` — every frame
+# persisted through ``scoped_persist`` inside the context is unpersisted on
+# exit (pin results first via localCheckpoint, your own persist+count, or a
+# collect). Without an active context behavior is unchanged.
+# --------------------------------------------------------------------------
+
+_CACHE_CTX = threading.local()
+
+
+@contextlib.contextmanager
+def scoped_caches():
+    """Unpersist, on exit, every frame ``scoped_persist`` registers inside
+    this context. Reentrant; inner scopes release only their own frames."""
+    stack = getattr(_CACHE_CTX, "stack", None)
+    if stack is None:
+        stack = _CACHE_CTX.stack = []
+    entry: list[DataFrame] = []
+    stack.append(entry)
+    try:
+        yield entry
+    finally:
+        stack.pop()
+        for frame in entry:
+            try:
+                frame.unpersist()
+            except Exception:
+                pass  # session already stopped — nothing to release
+
+
+def scoped_persist(df: DataFrame) -> DataFrame:
+    """persist() that registers with the innermost scoped_caches, if any."""
+    df = df.persist()
+    stack = getattr(_CACHE_CTX, "stack", None)
+    if stack:
+        stack[-1].append(df)
+    return df

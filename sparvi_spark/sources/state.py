@@ -21,6 +21,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sparvi_spark.functions import local_df
+
 # entity -> schema DDL (profile documents are stored as a JSON string in
 # `data`, mirroring profiling_history.data — SURVEY §1.2 row 1).
 ENTITIES: dict[str, str] = {
@@ -544,14 +546,17 @@ class StateStore:
 
     def append_rows(self, entity: str, rows: list[dict[str, Any]]) -> None:
         """Append plain dicts (values may be strings; cast per the entity
-        DDL — ISO timestamps etc. — so callers don't build typed Rows)."""
+        DDL — ISO timestamps etc. — so callers don't build typed Rows).
+        The rows ship as one Arrow local relation of strings
+        (``functions.local_df``): the write job starts no Python worker."""
         fields = [
             (f.strip().split(" ")[0], f.strip().split(" ", 1)[1])
             for f in ENTITIES[entity].split(",")
             if f.strip().split(" ")[0] != "run_date"
         ]
         str_schema = ", ".join(f"{n} string" for n, _ in fields)
-        df = self.spark.createDataFrame(
+        df = local_df(
+            self.spark,
             [tuple(None if r.get(n) is None else str(r.get(n)) for n, _ in fields)
              for r in rows],
             str_schema)
@@ -572,7 +577,7 @@ class StateStore:
             # any scheme (file://, s3a://, hdfs://) and catches the
             # common fresh-bootstrap case without parsing any exception.
             if not self._fs_exists(path):
-                return self.spark.createDataFrame([], ENTITIES[entity])
+                return local_df(self.spark, [], ENTITIES[entity])
             # table formats own their schema (a user-supplied read schema
             # is ignored or rejected); align to the entity DDL by cast so
             # both backends hand callers identical column types
@@ -585,7 +590,7 @@ class StateStore:
                 # exceptions over message text; the substring match is
                 # only the fallback for older/foreign exception shapes.
                 if self._missing_table_error(exc):
-                    return self.spark.createDataFrame([], ENTITIES[entity])
+                    return local_df(self.spark, [], ENTITIES[entity])
                 raise
             fields = [(f.strip().split(" ")[0], f.strip().split(" ", 1)[1])
                       for f in ENTITIES[entity].split(",")]
@@ -596,7 +601,7 @@ class StateStore:
             return self.spark.read.schema(ENTITIES[entity]).parquet(path)
         except Exception as exc:
             if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-                return self.spark.createDataFrame([], ENTITIES[entity])
+                return local_df(self.spark, [], ENTITIES[entity])
             raise
 
     # -- profile documents (JSON payloads, profiling_history shape) --------

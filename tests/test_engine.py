@@ -905,3 +905,82 @@ def test_engine_ann_index_build_and_search(spark, engine):
     ev = engine.state.read("engine_events").where(
         F2.col("event_type") == "ann_index_built").count()
     assert ev == 1
+
+
+def _plan_leaf(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
+
+
+def test_validation_and_schema_results_are_collected_once(spark, engine,
+                                                          tmp_path):
+    """run_validations / track_schema execute their Spark work once: the
+    returned frame is a local relation over the same rows the state write
+    and the event took, so it still equals them after the source is
+    overwritten (a lazy result would re-read the changed source)."""
+    from sparvi_spark.operators.validation import Rule
+
+    src = str(tmp_path / "src.parquet")
+    spark.range(100).selectExpr(
+        "id", "cast(id % 7 as double) AS amount").write.parquet(src)
+    df = spark.read.parquet(src)
+    rules = [
+        Rule("rows_is_100", "", "equals", 100, "agg", agg_expr="count(*)"),
+        Rule("max_amount_below_5", "", "less_than", 5, "agg",
+             agg_expr="max(amount)"),
+        Rule("amount_outliers", "", "equals", 0, "outlier", column="amount"),
+    ]
+    run_at = "2026-01-01 00:00:00"
+    res = engine.run_validations(df, "t", rules, run_at=run_at)
+    engine.track_schema(df, "t", as_of=run_at)  # baseline
+    day2 = "2026-01-02 00:00:00"
+    changes = engine.track_schema(df.withColumn("extra", F.lit(1)), "t",
+                                  as_of=day2)
+    spark.range(3).selectExpr("id * 1000 AS id", "cast(99 as double) AS amount",
+                              "'x' AS note").write.mode("overwrite").parquet(src)
+
+    assert _plan_leaf(res) == "LocalRelation"
+    assert _plan_leaf(changes) == "LocalRelation"
+    cols = ["rule_name", "operator", "expected_lo", "expected_hi",
+            "actual_value", "is_valid"]
+    got = sorted(tuple(r) for r in res.select(*cols).collect())
+    stored = sorted(tuple(r) for r in engine.state.read("validation_results")
+                    .select(*cols).collect())
+    assert got == stored
+    assert dict((r[0], r[4]) for r in got) == {
+        "rows_is_100": 100.0, "max_amount_below_5": 6.0,
+        "amount_outliers": 0.0}
+    events = {r["event_type"]: r["details"]
+              for r in engine.state.read("engine_events").collect()}
+    assert events["validation_failure"] == ",".join(
+        sorted(r[0] for r in got if r[5] is False)) == "max_amount_below_5"
+
+    ccols = ["change_type", "table_name", "column_name", "details",
+             "important"]
+    got_c = sorted(tuple(r) for r in changes.select(*ccols).collect())
+    stored_c = sorted(tuple(r) for r in engine.state.read("schema_changes")
+                      .select(*ccols).collect())
+    assert got_c == stored_c == [("column_added", "t", "extra", None, False)]
+    assert "schema_change" not in events  # column_added is not important
+
+
+def test_run_validations_releases_pass_a_cache(spark, engine):
+    """run_rules persists pass A (agg + outlier rules share it); a
+    monitor calling run_validations per table per day must not add a
+    CacheManager entry per call (neither must the record-shaped
+    operators.validation.run_validations)."""
+    from sparvi_spark.operators.validation import Rule, run_validations
+
+    df = spark.range(50).selectExpr("id", "cast(id % 5 as double) AS v")
+    rules = [Rule("rows", "", "equals", 50, "agg", agg_expr="count(*)"),
+             Rule("v_outliers", "", "equals", 0, "outlier", column="v")]
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    for day in range(1, 4):
+        res = engine.run_validations(df, "t", rules,
+                                     run_at=f"2026-01-0{day} 00:00:00")
+        assert {r["rule_name"]: r["is_valid"] for r in res.collect()} == {
+            "rows": True, "v_outliers": True}
+    assert cache.isEmpty()
+    assert [r["is_valid"] for r in run_validations(df, rules)] == [True, True]
+    assert cache.isEmpty()
