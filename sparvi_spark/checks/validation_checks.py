@@ -6,12 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from sparvi_spark.operators.validation import (
-    generate_default_rules,
-    rules_oracle_sql,
-    run_rules,
-    run_rules_multi,
-)
+from sparvi_spark.operators.validation import generate_default_rules, rules_oracle_sql
 from sparvi_spark.testdata import SCHEMAS, load_table
 
 AS_OF = "2026-01-01 00:00:00"
@@ -23,7 +18,7 @@ RULES = {t: generate_default_rules(SCHEMAS[t], as_of=AS_OF) for t in RULE_TABLES
 
 
 def _table_inputs(spark: SparkSession, sf_dir: str, table: str):
-    """(table, df, rules, ref_tables, unique_refs) for run_rules_multi.
+    """(table, df, rules, ref_tables, unique_refs) for PreparedRulesMulti.
 
     unique_refs: FK targets whose ref column is the declared PK need no
     distinct before the broadcast build (saves a dimension-wide shuffle
@@ -34,14 +29,6 @@ def _table_inputs(spark: SparkSession, sf_dir: str, table: str):
     unique = frozenset(
         rt for c, rt, rc in spec.foreign_keys if SCHEMAS[rt].primary_keys == (rc,))
     return (table, load_table(spark, table, sf_dir), RULES[table], refs, unique)
-
-
-def _make_rule_check(table: str):
-    def fn(spark: SparkSession, sf_dir: str, _table=table) -> DataFrame:
-        t, df, rules, refs, uniq = _table_inputs(spark, sf_dir, _table)
-        return run_rules(df, rules, ref_tables=refs, unique_refs=uniq)
-
-    return fn, rules_oracle_sql(RULES[table], table)
 
 
 _PREPARED: dict = {}
@@ -70,11 +57,10 @@ def q_rules_all(spark: SparkSession, sf_dir: str) -> DataFrame:
         with ThreadPoolExecutor(8) as pool:
             preps = list(pool.map(
                 lambda st: PreparedRulesMulti(
-                    [_table_inputs(st[0], sf_dir, st[1])],
-                    tag_col="table_name"),
+                    [_table_inputs(st[0], sf_dir, st[1])]),
                 zip(sessions, RULE_TABLES)))
         _PREPARED[key] = [j for p in preps for j in p.jobs]
-    return collect_rule_jobs(spark, _PREPARED[key], tag_col="table_name")
+    return collect_rule_jobs(spark, _PREPARED[key])
 
 
 # V24 custom SQL passthrough: the engine's real SQL surface. A TPC-H-Q1-style
@@ -103,14 +89,13 @@ def q_custom_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 # All six per-table rule suites land in ONE recorded check (driver caps
 # recorded checks at 50 — checks.__init__.DRIVER_CHECK_CAP); the tag column
 # keys each row back to its table. ~100 generated rules, all oracle-graded.
-# The Spark side runs the FUSED multi-table program (2 jobs total); the
-# oracle SQL is the same per-table union that union_check would build.
+# The Spark side runs the FUSED multi-table program (q_rules_all); the
+# oracle SQL is union_check's per-table union of each table's rule oracle
+# (only its SQL half is used, so no Spark function is passed).
 from sparvi_spark.checks import union_check  # noqa: E402
 
-RULE_SUITE = {t: _make_rule_check(t) for t in RULE_TABLES}
-
 _RULES_ALL_SQL = union_check(
-    [(t, fn, sql) for t, (fn, sql) in RULE_SUITE.items()],
+    [(t, None, rules_oracle_sql(RULES[t], t)) for t in RULE_TABLES],
     tag_col="table_name")[1]
 
 CHECKS = {

@@ -160,12 +160,12 @@ class Engine:
         DataFrame's schema + name heuristics, like the reference does from
         warehouse introspection.
 
-        The rules run ONCE: their result (one row per rule, so bounded by
-        the driver-side rule list) is collected as Arrow and handed back
-        as a local relation, and the stored verdicts, the failure event
-        and the returned frame all come from those rows — a caller's
-        action never re-executes the rules against a source that may have
-        changed since. Pass A's cache is released before returning."""
+        The rules run ONCE: ``run_rules`` is eager and returns a local
+        relation (one row per rule, so bounded by the driver-side rule
+        list), and the stored verdicts, the failure event and the returned
+        frame all come from its rows — a caller's action never re-executes
+        the rules against a source that may have changed since.
+        ``run_rules`` releases pass A's cache itself before returning."""
         run_at = run_at or _utcnow()
         if rules is None:
             from sparvi_spark.operators.validation import (
@@ -192,18 +192,15 @@ class Engine:
             if prev_rows and prev_rows[0][0] is not None:
                 rules = rules + [row_growth_rule_vs(
                     table_name, int(prev_rows[0][0]))]
-        with scoped_caches():
-            results = run_rules(df, rules, ref_tables=ref_tables)
-            rows = results.toArrow()
-        results = local_df(self.spark, rows, results.schema)
+        results = run_rules(df, rules, ref_tables=ref_tables)
         stored = results.select(
             F.lit(table_name).alias("table_name"), "rule_name", "operator",
             "expected_lo", "expected_hi", "actual_value", "is_valid",
             F.lit(run_at).cast("timestamp").alias("run_at"))
         self.state.append("validation_results", stored)
-        failed = [n for n, ok in zip(rows["rule_name"].to_pylist(),
-                                     rows["is_valid"].to_pylist())
-                  if ok is False]
+        # a local relation: collecting it runs no Spark job
+        failed = [r["rule_name"] for r in results.collect()
+                  if r["is_valid"] is False]
         if failed:
             self.publish_event("validation_failure", table_name,
                                ",".join(sorted(failed)), run_at)

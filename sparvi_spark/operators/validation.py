@@ -19,7 +19,8 @@ both word and symbolic operator spellings (frontend ValidationRuleEditor.js).
 from __future__ import annotations
 
 import datetime as _dt
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -144,8 +145,8 @@ def _expected_bounds(rule: Rule) -> tuple[float, float]:
         return v, v
     except (ValueError, TypeError) as exc:
         raise ValueError(
-            f"rule {rule.name!r}: run_rules compiles NUMERIC expected "
-            f"values into SQL; got {rule.expected_value!r} for operator "
+            f"rule {rule.name!r}: run_rules compares NUMERIC expected "
+            f"values in SQL; got {rule.expected_value!r} for operator "
             f"{rule.operator!r} (use evaluate_rule for string equality)"
         ) from exc
 
@@ -405,244 +406,219 @@ def run_rules(
     spark: SparkSession | None = None,
     unique_refs: frozenset[str] | set[str] = frozenset(),
 ) -> DataFrame:
-    """Execute rules against ``df`` -> DataFrame
-    (rule_name, operator, expected_lo, expected_hi, actual_value, is_valid).
+    """Execute rules against ``df`` -> a local relation
+    (rule_name, operator, expected_lo, expected_hi, actual_value, is_valid)
+    with one row per rule.
 
-    Exactly TWO full-table passes regardless of rule count (plus one keyed
-    shuffle per uniqueness rule and one melted groupBy for dominance rules):
+    Exactly TWO full-table passes regardless of rule count, plus one keyed
+    shuffle per uniqueness rule and one melted groupBy for dominance rules
+    (``_rule_pieces`` has the layout). All pieces run as ONE action, so
+    pass A, pass B, uniqueness and dominance stages schedule concurrently
+    in a single job, and pass A is persisted so its wide aggregation scan
+    runs once for both of its consumers.
 
-    - pass A (one scan): every scalar-aggregate rule, the sum/sumsq/count
-      stats feeding each 3σ-outlier rule, and the total row count — one wide
-      ``df.agg``, unpivoted to (rule_name, actual_value) rows via ``stack``.
-    - pass B (one scan): every outlier count (bounds attached as a broadcast
-      cross-join of pass A's one-row stats, same IEEE double op order as the
-      oracle SQL) and every FK orphan count, the dims attached as broadcast
-      left joins — N referential checks cost one probe pass, not N anti-join
-      scans.
-
-    The whole result is ONE lazy DataFrame — no driver-side collect between
-    passes — so pass A, pass B, uniqueness and dominance stages schedule
-    concurrently in a single job. Pass A's one-row result feeds three
-    subtrees (stack unpivot, outlier bounds, dominance total) whose
-    projections differ, so ReusedExchange cannot dedup them; it is
-    persisted so the wide aggregation scan runs exactly once. The
-    persist registers with ``session.scoped_caches``: a caller that
-    materializes the result inside ``with scoped_caches():`` releases
-    the entry on exit (``Engine.run_validations`` collects there, so a
-    monitor adds no CacheManager entry per table per day). Outside a
-    scope the entry stays, since the returned lazy result still reads
-    it; its payload is one row.
+    The run is eager: labels and bounds are computed first (a non-numeric
+    expected value raises before any Spark job), the pieces are built and
+    collected inside this call's own ``scoped_caches()`` — one value per
+    rule, bounded by the driver-side rule list — and pass A's cache entry
+    is released before returning, so a monitor calling this per table per
+    day adds none. The returned relation carries the values as data and
+    never re-executes the rules.
     """
     spark = spark or df.sparkSession
-    ref_tables = ref_tables or {}
+    labels = _rule_labels(rules)
+    with scoped_caches():
+        pieces = _rule_pieces(spark, df, rules, ref_tables or {},
+                              unique_refs, share_pass_a=True)
+        values = reduce(DataFrame.unionAll, pieces).collect() if pieces else []
+    return _result_relation(spark, [(None, labels, values)]).drop("table_name")
+
+
+def _rule_labels(rules: list[Rule]) -> list[tuple[str, str, float, float]]:
+    """(rule_name, operator, expected_lo, expected_hi) per rule, by
+    position; raises on a non-numeric expected value."""
+    return [(r.name, normalize_operator(r.operator), *_expected_bounds(r))
+            for r in rules]
+
+
+def _stacked(row: DataFrame, cols: list[tuple[int, str]]) -> DataFrame:
+    """Unpivot a one-row aggregate's ``(rule_idx, column)`` pairs to
+    (rule_idx, actual_value) rows."""
+    body = ", ".join(f"{i}, {c}" for i, c in cols)
+    return row.select(F.expr(
+        f"stack({len(cols)}, {body}) as (rule_idx, actual_value)"))
+
+
+def _rule_pieces(
+    spark: SparkSession,
+    df: DataFrame,
+    rules: list[Rule],
+    ref_tables: dict[str, DataFrame],
+    unique_refs: frozenset[str] | set[str],
+    share_pass_a: bool,
+) -> list[DataFrame]:
+    """Compile ``rules`` into frames of (rule_idx int, actual_value double),
+    ``rule_idx`` being the rule's position in ``rules``. Names, operators
+    and expected values never enter Spark: apart from each rule's own
+    expression, the only literals in the SQL text below are numbers, and
+    ``_result_relation`` attaches the labels on the driver.
+
+    - pass A (one scan): every scalar-aggregate rule in one wide
+      ``df.agg``, unpivoted via ``stack``.
+    - pass B (one scan): every FK orphan count, the dims attached as
+      broadcast left joins (N referential checks cost one probe pass, not
+      N anti-join scans), and every 3σ-outlier count, its bounds read from
+      a one-row sum/sumsq/count stats aggregate attached as a broadcast
+      cross-join (same IEEE double op order as the oracle SQL: avg = sx/n;
+      std = sqrt(greatest((sxx - sx*sx/n)/(n-1), 0)); bound avg±3σ; n<=1
+      or an all-null column -> NULL bound -> NULL predicate -> 0).
+    - one keyed groupBy per uniqueness rule, one melted groupBy for every
+      dominance rule, one scalar per custom-SQL rule.
+
+    ``share_pass_a`` folds the outlier stats into pass A's aggregate and
+    persists it through ``scoped_persist``: the unpivot and the bounds
+    project different columns, so ReusedExchange cannot dedup them, and
+    without the persist the wide scan runs twice. That fits one action
+    over every piece (``run_rules``, which opens the scope). Without it
+    the stats are pass B's own subtree and nothing is persisted — the
+    static plans ``PreparedRulesMulti`` runs as separate actions.
+    """
+    def of(kind: str) -> list[tuple[int, Rule]]:
+        return [(i, r) for i, r in enumerate(rules) if r.kind == kind]
+
+    agg_rules, out_rules, ref_rules = of("agg"), of("outlier"), of("ref_integrity")
     pieces: list[DataFrame] = []
 
-    # Per-rule metadata (operator, expected bounds) is inlined as literals
-    # into each piece's projection instead of joined from a driver-built
-    # DataFrame: one less stage, no Python->JVM LocalRelation per run.
-    def _meta(r: Rule) -> str:
-        lo, hi = _expected_bounds(r)
-        return (f"'{_q(normalize_operator(r.operator))}', "
-                f"cast({lo!r} as double), cast({hi!r} as double)")
-
-    _META_COLS = "(rule_name, operator, expected_lo, expected_hi, actual_value)"
-
-    agg_rules = [r for r in rules if r.kind == "agg"]
-    out_rules = [r for r in rules if r.kind == "outlier"]
-    ref_rules = [r for r in rules if r.kind == "ref_integrity"]
-    dup_rules = [r for r in rules if r.kind == "group_dup"]
-    dom_rules = [r for r in rules if r.kind == "dominance"]
-    sql_rules = [r for r in rules if r.kind == "sql"]
-
-    # ---- pass A: fused scalar aggregates + outlier stats + total ----------
-    agg_a = None
-    exprs_a = [
-        F.expr(r.agg_expr).cast("double").alias(f"a{i}")
-        for i, r in enumerate(agg_rules)
-    ]
-    for r in out_rules:
+    # ---- pass A: fused scalar aggregates (+ outlier stats when shared) ----
+    agg_exprs = [F.expr(r.agg_expr).cast("double").alias(f"a{i}")
+                 for i, r in agg_rules]
+    stat_exprs = []
+    for i, r in out_rules:
         c = r.column
-        exprs_a += [
-            F.expr(f"count({c})").alias(f"__{c}_n"),
-            F.expr(_STATS_SX.format(c=c)).alias(f"__{c}_sx"),
-            F.expr(_STATS_SXX.format(c=c)).alias(f"__{c}_sxx"),
-        ]
-    multi_use = (bool(agg_rules) + bool(out_rules)) > 1
-    if exprs_a:
-        agg_a = df.agg(*exprs_a)
-        if multi_use:
-            # One row; persisted because its consumers project different
-            # columns (no ReusedExchange) — without this the full-table
-            # wide aggregation runs once per consumer. Released by the
-            # caller's scoped_caches (see the docstring).
-            agg_a = scoped_persist(agg_a)
+        stat_exprs += [F.expr(f"count({c})").alias(f"__n{i}"),
+                       F.expr(_STATS_SX.format(c=c)).alias(f"__sx{i}"),
+                       F.expr(_STATS_SXX.format(c=c)).alias(f"__sxx{i}")]
+    if share_pass_a and agg_rules and out_rules:
+        pass_a = stats = scoped_persist(df.agg(*agg_exprs, *stat_exprs))
+    else:
+        pass_a = df.agg(*agg_exprs) if agg_rules else None
+        stats = df.agg(*stat_exprs) if out_rules else None
     if agg_rules:
-        stack_a = ", ".join(f"'{_q(r.name)}', {_meta(r)}, a{i}"
-                            for i, r in enumerate(agg_rules))
-        pieces.append(agg_a.select(F.expr(
-            f"stack({len(agg_rules)}, {stack_a}) as {_META_COLS}")))
+        pieces.append(_stacked(pass_a, [(i, f"a{i}") for i, _r in agg_rules]))
 
-    # ---- pass B: fused outlier counts + FK orphan counts ------------------
-    if out_rules or ref_rules:
+    # ---- pass B: fused FK orphan counts + outlier counts ------------------
+    if ref_rules or out_rules:
         d = df
         exprs_b = []
-        for j, r in enumerate(ref_rules):
-            ref = ref_tables[r.ref_table].select(F.col(r.ref_column).alias(f"__rk{j}"))
+        for i, r in ref_rules:
+            ref = ref_tables[r.ref_table].select(F.col(r.ref_column).alias(f"__rk{i}"))
             # distinct guards against row multiplication under duplicate ref
             # keys; when the ref column is a declared PK (unique_refs) the
             # guard is skipped — at warehouse scale that saves a full shuffle
             # of the dimension before the broadcast build.
             if r.ref_table not in unique_refs:
                 ref = ref.distinct()
-            d = d.join(F.broadcast(ref), F.col(r.column) == F.col(f"__rk{j}"), "left")
+            d = d.join(F.broadcast(ref), F.col(r.column) == F.col(f"__rk{i}"), "left")
             exprs_b.append(
                 F.count(F.when(F.col(r.column).isNotNull()
-                               & F.col(f"__rk{j}").isNull(), 1))
-                .cast("double").alias(f"r{j}"))
+                               & F.col(f"__rk{i}").isNull(), 1))
+                .cast("double").alias(f"b{i}"))
         if out_rules:
-            # Bounds from pass A's one-row stats, attached as a broadcast
-            # cross-join: same IEEE op order as the oracle SQL (avg = sx/n;
-            # std = sqrt(greatest((sxx - sx*sx/n)/(n-1), 0)); bound avg±3σ;
-            # n<=1 or all-null column -> NULL bound -> NULL predicate -> 0).
             bound_exprs = []
-            for i, r in enumerate(out_rules):
-                c = r.column
-                avg = f"(__{c}_sx / __{c}_n)"
-                std = (f"(case when __{c}_n > 1 then sqrt(greatest("
-                       f"(__{c}_sxx - (__{c}_sx*__{c}_sx)/__{c}_n)/(__{c}_n - 1), "
+            for i, _r in out_rules:
+                n, sx, sxx = f"__n{i}", f"__sx{i}", f"__sxx{i}"
+                avg = f"({sx} / {n})"
+                std = (f"(case when {n} > 1 then sqrt(greatest("
+                       f"({sxx} - ({sx}*{sx})/{n})/({n} - 1), "
                        f"cast(0 as double))) end)")
                 bound_exprs += [F.expr(f"{avg} + 3 * {std}").alias(f"__hi{i}"),
                                 F.expr(f"{avg} - 3 * {std}").alias(f"__lo{i}")]
-            d = d.join(F.broadcast(agg_a.select(*bound_exprs)))
-            for i, r in enumerate(out_rules):
-                c = r.column
-                cond = (F.col(c) > F.col(f"__hi{i}")) | (F.col(c) < F.col(f"__lo{i}"))
-                exprs_b.append(F.count(F.when(cond, 1)).cast("double").alias(f"o{i}"))
-        stack_b = ", ".join(
-            [f"'{_q(r.name)}', {_meta(r)}, r{j}" for j, r in enumerate(ref_rules)]
-            + [f"'{_q(r.name)}', {_meta(r)}, o{i}" for i, r in enumerate(out_rules)])
-        n_b = len(ref_rules) + len(out_rules)
-        pieces.append(d.agg(*exprs_b).select(F.expr(
-            f"stack({n_b}, {stack_b}) as {_META_COLS}")))
+            d = d.join(F.broadcast(stats.select(*bound_exprs)))
+            for i, r in out_rules:
+                c = F.col(r.column)
+                cond = (c > F.col(f"__hi{i}")) | (c < F.col(f"__lo{i}"))
+                exprs_b.append(F.count(F.when(cond, 1)).cast("double").alias(f"b{i}"))
+        pieces.append(_stacked(d.agg(*exprs_b),
+                               [(i, f"b{i}") for i, _r in ref_rules + out_rules]))
 
-    pieces += _dup_pieces(df, dup_rules)
-    dom = _dominance_piece(spark, df, dom_rules)
-    if dom is not None:
-        pieces.append(dom)
-    pieces += _sql_pieces(spark, sql_rules)
-
-    if not pieces:
-        # empty rule list (or only unrecognized kinds): an empty result
-        # frame, not an IndexError — callers treat "no rows" as "no rules"
-        return local_df(
-            spark, [], "rule_name string, operator string, expected_lo double, "
-                       "expected_hi double, actual_value double, is_valid boolean")
-    result = pieces[0]
-    for p in pieces[1:]:
-        result = result.unionAll(p)
-    return (result.withColumn("is_valid", F.expr(IS_VALID_CASE))
-            .select("rule_name", "operator", "expected_lo", "expected_hi",
-                    "actual_value", "is_valid"))
-
-
-def _dup_pieces(df: DataFrame, dup_rules: list[Rule]) -> list[DataFrame]:
-    pieces = []
-    for r in dup_rules:
-        d = df
-        if r.not_null_key:
-            d = d.na.drop(subset=list(r.keys))
-        lo, hi = _expected_bounds(r)
+    # ---- uniqueness: one keyed groupBy each ------------------------------
+    for i, r in of("group_dup"):
+        d = df.na.drop(subset=list(r.keys)) if r.not_null_key else df
         pieces.append(
             d.groupBy(*r.keys).agg(F.count(F.lit(1)).alias("__c"))
             .where(F.col("__c") > 1)
             .agg(F.count(F.lit(1)).cast("double").alias("actual_value"))
-            .selectExpr(
-                f"'{_q(r.name)}' as rule_name",
-                f"'{_q(normalize_operator(r.operator))}' as operator",
-                f"cast({lo!r} as double) as expected_lo",
-                f"cast({hi!r} as double) as expected_hi",
-                "actual_value"))
-    return pieces
+            .select(F.lit(i).alias("rule_idx"), "actual_value"))
 
+    # ---- dominance: ONE aggregation, no joins ----------------------------
+    # Melt keyed by rule_idx (nulls kept so sum(cnt) = total table rows, the
+    # reference's pct denominator), group to per-rule (value, cnt) lists —
+    # dominance columns are categorical by the name heuristic, so
+    # cardinality is bounded — and count values whose share exceeds 95%
+    # with an array expression. A sentinel row per rule (unioned map-side,
+    # no extra stage) keeps a result row per rule even on an empty table;
+    # its cnt is subtracted from the total.
+    dom_rules = of("dominance")
+    if dom_rules:
+        melt = ", ".join(f"{i}, cast(`{r.column}` as string)" for i, r in dom_rules)
+        melted = df.select(F.expr(
+            f"stack({len(dom_rules)}, {melt}) as (rule_idx, value)"))
+        idxs = ", ".join(str(i) for i, _r in dom_rules)
+        sentinel = spark.range(1).selectExpr(
+            f"explode(array({idxs})) as rule_idx", "cast(null as string) as value")
+        pieces.append(
+            melted.unionAll(sentinel)
+            .groupBy("rule_idx", "value")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .groupBy("rule_idx")
+            .agg((F.sum("cnt") - 1).alias("__tot"),
+                 F.collect_list(F.when(F.col("value").isNotNull(),
+                                       F.col("cnt"))).alias("__cnts"))
+            .select("rule_idx", F.expr(
+                "cast(size(filter(__cnts, c -> c * 100.0 / __tot > 95.0)) "
+                "as double)").alias("actual_value")))
 
-def _dominance_piece(
-    spark: SparkSession, df: DataFrame, dom_rules: list[Rule]
-) -> DataFrame | None:
-    if not dom_rules:
-        return None
-    # ONE aggregation, no joins: melt (nulls kept so sum(cnt) = total
-    # table rows, the reference's pct denominator), group to per-column
-    # (value, cnt) lists — dominance columns are categorical by the name
-    # heuristic, so cardinality is bounded — and count values whose share
-    # exceeds 95% with an array expression. A sentinel row per column
-    # (unioned map-side, no extra stage) keeps a result row per rule even
-    # on an empty table; its cnt is subtracted from the total.
-    cols = [r.column for r in dom_rules]
-    # _q-escape the stack labels like col_arr/_case do: an unescaped quote
-    # in a hand-built rule's column name would break the SQL (or mismatch
-    # the escaped sentinel labels)
-    stack_expr = ", ".join(f"'{_q(c)}', cast(`{c}` as string)" for c in cols)
-    melted = df.select(F.expr(
-        f"stack({len(cols)}, {stack_expr}) as (column_name, value)"))
-    col_arr = ", ".join(f"'{_q(c)}'" for c in cols)
-    sentinel = spark.range(1).selectExpr(
-        f"explode(array({col_arr})) as column_name",
-        "cast(null as string) as value",
-    ).select("column_name", "value")
-
-    def _case(pick) -> str:
-        return ("case " + " ".join(
-            f"when column_name = '{_q(r.column)}' then {pick(r)}"
-            for r in dom_rules) + " end")
-
-    return (
-        melted.unionAll(sentinel)
-        .groupBy("column_name", "value")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .groupBy("column_name")
-        .agg(
-            (F.sum("cnt") - 1).alias("__tot"),
-            F.collect_list(
-                F.when(F.col("value").isNotNull(),
-                       F.col("cnt"))).alias("__cnts"))
-        .select(
-            F.expr(_case(lambda r: f"'{_q(r.name)}'")).alias("rule_name"),
-            F.expr(_case(lambda r: f"'{_q(normalize_operator(r.operator))}'")
-                   ).alias("operator"),
-            F.expr(_case(lambda r: f"cast({_expected_bounds(r)[0]!r} as double)")
-                   ).alias("expected_lo"),
-            F.expr(_case(lambda r: f"cast({_expected_bounds(r)[1]!r} as double)")
-                   ).alias("expected_hi"),
-            F.expr("cast(size(filter(__cnts, "
-                   "c -> c * 100.0 / __tot > 95.0)) as double)"
-                   ).alias("actual_value")))
-
-
-def _sql_pieces(spark: SparkSession, sql_rules: list[Rule]) -> list[DataFrame]:
-    pieces = []
-    for r in sql_rules:
+    # ---- custom SQL: one scalar each --------------------------------------
+    for i, r in of("sql"):
         res = spark.sql(r.sql)
-        first_col = res.columns[0]
-        lo, hi = _expected_bounds(r)
         # first() over limit(1), NOT limit(1).select(...): a custom query
         # returning ZERO rows must still surface as one (rule, NULL) row —
         # IS_VALID_CASE then marks it invalid — instead of silently
         # vanishing from the report as if the rule never ran
         pieces.append(res.limit(1).agg(
-            F.first(F.col(first_col).cast("double")).alias("__v")).select(
-            F.lit(r.name).alias("rule_name"),
-            F.lit(normalize_operator(r.operator)).alias("operator"),
-            F.lit(lo).cast("double").alias("expected_lo"),
-            F.lit(hi).cast("double").alias("expected_hi"),
-            F.col("__v").alias("actual_value")))
+            F.first(F.col(res.columns[0]).cast("double")).alias("actual_value"))
+            .select(F.lit(i).alias("rule_idx"), "actual_value"))
     return pieces
+
+
+def _result_relation(
+    spark: SparkSession,
+    results: list[tuple[str | None, list[tuple], list]],
+) -> DataFrame:
+    """Label collected (rule_idx, actual_value) rows on the driver and emit
+    them as one Arrow local relation (``functions.local_df``): (table_name,
+    rule_name, operator, expected_lo, expected_hi, actual_value, is_valid).
+
+    ``results`` holds (table_name, labels, rows) per table or piece; each
+    row takes ``labels[rule_idx]`` — rule names and operators arrive as
+    Python data, whatever quotes or backslashes they hold, and no
+    downstream action starts a Python worker. ``is_valid`` is the same SQL
+    CASE the oracle uses, so verdicts are bit-identical to it."""
+    rows = [(tname, *labels[idx], value)
+            for tname, labels, values in results for idx, value in values]
+    return local_df(
+        spark, rows,
+        "table_name string, rule_name string, operator string, "
+        "expected_lo double, expected_hi double, actual_value double",
+    ).selectExpr("*", f"{IS_VALID_CASE} AS is_valid")
 
 
 class PreparedRulesMulti:
     """Rule suites for MANY tables compiled once, executed per run with
     CONCURRENT jobs — the engine's scheduled-validation execution mode.
 
-    Why not N ``run_rules`` calls unioned into one lazy DataFrame: a
+    It shares ``run_rules``' compiler (``_rule_pieces``) and result
+    labelling (``_result_relation``); only the scheduling differs. A
     multi-table rule suite is dozens of small independent stages, and one
     action schedules them with enough serialization that per-stage latency
     dominates (measured 5.6s for ~25 stages at sf0.1 where the summed
@@ -651,23 +627,20 @@ class PreparedRulesMulti:
     the reference runs with its 10-thread rule executor
     (routes/validations.py:786-789), but per table-pass, not per rule.
 
-    Every piece is a STATIC plan (no data-dependent literals): pass B reads
-    its outlier bounds from a broadcast of its own stats subtree — the
-    exact ``run_rules`` formulation, so values are bit-identical — which
-    means frames analyze/codegen once at prepare time and repeated ``run()``
-    calls are pure execution (prepared-statement semantics; Catalyst
-    planning at ~0.2s/plan dominates sub-second queries, DuckDB-style
-    engines plan in µs). Per table the pieces are: one pass-A scalar agg,
-    one pass-B agg (FK orphan counts via broadcast left joins + 3σ outlier
-    counts), each uniqueness groupBy, one dominance melt, each custom-SQL
-    scalar.
+    Every piece is a STATIC plan (no data-dependent literals, nothing
+    persisted): pass B reads its outlier bounds from a broadcast of its own
+    stats subtree, so values are bit-identical to ``run_rules``, frames
+    analyze/codegen once at prepare time and repeated ``run()`` calls are
+    pure execution (prepared-statement semantics; Catalyst planning at
+    ~0.2s/plan dominates sub-second queries, DuckDB-style engines plan in
+    µs). Labels and bounds are computed here too, so a non-numeric
+    expected value raises at prepare time.
 
     Scalars come back to the driver (a few hundred doubles — the reference
-    materializes every rule result too, manager:442-483) and re-emit as one
-    local relation; ``is_valid`` is evaluated by the same SQL CASE the
-    single-table path and the oracle use. Full-table scans and shuffles all
-    stay distributed; at cluster scale concurrent actions are exactly how a
-    scheduler-bound many-small-queries workload keeps executors saturated
+    materializes every rule result too, manager:442-483), keyed by rule
+    position. Full-table scans and shuffles all stay distributed; at
+    cluster scale concurrent actions are exactly how a scheduler-bound
+    many-small-queries workload keeps executors saturated
     (spark.scheduler.mode=FAIR on a shared cluster).
     """
 
@@ -676,105 +649,29 @@ class PreparedRulesMulti:
         inputs: list[tuple[str, DataFrame, list["Rule"],
                            dict[str, DataFrame] | None,
                            frozenset[str] | set[str]]],
-        tag_col: str = "table_name",
-        max_concurrency: int = 16,
-        spark: SparkSession | None = None,
     ):
-        if not inputs and spark is None:
-            raise ValueError(
-                "PreparedRulesMulti: empty inputs — pass spark= to prepare "
-                "an empty suite (run() then returns an empty relation)")
-        self.spark = spark if spark is not None else inputs[0][1].sparkSession
-        self.tag_col = tag_col
-        self.max_concurrency = max_concurrency
-        # (tname, rules_in_row_order | None, frame): rules present -> ONE
-        # row unpacked by position (pass A / pass B aggs); None -> rows
-        # carry (rule_name, operator, expected_lo/hi, actual_value).
-        self.jobs: list[tuple[str, list[Rule] | None, DataFrame]] = []
+        if not inputs:
+            raise ValueError("PreparedRulesMulti: empty inputs — nothing to prepare")
+        self.spark = inputs[0][1].sparkSession
+        # (table_name, labels, piece): each piece's rows key into its
+        # table's labels by position
+        self.jobs: list[tuple[str, list[tuple], DataFrame]] = []
         for tname, df, rules, ref_tables, unique_refs in inputs:
-            groups = {
-                "agg": [r for r in rules if r.kind == "agg"],
-                "outlier": [r for r in rules if r.kind == "outlier"],
-                "ref": [r for r in rules if r.kind == "ref_integrity"],
-                "dup": [r for r in rules if r.kind == "group_dup"],
-                "dom": [r for r in rules if r.kind == "dominance"],
-                "sql": [r for r in rules if r.kind == "sql"],
-            }
-            ref_tables = ref_tables or {}
-            unique_refs = frozenset(unique_refs or ())
-            if groups["agg"]:
-                self.jobs.append((tname, groups["agg"], df.agg(*[
-                    F.expr(r.agg_expr).cast("double").alias(f"a{i}")
-                    for i, r in enumerate(groups["agg"])])))
-            out_rules, ref_rules = groups["outlier"], groups["ref"]
-            if out_rules or ref_rules:
-                d = df
-                exprs_b = []
-                for j, r in enumerate(ref_rules):
-                    ref = ref_tables[r.ref_table].select(
-                        F.col(r.ref_column).alias(f"__rk{j}"))
-                    if r.ref_table not in unique_refs:
-                        ref = ref.distinct()
-                    d = d.join(F.broadcast(ref),
-                               F.col(r.column) == F.col(f"__rk{j}"), "left")
-                    exprs_b.append(
-                        F.count(F.when(F.col(r.column).isNotNull()
-                                       & F.col(f"__rk{j}").isNull(), 1))
-                        .cast("double").alias(f"r{j}"))
-                if out_rules:
-                    # Bounds from the stats subtree via broadcast cross-join
-                    # (same IEEE op order as run_rules and the oracle SQL).
-                    # Not persisted: the only consumer is this piece, and a
-                    # static plan keeps prepare-once semantics.
-                    stat_exprs = []
-                    for r in out_rules:
-                        c = r.column
-                        stat_exprs += [
-                            F.expr(f"count({c})").alias(f"__{c}_n"),
-                            F.expr(_STATS_SX.format(c=c)).alias(f"__{c}_sx"),
-                            F.expr(_STATS_SXX.format(c=c)).alias(f"__{c}_sxx"),
-                        ]
-                    bound_exprs = []
-                    for i, r in enumerate(out_rules):
-                        c = r.column
-                        avg = f"(__{c}_sx / __{c}_n)"
-                        std = (f"(case when __{c}_n > 1 then sqrt(greatest("
-                               f"(__{c}_sxx - (__{c}_sx*__{c}_sx)/__{c}_n)"
-                               f"/(__{c}_n - 1), cast(0 as double))) end)")
-                        bound_exprs += [
-                            F.expr(f"{avg} + 3 * {std}").alias(f"__hi{i}"),
-                            F.expr(f"{avg} - 3 * {std}").alias(f"__lo{i}")]
-                    d = d.join(F.broadcast(
-                        df.agg(*stat_exprs).select(*bound_exprs)))
-                    for i, r in enumerate(out_rules):
-                        c = r.column
-                        cond = ((F.col(c) > F.col(f"__hi{i}"))
-                                | (F.col(c) < F.col(f"__lo{i}")))
-                        exprs_b.append(F.count(F.when(cond, 1))
-                                       .cast("double").alias(f"o{i}"))
-                self.jobs.append(
-                    (tname, ref_rules + out_rules, d.agg(*exprs_b)))
-            for piece in _dup_pieces(df, groups["dup"]):
-                self.jobs.append((tname, None, piece))
-            dom = _dominance_piece(self.spark, df, groups["dom"])
-            if dom is not None:
-                self.jobs.append((tname, None, dom))
-            for piece in _sql_pieces(self.spark, groups["sql"]):
-                self.jobs.append((tname, None, piece))
+            labels = _rule_labels(rules)
+            self.jobs += [(tname, labels, piece) for piece in _rule_pieces(
+                self.spark, df, rules, ref_tables or {},
+                unique_refs or frozenset(), share_pass_a=False)]
 
     def run(self) -> DataFrame:
         """Collect every piece concurrently; assemble the result relation
-        (tag_col, rule_name, operator, expected_lo, expected_hi,
+        (table_name, rule_name, operator, expected_lo, expected_hi,
         actual_value, is_valid)."""
-        return collect_rule_jobs(self.spark, self.jobs, self.tag_col,
-                                 self.max_concurrency)
+        return collect_rule_jobs(self.spark, self.jobs)
 
 
 def collect_rule_jobs(
     spark: SparkSession,
-    jobs: list[tuple[str, list["Rule"] | None, DataFrame]],
-    tag_col: str = "table_name",
-    max_concurrency: int = 16,
+    jobs: list[tuple[str, list[tuple], DataFrame]],
 ) -> DataFrame:
     """Concurrently collect prepared rule-piece frames (possibly spanning
     several ``PreparedRulesMulti`` instances on sibling sessions) and
@@ -783,49 +680,19 @@ def collect_rule_jobs(
     relation is built on ``spark``."""
     from concurrent.futures import ThreadPoolExecutor
 
-    rows: list[tuple] = []
-    with ThreadPoolExecutor(max_concurrency) as pool:
-        for (tname, piece_rules, _df), res in zip(
-                jobs, pool.map(lambda j: j[2].collect(), jobs)):
-            if piece_rules is not None:  # one positional row
-                for r, v in zip(piece_rules, res[0]):
-                    lo, hi = _expected_bounds(r)
-                    rows.append((tname, r.name,
-                                 normalize_operator(r.operator),
-                                 float(lo), float(hi), v))
-            else:
-                for rec in res:
-                    rows.append((tname, rec["rule_name"],
-                                 rec["operator"], rec["expected_lo"],
-                                 rec["expected_hi"], rec["actual_value"]))
-
-    # One Arrow local relation (functions.local_df): values arrive as is,
-    # whatever quotes or backslashes a table or rule name holds, and no
-    # downstream action starts a Python worker. is_valid stays the SAME
-    # SQL CASE text, so verdicts are bit-identical to run_rules and the
-    # oracle.
-    return local_df(
-        spark, rows,
-        f"`{tag_col}` string, rule_name string, operator string, "
-        f"expected_lo double, expected_hi double, actual_value double",
-    ).selectExpr(f"`{tag_col}`", "rule_name", "operator", "expected_lo",
-                 "expected_hi", "actual_value",
-                 f"{IS_VALID_CASE} AS is_valid")
+    with ThreadPoolExecutor(16) as pool:
+        values = list(pool.map(lambda j: j[2].collect(), jobs))
+    return _result_relation(
+        spark, [(tname, labels, v) for (tname, labels, _df), v in zip(jobs, values)])
 
 
 def run_rules_multi(
     inputs: list[tuple[str, DataFrame, list["Rule"],
                        dict[str, DataFrame] | None,
                        frozenset[str] | set[str]]],
-    tag_col: str = "table_name",
-    max_concurrency: int = 16,
 ) -> DataFrame:
     """One-shot ``PreparedRulesMulti(...).run()`` (see class docstring)."""
-    return PreparedRulesMulti(inputs, tag_col, max_concurrency).run()
-
-
-def _q(s: str) -> str:
-    return s.replace("'", "''")
+    return PreparedRulesMulti(inputs).run()
 
 
 def run_validations(
@@ -838,10 +705,8 @@ def run_validations(
     (supabase_validation_manager.py:442-483 shape)."""
     ts = run_at or _dt.datetime.now(_dt.timezone.utc).isoformat()
     by_name = {r.name: r for r in rules}
-    with scoped_caches():
-        got = run_rules(df, rules, ref_tables).collect()
     out = []
-    for row in got:
+    for row in run_rules(df, rules, ref_tables).collect():
         r = by_name[row["rule_name"]]
         out.append({
             "rule_name": r.name,
@@ -858,6 +723,12 @@ def run_validations(
 # ---------------------------------------------------------------------------
 # DuckDB oracle SQL generation from the same Rule objects
 # ---------------------------------------------------------------------------
+
+def _q(s: str) -> str:
+    """A DuckDB string literal's body: DuckDB only doubles quotes (a
+    backslash is an ordinary character there, unlike in Spark SQL)."""
+    return s.replace("'", "''")
+
 
 def rule_oracle_scalar(rule: Rule, table: str) -> str:
     """Scalar SELECT computing the rule's actual value in DuckDB."""

@@ -93,14 +93,15 @@ def get_spark(app_name: str = "sparvi_spark", shuffle_partitions: int | None = N
 
 # --------------------------------------------------------------------------
 # Scoped cache registry: operators persist() internal frames that their
-# RESULT still references lazily (the LSH banded signature base, run_rules'
-# pass A), so they cannot unpersist before returning. Long-running callers
-# (a streaming intake per microbatch, a monitor per table per day) would
-# otherwise accumulate one never-released CacheManager entry per call.
-# Callers wrap build+materialize in ``with scoped_caches():`` — every frame
-# persisted through ``scoped_persist`` inside the context is unpersisted on
-# exit (pin results first via localCheckpoint, your own persist+count, or a
-# collect). Without an active context behavior is unchanged.
+# RESULT still references lazily (the LSH banded signature base), so they
+# cannot unpersist before returning. Long-running callers (a streaming
+# intake per microbatch) would otherwise accumulate one never-released
+# CacheManager entry per call. Callers wrap build+materialize in
+# ``with scoped_caches():`` — every frame persisted through
+# ``scoped_persist`` inside the context is unpersisted on exit (pin results
+# first via localCheckpoint, your own persist+count, or a collect). Without
+# an active context behavior is unchanged. An eager operator opens its own
+# scope around its persist and its action (``run_rules`` and its pass A).
 # --------------------------------------------------------------------------
 
 _CACHE_CTX = threading.local()

@@ -8,9 +8,12 @@ Why this exists: driver-side rows used to reach Spark as rendered SQL
 rules — ``back\\slash`` came back as ``backslash``, ``tab\\tx`` as a real
 tab, and a trailing backslash raised ``ParseException``. Those frames are
 now Arrow local relations (``functions.local_df``); this file pins the
-round trip for the three routes rows take: ``local_df`` itself, a state
-write (``StateStore.append_rows`` -> ``read``) and the multi-table rule
-runner's result relation (``collect_rule_jobs``).
+round trip for the routes rows take: ``local_df`` itself, a state write
+(``StateStore.append_rows`` -> ``read``), and both rule runners' result
+relations. Rule names used to be rendered into Spark SQL literals with
+quote-only escaping, so every rule kind is sent through ``run_rules`` and
+``run_rules_multi`` with hostile names, and ``Engine.run_validations``
+runs its generated suite on a table whose name holds a backslash.
 """
 
 from __future__ import annotations
@@ -38,8 +41,17 @@ def _plan_leaf(df) -> str:
 
 
 def test_hostile_values_round_trip_every_route(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from sparvi_spark.engine import Engine
     from sparvi_spark.functions import local_df
-    from sparvi_spark.operators.validation import Rule, run_rules_multi
+    from sparvi_spark.operators.validation import (
+        Rule,
+        generate_default_rules,
+        run_rules,
+        run_rules_multi,
+        spec_from_dataframe,
+    )
     from sparvi_spark.sources.state import StateStore
 
     rows = list(zip(STRINGS, DOUBLES))
@@ -87,3 +99,41 @@ def test_hostile_values_round_trip_every_route(spark, tmp_path):
         # and NULL fail greater_than 0
         want = d is not None and (math.isnan(d) or d > 0)
         assert rec["is_valid"] is want, (r.name, d, rec["is_valid"])
+
+    # 4. every rule kind with hostile rule names, through both runners
+    base = spark.range(4).selectExpr("id", "cast(id as double) AS v",
+                                     "cast(id % 2 as string) AS s")
+    refs = {"dim": spark.range(4).selectExpr("id AS k")}
+    kinds = {"agg": (4.0, {"agg_expr": "count(*)"}),
+             "outlier": (0.0, {"column": "v"}),
+             "group_dup": (0.0, {"keys": ("id",)}),
+             "dominance": (0.0, {"column": "s"}),
+             "sql": (7.0, {"sql": "SELECT 7"}),
+             "ref_integrity": (0.0, {"column": "id", "ref_table": "dim",
+                                     "ref_column": "k"})}
+    rules = [Rule(f"{kind}:{s}", "", "equals", want, kind, **kw)
+             for kind, (want, kw) in kinds.items() for s in STRINGS if s]
+    want = {r.name: (r.expected_value, True) for r in rules}
+    for res in (run_rules(base, rules, ref_tables=refs),
+                run_rules_multi([(tname, base, rules, refs, frozenset())])):
+        assert {r["rule_name"]: (r["actual_value"], r["is_valid"])
+                for r in res.collect()} == want
+
+    # 5. the Engine's generated suite on a table named with a backslash:
+    # the returned frame, the stored results and the failure event all
+    # carry generate_default_rules' names (the empty table fails V1)
+    engine = Engine(spark, str(tmp_path / "engine"))
+    table, run_at = "sch\\tbl", "2026-01-02 00:00:00"
+    empty = base.where("id < 0")
+    generated = sorted(r.name for r in generate_default_rules(
+        spec_from_dataframe(empty, table), as_of=run_at))
+    returned = engine.run_validations(empty, table, run_at=run_at).collect()
+    stored = engine.state.read("validation_results").where(
+        F.col("table_name") == table).collect()
+    assert sorted(r["rule_name"] for r in returned) == generated
+    assert sorted(r["rule_name"] for r in stored) == generated
+    events = {r["event_type"]: r["details"]
+              for r in engine.state.read("engine_events").collect()}
+    failed = events["validation_failure"].split(",")
+    assert f"check_{table}_not_empty" in failed
+    assert set(failed) <= set(generated)
