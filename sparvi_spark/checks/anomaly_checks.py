@@ -53,8 +53,6 @@ SERIES_CTE = (
     "FROM events GROUP BY 1, 2)"
 )
 
-_OUT_COLS = ["metric_name", "ts_day", "value", "score", "is_anomaly", "threshold"]
-
 
 # ---------------------------------------------------------------------------
 # One-statement Spark-SQL texts for the graded anomaly slots (r12).

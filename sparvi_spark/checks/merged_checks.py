@@ -159,51 +159,6 @@ _X13_COLS = ["key", "n", "id_checksum"]
 _X13_SQL = aligned_union_check(_X13_PARTS, columns=_X13_COLS)[1]
 
 
-def q_id_checksums_fused(spark, sf_dir):
-    """x13 Spark side, hand-fused sampling subplan (see the comment on
-    _X13_PARTS). Values are the exact integers the per-part fns emit —
-    the window rank and the hash bucket derive from the same hash_expr
-    the standalone operators use."""
-    from pyspark.sql import Window
-
-    from sparvi_spark.checks.pipeline_checks import SAMPLE_PCT, STRAT_N
-    from sparvi_spark.operators.sampling import hash_expr
-    from sparvi_spark.testdata import load_table
-
-    docs = load_table(spark, "documents", sf_dir)
-    w = Window.partitionBy("source").orderBy(hash_expr("doc_id"),
-                                             F.col("doc_id"))
-    base = (docs.select("source", "doc_id",
-                        (hash_expr("doc_id") % 100).alias("__bk"))
-            .withColumn("__rk", F.row_number().over(w))
-            .groupBy("source")
-            .agg(F.expr(f"cast(sum(case when __bk < {SAMPLE_PCT} then 1 "
-                        f"else 0 end) as bigint)").alias("bn"),
-                 F.expr(f"cast(sum(case when __bk < {SAMPLE_PCT} then "
-                        f"doc_id else 0 end) as bigint)").alias("bc"),
-                 F.expr(f"cast(sum(case when __rk <= {STRAT_N} then 1 "
-                        f"else 0 end) as bigint)").alias("sn"),
-                 F.expr(f"cast(sum(case when __rk <= {STRAT_N} then "
-                        f"doc_id else 0 end) as bigint)").alias("sc")))
-    sampled = base.selectExpr(
-        "explode(array("
-        "named_struct('part', 'sample_bernoulli', 'key', source, "
-        "'n', bn, 'id_checksum', bc), "
-        "named_struct('part', 'sample_stratified', 'key', source, "
-        "'n', sn, 'id_checksum', sc))) AS u"
-        # n = 0 can only mean "no row survived the filter" — the
-        # standalone fns (and the oracle GROUP BYs) omit such groups
-        # entirely rather than emitting a zero row
-    ).where("u.n > 0").selectExpr("u.part AS part", "u.key AS key",
-                                  "u.n AS n", "u.id_checksum AS id_checksum")
-    out = sampled
-    for tag, f, _sql, exprs in _X13_PARTS[2:]:
-        out = out.unionAll(f(spark, sf_dir).selectExpr(
-            f"'{tag}' as part",
-            *[f"{exprs[c]} AS {c}" for c in _X13_COLS]))
-    return out
-
-
 # d02: the three pair-score parts with the gram work SHARED (r12). The
 # registry previously built each part independently: the jaccard part
 # and the minhash part each ran the capped-docs gram build (tokenize +
@@ -440,7 +395,7 @@ def _sp_results(events: str) -> str:
 
 
 def _sp_latest(src: str, part_keys: str, extra_cols: str = "") -> str:
-    # trends.latest_per_key(keys, run_at, tiebreak=[event_id])
+    # trends.retain_latest(keys, run_at, 1, tiebreak=[event_id])
     return (f"SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY "
             f"{part_keys} ORDER BY run_at DESC, event_id DESC) AS __rn "
             f"FROM ({src})) WHERE __rn = 1")

@@ -394,14 +394,6 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DUCK_STOP = ", ".join(f"'{w}'" for w in STOPWORDS_EN)
 
-# DuckDB twins of the Gopher-style repetition signals (range() is
-# end-exclusive so the bigram index list is naturally empty for <2 tokens,
-# but the 0.0 guard mirrors the Spark branch exactly)
-_DUCK_BIGRAMS = (
-    "list_transform(range(1, len({t})), "
-    "i -> concat_ws(' ', {t}[i], {t}[i + 1]))"
-).format(t=_DUCK_TOKS)
-
 # Staged CTEs compute each per-row array exactly once (tk -> sorted bigrams
 # -> run ends), then the longest equal-run of the sorted bigram list gives
 # the most-frequent-bigram multiplicity in O(n log n) — mirroring the Spark

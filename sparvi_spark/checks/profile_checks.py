@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparvi_spark.operators.profile import bucket_columns, top_values, type_bucket
+from sparvi_spark.operators.profile import type_bucket
 from sparvi_spark.testdata import SCHEMAS, TABLES, load_table
 
 # Fixed reference instant for freshness/future-date checks so Spark and the
@@ -180,7 +180,7 @@ def q_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One spark.sql statement (r12): a union of per-column two-level
     aggregations — groupBy the single column (narrow, type-homogeneous
     key), then count groups / sum group sizes. The previous
-    ``distinct_counts_melted`` call melted every row into a 3-typed-slot
+    typed-slot melt put every row into a 3-typed-slot
     shape first, so the first-level hash key was (16-char column_name
     string + three slots, two of them NULL) on rows x columns melted
     rows; here each subtree hashes just the column's own values and the
@@ -188,9 +188,7 @@ def q_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     exec win interleaved at sf0.1, plus the builder round trips). Same
     two-exchange scale shape: the shuffle carries per-partition-deduped
     values, bounded by column cardinality. Values/dtypes verified
-    identical (parity + oracle). The engine-API operator
-    ``distinct_counts_melted`` keeps the melt (arbitrary column lists of
-    mixed types through one generic plan)."""
+    identical (parity + oracle)."""
     from sparvi_spark.checks import table_views
 
     v = table_views(spark, sf_dir, ["lineitem"])["lineitem"]
@@ -597,21 +595,6 @@ SQL_PATTERN_MATCH = _sql_pattern_match()
 # ---------------------------------------------------------------------------
 # P12 column type distribution (schema walk; oracle uses typeof())
 # ---------------------------------------------------------------------------
-
-def q_type_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rows = []
-    for t in TABLES:
-        df = load_table(spark, t, sf_dir)
-        counts: dict[str, int] = {}
-        for f in df.schema.fields:
-            b = type_bucket(f.dataType)
-            counts[b] = counts.get(b, 0) + 1
-        for b, n in counts.items():
-            rows.append((t, b, n))
-    from sparvi_spark.functions import local_df
-
-    return local_df(spark, rows, "table_name string, bucket string, n_cols long")
-
 
 _DUCK_BUCKET_CASE = (
     "CASE WHEN ty LIKE '%[]' THEN 'other' "

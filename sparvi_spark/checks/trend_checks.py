@@ -7,7 +7,7 @@ each event acts as a validation result (rule = user_id, outcome = event_type
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparvi_spark.checks.anomaly_checks import SERIES_CTE, metric_series
@@ -18,9 +18,7 @@ from sparvi_spark.operators.trends import (
     anomaly_top_tables,
     change_frequency,
     high_impact_objects,
-    latest_per_key,
     retain_latest,
-    validation_daily_rollup,
 )
 from sparvi_spark.testdata import load_table
 
@@ -81,9 +79,9 @@ FROM series GROUP BY metric_name
 
 def q_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = _results(spark, sf_dir)
-    daily = latest_per_key(
+    daily = retain_latest(
         res.withColumn("day", F.to_date("run_at")),
-        ["rule_id", "day"], "run_at", tiebreak=["event_id"],
+        ["rule_id", "day"], "run_at", 1, tiebreak=["event_id"],
     )
     per_day = daily.groupBy("day").agg(
         F.count(F.when(F.col("is_valid"), 1)).alias("passed"),
@@ -135,7 +133,7 @@ FROM spine LEFT JOIN per_day ON spine.day = per_day.day
 
 def q_current_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = _results(spark, sf_dir)
-    latest = latest_per_key(res, ["rule_id"], "run_at", tiebreak=["event_id"])
+    latest = retain_latest(res, ["rule_id"], "run_at", 1, tiebreak=["event_id"])
     return latest.agg(
         F.count(F.when(F.col("is_valid"), 1)).alias("passed"),
         F.count(F.when(~F.col("is_valid"), 1)).alias("failed"),
@@ -171,7 +169,8 @@ def q_group_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id"), F.col("ts").alias("run_at"),
         (F.col("value") > 100).alias("is_valid"),
     )
-    latest = latest_per_key(res, ["grp", "rule_id"], "run_at", tiebreak=["event_id"])
+    latest = retain_latest(res, ["grp", "rule_id"], "run_at", 1,
+                           tiebreak=["event_id"])
     return latest.groupBy("grp").agg(
         F.count(F.lit(1)).alias("total_rules"),
         F.count(F.when(F.col("is_valid"), 1)).alias("passing"),
@@ -304,42 +303,6 @@ FROM spine LEFT JOIN daily ON spine.day = daily.day
 # T9 change frequency + T10 high-impact objects (lag-gap windows)
 # ---------------------------------------------------------------------------
 
-def q_change_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, "events", sf_dir)
-    freq = change_frequency(
-        ev.withColumn("changed", F.col("value") > 100),
-        ["event_type"], "ts", "changed",
-    )
-    return freq.select(
-        "event_type", "total_checks", "changes", "change_ratio", "frequency",
-        F.round("avg_hours_between_changes", 2).alias("avg_hours_between_changes"),
-        F.date_format("last_change", "yyyy-MM-dd HH:mm:ss").alias("last_change"),
-    )
-
-
-SQL_CHANGE_FREQUENCY = """
-WITH flagged AS (SELECT event_type, ts, value > 100 AS changed FROM events),
-gaps AS (SELECT event_type, ts,
-  (epoch(ts) - epoch(lag(ts) OVER (PARTITION BY event_type ORDER BY ts)))
-    / 3600.0 AS gap_h
- FROM flagged WHERE changed),
-gap_stats AS (SELECT event_type,
-  round(avg(gap_h), 4) AS avg_raw, strftime(max(ts), '%Y-%m-%d %H:%M:%S')
-    AS last_change FROM gaps GROUP BY event_type),
-totals AS (SELECT event_type, count(*) AS total_checks,
-  count(case when changed then 1 end) AS changes FROM flagged GROUP BY event_type)
-SELECT t.event_type, t.total_checks, t.changes,
-  round(t.changes * cast(1 as double) / t.total_checks, 4) AS change_ratio,
-  case when round(t.changes * cast(1 as double) / t.total_checks, 4) >= 0.5
-         then 'high'
-       when round(t.changes * cast(1 as double) / t.total_checks, 4) >= 0.1
-         then 'medium'
-       else 'low' end AS frequency,
-  round(g.avg_raw, 2) AS avg_hours_between_changes, g.last_change
-FROM totals t LEFT JOIN gap_stats g ON t.event_type = g.event_type
-""".strip()
-
-
 def q_high_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir)
     freq = change_frequency(
@@ -373,10 +336,7 @@ QUALIFY row_number() OVER (ORDER BY change_ratio DESC, user_id ASC) <= 10
 
 def q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir)
-    # deterministic tiebreak on event_id for ts collisions
-    w = Window.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
-    kept = (ev.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") <= 10).drop("__rn"))
+    kept = retain_latest(ev, ["user_id"], "ts", 10, tiebreak=["event_id"])
     return kept.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("kept"),
         F.sum("event_id").alias("id_checksum"),
@@ -524,7 +484,7 @@ def q_health_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T4 current health (reshaped to T5's schema as grp='__overall__') +
     T5 per-group summary, unioned."""
     res = _results(spark, sf_dir)
-    latest = latest_per_key(res, ["rule_id"], "run_at", tiebreak=["event_id"])
+    latest = retain_latest(res, ["rule_id"], "run_at", 1, tiebreak=["event_id"])
     overall = latest.agg(
         F.count(F.lit(1)).alias("total_rules"),
         F.count(F.when(F.col("is_valid"), 1)).alias("passing"),

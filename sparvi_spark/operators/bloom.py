@@ -95,19 +95,6 @@ def bloom_build(
     )
 
 
-def bloom_hit_expr(col: str, n_bits: int, k: int, portable: bool) -> Column:
-    """Membership probe against the broadcast `words` column: AND of k bit
-    tests — a pure projection, usable after a broadcast join of the one-row
-    filter frame."""
-    hit = F.lit(True)
-    for e in _position_exprs(col, n_bits, k, portable):
-        probe = F.expr(
-            f"(element_at(words, cast(({e}) div 64 as int) + 1) "
-            f"& shiftleft(1L, cast(({e}) % 64 as int))) != 0")
-        hit = hit & probe
-    return hit
-
-
 def _staged_probe(df: DataFrame, col: str, n_bits: int, k: int,
                   portable: bool) -> tuple[DataFrame, Column]:
     """(frame, hit column) with the expensive base hash STAGED: in
@@ -199,7 +186,6 @@ def contamination_bloom(
 
 __all__ = [
     "bloom_build",
-    "bloom_hit_expr",
     "bloom_filter_members",
     "contamination_bloom",
 ]

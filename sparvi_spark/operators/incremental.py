@@ -25,10 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-STATS_SCHEMA = ("partition_value string, column_name string, cnt bigint, "
-                "nulls bigint, sum_dec decimal(38,8), sumsq_dec decimal(38,8), "
-                "sq_ovfl bigint, min_val double, max_val double")
-
 # NULL partition keys are first-class: every state row, change-detection
 # compare, scan filter, and purge keys on this sentinel instead of SQL NULL
 # (isin()/!= never match NULL — NULL-keyed rows would be re-flagged every
@@ -153,10 +149,6 @@ def incremental_profile(
 # partitions, stores KBs of (bucket, count) rows, and quantiles of the
 # WHOLE table fold out of the merged state.
 # ---------------------------------------------------------------------------
-
-QSKETCH_SCHEMA = ("partition_value string, column_name string, "
-                  "bucket bigint, cnt bigint")
-
 
 def log_bucket_expr(col: str, sub_bits: int = 4) -> F.Column:
     """Value-intrinsic bucket id for a double column.
@@ -369,10 +361,6 @@ def sketch_distinct(sketch: DataFrame, p: int = HLL_P) -> DataFrame:
 # At 100 TB: state is O(partitions × columns × k') tiny rows, refresh cost
 # is one groupBy over the changed partitions only.
 # ---------------------------------------------------------------------------
-
-TOPK_SCHEMA = ("partition_value string, column_name string, value string, "
-               "cnt bigint")
-
 
 def partition_topk_sketch(
     df: DataFrame, partition_col: str, cols: list[str],

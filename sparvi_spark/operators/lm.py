@@ -2,9 +2,9 @@
 filtering (Wenzek et al., "CCNet: Extracting High Quality Monolingual
 Datasets from Web Crawl Data", public): score each document by how
 typical its word transitions are of a reference corpus, then filter or
-bucket by score. The reference corpus here can be the corpus itself
-(self-scoring surfaces outlier documents: boilerplate, gibberish,
-wrong-language) or a curated reference (cross-scoring).
+bucket by score. The reference corpus here is the corpus itself:
+self-scoring surfaces outlier documents (boilerplate, gibberish,
+wrong-language).
 
 Model = bigram transition counts with add-a smoothing:
 
@@ -38,25 +38,10 @@ def _toks(text_col: str) -> str:
     return f"split(lower(trim(`{text_col}`)), '\\\\s+')"
 
 
-def _doc_bigrams(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, w1, w2) — one row per ADJACENT token pair, order-preserving.
-
-    The token array is MATERIALIZED as a column before the transform:
-    higher-order-function lambdas are interpreted, so a split() spliced
-    into the lambda body re-runs per ELEMENT — O(tokens²) per document
-    (the dedup._doc_shingles / langid cliff). As a column reference it
-    evaluates once per row and the transform is linear."""
-    toks = _toks(text_col)
-    return _bigrams_from_tokens(
-        df.selectExpr(f"`{id_col}` as __id", f"{toks} as __tk"))
-
-
 def _bigrams_from_tokens(tk: DataFrame) -> DataFrame:
-    """(__id, token-array ``__tk``) -> (__id, w1, w2) — the ONE canonical
-    bigram-explode used by both the text path above and the shared-
-    tokens path in ``self_lm_score`` (the DuckDB oracle SQL_LM_SCORE
-    replays the same pairing; keeping a single copy means a future
-    change cannot silently desynchronize the two callers).
+    """(__id, token-array ``__tk``) -> (__id, w1, w2) — the bigram
+    explode of ``self_lm_score``; the DuckDB oracle SQL_LM_SCORE replays
+    the same pairing.
 
     r12: built from ``arrays_zip`` of two ``slice``s instead of a
     ``transform(sequence(...), i -> struct(element_at...))`` lambda —
@@ -73,61 +58,6 @@ def _bigrams_from_tokens(tk: DataFrame) -> DataFrame:
             .selectExpr("__id", "p.`0` as w1", "p.`1` as w2"))
 
 
-def train_bigram_lm(
-    df: DataFrame,
-    text_col: str = "text",
-) -> dict[str, DataFrame]:
-    """Train on a corpus -> {'bigrams': (w1, w2, c12), 'contexts':
-    (w1, c1), 'vocab': one-row (v)} — all lazy frames, never collected;
-    reuse across many scoring calls."""
-    toks = _toks(text_col)
-    bigrams = (_doc_bigrams(df.selectExpr(f"monotonically_increasing_id() "
-                                          f"as __rid", f"`{text_col}`"),
-                            "__rid", text_col)
-               .groupBy("w1", "w2").agg(F.expr("count(1)").alias("c12")))
-    contexts = bigrams.groupBy("w1").agg(F.expr("sum(c12)").alias("c1"))
-    vocab = (df.selectExpr(f"explode({toks}) as w")
-             .agg(F.expr("count(distinct w)").alias("v")))
-    return {"bigrams": bigrams, "contexts": contexts, "vocab": vocab}
-
-
-def bigram_lm_score(
-    df: DataFrame,
-    model: dict[str, DataFrame],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    smooth_a: float = SMOOTH_A,
-    round_to: int = 9,
-    doc_bg: DataFrame | None = None,
-) -> DataFrame:
-    """(id, n_bigrams, avg_p) per document with >= 2 tokens — mean
-    smoothed transition probability under the model (higher = more
-    typical of the training corpus). Unseen bigrams/contexts fall back
-    to the smoothing floor via zero-filled left joins.
-
-    Determinism: each probability is exact-integer ratios through IEEE
-    division; the per-document mean routes the (rounded) terms through
-    DECIMAL so in-document summation order cannot matter.
-    """
-    a = float(smooth_a)
-    if doc_bg is None:
-        doc_bg = _doc_bigrams(df, id_col, text_col)
-    scored = (doc_bg
-              .join(model["bigrams"], ["w1", "w2"], "left")
-              .join(model["contexts"], ["w1"], "left")
-              .join(F.broadcast(model["vocab"])))
-    prob = (f"((cast(coalesce(c12, 0) as double) + {a!r}d) / "
-            f"(cast(coalesce(c1, 0) as double) + {a!r}d * cast(v as double)))")
-    return (scored
-            .selectExpr("__id",
-                        f"cast(round({prob}, 15) as {_DEC}) as __p")
-            .groupBy("__id")
-            .agg(F.expr("count(1)").alias("n_bigrams"),
-                 F.expr(f"round(cast(sum(__p) as double) / count(1), "
-                        f"{round_to})").alias("avg_p"))
-            .withColumnRenamed("__id", id_col))
-
-
 def self_lm_score(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -137,9 +67,8 @@ def self_lm_score(
 ) -> DataFrame:
     """Score a corpus against its own bigram statistics — the outlier
     screen: documents whose transitions are rare in-corpus (gibberish,
-    boilerplate explosions, wrong language) land at the bottom.
-
-    ``train_bigram_lm`` stays the separate-corpus API.
+    boilerplate explosions, wrong language) land at the bottom. It is
+    the one LM scorer; x27 and x28 grade it against the DuckDB oracle.
 
     ``tokens_col`` names a PRE-SPLIT token-array column on ``df`` —
     callers that already tokenized the corpus for another consumer (the

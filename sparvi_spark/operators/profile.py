@@ -71,76 +71,6 @@ def distinct_count(c: str, exact: bool = True) -> Column:
     return expr.alias(f"{c}__distinct")
 
 
-def _canonical_slot(dt: T.DataType) -> tuple[str, str]:
-    """(slot name, cast type) for the typed melt: injective widenings only
-    (int->bigint, float->double); everything else keeps its own slot so
-    values of different columns never collide across types. Slot names
-    are SANITIZED — decimal(12,2)/char(8)/array<...> simpleStrings carry
-    parens/commas/brackets that are not valid identifiers and break the
-    generated stack() aliases; the cast TYPE stays verbatim."""
-    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        return "slot_long", "bigint"
-    if isinstance(dt, (T.FloatType, T.DoubleType)):
-        return "slot_double", "double"
-    if isinstance(dt, T.StringType):
-        return "slot_string", "string"
-    s = dt.simpleString()
-    safe = "".join(ch if ch.isalnum() else "_" for ch in s)
-    return f"slot_{safe}", s
-
-
-def distinct_counts_melted(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Exact per-column distinct + non-null counts for many columns at once
-    -> (column_name, distinct_cnt, nonnull_cnt).
-
-    ``df.agg(countDistinct(c1), ..., countDistinct(cN))`` plans an Expand
-    that clones every row N+1 times at FULL row width and hash-aggregates on
-    an N+1-column key (measured 2.6s on 11 x 600k rows). This melt keeps the
-    same two-exchange shape but each melted row carries ONE value in a typed
-    slot: rows are a fixed few columns wide no matter how many columns are
-    profiled, and the first-level group key hashes a couple of scalars. At
-    warehouse scale the first exchange carries per-partition-deduped
-    (column, value) pairs — bounded by sum of column cardinalities, not
-    rows x columns.
-    """
-    slots: dict[str, str] = {}  # slot name -> cast type
-    col_slot: dict[str, tuple[str, str]] = {}
-    for f in df.schema.fields:
-        if f.name not in cols:
-            continue
-        slot, cast_t = _canonical_slot(f.dataType)
-        slots.setdefault(slot, cast_t)
-        col_slot[f.name] = (slot, cast_t)
-    slot_names = sorted(slots)
-
-    by_slot: dict[str, list[str]] = {s: [] for s in slot_names}
-    for c in cols:
-        by_slot[col_slot[c][0]].append(c)
-
-    melts = []
-    for slot in slot_names:
-        group = by_slot[slot]
-        if not group:
-            continue
-        cast_t = slots[slot]
-        stack = ", ".join(f"'{c}', cast(`{c}` as {cast_t})" for c in group)
-        proj = [f"stack({len(group)}, {stack}) as (column_name, {slot})"] + [
-            f"cast(null as {slots[s]}) as {s}" for s in slot_names if s != slot
-        ]
-        melts.append(df.selectExpr(*proj).select("column_name", *slot_names))
-    melted = melts[0]
-    for m in melts[1:]:
-        melted = melted.unionAll(m)
-
-    nonnull = " or ".join(f"{s} is not null" for s in slot_names)
-    return (melted.groupBy("column_name", *slot_names)
-            .agg(F.count(F.lit(1)).alias("__cnt"))
-            .groupBy("column_name")
-            .agg(F.count(F.when(F.expr(nonnull), 1)).alias("distinct_cnt"),
-                 F.sum(F.when(F.expr(nonnull), F.col("__cnt"))
-                       .otherwise(F.lit(0))).alias("nonnull_cnt")))
-
-
 def exact_percentiles(
     df: DataFrame,
     cols: list[str],
@@ -612,29 +542,6 @@ def text_exprs(c: str) -> list[Column]:
         F.sum(ln.cast("long")).alias(f"{c}__sum_len"),
         F.count(F.when(F.col(c) == "", 1)).alias(f"{c}__empties"),
     ]
-
-
-def _safe_div(num: Column, den: Column) -> Column:
-    return F.when(den > 0, num / den)
-
-
-def derived_avg(sum_dec: Column, cnt: Column) -> Column:
-    """Deterministic cross-engine mean: exact decimal sum -> double -> divide."""
-    return F.round(_safe_div(sum_dec.cast("double"), cnt), 6)
-
-
-def derived_stddev_samp(sum_dec: Column, sumsq_dec: Column, cnt: Column) -> Column:
-    """Sample stddev from exact decimal Σx, Σx² (deterministic cross-engine).
-
-    stddev² = (Σx² − (Σx)²/n) / (n−1); guard n>1 (sample stddev of a
-    single row is undefined -> NULL, and the unguarded division crashes
-    under ANSI) and clamp negatives from float cancellation. SQL STDDEV
-    in the reference is *sample* stddev (SURVEY §7.1).
-    """
-    sx = sum_dec.cast("double")
-    sxx = sumsq_dec.cast("double")
-    var = (sxx - (sx * sx) / cnt) / (cnt - F.lit(1))
-    return F.when(cnt > 1, F.round(F.sqrt(F.greatest(var, F.lit(0.0))), 4))
 
 
 # ---------------------------------------------------------------------------

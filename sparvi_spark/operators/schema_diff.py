@@ -16,8 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparvi_spark.testdata import TableSpec
-
 IMPORTANT_CHANGES = (
     "table_removed", "column_removed", "column_type_changed", "primary_key_changed",
 )
@@ -26,19 +24,6 @@ SNAPSHOT_SCHEMA = (
     "table_name string, column_name string, col_type string, nullable boolean, "
     "pk_ordinal int"
 )
-
-
-def snapshot_from_specs(spark: SparkSession, specs: list[TableSpec]) -> DataFrame:
-    """Build a snapshot DataFrame from TableSpecs (S8 baseline bootstrap
-    writes this to the snapshots table on first run)."""
-    rows = []
-    for spec in specs:
-        pk_pos = {c: i + 1 for i, c in enumerate(spec.primary_keys)}
-        for c in spec.columns:
-            rows.append((spec.name, c.name, c.bucket, c.nullable, pk_pos.get(c.name)))
-    from sparvi_spark.functions import local_df
-
-    return local_df(spark, rows, SNAPSHOT_SCHEMA)
 
 
 def snapshot_from_dataframe(spark: SparkSession, df: DataFrame, table: str,

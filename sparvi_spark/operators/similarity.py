@@ -32,25 +32,14 @@ def norm_expr(a: str) -> Column:
     return F.sqrt(dot_expr(a, a))
 
 
-def cosine_expr(a: str, b: str) -> Column:
-    """Cosine; a zero-norm side yields NULL (never ranks), via nullif on
-    the denominator — under ANSI mode (the Spark 4 default) a bare
-    x/0.0 double division THROWS DIVIDE_BY_ZERO instead of returning
-    ±Inf/NaN, so one zero vector in a corpus killed the whole scan (the
-    downstream isNotNull/isnan filters never got to run). nullif is
-    bit-transparent for every nonzero denominator."""
-    return dot_expr(a, b) / F.nullif(norm_expr(a) * norm_expr(b),
-                                     F.lit(0.0))
-
-
 def _cosine_with_norms(a: str, b: str, norm_a: str, norm_b: str) -> Column:
     """cosine from PRE-COMPUTED per-side norms: dot/(na*nb).
 
-    Bit-identical to ``cosine_expr`` (same IEEE op order), but the norm
-    folds run once per VECTOR below the join instead of once per PAIR
-    above it — in a q×n brute-force scan that is 3 folds/pair -> 1.
-    Zero-norm sides yield NULL via the same nullif guard (ANSI: bare
-    /0.0 throws; see cosine_expr)."""
+    The norm folds run once per VECTOR below the join instead of once
+    per PAIR above it — in a q×n brute-force scan that is 3 folds/pair
+    -> 1. Zero-norm sides yield NULL through the nullif guard: under
+    ANSI a bare /0.0 throws, and one zero-norm vector would kill the
+    whole scan."""
     return dot_expr(a, b) / F.nullif(F.col(norm_a) * F.col(norm_b),
                                      F.lit(0.0))
 
@@ -623,19 +612,6 @@ def l2_argmin_expr(dists_col: str) -> Column:
     twice) — measured 2x on analysis+eval of literal-codebook plans."""
     return F.expr(
         f"cast(array_position({dists_col}, array_min({dists_col})) - 1 as int)")
-
-
-def l2_assign_expr(
-    vec_expr: str, centroids: list[list[float]]
-) -> Column:
-    """0-based index of the L2-nearest centroid for ``vec_expr`` — a pure
-    projection with the centroid table inlined as literals (argmin of the
-    explicit left-associated sum-of-squares; see l2_argmin_expr for the
-    tie rule). Prefer staging `_l2_dists_expr` as a column + l2_argmin_expr
-    when the same distances feed several expressions."""
-    d = _l2_dists_expr(vec_expr, centroids)
-    return F.expr(
-        f"cast(array_position({d}, array_min({d})) - 1 as int)")
 
 
 def _l2_dists_expr(vec_expr: str, centroids: list[list[float]]) -> str:

@@ -29,11 +29,6 @@ STOPWORDS_EN = ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it"]
 BPE_TOKEN_REGEX = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
 
 
-def token_count_expr(text_col: str) -> Column:
-    """Whitespace token count."""
-    return F.expr(f"size({tokens_expr(text_col)})")
-
-
 def bpe_token_count_expr(text_col: str) -> Column:
     """BPE-ish token count: words, numbers, and single punctuation marks.
 

@@ -14,154 +14,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-def latest_per_key(
-    df: DataFrame, keys: list[str], order_col: str, tiebreak: list[str] | None = None
-) -> DataFrame:
-    """Keep the newest row per key (ties broken deterministically).
-
-    Reference pattern: ``ORDER BY run_at DESC LIMIT 1`` per rule
-    (backend/app.py:4462-4471, 4556-4596).
-    """
-    order = [F.col(order_col).desc()] + [F.col(c).desc() for c in (tiebreak or [])]
-    w = Window.partitionBy(*keys).orderBy(*order)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
 def date_spine(spark: SparkSession, start: str, end: str) -> DataFrame:
     """Dense daily spine [start, end] (reference: generate_series,
     core/anomalies/api.py:590-594). Tiny — broadcast by the optimizer."""
     return spark.sql(
         f"SELECT explode(sequence(date '{start}', date '{end}', "
         f"interval 1 day)) AS day"
-    )
-
-
-def metric_trends(
-    df: DataFrame, keys: list[str], order_col: str, value_col: str
-) -> DataFrame:
-    """T2 historical-trends pivot (app.py:4701-4750): per series ->
-    current/min/max/first + percent & absolute change (last-first)."""
-    w = Window.partitionBy(*keys).orderBy(order_col) \
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    first_v = F.first(value_col).over(w)
-    last_v = F.last(value_col).over(w)
-    per_row = df.select(
-        *keys,
-        F.count(F.lit(1)).over(w).alias("n_points"),
-        F.min(value_col).over(w).alias("min_value"),
-        F.max(value_col).over(w).alias("max_value"),
-        first_v.alias("first_value"),
-        last_v.alias("current_value"),
-        (last_v - first_v).alias("absolute_change"),
-        F.when(first_v != 0, F.round((last_v - first_v) * 100.0 / first_v, 4))
-        .alias("percent_change"),
-    )
-    return per_row.dropDuplicates(keys)
-
-
-def validation_daily_rollup(
-    results: DataFrame,
-    spark: SparkSession,
-    start: str,
-    end: str,
-    rule_col: str = "rule_id",
-    ts_col: str = "run_at",
-    valid_col: str = "is_valid",
-    total_rules: int | None = None,
-) -> DataFrame:
-    """T3 daily rollup (app.py:4425-4553): keep the LATEST result per rule
-    per day, count passed/failed, densify over the full date range, and
-    compute health = passed/(passed+failed)*100."""
-    # tiebreak on the validity flag: two results for one rule at the SAME
-    # timestamp (second-granularity re-runs) must not flip pass/fail
-    # counts between executions of the same query
-    daily = latest_per_key(
-        results.withColumn("day", F.to_date(ts_col)),
-        [rule_col, "day"], ts_col, tiebreak=[valid_col],
-    )
-    per_day = daily.groupBy("day").agg(
-        F.count(F.when(F.col(valid_col), 1)).alias("passed"),
-        F.count(F.when(~F.col(valid_col), 1)).alias("failed"),
-        F.count(F.when(F.col(valid_col).isNull(), 1)).alias("errored"),
-        F.count(F.lit(1)).alias("seen"),
-    )
-    spine = date_spine(spark, start, end)
-    out = (
-        spine.join(per_day, spine.day == per_day.day, "left")
-        .select(
-            spine.day,
-            F.coalesce("passed", F.lit(0)).alias("passed"),
-            F.coalesce("failed", F.lit(0)).alias("failed"),
-            F.coalesce("errored", F.lit(0)).alias("errored"),
-            F.coalesce("seen", F.lit(0)).alias("seen"),
-        )
-    )
-    if total_rules is not None:
-        out = out.withColumn("not_run", F.lit(total_rules) - F.col("seen"))
-    return out.withColumn(
-        "health_score",
-        F.when(
-            (F.col("passed") + F.col("failed")) > 0,
-            F.round(F.col("passed") * 100.0 / (F.col("passed") + F.col("failed")), 2),
-        ),
-    )
-
-
-def current_health_score(
-    results: DataFrame,
-    rule_col: str = "rule_id",
-    ts_col: str = "run_at",
-    valid_col: str = "is_valid",
-) -> DataFrame:
-    """T4 (app.py:4556-4596): latest result per rule -> overall health."""
-    latest = latest_per_key(results, [rule_col], ts_col,
-                            tiebreak=[valid_col])
-    return latest.agg(
-        F.count(F.when(F.col(valid_col), 1)).alias("passed"),
-        F.count(F.when(~F.col(valid_col), 1)).alias("failed"),
-    ).select(
-        "passed", "failed",
-        F.when((F.col("passed") + F.col("failed")) > 0,
-               F.round(F.col("passed") * 100.0 / (F.col("passed") + F.col("failed")), 2))
-        .alias("health_score"),
-    )
-
-
-def per_group_summary(
-    results: DataFrame,
-    group_col: str,
-    rule_col: str = "rule_id",
-    ts_col: str = "run_at",
-    valid_col: str = "is_valid",
-) -> DataFrame:
-    """T5 per-table validation summary (routes/validations.py:100-206)."""
-    latest = latest_per_key(results, [group_col, rule_col], ts_col,
-                            tiebreak=[valid_col])
-    return latest.groupBy(group_col).agg(
-        F.count(F.lit(1)).alias("total_rules"),
-        F.count(F.when(F.col(valid_col), 1)).alias("passing"),
-        F.count(F.when(~F.col(valid_col), 1)).alias("failing"),
-        F.count(F.when(F.col(valid_col).isNull(), 1)).alias("unknown"),
-        F.max(ts_col).alias("last_run"),
-    ).withColumn(
-        "health_score",
-        F.when((F.col("passing") + F.col("failing")) > 0,
-               F.round(F.col("passing") * 100.0 / (F.col("passing") + F.col("failing")), 2)),
-    )
-
-
-def dashboard_daily_metrics(
-    df: DataFrame, ts_col: str, value_col: str, entity_col: str
-) -> DataFrame:
-    """T6 (app.py:5659-5845): daily mean value + distinct entities + volume."""
-    return df.groupBy(F.to_date(ts_col).alias("day")).agg(
-        F.round(F.avg(value_col), 4).alias("avg_value"),
-        F.countDistinct(entity_col).alias("n_entities"),
-        F.count(F.lit(1)).alias("n_rows"),
     )
 
 
@@ -258,21 +116,6 @@ def high_impact_objects(
     )
 
 
-def suggest_refresh_interval(
-    frequency: str, current_interval_hours: float, avg_hours_between: float | None
-) -> float:
-    """T11 (change_analytics.py:179-271) heuristic, clamped to [1, 168] h."""
-    if frequency == "high":
-        suggestion = (
-            avg_hours_between / 3 if avg_hours_between else current_interval_hours / 2
-        )
-    elif frequency == "low":
-        suggestion = current_interval_hours * 2
-    else:
-        suggestion = current_interval_hours
-    return max(1.0, min(168.0, suggestion))
-
-
 def usage_patterns(
     log: DataFrame,
     entity_col: str = "table_name",
@@ -311,12 +154,6 @@ def usage_patterns(
     return out
 
 
-def append_metrics(df: DataFrame, path: str) -> None:
-    """T12 metric tracking: append-only series store
-    (core/analytics/historical_metrics.py:28-163)."""
-    df.write.mode("append").parquet(path)
-
-
 def fetch_metric_history(
     metrics: DataFrame,
     metric_name: str | None = None,
@@ -347,9 +184,17 @@ def fetch_metric_history(
     return out
 
 
-def retain_latest(df: DataFrame, keys: list[str], order_col: str, n: int = 30) -> DataFrame:
-    """T14 retention (supabase_manager.py:275-305): keep newest N per key."""
-    w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
+def retain_latest(
+    df: DataFrame, keys: list[str], order_col: str, n: int,
+    tiebreak: list[str] | None = None,
+) -> DataFrame:
+    """Keep the newest ``n`` rows per key — T14 retention
+    (supabase_manager.py:275-305) and, with ``n=1``, latest-per-key
+    (``ORDER BY run_at DESC LIMIT 1`` per rule, backend/app.py:4462-4471,
+    4556-4596). ``tiebreak`` columns, also descending, make the cutoff
+    deterministic under equal ``order_col`` values (SURVEY §7.9)."""
+    order = [F.col(order_col).desc()] + [F.col(c).desc() for c in (tiebreak or [])]
+    w = Window.partitionBy(*keys).orderBy(*order)
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") <= n)

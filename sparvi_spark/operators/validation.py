@@ -357,20 +357,6 @@ def generate_default_rules(spec: TableSpec, as_of: str = DEFAULT_AS_OF) -> list[
     return rules
 
 
-def row_growth_rule(table_name: str) -> Rule:
-    """V3 row growth >20% vs previous count (evaluated against metrics store)."""
-    return Rule(f"check_{table_name}_row_growth",
-                f"Detect >20% change in {table_name} row count", "equals", 0, "agg",
-                agg_expr="count(*)")
-
-
-def evaluate_row_growth(current: int, previous: int | None) -> int:
-    """default_validations.py:71-97 CASE semantics -> 0 ok / 1 anomalous."""
-    if previous is None:
-        return 0
-    return 1 if abs(current - previous) > previous * 0.2 else 0
-
-
 def row_growth_rule_vs(table_name: str, previous: int) -> Rule:
     """V3 with the previous count inlined as a literal: compiles into the
     fused pass-A aggregate like any scalar rule (the reference's generated

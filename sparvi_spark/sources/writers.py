@@ -8,16 +8,7 @@ partition layout (time/tenant partition columns so downstream reads prune).
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
-
-TARGET_FILE_BYTES = 128 << 20  # parquet sweet spot: one row group per file
-
-
-def estimate_output_files(row_count: int, avg_row_bytes: int,
-                          target_file_bytes: int = TARGET_FILE_BYTES) -> int:
-    return max(1, math.ceil(row_count * avg_row_bytes / target_file_bytes))
 
 
 def write_table(

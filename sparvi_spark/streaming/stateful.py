@@ -12,7 +12,7 @@ State is a single fixed-width row per key — O(keys), never O(rows).
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame

@@ -1,0 +1,113 @@
+"""Reference census: every top-level name in ``sparvi_spark/`` has a user.
+
+AST only, no Spark session. A name counts as used when some other
+top-level statement in the library, ``scripts/``, ``tests/``,
+``perfbench/`` or ``bench.py`` mentions it as a ``Name``, an
+``Attribute`` or a string literal (so ``getattr`` registries and
+``"pkg.mod:Class"`` paths count). Imports and ``__all__`` entries do not:
+a re-export is not a use.
+"""
+
+from __future__ import annotations
+
+import ast
+import re
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+LIB = ROOT / "sparvi_spark"
+_PATH_LIKE = re.compile(r"[A-Za-z_][\w.:]*")
+
+
+def _sources() -> list[Path]:
+    files = [ROOT / "bench.py"]
+    for d in ("sparvi_spark", "scripts", "tests", "perfbench"):
+        files += sorted((ROOT / d).rglob("*.py"))
+    return files
+
+
+def _is_dunder(name: str) -> bool:
+    return name.startswith("__") and name.endswith("__")
+
+
+def _mentions(stmt: ast.stmt) -> set[str]:
+    """Identifiers a top-level statement mentions, imports excluded."""
+    if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+        return set()
+    if (isinstance(stmt, ast.Assign)
+            and any(isinstance(t, ast.Name) and t.id == "__all__"
+                    for t in stmt.targets)):
+        return set()
+    out = set()
+    for node in ast.walk(stmt):
+        if isinstance(node, ast.Name):
+            out.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            out.add(node.attr)
+        elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
+              and _PATH_LIKE.fullmatch(node.value)):
+            out.update(re.split(r"[.:]", node.value))
+    return out
+
+
+def _defined(stmt: ast.stmt) -> list[str]:
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [stmt.name]
+    if isinstance(stmt, ast.Assign):
+        return [t.id for t in stmt.targets if isinstance(t, ast.Name)]
+    if isinstance(stmt, ast.AnnAssign) and isinstance(stmt.target, ast.Name):
+        return [stmt.target.id]
+    return []
+
+
+def _parse_all() -> dict[Path, ast.Module]:
+    return {p: ast.parse(p.read_text(), str(p)) for p in _sources()}
+
+
+def unreferenced_defs(trees: dict[Path, ast.Module]) -> list[str]:
+    """``module:name`` for each library top-level name no other top-level
+    statement mentions."""
+    uses: dict[str, set[tuple[Path, int]]] = {}
+    for path, tree in trees.items():
+        for i, stmt in enumerate(tree.body):
+            for name in _mentions(stmt):
+                uses.setdefault(name, set()).add((path, i))
+    out = []
+    for path, tree in trees.items():
+        if LIB not in path.parents:
+            continue
+        for i, stmt in enumerate(tree.body):
+            for name in _defined(stmt):
+                if _is_dunder(name):
+                    continue
+                if not uses.get(name, set()) - {(path, i)}:
+                    out.append(f"{path.relative_to(ROOT)}:{name}")
+    return out
+
+
+def unused_imports(trees: dict[Path, ast.Module]) -> list[str]:
+    """``module:name`` for each module-level import a non-``__init__``
+    library module never uses."""
+    out = []
+    for path, tree in trees.items():
+        if LIB not in path.parents or path.name == "__init__.py":
+            continue
+        used = set().union(*(_mentions(stmt) for stmt in tree.body))
+        for stmt in tree.body:
+            if isinstance(stmt, ast.ImportFrom) and stmt.module == "__future__":
+                continue
+            if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                for alias in stmt.names:
+                    bound = (alias.asname or alias.name).split(".")[0]
+                    if bound != "*" and bound not in used:
+                        out.append(f"{path.relative_to(ROOT)}:{bound}")
+    return out
+
+
+def test_every_library_name_is_referenced_and_every_import_used():
+    trees = _parse_all()
+    dead = unreferenced_defs(trees)
+    unused = unused_imports(trees)
+    assert not dead and not unused, (
+        "unreferenced top-level names:\n  " + "\n  ".join(dead)
+        + "\nunused module-level imports:\n  " + "\n  ".join(unused))

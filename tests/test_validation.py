@@ -4,12 +4,12 @@ import pytest
 
 from sparvi_spark.operators.validation import (
     Rule,
-    evaluate_row_growth,
     evaluate_rule,
     generate_default_rules,
     guess_start_date_column,
     normalize_operator,
     outlier_threshold,
+    row_growth_rule_vs,
     run_rules,
     run_validations,
 )
@@ -52,10 +52,14 @@ def test_evaluate_coercion_failure_is_invalid():
     assert evaluate_rule("greater_than", "abc", 5) is False
 
 
-def test_row_growth_semantics():
-    assert evaluate_row_growth(1000, None) == 0
-    assert evaluate_row_growth(1000, 900) == 0  # 11% change ok
-    assert evaluate_row_growth(1300, 1000) == 1  # 30% change flagged
+def test_row_growth_semantics(spark):
+    # V3 as the Engine runs it: 1200 rows against three previous counts.
+    # The CASE flags a change strictly greater than 20%, so +20% is valid.
+    rules = [row_growth_rule_vs(f"t{prev}", prev) for prev in (1081, 923, 1000)]
+    rows = {r["rule_name"]: r for r in run_rules(spark.range(1200), rules).collect()}
+    assert rows["check_t1081_row_growth"]["is_valid"] is True  # +11%
+    assert rows["check_t923_row_growth"]["is_valid"] is False  # +30%
+    assert rows["check_t1000_row_growth"]["is_valid"] is True  # +20% exactly
 
 
 # -- generator heuristics ---------------------------------------------------
