@@ -8,15 +8,15 @@ values. Usage:  python scripts/check_oracle.py [name_prefix ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import pandas as pd
 
-import os
 SF_DIR = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.01")
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]

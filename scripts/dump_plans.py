@@ -9,7 +9,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -22,7 +23,7 @@ def main() -> None:
     from sparvi_spark.checks import collect_all_checks
     from sparvi_spark.session import get_spark
 
-    out_dir = os.path.join("/root/repo/plans", tag)
+    out_dir = os.path.join(ROOT, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
 
     spark = get_spark("dump_plans")

@@ -15,11 +15,12 @@ from __future__ import annotations
 
 import json
 import shutil
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from intake_state_growth import seed_state, synth_docs  # noqa: E402
 
@@ -69,5 +70,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    sys.path.insert(0, "/root/repo/scripts")
     main()

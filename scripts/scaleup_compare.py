@@ -26,7 +26,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BASE = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 MULT = int(sys.argv[2]) if len(sys.argv) > 2 else 10

@@ -18,7 +18,7 @@ import re
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else os.environ.get(
     "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -11,9 +11,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparvi_spark.operators.anomalies import (
+    detection_sql,
     format_anomalies,
     iqr_anomalies,
+    iqr_sql,
+    moving_average_sql,
     zscore_anomalies,
+    zscore_sql,
 )
 from sparvi_spark.testdata import load_table
 
@@ -54,162 +58,13 @@ SERIES_CTE = (
 )
 
 
-# ---------------------------------------------------------------------------
-# One-statement Spark-SQL texts for the graded anomaly slots (r12).
-#
-# The detector DataFrame builders in operators/anomalies.py are selectExpr
-# chains; under the concurrent suite every chained Dataset creation is a
-# py4j round trip plus an eager re-analysis of the whole plan so far, all
-# GIL-serialized (SCALING.md r11-late: the suite wall is plan construction,
-# not execution). The texts below are the SAME expression strings those
-# builders emit — composed with the operators' own ``_d``/``_interp_sorted``
-# helpers, nested SELECTs mirroring each selectExpr/where stage — rendered
-# into ONE spark.sql call per slot. The analyzed plan (and every value) is
-# identical; scripts/snapshot_checks.py pins bit-for-bit equality across
-# all three SFs, and the DuckDB oracles are unchanged.
-# ---------------------------------------------------------------------------
+# The graded slots render the detector builders of operators/anomalies.py
+# (the same text the DataFrame operators run) over the memoized series
+# view, nested into ONE spark.sql statement per slot: one py4j round trip
+# and one analysis of the final plan instead of a chain of Dataset
+# creations. The DuckDB oracles are written independently below.
 
-from sparvi_spark.operators.anomalies import (  # noqa: E402
-    _INF,
-    _d,
-    _interp_sorted,
-    CUSUM_BASE_THRESHOLD,
-    IQR_BASE_THRESHOLD,
-    MA_BASE_THRESHOLD,
-    ZSCORE_BASE_THRESHOLD,
-)
-
-_WG = "(PARTITION BY `metric_name`)"
-_WO = "(PARTITION BY `metric_name` ORDER BY `ts`)"
-
-
-def _wf(window: int) -> str:
-    return (f"(PARTITION BY `metric_name` ORDER BY `ts` "
-            f"ROWS BETWEEN {window} PRECEDING AND 1 PRECEDING)")
-
-
-def _zscore_sql(src: str, sensitivity: float = 1.0,
-                window: int | None = None) -> str:
-    threshold = ZSCORE_BASE_THRESHOLD / sensitivity
-    v = "`value`"
-    if window is None:
-        mean = f"avg({v}) OVER {_WG}"
-        std = f"stddev_pop({v}) OVER {_WG}"
-        score = (f"case when {std} = {_d(0)} then {_d(0)} "
-                 f"else abs(({v} - ({mean})) / ({std})) end")
-        return (f"SELECT * FROM (SELECT *, {score} AS score, "
-                f"{score} > {_d(threshold)} AS is_anomaly, "
-                f"{_d(threshold)} AS threshold, "
-                f"count({v}) OVER {_WG} AS __cnt FROM {src}) "
-                f"WHERE __cnt >= 2")
-    wf = _wf(window)
-    mean = (f"case when count({v}) OVER {_WG} <= {window} "
-            f"then avg({v}) OVER {_WG} else avg({v}) OVER {wf} end")
-    std = (f"case when count({v}) OVER {_WG} <= {window} "
-           f"then stddev_pop({v}) OVER {_WG} "
-           f"else stddev_pop({v}) OVER {wf} end")
-    score = (f"case when ({std}) = {_d(0)} then {_d(0)} "
-             f"else abs(({v} - ({mean})) / ({std})) end")
-    return (f"SELECT * FROM (SELECT *, {score} AS score, "
-            f"{score} > {_d(threshold)} AS is_anomaly, "
-            f"{_d(threshold)} AS threshold, "
-            f"row_number() OVER {_WO} AS __rn, "
-            f"count({v}) OVER {_WG} AS __npts FROM {src}) "
-            f"WHERE (__npts <= {window} and __npts >= 2) "
-            f"or (__npts > {window} and __rn > {window})")
-
-
-def _iqr_sql(src: str, sensitivity: float = 1.0,
-             window: int | None = None) -> str:
-    threshold = IQR_BASE_THRESHOLD / sensitivity
-    v = "`value`"
-    if window is None:
-        inner = (f"SELECT * FROM (SELECT *, "
-                 f"percentile({v}, {_d(0.25)}) OVER {_WG} AS __q1, "
-                 f"percentile({v}, {_d(0.75)}) OVER {_WG} AS __q3, "
-                 f"count({v}) OVER {_WG} AS __cnt FROM {src}) "
-                 f"WHERE __cnt >= 4")
-    else:
-        wf = _wf(window)
-        arr = f"sort_array(collect_list({v}) OVER {wf})"
-        inner = (
-            f"SELECT * FROM (SELECT *, "
-            f"row_number() OVER {_WO} AS __rn, "
-            f"count({v}) OVER {_WG} AS __npts, "
-            f"case when count({v}) OVER {_WG} <= {window} "
-            f"then percentile({v}, 0.25) OVER {_WG} "
-            f"else {_interp_sorted(arr, 0.25)} end AS __q1, "
-            f"case when count({v}) OVER {_WG} <= {window} "
-            f"then percentile({v}, 0.75) OVER {_WG} "
-            f"else {_interp_sorted(arr, 0.75)} end AS __q3 FROM {src}) "
-            f"WHERE (__npts <= {window} and __npts >= 4) "
-            f"or (__npts > {window} and __rn > {window})")
-    iqr = "(__q3 - __q1)"
-    lower = f"(__q1 - {iqr} * {_d(threshold)})"
-    upper = f"(__q3 + {iqr} * {_d(threshold)})"
-    past_low = (f"case when {iqr} > {_d(0)} "
-                f"then abs(({lower} - {v}) / {iqr}) else {_INF} end")
-    past_high = (f"case when {iqr} > {_d(0)} "
-                 f"then abs(({v} - {upper}) / {iqr}) else {_INF} end")
-    score = (f"case when {v} < {lower} then {past_low} "
-             f"when {v} > {upper} then {past_high} else {_d(0)} end")
-    return (f"SELECT *, {score} AS score, "
-            f"({v} < {lower}) or ({v} > {upper}) AS is_anomaly, "
-            f"{_d(threshold)} AS threshold FROM ({inner})")
-
-
-def _ma_sql(src: str, sensitivity: float = 1.0, window: int = 7,
-            std_window: int | None = None) -> str:
-    sw = std_window or window
-    threshold = MA_BASE_THRESHOLD / sensitivity
-    v = "`value`"
-    wfwd = (f"(PARTITION BY `metric_name` ORDER BY `ts` "
-            f"ROWS BETWEEN CURRENT ROW AND {sw - 1} FOLLOWING)")
-    base1 = (f"SELECT * FROM (SELECT *, row_number() OVER {_WO} AS __rn, "
-             f"avg({v}) OVER {_wf(window)} AS __ma FROM {src}) "
-             f"WHERE __rn > {window}")
-    base2 = (f"SELECT *, count(1) OVER {_WG} AS __n_ma, "
-             f"row_number() OVER {_WO} AS __mi, "
-             f"stddev_pop(__ma) OVER {wfwd} AS __fwd_std, "
-             f"stddev_pop(__ma) OVER {_WG} AS __global_std FROM ({base1})")
-    tail_std = (f"max(case when __mi = __n_ma - {sw} + 1 "
-                f"then __fwd_std end) OVER {_WG}")
-    std = (f"case when __n_ma < {sw} then __global_std "
-           f"when __mi <= __n_ma - {sw} + 1 then __fwd_std "
-           f"else {tail_std} end")
-    base3 = f"SELECT *, {std} AS __std FROM ({base2})"
-    score = (f"case when __std = {_d(0)} then {_d(0)} "
-             f"else abs(({v} - __ma) / __std) end")
-    return (f"SELECT *, {score} AS score, "
-            f"case when __std = {_d(0)} then false "
-            f"else {score} > {_d(threshold)} end AS is_anomaly, "
-            f"{_d(threshold)} AS threshold, __ma AS moving_avg "
-            f"FROM ({base3})")
-
-
-def _cusum_sql(src: str, sensitivity: float = 1.0,
-               slack: float = 0.5) -> str:
-    threshold = CUSUM_BASE_THRESHOLD / sensitivity
-    v = "`value`"
-    run = (f"(PARTITION BY `metric_name` ORDER BY `ts` "
-           f"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)")
-    l1 = (f"SELECT * FROM (SELECT *, avg({v}) OVER {_WG} AS __mean, "
-          f"stddev_pop({v}) OVER {_WG} AS __std, "
-          f"count({v}) OVER {_WG} AS __cnt "
-          f"FROM (SELECT * FROM {src} WHERE {v} is not null)) "
-          f"WHERE __cnt >= 2")
-    k = f"{_d(slack)} * __std"
-    l2 = (f"SELECT *, sum({v} - __mean - {k}) OVER {run} AS __psum, "
-          f"sum(__mean - {v} - {k}) OVER {run} AS __nsum FROM ({l1})")
-    l3 = (f"SELECT *, "
-          f"__psum - least({_d(0)}, min(__psum) OVER {run}) AS __sp, "
-          f"__nsum - least({_d(0)}, min(__nsum) OVER {run}) AS __sn "
-          f"FROM ({l2})")
-    score = (f"case when __std = {_d(0)} then {_d(0)} "
-             f"else greatest(__sp, __sn) / __std end")
-    return (f"SELECT *, {score} AS score, "
-            f"{score} > {_d(threshold)} AS is_anomaly, "
-            f"{_d(threshold)} AS threshold FROM ({l3})")
+_K = ["metric_name"]
 
 
 def _series_view(spark: SparkSession, sf_dir: str) -> str:
@@ -231,20 +86,15 @@ def _finalize(df: DataFrame) -> DataFrame:
 
 def q_anomaly_scores_4way(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The a01 graded slot (4 detectors × one tagged union) rendered as
-    ONE spark.sql statement over the memoized series view (r12): the r11
-    hand-fused builder still paid ~16 Dataset creations (4 detector
-    chains + 4 tag selects + 3 unions), each a py4j round trip plus an
-    eager re-analysis — one SQL text is a single round trip and one
-    analysis of the final plan. Expression text comes from the same
-    ``_d``-composed strings the operator builders emit, so every value
-    is bit-identical (snapshot-pinned); the standalone q_* checks remain
-    the EXTRA/diagnostic surface."""
+    ONE spark.sql statement over the memoized series view: the detector
+    builders the operators run, one tagged select each. The standalone
+    q_* checks remain the EXTRA/diagnostic surface."""
     src = _series_view(spark, sf_dir)
     parts = [
-        ("zscore_global", _zscore_sql(src)),
-        ("zscore_rolling", _zscore_sql(src, window=ROLL_W)),
-        ("iqr_global", _iqr_sql(src)),
-        ("iqr_rolling", _iqr_sql(src, window=ROLL_W)),
+        ("zscore_global", zscore_sql(src, _K)),
+        ("zscore_rolling", zscore_sql(src, _K, window=ROLL_W)),
+        ("iqr_global", iqr_sql(src, _K)),
+        ("iqr_rolling", iqr_sql(src, _K, window=ROLL_W)),
     ]
     sql = " UNION ALL ".join(
         f"SELECT '{tag}' as method, metric_name, "
@@ -350,13 +200,12 @@ MA_W = 7
 
 
 def q_moving_average(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # one-statement build (see q_anomaly_scores_4way): same text as
-    # _finalize(moving_average_anomalies(series)), one analysis pass
+    # one-statement build (see q_anomaly_scores_4way)
     src = _series_view(spark, sf_dir)
     return spark.sql(
         f"SELECT metric_name, date_format(ts, 'yyyy-MM-dd') AS ts_day, "
         f"value, round(score, 4) AS score, is_anomaly, threshold "
-        f"FROM ({_ma_sql(src, window=MA_W)})")
+        f"FROM ({moving_average_sql(src, _K, window=MA_W)})")
 
 
 SQL_MOVING_AVERAGE = f"""
@@ -473,33 +322,20 @@ FROM j
 # ---------------------------------------------------------------------------
 
 def q_detection_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-statement build of the a07 config fan-out (r12; see
-    q_anomaly_scores_4way). Each config nests exactly the stages
-    detect_anomalies composes — eligibility count filter, detector,
-    format_anomalies' anomaly filter + severity — as SQL text; the
-    detector texts are the shared ``_*_sql`` builders above."""
-    from sparvi_spark.operators.anomalies import _SEVERITY_CUTS
-
+    """One-statement build of the a07 config fan-out: each config is the
+    ``detection_sql`` text ``detect_anomalies`` runs (eligibility filter,
+    detector, anomaly filter + severity), one branch of a UNION ALL."""
     src = _series_view(spark, sf_dir)
-    eligible = (f"(SELECT * FROM (SELECT *, "
-                f"count(`value`) OVER {_WG} AS __npts0 FROM {src}) "
-                f"WHERE __npts0 >= 7)")
     configs = [
-        ("cfg_z", "zscore", _zscore_sql(eligible, sensitivity=2.0)),
-        ("cfg_i", "iqr", _iqr_sql(eligible, sensitivity=1.0)),
-        ("cfg_c", "cusum", _cusum_sql(eligible, sensitivity=2.0)),
+        ("cfg_z", {"detection_method": "zscore", "sensitivity": 2.0}),
+        ("cfg_i", {"detection_method": "iqr", "sensitivity": 1.0}),
+        ("cfg_c", {"detection_method": "cusum", "sensitivity": 2.0}),
     ]
-    stmts = []
-    for cid, method, det in configs:
-        hi, med = _SEVERITY_CUTS.get(method, (5.0, 2.5))
-        sev = (f"case when score > {_d(hi)} then 'high' "
-               f"when score > {_d(med)} then 'medium' else 'low' end")
-        stmts.append(
-            f"SELECT '{cid}' AS config_id, metric_name, "
-            f"date_format(ts, 'yyyy-MM-dd') AS ts_day, value, "
-            f"round(score, 4) AS score, '{method}' AS method, "
-            f"{sev} AS severity FROM ({det}) WHERE is_anomaly")
-    return spark.sql(" UNION ALL ".join(stmts))
+    return spark.sql(" UNION ALL ".join(
+        f"SELECT '{cid}' AS config_id, metric_name, "
+        f"date_format(ts, 'yyyy-MM-dd') AS ts_day, value, "
+        f"round(score, 4) AS score, method, severity "
+        f"FROM ({detection_sql(src, _K, cfg)})" for cid, cfg in configs))
 
 
 SQL_DETECTION_RUN = f"""

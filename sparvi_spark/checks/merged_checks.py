@@ -363,26 +363,26 @@ def q_doc_scores_fused(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# r12 one-statement Spark builders for the remaining hot slots. Same
-# rationale as the anomaly family (see checks/__init__ _VIEWS comment):
-# each slot renders ONE Spark-SQL statement over per-(session, sf_dir)
-# temp views and calls spark.sql once, replacing 15-40 chained Dataset
-# creations (each a py4j round trip + eager re-analysis). The SQL text
-# mirrors the part builders' expression text stage for stage, so every
-# value is bit-identical — pinned by scripts/snapshot_checks.py at all
-# three SFs against the pre-rewrite outputs, and by the unchanged DuckDB
-# oracle SQL (which is still generated from the same part specs).
+# r12 one-statement Spark builders for the remaining hot slots: each slot
+# renders ONE Spark-SQL statement over per-(session, sf_dir) temp views
+# (see checks/__init__ _VIEWS comment) and calls spark.sql once, replacing
+# 15-40 chained Dataset creations (each a py4j round trip + eager
+# re-analysis). The anomaly parts call the detector and format builders
+# of operators/anomalies.py, the one text both the operators and the
+# checks run. The other parts mirror their part builders' expression text
+# stage for stage, so every value is bit-identical — pinned by
+# scripts/snapshot_checks.py at all three SFs, and by the unchanged
+# DuckDB oracle SQL (still generated from the same part specs).
 # ---------------------------------------------------------------------------
 
 from sparvi_spark.checks import melt_part_sql, table_views  # noqa: E402
-from sparvi_spark.checks.anomaly_checks import (  # noqa: E402
-    _series_view,
-    _zscore_sql,
-)
+from sparvi_spark.checks.anomaly_checks import _series_view  # noqa: E402
 from sparvi_spark.checks.trend_checks import (  # noqa: E402
     SPINE_END,
     SPINE_START,
 )
+from sparvi_spark.operators.anomalies import format_sql, zscore_sql  # noqa: E402
+from sparvi_spark.operators.trends import spine_sql  # noqa: E402
 
 _HS = ("case when (passing + failing) > 0 then "
        "round(passing * cast(100 as double) / (passing + failing), 2) end")
@@ -409,8 +409,7 @@ def _sp_daily_rollup(events: str) -> str:
     per_day = (f"SELECT day, count(case when is_valid then 1 end) AS passed, "
                f"count(case when not is_valid then 1 end) AS failed, "
                f"count(1) AS seen FROM ({latest}) GROUP BY day")
-    spine = (f"SELECT explode(sequence(date '{SPINE_START}', "
-             f"date '{SPINE_END}', interval 1 day)) AS day")
+    spine = spine_sql(SPINE_START, SPINE_END)
     return (
         f"SELECT date_format(spine.day, 'yyyy-MM-dd') AS day, "
         f"coalesce(passed, 0) AS passed, coalesce(failed, 0) AS failed, "
@@ -423,13 +422,9 @@ def _sp_daily_rollup(events: str) -> str:
 
 
 def _sp_anomalies(series: str) -> str:
-    # anomaly_checks._anomalies: zscore @ sensitivity 2 + format_anomalies
-    return (f"SELECT metric_name, ts, value AS value, score, is_anomaly, "
-            f"threshold, 'zscore' AS method, "
-            f"case when score > cast(5.0 as double) then 'high' "
-            f"when score > cast(3.5 as double) then 'medium' "
-            f"else 'low' end AS severity "
-            f"FROM ({_zscore_sql(series, sensitivity=2.0)}) WHERE is_anomaly")
+    # trend_checks._anomalies: zscore @ sensitivity 2 + format_anomalies
+    det = zscore_sql(series, ["metric_name"], sensitivity=2.0)
+    return format_sql(f"({det})", "zscore", ["metric_name"])
 
 
 def _sp_dashboard_combined(events: str, series: str) -> str:
@@ -438,8 +433,7 @@ def _sp_dashboard_combined(events: str, series: str) -> str:
              f"count(case when severity = 'medium' then 1 end) AS medium, "
              f"count(case when severity = 'low' then 1 end) AS low "
              f"FROM ({_sp_anomalies(series)}) GROUP BY to_date(ts)")
-    spine = (f"SELECT explode(sequence(date '{SPINE_START}', "
-             f"date '{SPINE_END}', interval 1 day)) AS day")
+    spine = spine_sql(SPINE_START, SPINE_END)
     trend = (f"SELECT date_format(day, 'yyyy-MM-dd') AS day, total, high, "
              f"medium, low FROM (SELECT spine.day, "
              f"coalesce(total, 0) AS total, coalesce(high, 0) AS high, "

@@ -17,6 +17,7 @@ from sparvi_spark.operators.trends import (
     anomaly_summary,
     anomaly_top_tables,
     change_frequency,
+    date_spine,
     high_impact_objects,
     retain_latest,
 )
@@ -88,10 +89,7 @@ def q_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(~F.col("is_valid"), 1)).alias("failed"),
         F.count(F.lit(1)).alias("seen"),
     )
-    spine = spark.sql(
-        f"SELECT explode(sequence(date '{SPINE_START}', date '{SPINE_END}', "
-        f"interval 1 day)) AS day"
-    )
+    spine = date_spine(spark, SPINE_START, SPINE_END)
     return (
         spine.join(per_day, "day", "left")
         .select(

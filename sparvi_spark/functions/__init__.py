@@ -18,7 +18,6 @@ __all__ = [
     "not_regexp",
     "count_filter",
     "datediff_hours",
-    "generate_series_days",
     "time_bucket",
     "local_df",
 ]
@@ -113,12 +112,3 @@ def datediff_hours(start: Column | str, end: Column | str) -> Column:
     s = s.cast("timestamp")
     e = e.cast("timestamp")
     return (e.cast("long") - s.cast("long")) / F.lit(3600)
-
-
-def generate_series_days(start: str, end: str) -> Column:
-    """Postgres ``generate_series(date, date, interval '1 day')``
-    (core/anomalies/api.py:590-594) — explode upstream of this column."""
-    return F.sequence(
-        F.lit(start).cast("date"), F.lit(end).cast("date"),
-        F.expr("interval 1 day"),
-    )

@@ -18,21 +18,32 @@ Exact semantic ports (SURVEY §7 hard parts):
 - Moving-average: std is computed over the MOVING AVERAGES, not raw values
   (algorithms.py:165-173), with a forward-looking std window and
   last-window fill for the tail.
+- Non-finite values: NaN and ±Inf are treated exactly like NULL. Spark
+  orders NaN above every double, so an unguarded NaN turns a series' mean
+  and std into NaN and every ``score > threshold`` into true; numpy's
+  comparisons are false instead. Each detector reads ``_finite(value)``,
+  so such points are left out of every statistic (and of the
+  min_data_points count) and are never flagged, while the output keeps
+  the raw value.
 
-Plan-build cost note: every ``F.col``/``F.when``/``withColumn`` is its own
-py4j round trip (~0.5 ms each); the original Column-object builders spent
-830+ round trips (≈0.45 s, GIL-serialized) constructing one detection-run
-plan. Each detector therefore assembles its expressions as SQL TEXT
-(f-strings) and ships them through a few ``selectExpr`` calls — the whole
-layer parses JVM-side in ONE round trip, and Catalyst sees exactly the
-same resolved plan (identical window specs, identical operation order, so
-scores stay bit-for-bit equal to the Column form).
+One implementation, two callers: each detector is ONE SQL-text builder
+(``zscore_sql`` ... ``cusum_sql``) over a relation ``src`` — a view name or
+a parenthesized query — returning the input columns plus ``score``,
+``is_anomaly`` and ``threshold``. The DataFrame operators render that text
+over their input (``_render``); the graded checks call the same builders
+with their memoized series view as ``src`` and nest them into one
+statement per slot. ``detection_sql`` adds the eligibility filter and
+``format_sql`` the anomaly-only filter plus A5 severity, so the eligibility
+rule and the severity table (``_SEVERITY_CUTS``) are also written once.
+Text over Column objects also keeps plan build cheap: every
+``F.col``/``F.when``/``withColumn`` is its own py4j round trip, while one
+``spark.sql`` call parses the whole layer JVM-side and analyzes the final
+plan once.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 ZSCORE_BASE_THRESHOLD = 3.0
 IQR_BASE_THRESHOLD = 1.5
@@ -42,6 +53,8 @@ MAD_BASE_THRESHOLD = 3.5  # Iglewicz-Hoban modified-z-score convention
 MAD_K = 1.4826022185056018  # 1 / Phi^-1(3/4): MAD -> sigma for normals
 
 _INF = "cast('Infinity' as double)"
+# stands in for the input relation while an operator builds its text
+_SRC = "\0src\0"
 
 
 def _d(x: float) -> str:
@@ -49,67 +62,90 @@ def _d(x: float) -> str:
     return f"cast({float(x)!r} as double)"
 
 
-def _pk(keys: list[str]) -> str:
-    return ", ".join(f"`{k}`" for k in keys)
+def _w(keys: list[str], order_col: str | None = None, frame: str = "") -> str:
+    """Window spec over the series key, optionally ordered and framed."""
+    spec = "PARTITION BY " + ", ".join(f"`{k}`" for k in keys)
+    if order_col is not None:
+        spec += f" ORDER BY `{order_col}`"
+    return f"({spec}{' ' + frame if frame else ''})"
 
 
-def zscore_anomalies(
-    df: DataFrame,
-    keys: list[str],
-    order_col: str = "ts",
-    value_col: str = "value",
-    sensitivity: float = 1.0,
-    window: int | None = None,
-) -> DataFrame:
+def _stage(src: str, cols: list[str], where: str = "",
+           drop: list[str] | None = None) -> str:
+    """``src.selectExpr("*", *cols).where(where).drop(*drop)`` as SQL text."""
+    sql = f"SELECT *, {', '.join(cols)} FROM {src}"
+    if not where and not drop:
+        return sql
+    star = f"* EXCEPT ({', '.join(drop)})" if drop else "*"
+    return f"SELECT {star} FROM ({sql})" + (f" WHERE {where}" if where else "")
+
+
+def _scored(src: str, score: str, threshold: float, drop: list[str],
+            flag: str | None = None, extra: list[str] = ()) -> str:
+    """Final stage: score, flag and threshold columns, helpers dropped."""
+    return _stage(src, [
+        f"{score} AS score",
+        f"{flag or f'{score} > {_d(threshold)}'} AS is_anomaly",
+        f"{_d(threshold)} AS threshold", *extra], drop=drop)
+
+
+def _finite(value_col: str) -> str:
+    """The value, NULL where it is NaN or ±Inf (NaN sorts above every
+    double in Spark, so ``abs(v) < Infinity`` is false for both)."""
+    v = f"`{value_col}`"
+    return f"case when abs(cast({v} as double)) < {_INF} then {v} end"
+
+
+def _with_v(src: str, value_col: str) -> str:
+    """``src`` plus ``__v = _finite(value_col)``, which every detector's
+    statistics and scores read instead of the raw value."""
+    return f"({_stage(src, [f'{_finite(value_col)} AS __v'])})"
+
+
+def _render(df: DataFrame, text: str) -> DataFrame:
+    """Run builder text over ``df``. ``spark.sql(text, src=df)`` registers
+    ``df`` as a temp view for analysis only, and ``str.format``s the whole
+    text, so braces a column name brings are doubled first."""
+    text = text.replace("{", "{{").replace("}", "}}").replace(_SRC, "{src}")
+    return df.sparkSession.sql(text, src=df)
+
+
+def zscore_sql(src: str, keys: list[str], order_col: str = "ts",
+               value_col: str = "value", sensitivity: float = 1.0,
+               window: int | None = None) -> str:
     """A1 global / A2 rolling z-score (algorithms.py:10-61)."""
     threshold = ZSCORE_BASE_THRESHOLD / sensitivity
-    v = f"`{value_col}`"
-    wg = f"(PARTITION BY {_pk(keys)})"
+    src, v, wg = _with_v(src, value_col), "__v", _w(keys)
     if window is None:
         # window exprs inlined into the score text — identical window
         # specs dedup into ONE Window operator and codegen CSE evaluates
-        # each once per row, so this differs from the staged form only
-        # in driver-side analysis rounds (each DataFrame op costs one)
-        mean = f"avg({v}) OVER {wg}"
-        std = f"stddev_pop({v}) OVER {wg}"
-        g_score = (f"case when {std} = {_d(0)} then {_d(0)} "
-                   f"else abs(({v} - ({mean})) / ({std})) end")
-        return df.selectExpr(
-            "*",
-            f"{g_score} AS score",
-            f"{g_score} > {_d(threshold)} AS is_anomaly",
-            f"{_d(threshold)} AS threshold",
-            f"count({v}) OVER {wg} AS __cnt",
-        ).where("__cnt >= 2").drop("__cnt")
-    # Reference fallback (algorithms.py:30): window >= len(values) ->
-    # GLOBAL stats over the whole series (all points scored); rolling
-    # frames only when the series is strictly longer than the window.
-    # Both stat sets share the same partition keys -> one shuffle; the
-    # rolling stats are computed over the trailing frame BEFORE the
-    # row_number filter (filtering first would shrink early windows).
-    wf = (f"(PARTITION BY {_pk(keys)} ORDER BY `{order_col}` "
-          f"ROWS BETWEEN {window} PRECEDING AND 1 PRECEDING)")
-    wo = f"(PARTITION BY {_pk(keys)} ORDER BY `{order_col}`)"
-    mean = (f"case when count({v}) OVER {wg} <= {window} "
-            f"then avg({v}) OVER {wg} else avg({v}) OVER {wf} end")
-    std = (f"case when count({v}) OVER {wg} <= {window} "
-           f"then stddev_pop({v}) OVER {wg} "
-           f"else stddev_pop({v}) OVER {wf} end")
-    r_score = (f"case when ({std}) = {_d(0)} then {_d(0)} "
-               f"else abs(({v} - ({mean})) / ({std})) end")
-    # same fused shape as the global branch: repeated window texts dedup
-    # into one Window operator, the projection CSEs at codegen
-    return df.selectExpr(
-        "*",
-        f"{r_score} AS score",
-        f"{r_score} > {_d(threshold)} AS is_anomaly",
-        f"{_d(threshold)} AS threshold",
-        f"row_number() OVER {wo} AS __rn",
-        f"count({v}) OVER {wg} AS __npts",
-    ).where(
-        f"(__npts <= {window} and __npts >= 2) "
-        f"or (__npts > {window} and __rn > {window})"
-    ).drop("__rn", "__npts")
+        # each once per row
+        mean, std = f"avg({v}) OVER {wg}", f"stddev_pop({v}) OVER {wg}"
+        helpers, keep = [f"count({v}) OVER {wg} AS __cnt"], "__cnt >= 2"
+        drop = ["__cnt", "__v"]
+    else:
+        # Reference fallback (algorithms.py:30): window >= len(values) ->
+        # GLOBAL stats over the whole series (all points scored); rolling
+        # frames only when the series is strictly longer than the window.
+        # Both stat sets share the same partition keys -> one shuffle; the
+        # rolling stats are computed over the trailing frame BEFORE the
+        # row_number filter (filtering first would shrink early windows).
+        wf = _w(keys, order_col, f"ROWS BETWEEN {window} PRECEDING AND 1 PRECEDING")
+        short = f"count({v}) OVER {wg} <= {window}"
+        mean = f"case when {short} then avg({v}) OVER {wg} else avg({v}) OVER {wf} end"
+        std = (f"case when {short} then stddev_pop({v}) OVER {wg} "
+               f"else stddev_pop({v}) OVER {wf} end")
+        helpers = [f"row_number() OVER {_w(keys, order_col)} AS __rn",
+                   f"count({v}) OVER {wg} AS __npts"]
+        keep = (f"(__npts <= {window} and __npts >= 2) "
+                f"or (__npts > {window} and __rn > {window})")
+        drop = ["__rn", "__npts", "__v"]
+    score = (f"case when ({std}) = {_d(0)} then {_d(0)} "
+             f"else abs(({v} - ({mean})) / ({std})) end")
+    return _stage(src, [f"{score} AS score",
+                        f"{score} > {_d(threshold)} AS is_anomaly",
+                        f"{_d(threshold)} AS threshold", *helpers],
+                  keep, drop)
 
 
 def _interp_sorted(arr: str, p: float) -> str:
@@ -130,53 +166,38 @@ def _interp_sorted(arr: str, p: float) -> str:
             f"{lo_val} + ({q} - cast({lo} as double)) * ({hi_val} - {lo_val}) end")
 
 
-def iqr_anomalies(
-    df: DataFrame,
-    keys: list[str],
-    order_col: str = "ts",
-    value_col: str = "value",
-    sensitivity: float = 1.0,
-    window: int | None = None,
-) -> DataFrame:
+def iqr_sql(src: str, keys: list[str], order_col: str = "ts",
+            value_col: str = "value", sensitivity: float = 1.0,
+            window: int | None = None) -> str:
     """A3 IQR (algorithms.py:64-132): global via exact percentile, rolling
     via sorted-array interpolation (JVM-side, no UDF)."""
     threshold = IQR_BASE_THRESHOLD / sensitivity
-    v = f"`{value_col}`"
+    src, v, wg = _with_v(src, value_col), "__v", _w(keys)
     if window is None:
         # whole-partition window, not agg + broadcast join back: one job
         # and half the stages. A metric series partition is bounded (one
         # point per collection interval), so the window buffer is small
         # at any data scale.
-        wg = f"(PARTITION BY {_pk(keys)})"
-        out = df.selectExpr(
-            "*",
-            f"percentile({v}, {_d(0.25)}) OVER {wg} AS __q1",
-            f"percentile({v}, {_d(0.75)}) OVER {wg} AS __q3",
-            f"count({v}) OVER {wg} AS __cnt",
-        ).where("__cnt >= 4")
+        quart = _stage(src, [f"percentile({v}, {_d(0.25)}) OVER {wg} AS __q1",
+                             f"percentile({v}, {_d(0.75)}) OVER {wg} AS __q3",
+                             f"count({v}) OVER {wg} AS __cnt"],
+                       "__cnt >= 4", ["__cnt"])
     else:
         # Reference fallback (algorithms.py:84): window >= len(values) ->
         # GLOBAL percentiles over the whole series (>= 4 points); rolling
         # frames only when the series is strictly longer than the window.
-        wg = f"(PARTITION BY {_pk(keys)})"
-        wf = (f"(PARTITION BY {_pk(keys)} ORDER BY `{order_col}` "
-              f"ROWS BETWEEN {window} PRECEDING AND 1 PRECEDING)")
-        wo = f"(PARTITION BY {_pk(keys)} ORDER BY `{order_col}`)"
+        wf = _w(keys, order_col, f"ROWS BETWEEN {window} PRECEDING AND 1 PRECEDING")
         arr = f"sort_array(collect_list({v}) OVER {wf})"
-        out = df.selectExpr(
-            "*",
-            f"row_number() OVER {wo} AS __rn",
+        short = f"count({v}) OVER {wg} <= {window}"
+        quart = _stage(src, [
+            f"row_number() OVER {_w(keys, order_col)} AS __rn",
             f"count({v}) OVER {wg} AS __npts",
-            f"case when count({v}) OVER {wg} <= {window} "
-            f"then percentile({v}, 0.25) OVER {wg} "
+            f"case when {short} then percentile({v}, 0.25) OVER {wg} "
             f"else {_interp_sorted(arr, 0.25)} end AS __q1",
-            f"case when count({v}) OVER {wg} <= {window} "
-            f"then percentile({v}, 0.75) OVER {wg} "
+            f"case when {short} then percentile({v}, 0.75) OVER {wg} "
             f"else {_interp_sorted(arr, 0.75)} end AS __q3",
-        ).where(
-            f"(__npts <= {window} and __npts >= 4) "
-            f"or (__npts > {window} and __rn > {window})"
-        ).drop("__rn", "__npts")
+        ], f"(__npts <= {window} and __npts >= 4) "
+           f"or (__npts > {window} and __rn > {window})", ["__rn", "__npts"])
     iqr = "(__q3 - __q1)"
     lower = f"(__q1 - {iqr} * {_d(threshold)})"
     upper = f"(__q3 + {iqr} * {_d(threshold)})"
@@ -186,23 +207,13 @@ def iqr_anomalies(
                  f"then abs(({v} - {upper}) / {iqr}) else {_INF} end")
     score = (f"case when {v} < {lower} then {past_low} "
              f"when {v} > {upper} then {past_high} else {_d(0)} end")
-    return out.selectExpr(
-        "*",
-        f"{score} AS score",
-        f"({v} < {lower}) or ({v} > {upper}) AS is_anomaly",
-        f"{_d(threshold)} AS threshold",
-    ).drop("__q1", "__q3", "__cnt")
+    return _scored(f"({quart})", score, threshold, ["__q1", "__q3", "__v"],
+                   flag=f"({v} < {lower}) or ({v} > {upper})")
 
 
-def moving_average_anomalies(
-    df: DataFrame,
-    keys: list[str],
-    order_col: str = "ts",
-    value_col: str = "value",
-    sensitivity: float = 1.0,
-    window: int = 7,
-    std_window: int | None = None,
-) -> DataFrame:
+def moving_average_sql(src: str, keys: list[str], order_col: str = "ts",
+                       value_col: str = "value", sensitivity: float = 1.0,
+                       window: int = 7, std_window: int | None = None) -> str:
     """A4 moving average (algorithms.py:135-198).
 
     MA over trailing ``window`` raw values (excluding current); std over the
@@ -212,52 +223,35 @@ def moving_average_anomalies(
     """
     sw = std_window or window
     threshold = MA_BASE_THRESHOLD / sensitivity
-    v = f"`{value_col}`"
-    wg = f"(PARTITION BY {_pk(keys)})"
-    wo = f"(PARTITION BY {_pk(keys)} ORDER BY `{order_col}`)"
-    wf = (f"(PARTITION BY {_pk(keys)} ORDER BY `{order_col}` "
-          f"ROWS BETWEEN {window} PRECEDING AND 1 PRECEDING)")
-    wfwd = (f"(PARTITION BY {_pk(keys)} ORDER BY `{order_col}` "
-            f"ROWS BETWEEN CURRENT ROW AND {sw - 1} FOLLOWING)")
-    base = df.selectExpr(
-        "*",
-        f"row_number() OVER {wo} AS __rn",
-        f"avg({v}) OVER {wf} AS __ma",
-    ).where(f"__rn > {window}")
-    base = base.selectExpr(
-        "*",
-        f"count(1) OVER {wg} AS __n_ma",
-        f"row_number() OVER {wo} AS __mi",
-        f"stddev_pop(__ma) OVER {wfwd} AS __fwd_std",
-        f"stddev_pop(__ma) OVER {wg} AS __global_std",
-    )
+    src, v = _with_v(src, value_col), "__v"
+    wg, wo = _w(keys), _w(keys, order_col)
+    wf = _w(keys, order_col, f"ROWS BETWEEN {window} PRECEDING AND 1 PRECEDING")
+    wfwd = _w(keys, order_col, f"ROWS BETWEEN CURRENT ROW AND {sw - 1} FOLLOWING")
+    mas = _stage(src, [f"row_number() OVER {wo} AS __rn",
+                       f"avg({v}) OVER {wf} AS __ma"],
+                 f"__rn > {window}", ["__rn"])
+    stds = _stage(f"({mas})", [f"count(1) OVER {wg} AS __n_ma",
+                               f"row_number() OVER {wo} AS __mi",
+                               f"stddev_pop(__ma) OVER {wfwd} AS __fwd_std",
+                               f"stddev_pop(__ma) OVER {wg} AS __global_std"])
     # last full forward window std (covers MAs[n-sw+1..n], 1-based)
     tail_std = (f"max(case when __mi = __n_ma - {sw} + 1 "
                 f"then __fwd_std end) OVER {wg}")
-    std = (f"case when __n_ma < {sw} then __global_std "
-           f"when __mi <= __n_ma - {sw} + 1 then __fwd_std "
-           f"else {tail_std} end")
-    base = base.selectExpr("*", f"{std} AS __std")
+    std = _stage(f"({stds})", [
+        f"case when __n_ma < {sw} then __global_std "
+        f"when __mi <= __n_ma - {sw} + 1 then __fwd_std "
+        f"else {tail_std} end AS __std"],
+        drop=["__n_ma", "__mi", "__fwd_std", "__global_std"])
     score = (f"case when __std = {_d(0)} then {_d(0)} "
              f"else abs(({v} - __ma) / __std) end")
-    return base.selectExpr(
-        "*",
-        f"{score} AS score",
-        f"case when __std = {_d(0)} then false "
-        f"else {score} > {_d(threshold)} end AS is_anomaly",
-        f"{_d(threshold)} AS threshold",
-        "__ma AS moving_avg",
-    ).drop("__rn", "__ma", "__n_ma", "__mi", "__fwd_std", "__global_std",
-           "__std")
+    return _scored(f"({std})", score, threshold, ["__ma", "__std", "__v"],
+                   flag=f"case when __std = {_d(0)} then false "
+                        f"else {score} > {_d(threshold)} end",
+                   extra=["__ma AS moving_avg"])
 
 
-def mad_anomalies(
-    df: DataFrame,
-    keys: list[str],
-    order_col: str = "ts",
-    value_col: str = "value",
-    sensitivity: float = 1.0,
-) -> DataFrame:
+def mad_sql(src: str, keys: list[str], order_col: str = "ts",
+            value_col: str = "value", sensitivity: float = 1.0) -> str:
     """Robust median/MAD detector (Iglewicz-Hoban modified z-score,
     public convention) — an extension beyond the reference's mean/std
     detectors: a single extreme spike inflates mean AND std enough to
@@ -272,34 +266,20 @@ def mad_anomalies(
     IEEE basic arithmetic, so scores replay bit-for-bit in the oracle.
     """
     threshold = MAD_BASE_THRESHOLD / sensitivity
-    v = f"`{value_col}`"
-    wg = f"(PARTITION BY {_pk(keys)})"
-    out = df.selectExpr(
-        "*",
-        f"percentile({v}, {_d(0.5)}) OVER {wg} AS __med",
-        f"count({v}) OVER {wg} AS __cnt",
-    ).where("__cnt >= 4").selectExpr(
-        "*",
-        f"percentile(abs({v} - __med), {_d(0.5)}) OVER {wg} AS __mad",
-    )
+    src, v, wg = _with_v(src, value_col), "__v", _w(keys)
+    med = _stage(src, [f"percentile({v}, {_d(0.5)}) OVER {wg} AS __med",
+                       f"count({v}) OVER {wg} AS __cnt"],
+                 "__cnt >= 4", ["__cnt"])
+    mad = _stage(f"({med})",
+                 [f"percentile(abs({v} - __med), {_d(0.5)}) OVER {wg} AS __mad"])
     score = (f"case when __mad = {_d(0)} then {_d(0)} "
              f"else abs({v} - __med) / ({_d(MAD_K)} * __mad) end")
-    return out.selectExpr(
-        "*",
-        f"{score} AS score",
-        f"{score} > {_d(threshold)} AS is_anomaly",
-        f"{_d(threshold)} AS threshold",
-    ).drop("__med", "__cnt", "__mad")
+    return _scored(f"({mad})", score, threshold, ["__med", "__mad", "__v"])
 
 
-def cusum_anomalies(
-    df: DataFrame,
-    keys: list[str],
-    order_col: str = "ts",
-    value_col: str = "value",
-    sensitivity: float = 1.0,
-    slack: float = 0.5,
-) -> DataFrame:
+def cusum_sql(src: str, keys: list[str], order_col: str = "ts",
+              value_col: str = "value", sensitivity: float = 1.0,
+              slack: float = 0.5) -> str:
     """CUSUM drift detector (Page 1954, public) — an extension beyond the
     reference's point detectors: accumulates small sustained shifts of the
     mean that no single point's z-score would flag.
@@ -314,41 +294,27 @@ def cusum_anomalies(
     Score = max(s+, s−)/std (0 when std = 0); threshold 5.0/sensitivity.
     """
     threshold = CUSUM_BASE_THRESHOLD / sensitivity
-    v = f"`{value_col}`"
-    wg = f"(PARTITION BY {_pk(keys)})"
-    run = (f"(PARTITION BY {_pk(keys)} ORDER BY `{order_col}` "
-           f"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)")
-    # NULL values: the other detectors score them NULL (never anomalous);
+    src, v, wg = _with_v(src, value_col), "__v", _w(keys)
+    run = _w(keys, order_col, "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")
+    # NULL (and so NaN/±Inf) values: the other detectors never flag them;
     # here the prefix sums would SKIP the null and the row would inherit
     # the previous drift score — drop such rows up front instead (stats
     # are unchanged: avg/stddev/count already ignore nulls)
-    out = df.where(f"{v} is not null").selectExpr(
-        "*",
-        f"avg({v}) OVER {wg} AS __mean",
-        f"stddev_pop({v}) OVER {wg} AS __std",
-        f"count({v}) OVER {wg} AS __cnt",
-    ).where("__cnt >= 2")
+    stats = _stage(f"(SELECT * FROM {src} WHERE {v} is not null)", [
+        f"avg({v}) OVER {wg} AS __mean", f"stddev_pop({v}) OVER {wg} AS __std",
+        f"count({v}) OVER {wg} AS __cnt"], "__cnt >= 2", ["__cnt"])
     k = f"{_d(slack)} * __std"
     # note: names stay case-DISTINCT (__psum vs __sp) — Spark SQL resolves
     # identifiers case-insensitively, so __Sp/__sp would be ambiguous
-    out = out.selectExpr(
-        "*",
-        f"sum({v} - __mean - {k}) OVER {run} AS __psum",
-        f"sum(__mean - {v} - {k}) OVER {run} AS __nsum",
-    )
-    out = out.selectExpr(
-        "*",
+    sums = _stage(f"({stats})", [f"sum({v} - __mean - {k}) OVER {run} AS __psum",
+                                 f"sum(__mean - {v} - {k}) OVER {run} AS __nsum"])
+    drift = _stage(f"({sums})", [
         f"__psum - least({_d(0)}, min(__psum) OVER {run}) AS __sp",
-        f"__nsum - least({_d(0)}, min(__nsum) OVER {run}) AS __sn",
-    )
+        f"__nsum - least({_d(0)}, min(__nsum) OVER {run}) AS __sn"],
+        drop=["__mean", "__psum", "__nsum"])
     score = (f"case when __std = {_d(0)} then {_d(0)} "
              f"else greatest(__sp, __sn) / __std end")
-    return out.selectExpr(
-        "*",
-        f"{score} AS score",
-        f"{score} > {_d(threshold)} AS is_anomaly",
-        f"{_d(threshold)} AS threshold",
-    ).drop("__mean", "__std", "__cnt", "__psum", "__nsum", "__sp", "__sn")
+    return _scored(f"({drift})", score, threshold, ["__std", "__sp", "__sn", "__v"])
 
 
 _SEVERITY_CUTS = {
@@ -358,67 +324,96 @@ _SEVERITY_CUTS = {
 }
 
 
-def severity(score_col: Column, method: str) -> Column:
-    """A5 severity mapping (algorithms.py:201-240)."""
+def format_sql(src: str, method: str, keys: list[str], order_col: str = "ts",
+               value_col: str = "value") -> str:
+    """A5 severity + A6 anomaly-only formatting (algorithms.py:201-279)
+    over a detector's output relation."""
     hi, med = _SEVERITY_CUTS.get(method, (5.0, 2.5))
-    return (
-        F.when(score_col > hi, "high").when(score_col > med, "medium").otherwise("low")
-    )
+    cols = ", ".join(f"`{c}`" for c in (*keys, order_col))
+    return (f"SELECT {cols}, `{value_col}` AS value, score, is_anomaly, "
+            f"threshold, '{method}' AS method, "
+            f"case when score > {_d(hi)} then 'high' "
+            f"when score > {_d(med)} then 'medium' else 'low' end AS severity "
+            f"FROM {src} WHERE is_anomaly")
 
 
-def format_anomalies(
-    df: DataFrame,
-    method: str,
-    keys: list[str],
-    order_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
-    """A6: keep anomalies only, attach severity + method (algorithms.py:243-279)."""
-    hi, med = _SEVERITY_CUTS.get(method, (5.0, 2.5))
-    return df.where("is_anomaly").selectExpr(
-        *(f"`{k}`" for k in keys),
-        f"`{order_col}`",
-        f"`{value_col}` AS value",
-        "score", "is_anomaly", "threshold",
-        f"'{method}' AS method",
-        f"case when score > {_d(hi)} then 'high' "
-        f"when score > {_d(med)} then 'medium' else 'low' end AS severity",
-    )
-
-
-def detect_anomalies(
-    df: DataFrame,
-    keys: list[str],
-    config: dict | None = None,
-    order_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def detection_sql(src: str, keys: list[str], config: dict | None = None,
+                  order_col: str = "ts", value_col: str = "value") -> str:
     """A7 dispatcher mirroring detector.py:92-126 defaults: method zscore,
     sensitivity 1.0, min_data_points 7. Series below min_data_points are
-    dropped wholesale."""
+    dropped wholesale; the detector's anomalies are formatted."""
     cfg = {"detection_method": "zscore", "sensitivity": 1.0, "min_data_points": 7,
            "config_params": {}, **(config or {})}
     method = cfg["detection_method"]
     sens = float(cfg["sensitivity"])
     params = cfg.get("config_params") or {}
-
-    eligible = df.selectExpr(
-        "*",
-        f"count(`{value_col}`) OVER (PARTITION BY {_pk(keys)}) AS __npts",
-    ).where(f"__npts >= {int(cfg['min_data_points'])}").drop("__npts")
-
+    eligible = _stage(
+        src, [f"count({_finite(value_col)}) OVER {_w(keys)} AS __npts"],
+        f"__npts >= {int(cfg['min_data_points'])}", ["__npts"])
+    args = (f"({eligible})", keys, order_col, value_col, sens)
     if method == "zscore":
-        res = zscore_anomalies(eligible, keys, order_col, value_col, sens,
-                               params.get("window"))
+        det = zscore_sql(*args, params.get("window"))
     elif method == "iqr":
-        res = iqr_anomalies(eligible, keys, order_col, value_col, sens,
-                            params.get("window"))
+        det = iqr_sql(*args, params.get("window"))
     elif method == "moving_average":
-        res = moving_average_anomalies(eligible, keys, order_col, value_col, sens,
-                                       params.get("window", 7), params.get("std_window"))
+        det = moving_average_sql(*args, params.get("window", 7),
+                                 params.get("std_window"))
     elif method == "cusum":
-        res = cusum_anomalies(eligible, keys, order_col, value_col, sens,
-                              params.get("slack", 0.5))
+        det = cusum_sql(*args, params.get("slack", 0.5))
     else:
         raise ValueError(f"unknown detection method: {method}")
-    return format_anomalies(res, method, keys, order_col, value_col)
+    return format_sql(f"({det})", method, keys, order_col, value_col)
+
+
+# DataFrame operators: the builders above rendered over their input.
+
+def zscore_anomalies(df: DataFrame, keys: list[str], order_col: str = "ts",
+                     value_col: str = "value", sensitivity: float = 1.0,
+                     window: int | None = None) -> DataFrame:
+    """``zscore_sql`` over ``df``."""
+    return _render(df, zscore_sql(_SRC, keys, order_col, value_col,
+                                  sensitivity, window))
+
+
+def iqr_anomalies(df: DataFrame, keys: list[str], order_col: str = "ts",
+                  value_col: str = "value", sensitivity: float = 1.0,
+                  window: int | None = None) -> DataFrame:
+    """``iqr_sql`` over ``df``."""
+    return _render(df, iqr_sql(_SRC, keys, order_col, value_col,
+                               sensitivity, window))
+
+
+def moving_average_anomalies(df: DataFrame, keys: list[str],
+                             order_col: str = "ts", value_col: str = "value",
+                             sensitivity: float = 1.0, window: int = 7,
+                             std_window: int | None = None) -> DataFrame:
+    """``moving_average_sql`` over ``df``."""
+    return _render(df, moving_average_sql(_SRC, keys, order_col, value_col,
+                                          sensitivity, window, std_window))
+
+
+def mad_anomalies(df: DataFrame, keys: list[str], order_col: str = "ts",
+                  value_col: str = "value",
+                  sensitivity: float = 1.0) -> DataFrame:
+    """``mad_sql`` over ``df``."""
+    return _render(df, mad_sql(_SRC, keys, order_col, value_col, sensitivity))
+
+
+def cusum_anomalies(df: DataFrame, keys: list[str], order_col: str = "ts",
+                    value_col: str = "value", sensitivity: float = 1.0,
+                    slack: float = 0.5) -> DataFrame:
+    """``cusum_sql`` over ``df``."""
+    return _render(df, cusum_sql(_SRC, keys, order_col, value_col,
+                                 sensitivity, slack))
+
+
+def format_anomalies(df: DataFrame, method: str, keys: list[str],
+                     order_col: str = "ts", value_col: str = "value") -> DataFrame:
+    """``format_sql`` over ``df``."""
+    return _render(df, format_sql(_SRC, method, keys, order_col, value_col))
+
+
+def detect_anomalies(df: DataFrame, keys: list[str], config: dict | None = None,
+                     order_col: str = "ts", value_col: str = "value") -> DataFrame:
+    """``detection_sql`` over ``df``."""
+    return _render(df, detection_sql(_SRC, keys, config, order_col, value_col))

@@ -14,13 +14,16 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
+def spine_sql(start: str, end: str) -> str:
+    """Dense daily spine [start, end] as one ``day`` column (reference:
+    generate_series, core/anomalies/api.py:590-594)."""
+    return (f"SELECT explode(sequence(date '{start}', date '{end}', "
+            f"interval 1 day)) AS day")
+
+
 def date_spine(spark: SparkSession, start: str, end: str) -> DataFrame:
-    """Dense daily spine [start, end] (reference: generate_series,
-    core/anomalies/api.py:590-594). Tiny — broadcast by the optimizer."""
-    return spark.sql(
-        f"SELECT explode(sequence(date '{start}', date '{end}', "
-        f"interval 1 day)) AS day"
-    )
+    """``spine_sql`` as a DataFrame. Tiny — broadcast by the optimizer."""
+    return spark.sql(spine_sql(start, end))
 
 
 def anomaly_summary(anomalies: DataFrame) -> DataFrame:

@@ -6,10 +6,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from sparvi_spark.operators.anomalies import (
+    cusum_anomalies,
     detect_anomalies,
+    format_anomalies,
     iqr_anomalies,
+    mad_anomalies,
     moving_average_anomalies,
-    severity,
     zscore_anomalies,
 )
 
@@ -99,11 +101,17 @@ def test_moving_average_matches_numpy_port(series_df):
 
 
 def test_severity_thresholds(spark):
-    df = spark.createDataFrame([(0.5,), (3.6,), (6.0,)], "score double")
-    z = [r[0] for r in df.select(severity(F.col("score"), "zscore")).collect()]
-    assert z == ["low", "medium", "high"]
-    i = [r[0] for r in df.select(severity(F.col("score"), "iqr")).collect()]
-    assert i == ["low", "high", "high"]
+    df = spark.createDataFrame(
+        [("m", i, 0.0, s, True, 0.0) for i, s in enumerate([0.5, 3.6, 6.0])],
+        "metric_name string, ts int, value double, score double, "
+        "is_anomaly boolean, threshold double")
+
+    def severities(method):
+        out = format_anomalies(df, method, ["metric_name"]).orderBy("ts")
+        return [r["severity"] for r in out.collect()]
+
+    assert severities("zscore") == ["low", "medium", "high"]
+    assert severities("iqr") == ["low", "high", "high"]
 
 
 def test_detect_min_data_points_guard(spark):
@@ -184,10 +192,6 @@ def test_cusum_matches_recursion_and_detects_drift(spark):
     must cross the threshold even though each point is unremarkable."""
     import statistics
 
-    from pyspark.sql import functions as F
-
-    from sparvi_spark.operators.anomalies import cusum_anomalies
-
     vals = [10.0, 10.2, 9.9, 10.1, 9.8, 10.0, 10.1, 9.9] + [11.0] * 12
     rows = [(f"2024-01-{i+1:02d}", v) for i, v in enumerate(vals)]
     df = (spark.createDataFrame(rows, "ts string, value double")
@@ -209,3 +213,59 @@ def test_cusum_matches_recursion_and_detects_drift(spark):
     assert res["2024-01-20"]["is_anomaly"]
     # nothing has accumulated at the first point
     assert not res["2024-01-01"]["is_anomaly"]
+
+
+_K = ["metric_name"]
+_DETECTORS = {
+    "zscore": lambda df: zscore_anomalies(df, _K),
+    "zscore_rolling": lambda df: zscore_anomalies(df, _K, window=5),
+    "iqr": lambda df: iqr_anomalies(df, _K),
+    "iqr_rolling": lambda df: iqr_anomalies(df, _K, window=5),
+    "moving_average": lambda df: moving_average_anomalies(df, _K, window=5),
+    "cusum": lambda df: cusum_anomalies(df, _K),
+    "mad": lambda df: mad_anomalies(df, _K),
+    **{f"detect_{m}": (lambda df, m=m: detect_anomalies(
+        df, _K, {"detection_method": m}))
+       for m in ("zscore", "iqr", "moving_average", "cusum")},
+}
+
+
+def test_non_finite_values_score_like_null(spark):
+    """NaN and ±Inf are left out of every statistic and never flagged: the
+    finite points score exactly as with NULL in those slots. Spark orders
+    NaN above every double, so an unguarded NaN made the mean and std NaN
+    and flagged every point of its series as a "high" anomaly."""
+    planted = {("nan", 3): float("nan"), ("nan", 11): float("nan"),
+               ("inf", 9): float("inf"), ("ninf", 2): float("-inf")}
+
+    def frame(non_finite):
+        rows = []
+        for k in ("nan", "inf", "ninf"):
+            for i, v in enumerate(SERIES):
+                if (k, i) in planted:
+                    v = planted[(k, i)] if non_finite else None
+                rows.append((k, i, v))
+        return spark.createDataFrame(rows, "metric_name string, ts int, value double")
+
+    bad, null = frame(True), frame(False)
+    for name, detect in _DETECTORS.items():
+        got = {(r["metric_name"], r["ts"]): (r["score"], r["is_anomaly"])
+               for r in detect(bad).collect()}
+        want = {(r["metric_name"], r["ts"]): (r["score"], r["is_anomaly"])
+                for r in detect(null).collect()}
+        assert set(got) == set(want), name
+        for key, (score, flag) in want.items():
+            if key in planted:
+                assert not got[key][1], (name, key, got[key])
+            else:
+                assert got[key] == (score, flag), (name, key, got[key])
+
+
+def test_operators_take_braces_in_column_names(series_df):
+    """The operators run their SQL text through ``spark.sql``, which
+    ``str.format``s it: braces in a column name must reach Spark as written."""
+    odd = series_df.toDF("k{0}", "t}", "v{x}")
+    got = detect_anomalies(odd, ["k{0}"], order_col="t}", value_col="v{x}")
+    want = detect_anomalies(series_df, ["metric_name"])
+    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
+    assert got.columns[:3] == ["k{0}", "t}", "value"]

@@ -111,3 +111,26 @@ def test_every_library_name_is_referenced_and_every_import_used():
     assert not dead and not unused, (
         "unreferenced top-level names:\n  " + "\n  ".join(dead)
         + "\nunused module-level imports:\n  " + "\n  ".join(unused))
+
+
+def _pinned_sys_path(tree: ast.Module) -> list[str]:
+    """String literals a script puts on ``sys.path``."""
+    out = []
+    for node in ast.walk(tree):
+        if (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("insert", "append")
+                and ast.unparse(node.func.value) == "sys.path"):
+            out += [a.value for a in node.args
+                    if isinstance(a, ast.Constant) and isinstance(a.value, str)]
+    return out
+
+
+def test_scripts_derive_the_repo_root_from_their_own_path():
+    """A script that puts a fixed checkout path on ``sys.path`` imports
+    that checkout's ``sparvi_spark`` even when it is run from another copy
+    of the repo, so a snapshot taken from a parent checkout silently
+    snapshots the wrong tree. Scripts derive the root from ``__file__``."""
+    pinned = {p.name: paths for p in sorted((ROOT / "scripts").glob("*.py"))
+              if (paths := _pinned_sys_path(ast.parse(p.read_text())))}
+    assert not pinned, f"scripts with a hard-coded sys.path entry: {pinned}"

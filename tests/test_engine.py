@@ -350,10 +350,11 @@ def test_pipeline_demo():
     fresh interpreter (own SparkSession, so: subprocess)."""
     import subprocess
     import sys as _sys
+    from pathlib import Path
 
+    demo = Path(__file__).resolve().parent.parent / "scripts" / "pipeline_demo.py"
     proc = subprocess.run(
-        [_sys.executable, "/root/repo/scripts/pipeline_demo.py",
-         "/root/testdata/sf0.001"],
+        [_sys.executable, str(demo), SF_DIR],
         capture_output=True, text=True, timeout=600)
     assert proc.returncode == 0, proc.stderr[-2000:]
     stats = dict(

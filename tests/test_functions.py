@@ -5,10 +5,10 @@ from pyspark.sql import functions as F
 from sparvi_spark.functions import (
     count_filter,
     datediff_hours,
-    generate_series_days,
     not_regexp,
     similar_to,
 )
+from sparvi_spark.operators.trends import date_spine
 
 
 def test_similar_to_is_anchored(spark):
@@ -49,6 +49,8 @@ def test_count_filter_and_datediff(spark):
 
 
 def test_generate_series_days(spark):
-    df = spark.range(1).select(
-        F.explode(generate_series_days("2026-01-01", "2026-01-05")).alias("d"))
-    assert df.count() == 5
+    """Postgres generate_series(date, date, interval '1 day'): both ends
+    inclusive, one row per day."""
+    days = [r["day"].isoformat() for r in
+            date_spine(spark, "2026-01-30", "2026-02-02").orderBy("day").collect()]
+    assert days == ["2026-01-30", "2026-01-31", "2026-02-01", "2026-02-02"]
