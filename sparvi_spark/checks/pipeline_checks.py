@@ -10,6 +10,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparvi_spark.operators.dedup import (
+    PORTABLE_BAND_M,
+    PORTABLE_P,
+    _affine_params,
     jaccard_pairs,
     minhash_lsh_pairs,
     simhash_pairs,
@@ -69,6 +72,15 @@ def capped_docs(spark: SparkSession, sf_dir: str):
 
 _DUCK_TOKS = "string_split_regex(lower(trim(text)), '\\s+')"
 _SPARK_TOKS = "split(lower(trim(text)), '\\\\s+')"
+
+
+def _duck_portable_hash(col: str) -> str:
+    """DuckDB twin of ``dedup.portable_hash_expr``: the character-fold
+    polynomial hash of a string column -> [0, P)."""
+    return (f"list_reduce(list_prepend(cast(0 as bigint), "
+            f"list_transform(range(1, strlen({col}) + 1), "
+            f"i -> cast(ascii(substring({col}, i, 1)) as bigint))), "
+            f"(acc, c) -> (acc * 131 + c) % {PORTABLE_P})")
 
 
 # ---------------------------------------------------------------------------
@@ -157,6 +169,30 @@ GROUP BY source
 MH_HASHES, MH_BANDS = 16, 4
 
 
+def _duck_minhash_ctes() -> str:
+    """The sh/hx/sig/banded CTEs, the DuckDB twin of portable-mode
+    ``dedup.minhash_signed`` + ``band_hashes_expr`` over the DOC_CAP docs:
+    distinct token shingles per (id, src), their polynomial base hash x,
+    MH_HASHES affine-min slots h0.. and MH_BANDS band folds bh."""
+    rpb = MH_HASHES // MH_BANDS
+    mins = ", ".join(f"min(({a} * x + {b}) % {PORTABLE_P}) AS h{i}"
+                     for i, (a, b) in enumerate(
+                         map(_affine_params, range(MH_HASHES))))
+    band_selects = []
+    for bnd in range(MH_BANDS):
+        expr = "0"
+        for k in range(bnd * rpb, (bnd + 1) * rpb):
+            expr = f"(({expr}) * {PORTABLE_BAND_M} + h{k}) % {PORTABLE_P}"
+        band_selects.append(
+            f"SELECT id, src, {bnd} AS band, {expr} AS bh FROM sig")
+    return f"""sh AS (SELECT DISTINCT doc_id AS id, source AS src,
+              unnest({_DUCK_TOKS}) AS shingle
+            FROM documents WHERE doc_id < {DOC_CAP}),
+hx AS (SELECT id, src, {_duck_portable_hash("shingle")} AS x FROM sh),
+sig AS (SELECT id, src, {mins} FROM hx GROUP BY id, src),
+banded AS ({" UNION ALL ".join(band_selects)})"""
+
+
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = capped_docs(spark, sf_dir)
     return minhash_lsh_pairs(docs, "doc_id", "text", n=1, num_hashes=MH_HASHES,
@@ -165,35 +201,8 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_minhash_lsh() -> str:
-    from sparvi_spark.operators.dedup import (
-        PORTABLE_BAND_M as M,
-        PORTABLE_P as P,
-        _affine_params,
-    )
-
-    rpb = MH_HASHES // MH_BANDS
-    mins = ", ".join(
-        "min(({a} * x + {b}) % {p}) AS h{i}".format(
-            a=_affine_params(i)[0], b=_affine_params(i)[1], p=P, i=i)
-        for i in range(MH_HASHES)
-    )
-    band_selects = []
-    for bnd in range(MH_BANDS):
-        expr = "0"
-        for k in range(bnd * rpb, (bnd + 1) * rpb):
-            expr = f"(({expr}) * {M} + h{k}) % {P}"
-        band_selects.append(
-            f"SELECT id, {bnd} AS band, {expr} AS bh FROM sig")
-    banded = " UNION ALL ".join(band_selects)
     return f"""
-WITH sh AS (SELECT DISTINCT doc_id AS id, unnest({_DUCK_TOKS}) AS shingle
-            FROM documents WHERE doc_id < {DOC_CAP}),
-hx AS (SELECT id, list_reduce(list_prepend(cast(0 as bigint),
-         list_transform(range(1, strlen(shingle) + 1),
-           i -> cast(ascii(substring(shingle, i, 1)) as bigint))),
-         (acc, c) -> (acc * 131 + c) % {P}) AS x FROM sh),
-sig AS (SELECT id, {mins} FROM hx GROUP BY id),
-banded AS ({banded}),
+WITH {_duck_minhash_ctes()},
 cands AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b
           FROM banded a JOIN banded b ON a.band = b.band AND a.bh = b.bh
           WHERE a.id < b.id),
@@ -234,8 +243,6 @@ def q_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_simhash_portable() -> str:
-    from sparvi_spark.operators.dedup import PORTABLE_P as P
-
     votes = ", ".join(
         f"sum(case when (h >> {b}) & 1 = 1 then 1 else -1 end) AS v{b}"
         for b in range(SIMHASH_BITS)
@@ -247,10 +254,7 @@ def _sql_simhash_portable() -> str:
     return f"""
 WITH toks AS (SELECT doc_id AS id, unnest({_DUCK_TOKS}) AS t
               FROM documents WHERE doc_id < {DOC_CAP}),
-hx AS (SELECT id, list_reduce(list_prepend(cast(0 as bigint),
-         list_transform(range(1, strlen(t) + 1),
-           i -> cast(ascii(substring(t, i, 1)) as bigint))),
-         (acc, c) -> (acc * 131 + c) % {P}) AS h FROM toks),
+hx AS (SELECT id, {_duck_portable_hash("t")} AS h FROM toks),
 votes AS (SELECT id, {votes} FROM hx GROUP BY id)
 SELECT id AS doc_id, {pack} AS simhash FROM votes
 """.strip()
@@ -1060,10 +1064,7 @@ def q_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_bloom_contamination() -> str:
-    from sparvi_spark.operators.dedup import PORTABLE_P as P
-    from sparvi_spark.operators.dedup import _affine_params
-
-    pos = [f"(({a} * h + {b}) % {P}) % {BLOOM_BITS}"
+    pos = [f"(({a} * h + {b}) % {PORTABLE_P}) % {BLOOM_BITS}"
            for a, b in (_affine_params(j) for j in range(BLOOM_K))]
     ref_union = " UNION ".join(
         f"SELECT {p} AS pos FROM hx WHERE source = '{CONTAM_REF_SOURCE}'"
@@ -1075,10 +1076,7 @@ g AS (SELECT doc_id, source,
         unnest(list_transform(range(1, greatest(len(t) - {CONTAM_N - 1}, 0) + 1),
           i -> concat_ws(' ', t[i], t[i + 1], t[i + 2]))) AS shingle FROM toks),
 d AS (SELECT DISTINCT doc_id, source, shingle FROM g),
-hx AS (SELECT doc_id, source, list_reduce(list_prepend(cast(0 as bigint),
-         list_transform(range(1, strlen(shingle) + 1),
-           i -> cast(ascii(substring(shingle, i, 1)) as bigint))),
-         (acc, c) -> (acc * 131 + c) % {P}) AS h FROM d),
+hx AS (SELECT doc_id, source, {_duck_portable_hash("shingle")} AS h FROM d),
 refpos AS ({ref_union}),
 cand AS (SELECT doc_id, h, ({hit}) AS hit
          FROM hx WHERE source <> '{CONTAM_REF_SOURCE}')
@@ -1361,36 +1359,8 @@ def q_neardup_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_neardup_cross() -> str:
-    from sparvi_spark.operators.dedup import (
-        PORTABLE_BAND_M as M,
-        PORTABLE_P as P,
-        _affine_params,
-    )
-
-    rpb = MH_HASHES // MH_BANDS
-    mins = ", ".join(
-        "min(({a} * x + {b}) % {p}) AS h{i}".format(
-            a=_affine_params(i)[0], b=_affine_params(i)[1], p=P, i=i)
-        for i in range(MH_HASHES)
-    )
-    band_selects = []
-    for bnd in range(MH_BANDS):
-        expr = "0"
-        for k in range(bnd * rpb, (bnd + 1) * rpb):
-            expr = f"(({expr}) * {M} + h{k}) % {P}"
-        band_selects.append(
-            f"SELECT id, src, {bnd} AS band, {expr} AS bh FROM sig")
-    banded = " UNION ALL ".join(band_selects)
     return f"""
-WITH sh AS (SELECT DISTINCT doc_id AS id, source AS src,
-              unnest({_DUCK_TOKS}) AS shingle
-            FROM documents WHERE doc_id < {DOC_CAP}),
-hx AS (SELECT id, src, list_reduce(list_prepend(cast(0 as bigint),
-         list_transform(range(1, strlen(shingle) + 1),
-           i -> cast(ascii(substring(shingle, i, 1)) as bigint))),
-         (acc, c) -> (acc * 131 + c) % {P}) AS x FROM sh),
-sig AS (SELECT id, src, {mins} FROM hx GROUP BY id, src),
-banded AS ({banded}),
+WITH {_duck_minhash_ctes()},
 cands AS (SELECT DISTINCT a.id AS id, b.id AS ref_id
           FROM banded a JOIN banded b ON a.band = b.band AND a.bh = b.bh
           WHERE a.src <> 'src0' AND b.src = 'src0'),
@@ -1435,39 +1405,11 @@ def q_sig_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_sig_pairs() -> str:
-    from sparvi_spark.operators.dedup import (
-        PORTABLE_BAND_M as M,
-        PORTABLE_P as P,
-        _affine_params,
-    )
-
-    rpb = MH_HASHES // MH_BANDS
-    mins = ", ".join(
-        "min(({a} * x + {b}) % {p}) AS h{i}".format(
-            a=_affine_params(i)[0], b=_affine_params(i)[1], p=P, i=i)
-        for i in range(MH_HASHES)
-    )
-    band_selects = []
-    for bnd in range(MH_BANDS):
-        expr = "0"
-        for k in range(bnd * rpb, (bnd + 1) * rpb):
-            expr = f"(({expr}) * {M} + h{k}) % {P}"
-        band_selects.append(
-            f"SELECT id, src, {bnd} AS band, {expr} AS bh FROM sig")
-    banded = " UNION ALL ".join(band_selects)
     match = " + ".join(
         f"(CASE WHEN a.h{i} = b.h{i} THEN 1 ELSE 0 END)"
         for i in range(MH_HASHES))
     return f"""
-WITH sh AS (SELECT DISTINCT doc_id AS id, source AS src,
-              unnest({_DUCK_TOKS}) AS shingle
-            FROM documents WHERE doc_id < {DOC_CAP}),
-hx AS (SELECT id, src, list_reduce(list_prepend(cast(0 as bigint),
-         list_transform(range(1, strlen(shingle) + 1),
-           i -> cast(ascii(substring(shingle, i, 1)) as bigint))),
-         (acc, c) -> (acc * 131 + c) % {P}) AS x FROM sh),
-sig AS (SELECT id, src, {mins} FROM hx GROUP BY id, src),
-banded AS ({banded}),
+WITH {_duck_minhash_ctes()},
 cands AS (SELECT DISTINCT a.id AS id, b.id AS ref_id
           FROM banded a JOIN banded b ON a.band = b.band AND a.bh = b.bh
           WHERE a.src <> 'src0' AND b.src = 'src0'),
@@ -1497,15 +1439,10 @@ def q_token_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_token_buckets() -> str:
-    from sparvi_spark.operators.dedup import PORTABLE_P as P
-
     return f"""
 WITH t AS (SELECT cast(lang = 'en' as int) AS y, unnest({_DUCK_TOKS}) AS tk
            FROM documents WHERE doc_id < {DOC_CAP}),
-h AS (SELECT y, cast(list_reduce(list_prepend(cast(0 as bigint),
-        list_transform(range(1, strlen(tk) + 1),
-          i -> cast(ascii(substring(tk, i, 1)) as bigint))),
-        (acc, c) -> (acc * 131 + c) % {P}) % {NB_DIM} as int) AS bucket
+h AS (SELECT y, cast({_duck_portable_hash("tk")} % {NB_DIM} as int) AS bucket
       FROM t)
 SELECT bucket, cast(sum(y) as bigint) AS n_pos,
   cast(sum(1 - y) as bigint) AS n_neg FROM h GROUP BY bucket
@@ -1918,14 +1855,9 @@ def _sql_classifier_scores() -> str:
         WEIGHT_SCALE,
         quantize_weights,
     )
-    from sparvi_spark.operators.dedup import PORTABLE_P
-
     qw = quantize_weights(_clf_weights())
     wlist = "[%s]" % ", ".join(str(w) for w in qw)
-    tok_hash = (f"list_reduce(list_prepend(cast(0 as bigint), "
-                f"list_transform(range(1, strlen(t) + 1), "
-                f"i -> cast(ascii(substring(t, i, 1)) as bigint))), "
-                f"(acc, c) -> (acc * 131 + c) % {PORTABLE_P})")
+    tok_hash = _duck_portable_hash("t")
     return f"""
 WITH d AS (SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
 s AS (SELECT doc_id, len(toks) AS n_tokens,

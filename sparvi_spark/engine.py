@@ -522,8 +522,8 @@ class Engine:
         ``corpus_gate_failure`` event for the automation consumers, the
         same path validation failures use.
 
-        All three screens are full-scan-parallel operators (see
-        operators/text.quality_filter, dedup.exact_duplicates,
+        All three screens are full-scan-parallel (operators/
+        text.quality_filter, a distinct count of text hashes,
         bloom.contamination_bloom); only the counts reach the driver.
         """
         from sparvi_spark.operators.bloom import contamination_bloom
@@ -663,9 +663,6 @@ class Engine:
         over it; MEMORY_AND_DISK spills rather than recomputing the
         line-dedup join per action) and unpersisted before returning.
         """
-        from sparvi_spark.operators.text import quality_filter
-        from sparvi_spark.sources.export import export_shards
-
         run_at = run_at or _utcnow()
         # (1) curation BEFORE the gate: the stored gate metrics
         # (keep_rate, dup_rate, classifier_pass_rate) must describe the

@@ -62,7 +62,7 @@ def time_bucket(ts, width_seconds: int):
     """Epoch-aligned arbitrary-width time bucket (hypertable-style):
     floor(epoch/width)*width as a timestamp. Portable: the identical
     formula runs in DuckDB as to_timestamp(floor(epoch(ts)/w)*w)."""
-    from pyspark.sql import Column, functions as F
+    from pyspark.sql import functions as F
 
     c = F.col(ts) if isinstance(ts, str) else ts
     # TIMESTAMP_NTZ has no direct numeric cast; relabel to TIMESTAMP first

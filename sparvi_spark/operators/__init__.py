@@ -21,7 +21,6 @@ from sparvi_spark.operators.dedup import (
     contamination,
     dedup_exact,
     dedup_near,
-    exact_duplicates,
     jaccard_pairs,
     minhash_lsh_pairs,
     simhash_pairs,
@@ -77,7 +76,7 @@ __all__ = [
     "spec_from_dataframe", "detect_anomalies", "cusum_anomalies",
     "compare_schemas", "detect_changes",
     "connected_components",
-    "dedup_exact", "dedup_near", "exact_duplicates", "jaccard_pairs",
+    "dedup_exact", "dedup_near", "jaccard_pairs",
     "minhash_lsh_pairs", "simhash_pairs", "contamination",
     "bloom_build", "bloom_filter_members", "contamination_bloom",
     "cosine_topk", "ivf_topk", "ivf_topk_trained", "kmeans_train", "lsh_topk",

@@ -205,7 +205,8 @@ def iqr_sql(src: str, keys: list[str], order_col: str = "ts",
                 f"then abs(({lower} - {v}) / {iqr}) else {_INF} end")
     past_high = (f"case when {iqr} > {_d(0)} "
                  f"then abs(({v} - {upper}) / {iqr}) else {_INF} end")
-    score = (f"case when {v} < {lower} then {past_low} "
+    score = (f"case when {v} is null then null "
+             f"when {v} < {lower} then {past_low} "
              f"when {v} > {upper} then {past_high} else {_d(0)} end")
     return _scored(f"({quart})", score, threshold, ["__q1", "__q3", "__v"],
                    flag=f"({v} < {lower}) or ({v} > {upper})")

@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from sparvi_spark.operators.dedup import PORTABLE_P
+from sparvi_spark.operators.dedup import portable_hash_expr
 
 WEIGHT_SCALE = 1_000_000
 
@@ -50,15 +50,6 @@ WEIGHT_SCALE = 1_000_000
 def quantize_weights(weights: list[float]) -> list[int]:
     """Float weights -> the int table the scorer folds into the plan."""
     return [int(round(float(w) * WEIGHT_SCALE)) for w in weights]
-
-
-def _tok_hash(var: str) -> str:
-    """Portable char-fold hash of a lambda-bound token variable (the
-    expression dedup.portable_hash_expr builds for a column, re-rooted on
-    a higher-order-function variable)."""
-    return (f"aggregate(transform(sequence(1, length({var})), "
-            f"i -> ascii(substring({var}, i, 1))), 0L, "
-            f"(acc, c) -> (acc * 131 + c) % {PORTABLE_P})")
 
 
 def linear_scores(
@@ -101,7 +92,7 @@ def linear_scores(
     toks = (f"`{tokens_col}`" if tokens_col
             else f"split(lower(trim(`{text_col}`)), '\\\\s+')")
     feat = (f"element_at({wlit}, "
-            f"cast({_tok_hash('t')} % {dim} as int) + 1)")
+            f"cast({portable_hash_expr('t')} % {dim} as int) + 1)")
     # STAGED projections so each expensive expression evaluates ONCE:
     # higher-order functions (aggregate/transform) are interpreted — no
     # codegen CSE — so inlining the token-fold into margin AND label AND
@@ -155,8 +146,9 @@ def token_bucket_counts(
     return (df.selectExpr(
         f"cast(`{label_col}` as int) AS __y",
         f"explode({toks}) AS __t")
-        .selectExpr(f"cast({_tok_hash('__t')} % {dim} as int) AS bucket",
-                    "__y")
+        .selectExpr(
+            f"cast({portable_hash_expr('__t')} % {dim} as int) AS bucket",
+            "__y")
         .groupBy("bucket")
         .agg(F.expr("sum(__y)").alias("n_pos"),
              F.expr("sum(1 - __y)").alias("n_neg"))

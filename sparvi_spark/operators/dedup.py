@@ -7,7 +7,8 @@ near-dup — all as declarative DataFrame programs designed for 100 TB:
 - Shingling/token ops stay JVM-side (higher-order array functions, no UDFs).
 - The Jaccard self-join joins on shingle (not doc×doc), so cost is
   Σ df(shingle)² — cap hot shingles with ``max_shingle_df`` at scale.
-- MinHash uses xxhash64(shingle, seed) signatures; LSH bands shrink the
+- MinHash signs each doc with num_hashes affine permutations
+  (a_i·x + b_i) mod P of ONE base hash per shingle; LSH bands shrink the
   candidate space from O(n²) to near-linear before exact verification.
 - SimHash packs a 64-bit fingerprint via bit-position majority votes and
   finds Hamming-near pairs by pigeonhole banding (4×16-bit chunks).
@@ -52,14 +53,6 @@ def word_shingles(text_col: str, n: int) -> Column:
         f"transform(sequence(1, size({toks}) - {n - 1}), "
         f"i -> concat_ws(' ', slice({toks}, i, {n}))) "
         f"else cast(array() as array<string>) end"
-    )
-
-
-def exact_duplicates(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Exact dedup groups: value tuple -> count (count>1 == duplicates)."""
-    return (
-        df.groupBy(*cols).agg(F.count(F.lit(1)).alias("cnt"))
-        .where(F.col("cnt") > 1)
     )
 
 
@@ -406,9 +399,7 @@ def _gram_hash_sig_arrow(df: DataFrame, id_col: str, text_col: str,
     in ONE Arrow pass — the vectorized scale lane for the whole MinHash
     pipeline.
 
-    Same construction as ``_shingle_hash_rows`` (JVM tokenize + per-token
-    xxhash64 so Arrow ships 8 bytes/token, numpy rolling 64-bit gram
-    hashes, per-doc distinct via one lexsort), then the SAME
+    The distinct gram hashes of ``_gram_rows``, then the SAME
     affine-permutation scheme as ``_with_sig`` — base hash
     x = gram_hash mod P, slot i = min((a_i·x + b_i) mod P), one
     ``np.minimum.reduceat`` per slot. (NOT Kirsch-Mitzenmacher h1+i·h2:
@@ -426,61 +417,32 @@ def _gram_hash_sig_arrow(df: DataFrame, id_col: str, text_col: str,
     borderline pairs — verification decides with exact Jaccard either
     way. NOT oracle-reproducible; graded checks pin ``portable``.
     """
-    import pandas as pd
+    import numpy as np
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    toks = _token_hash_frame(df, id_col, text_col, n)
-    out_schema = f"__id {id_type}, __grams array<bigint>, sig array<bigint>"
-
-    def emit(batches):
-        import numpy as np
-
-        P = np.uint64(0x9E3779B97F4A7C15)
-        for pdf in batches:
-            m = len(pdf)
-            if m == 0:
-                continue
-            tok_lists = [np.asarray(t, dtype=np.int64) for t in pdf["__th"]]
-            lens = np.fromiter((len(t) for t in tok_lists),
-                               dtype=np.int64, count=m)
-            th = np.concatenate(tok_lists).view(np.uint64)
-            nw = len(th) - (n - 1)
-            with np.errstate(over="ignore"):
-                c = th[:nw].copy()
-                for k in range(1, n):
-                    c = (c * P) ^ th[k:k + nw]
-            doc_of = np.repeat(np.arange(m, dtype=np.int64), lens)
-            valid = doc_of[:nw] == doc_of[n - 1:n - 1 + nw]
-            c, d = c[valid], doc_of[:nw][valid]
-            order = np.lexsort((c, d))
-            c, d = c[order], d[order]
-            keep = np.empty(len(c), dtype=bool)
-            keep[:1] = True
-            keep[1:] = (d[1:] != d[:-1]) | (c[1:] != c[:-1])
-            c, d = c[keep], d[keep]
-            x = (c % np.uint64(PORTABLE_P)).astype(np.int64)
-            # every doc passed the >=n-token filter, so every doc index
-            # 0..m-1 appears in d and searchsorted yields true starts
-            starts = np.searchsorted(d, np.arange(m, dtype=np.int64))
-            sig = np.empty((num_hashes, m), dtype=np.int64)
-            for i in range(num_hashes):
-                a, b = _affine_params(i)  # a, b, x < P=1e9+7 -> < 2^60
-                sig[i] = np.minimum.reduceat((a * x + b) % PORTABLE_P,
-                                             starts)
-            ghash = c.view(np.int64)
-            bounds = np.append(starts[1:], len(ghash))
-            yield pd.DataFrame({
-                "__id": pdf["__id"].to_numpy(),
+    def shape(ids, gram, doc, _pos):
+        m = len(ids)
+        x = (gram % np.uint64(PORTABLE_P)).astype(np.int64)
+        # every doc passed the >=n-token filter, so every doc index
+        # 0..m-1 appears in doc and searchsorted yields true starts
+        starts = np.searchsorted(doc, np.arange(m, dtype=np.int64))
+        sig = np.empty((num_hashes, m), dtype=np.int64)
+        for i in range(num_hashes):
+            a, b = _affine_params(i)  # a, b, x < P=1e9+7 -> < 2^60
+            sig[i] = np.minimum.reduceat((a * x + b) % PORTABLE_P, starts)
+        ghash = gram.view(np.int64)
+        bounds = np.append(starts[1:], len(ghash))
+        return {"__id": ids,
                 "__grams": [ghash[s:e] for s, e in zip(starts, bounds)],
-                "sig": list(sig.T),
-            })
+                "sig": list(sig.T)}
 
-    return toks.mapInPandas(emit, out_schema)
+    return _gram_rows(df, id_col, text_col, n, distinct=True,
+                      out_schema="__grams array<bigint>, sig array<bigint>",
+                      shape=shape)
 
 
 def minhash_signatures(
     df: DataFrame, id_col: str, text_col: str, n: int = 3, num_hashes: int = 64,
-    hash_fn: str | None = None, grams: DataFrame | None = None,
+    hash_fn: str | None = None,
 ) -> DataFrame:
     """MinHash signatures: sig[i] = min(h_i(shingle)) — per-row, shuffle-free.
 
@@ -494,20 +456,11 @@ def minhash_signatures(
     why Kirsch-Mitzenmacher is wrong for MinHash) over a numpy base
     hash, ~10× less per-core cost on real corpora.
     ``None`` resolves from the engine-wide scale mode (arrow at scale,
-    xxhash64 otherwise). Returns (id, sig: array<bigint>). ``grams``
-    lets callers share a precomputed (__id, __grams) frame from
-    ``_doc_gram_arrays`` (expr lanes only).
+    xxhash64 otherwise). Returns (id, sig: array<bigint>), a projection
+    of ``minhash_signed``.
     """
-    hash_fn = resolve_hash_fn(hash_fn)
-    if hash_fn == "arrow":
-        if grams is not None:
-            raise ValueError("hash_fn='arrow' computes its own gram "
-                             "hashes; precomputed grams are expr-lane only")
-        return _gram_hash_sig_arrow(df, id_col, text_col, n, num_hashes) \
-            .select(F.col("__id").alias(id_col), "sig")
-    g = grams if grams is not None else _doc_gram_arrays(df, id_col, text_col, n)
-    return _with_sig(g, num_hashes, hash_fn).select(
-        F.col("__id").alias(id_col), "sig")
+    return minhash_signed(df, id_col, text_col, n, num_hashes,
+                          hash_fn).select(F.col("__id").alias(id_col), "sig")
 
 
 def minhash_signed(df: DataFrame, id_col: str, text_col: str, n: int = 3,
@@ -571,19 +524,12 @@ def minhash_lsh_pairs(
     broadcast the corpus.
     """
     hash_fn = resolve_hash_fn(hash_fn)
-    rows_per_band = num_hashes // bands
     # One persisted frame carries the shingle SET, its size, and the banded
     # signature per doc — ALL computed as per-row projections (array_distinct
     # set dedup, array_min signatures, slice band hashes). The only shuffles
     # in the whole pipeline are the candidate bucket-join and the
     # verification join/agg; the classic formulation additionally paid an
     # exploded distinct(), a 64-way min groupBy, and a sizes groupBy.
-    if hash_fn == "portable":
-        band_hash = (f"aggregate(slice(sig, b * {rows_per_band} + 1, "
-                     f"{rows_per_band}), 0L, "
-                     f"(acc, v) -> (acc * {PORTABLE_BAND_M} + v) % {PORTABLE_P})")
-    else:
-        band_hash = f"xxhash64(slice(sig, b * {rows_per_band} + 1, {rows_per_band}))"
     # sig is INSIDE the persisted projection: band hashes reference it
     # `bands` times, and without the cache boundary Catalyst collapses the
     # projects and re-evaluates the whole num_hashes-way signature once PER
@@ -592,17 +538,9 @@ def minhash_lsh_pairs(
     # much: re-collapse would re-run the Python worker per band.)
     base = signed if signed is not None else scoped_persist(
         minhash_signed(df, id_col, text_col, n, num_hashes, hash_fn))
-
-    # inline() expands the band structs straight to columns — one analyzed
-    # plan instead of explode-then-extract (each DataFrame op costs a
-    # serialized ~5-10ms analysis round on the driver; the physical plan
-    # is identical because Catalyst collapses adjacent projections)
-    banded = base.selectExpr(
-        "__id",
-        f"inline(transform(sequence(0, {bands - 1}), "
-        f"b -> struct(b as band, {band_hash} as bh)))")
-    a = banded.selectExpr("__id as id_a", "band", "bh")
-    b = banded.selectExpr("__id as id_b", "band", "bh")
+    bands_sql = band_hashes_expr(hash_fn, num_hashes, bands)
+    a = _band_rows(base, "__id", "id_a", bands_sql)
+    b = _band_rows(base, "__id", "id_b", bands_sql)
     if bounded:
         a = F.broadcast(a)
     cands = (
@@ -615,28 +553,48 @@ def minhash_lsh_pairs(
         # collision-bounded (batch pairs only) — broadcast through the
         # two gram-attach joins so the cached base only streams
         cands = F.broadcast(cands)
-    # Exact-Jaccard verification driven by the candidate pairs only: attach
-    # both gram SETS and overlap them per row with array_intersect. Cost is
-    # O(candidates × shingles/doc) — near-linear — instead of the
-    # O(Σ df(shingle)²) all-pairs shingle self-join of jaccard_pairs.
-    # The intersect size appears twice in the fused projection; codegen's
-    # common-subexpression elimination evaluates it once per row.
-    ga = base.select(F.col("__id").alias("id_a"), F.col("__grams").alias("__ga"),
-                     F.col("__sz").alias("sz_a"))
-    gb = base.select(F.col("__id").alias("id_b"), F.col("__grams").alias("__gb"),
-                     F.col("__sz").alias("sz_b"))
-    shared = "size(array_intersect(__ga, __gb))"
-    withga = cands.join(ga, "id_a")
+    withga = cands.join(_gram_side(base, "id_a", "a"), "id_a")
     if bounded:
         withga = F.broadcast(withga)
-    return (
-        withga.join(gb, "id_b")
-        .selectExpr(
-            "id_a", "id_b",
-            f"round({shared} * cast(1 as double) "
-            f"/ (sz_a + sz_b - {shared}), 6) AS jaccard")
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _exact_jaccard(withga.join(_gram_side(base, "id_b", "b"), "id_b"),
+                          "id_a", "id_b", threshold)
+
+
+def _band_rows(frame: DataFrame, in_id: str, out_id: str,
+               bands_sql: str) -> DataFrame:
+    """(out_id, band, bh): one row per element of the band-hash array
+    ``bands_sql`` (``band_hashes_expr``, or hashes stored at state
+    append) — the banding step every LSH candidate join reads. One fused
+    projection: each DataFrame op costs a serialized ~5-10ms analysis
+    round on the driver."""
+    return frame.selectExpr(f"`{in_id}` AS {out_id}",
+                            f"posexplode({bands_sql}) AS (band, bh)")
+
+
+def _gram_side(base: DataFrame, out_id: str, side: str) -> DataFrame:
+    """One side (``a`` or ``b``) of the exact-Jaccard verify: a signed
+    base's gram set and size as (out_id, __g<side>, sz_<side>)."""
+    return base.select(F.col("__id").alias(out_id),
+                       F.col("__grams").alias(f"__g{side}"),
+                       F.col("__sz").alias(f"sz_{side}"))
+
+
+def _exact_jaccard(pairs: DataFrame, id_a: str, id_b: str,
+                   threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard >= threshold) over candidate pairs carrying
+    both ``_gram_side`` sets — the exact-Jaccard verification of the LSH
+    lanes. Only the candidates are verified, overlapping the two sets per
+    row with array_intersect: O(candidates × shingles/doc) — near-linear —
+    instead of the O(Σ df(shingle)²) all-pairs shingle self-join of
+    jaccard_pairs. The intersect size appears twice in the fused
+    projection; codegen's common-subexpression elimination evaluates it
+    once per row."""
+    shared = "size(array_intersect(__ga, __gb))"
+    return (pairs.selectExpr(
+        id_a, id_b,
+        f"round({shared} * cast(1 as double) "
+        f"/ (sz_a + sz_b - {shared}), 6) AS jaccard")
+        .where(F.col("jaccard") >= threshold))
 
 
 def minhash_lsh_pairs_cross(
@@ -669,75 +627,37 @@ def minhash_lsh_pairs_cross(
     lane; ``None`` resolves from scale mode).
     """
     hash_fn = resolve_hash_fn(hash_fn)
-    rows_per_band = num_hashes // bands
-    if hash_fn == "portable":
-        band_hash = (f"aggregate(slice(sig, b * {rows_per_band} + 1, "
-                     f"{rows_per_band}), 0L, "
-                     f"(acc, v) -> (acc * {PORTABLE_BAND_M} + v) % {PORTABLE_P})")
-    else:
-        band_hash = f"xxhash64(slice(sig, b * {rows_per_band} + 1, {rows_per_band}))"
-
-    def _base(frame: DataFrame) -> DataFrame:
-        # sig inside the persisted projection for the same
-        # re-evaluation-per-band reason as minhash_lsh_pairs
-        if hash_fn == "arrow":
-            signed = _gram_hash_sig_arrow(frame, id_col, text_col, n,
-                                          num_hashes)
-        else:
-            signed = _with_sig(_doc_gram_arrays(frame, id_col, text_col, n),
-                               num_hashes, hash_fn)
-        return scoped_persist(
-            signed
-            .withColumn("__sz", F.size("__grams"))
-            .select("__id", "__grams", "__sz", "sig")
-        )
-
-    def _banded(base: DataFrame, out_id: str) -> DataFrame:
-        return base.select(
-            F.col("__id").alias(out_id),
-            F.explode(
-                F.expr(f"transform(sequence(0, {bands - 1}), "
-                       f"b -> struct(b as band, {band_hash} as bh))")
-            ).alias("bb"),
-        ).select(out_id, F.col("bb.band").alias("band"),
-                 F.col("bb.bh").alias("bh"))
-
-    base_a, base_b = _base(df), _base(ref)
+    # sig inside the persisted bases for the same re-evaluation-per-band
+    # reason as minhash_lsh_pairs
+    base_a, base_b = (scoped_persist(minhash_signed(
+        frame, id_col, text_col, n, num_hashes, hash_fn))
+        for frame in (df, ref))
+    bands_sql = band_hashes_expr(hash_fn, num_hashes, bands)
     cands = (
-        _banded(base_a, "id").join(
-            F.broadcast(_banded(base_b, "ref_id")), ["band", "bh"])
+        _band_rows(base_a, "__id", "id", bands_sql).join(
+            F.broadcast(_band_rows(base_b, "__id", "ref_id", bands_sql)),
+            ["band", "bh"])
         .select("id", "ref_id").distinct()
     )
-    ga = base_a.select(F.col("__id").alias("id"),
-                       F.col("__grams").alias("__ga"),
-                       F.col("__sz").alias("sz_a"))
-    gb = base_b.select(F.col("__id").alias("ref_id"),
-                       F.col("__grams").alias("__gb"),
-                       F.col("__sz").alias("sz_b"))
-    return (
-        cands.join(ga, "id").join(F.broadcast(gb), "ref_id")
-        .withColumn("shared", F.size(F.array_intersect("__ga", "__gb")))
-        .withColumn(
-            "jaccard",
-            F.round(F.col("shared") * F.lit(1.0)
-                    / (F.col("sz_a") + F.col("sz_b") - F.col("shared")), 6),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id", "ref_id", "jaccard")
-    )
+    return _exact_jaccard(
+        cands.join(_gram_side(base_a, "id", "a"), "id")
+        .join(F.broadcast(_gram_side(base_b, "ref_id", "b")), "ref_id"),
+        "id", "ref_id", threshold)
 
 
 def band_hashes_expr(hash_fn: str, num_hashes: int, bands: int) -> str:
     """SQL expr: array of ``bands`` band hashes over a ``sig`` column —
-    THE banding construction (shared by ``minhash_pairs_from_sigs`` and
-    the engine's state append, which precomputes it once per admitted
-    doc so the per-batch band join never re-slices stored signatures)."""
+    THE banding construction (shared by both LSH lanes,
+    ``minhash_pairs_from_sigs`` and the engine's state append, which
+    precomputes it once per admitted doc so the per-batch band join never
+    re-slices stored signatures)."""
     rpb = num_hashes // bands
+    band = f"slice(sig, b * {rpb} + 1, {rpb})"
     if hash_fn == "portable":
-        bh = (f"aggregate(slice(sig, b * {rpb} + 1, {rpb}), 0L, "
+        bh = (f"aggregate({band}, 0L, "
               f"(acc, v) -> (acc * {PORTABLE_BAND_M} + v) % {PORTABLE_P})")
     else:
-        bh = f"xxhash64(slice(sig, b * {rpb} + 1, {rpb}))"
+        bh = f"xxhash64({band})"
     return f"transform(sequence(0, {bands - 1}), b -> {bh})"
 
 
@@ -798,16 +718,6 @@ def minhash_pairs_from_sigs(
                 f"then `{bands_col}` else {computed} end"
                 if bands_col else computed)
 
-    def _banded(frame: DataFrame, in_id: str, out_id: str,
-                bands_col: str | None = None) -> DataFrame:
-        # one fused projection: posexplode over the (stored or computed)
-        # band-hash array — same physical shape as the previous
-        # inline(transform(...)) struct expansion, one analysis round
-        src = _bands_src(bands_col, bands, computed)
-        return frame.selectExpr(
-            f"`{in_id}` AS {out_id}",
-            f"posexplode({src}) AS (band, bh)")
-
     # ``small_side="new"`` (the incremental-intake shape: a bounded
     # microbatch banded against an ever-growing signature store)
     # broadcasts the batch's band rows AND keeps every later join's
@@ -820,7 +730,7 @@ def minhash_pairs_from_sigs(
     est = (f"round(size(filter(zip_with(__sa, __sb, (x, y) -> x = y), "
            f"m -> m)) / cast({num_hashes} as double), 6)")
     new_side = new_sigs.selectExpr("id", "sig AS __sa")
-    nb = _banded(new_sigs, "id", "id")
+    nb = _band_rows(new_sigs, "id", "id", computed)
     if small_side == "new":
         # The incremental-intake shape (a bounded microbatch banded
         # against an ever-growing signature store): ONE streamed pass
@@ -853,7 +763,8 @@ def minhash_pairs_from_sigs(
             .selectExpr("id", "ref_id", f"{est} AS est_jaccard")
             .where(F.col("est_jaccard") >= threshold)
         )
-    rb = _banded(ref_sigs, "ref_id", "ref_id", bands_col=ref_bands_col)
+    rb = _band_rows(ref_sigs, "ref_id", "ref_id",
+                    _bands_src(ref_bands_col, bands, computed))
     cands = (nb.join(rb, ["band", "bh"])
              .select("id", "ref_id").distinct())
     return (
@@ -1193,10 +1104,63 @@ def _token_hash_frame(df: DataFrame, id_col: str, text_col: str,
         "__id", F.expr("transform(__toks, t -> xxhash64(t))").alias("__th"))
 
 
+def _gram_rows(df: DataFrame, id_col: str, text_col: str, n: int,
+               distinct: bool, out_schema: str, shape) -> DataFrame:
+    """The one numpy gram kernel behind every Arrow gram lane
+    (``_gram_hash_sig_arrow``, ``_shingle_hash_rows``,
+    ``_window_hash_rows``): each length-n token window's rolling 64-bit
+    hash, vectorized ACROSS the documents of an Arrow batch.
+
+    Tokens arrive as ``_token_hash_frame``'s 8-byte hashes. Per batch:
+    one flat uint64 array, one wrapping polynomial combine per extra gram
+    position, a mask dropping the windows that straddle a document
+    boundary, and — with ``distinct`` — one lexsort that keeps each doc's
+    first occurrence of each hash, ordered by (doc, hash). No per-row
+    Python, no per-window lambda. ``shape(ids, gram, doc, pos)`` maps the
+    batch's doc ids and the per-window uint64 hash, batch doc index and
+    in-doc position arrays to the lane's output columns beyond ``__id``
+    (``out_schema``)."""
+    id_type = df.schema[id_col].dataType.simpleString()
+
+    def emit(batches):
+        import numpy as np
+        import pandas as pd
+
+        P = np.uint64(0x9E3779B97F4A7C15)
+        for pdf in batches:
+            m = len(pdf)
+            if m == 0:
+                continue
+            tok_lists = [np.asarray(t, dtype=np.int64) for t in pdf["__th"]]
+            lens = np.fromiter((len(t) for t in tok_lists),
+                               dtype=np.int64, count=m)
+            th = np.concatenate(tok_lists).view(np.uint64)
+            nw = len(th) - (n - 1)
+            with np.errstate(over="ignore"):
+                c = th[:nw].copy()
+                for k in range(1, n):
+                    c = (c * P) ^ th[k:k + nw]
+            doc_of = np.repeat(np.arange(m, dtype=np.int64), lens)
+            idx = np.nonzero(doc_of[:nw] == doc_of[n - 1:n - 1 + nw])[0]
+            c, d = c[idx], doc_of[idx]
+            pos = idx - (np.cumsum(lens) - lens)[d]
+            if distinct:
+                order = np.lexsort((c, d))
+                c, d, pos = c[order], d[order], pos[order]
+                keep = np.empty(len(c), dtype=bool)
+                keep[:1] = True
+                keep[1:] = (d[1:] != d[:-1]) | (c[1:] != c[:-1])
+                c, d, pos = c[keep], d[keep], pos[keep]
+            yield pd.DataFrame(shape(pdf["__id"].to_numpy(), c, d, pos))
+
+    return _token_hash_frame(df, id_col, text_col, n).mapInPandas(
+        emit, f"__id {id_type}, {out_schema}")
+
+
 def _shingle_hash_rows(df: DataFrame, id_col: str, text_col: str,
                        n: int) -> DataFrame:
     """(__id, n_shingles, gram): each doc's DISTINCT shingle set as 64-bit
-    rolling hashes — the Arrow scale lane shared by gram consumers.
+    rolling hashes (``_gram_rows``) — the Arrow lane of ``contamination``.
 
     Tokenization stays JVM-SIDE (the identical ``tokens_expr`` split the
     parity path uses), so the only semantic difference from
@@ -1211,58 +1175,20 @@ def _shingle_hash_rows(df: DataFrame, id_col: str, text_col: str,
     Tokens are hashed to 8 bytes JVM-SIDE (one linear ``xxhash64`` per
     token — the cheap kind of interpreted transform) so the Arrow
     transfer ships ``array<bigint>`` instead of token strings (measured
-    the string transfer as the lane's biggest cost at 100×). Inside the
-    batch everything is vectorized ACROSS documents: one flat int64
-    array per batch, one wrapping-uint64 polynomial combine per extra
-    gram position, one lexsort for the per-doc distinct — no per-row
-    Python, no per-window lambda. This is the lever the interpreted HOF
-    prototype (see ``contamination``'s negative-result note) was
-    missing.
+    the string transfer as the lane's biggest cost at 100×); the batch
+    kernel is the lever the interpreted HOF prototype (see
+    ``contamination``'s negative-result note) was missing.
     """
-    import pandas as pd
+    import numpy as np
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    toks = _token_hash_frame(df, id_col, text_col, n)
-    out_schema = f"__id {id_type}, n_shingles bigint, gram bigint"
+    def shape(ids, gram, doc, _pos):
+        counts = np.bincount(doc, minlength=len(ids))
+        return {"__id": ids[doc], "n_shingles": counts[doc],
+                "gram": gram.view(np.int64)}  # exact bit-pattern as bigint
 
-    def emit(batches):
-        import numpy as np
-
-        P = np.uint64(0x9E3779B97F4A7C15)
-        for pdf in batches:
-            m = len(pdf)
-            if m == 0:
-                continue
-            tok_lists = [np.asarray(t, dtype=np.int64) for t in pdf["__th"]]
-            lens = np.fromiter((len(t) for t in tok_lists),
-                               dtype=np.int64, count=m)
-            flat = np.concatenate(tok_lists).view(np.uint64)
-            th = flat  # 64-bit token hashes, already deterministic
-            nw = len(flat) - (n - 1)
-            with np.errstate(over="ignore"):
-                c = th[:nw].copy()
-                for k in range(1, n):
-                    c = (c * P) ^ th[k:k + nw]
-            # windows that straddle a document boundary are not shingles
-            doc_of = np.repeat(np.arange(m, dtype=np.int64), lens)
-            valid = doc_of[:nw] == doc_of[n - 1:n - 1 + nw]
-            c, d = c[valid], doc_of[:nw][valid]
-            # per-doc distinct: sort (doc, hash), keep group firsts
-            order = np.lexsort((c, d))
-            c, d = c[order], d[order]
-            keep = np.empty(len(c), dtype=bool)
-            keep[:1] = True
-            keep[1:] = (d[1:] != d[:-1]) | (c[1:] != c[:-1])
-            c, d = c[keep], d[keep]
-            counts = np.bincount(d, minlength=m)
-            ids = pdf["__id"].to_numpy()
-            yield pd.DataFrame({
-                "__id": ids[d],
-                "n_shingles": counts[d],
-                "gram": c.view(np.int64),  # exact bit-pattern as bigint
-            })
-
-    return toks.mapInPandas(emit, out_schema)
+    return _gram_rows(df, id_col, text_col, n, distinct=True,
+                      out_schema="n_shingles bigint, gram bigint",
+                      shape=shape)
 
 
 def contamination(
@@ -1468,46 +1394,17 @@ def _numpy_assign(df: DataFrame, vec_col: str,
 def _window_hash_rows(df: DataFrame, id_col: str, text_col: str,
                       n: int) -> DataFrame:
     """(__id, pos, key): EVERY length-n token window's rolling 64-bit
-    hash with its in-doc position — the Arrow POSITIONAL gram lane
-    feeding ``duplicate_spans``. Same construction as
-    ``_shingle_hash_rows`` (JVM tokenize + per-token xxhash64, numpy
-    rolling combine) minus the per-doc distinct: ExactSubstr needs
-    every occurrence, not the set."""
-    import pandas as pd
+    hash (``_gram_rows``) with its in-doc position — the Arrow POSITIONAL
+    gram lane feeding ``duplicate_spans``. No per-doc distinct:
+    ExactSubstr needs every occurrence, not the set."""
+    import numpy as np
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    toks = _token_hash_frame(df, id_col, text_col, n)
-    out_schema = f"__id {id_type}, pos int, key bigint"
+    def shape(ids, gram, doc, pos):
+        return {"__id": ids[doc], "pos": pos.astype(np.int32),
+                "key": gram.view(np.int64)}
 
-    def emit(batches):
-        import numpy as np
-
-        P = np.uint64(0x9E3779B97F4A7C15)
-        for pdf in batches:
-            m = len(pdf)
-            if m == 0:
-                continue
-            tok_lists = [np.asarray(t, dtype=np.int64) for t in pdf["__th"]]
-            lens = np.fromiter((len(t) for t in tok_lists),
-                               dtype=np.int64, count=m)
-            th = np.concatenate(tok_lists).view(np.uint64)
-            nw = len(th) - (n - 1)
-            with np.errstate(over="ignore"):
-                c = th[:nw].copy()
-                for k in range(1, n):
-                    c = (c * P) ^ th[k:k + nw]
-            doc_of = np.repeat(np.arange(m, dtype=np.int64), lens)
-            doc_start = np.concatenate(([0], np.cumsum(lens)[:-1]))
-            idx = np.nonzero(doc_of[:nw] == doc_of[n - 1:n - 1 + nw])[0]
-            d = doc_of[idx]
-            ids = pdf["__id"].to_numpy()
-            yield pd.DataFrame({
-                "__id": ids[d],
-                "pos": (idx - doc_start[d]).astype(np.int32),
-                "key": c[idx].view(np.int64),
-            })
-
-    return toks.mapInPandas(emit, out_schema)
+    return _gram_rows(df, id_col, text_col, n, distinct=False,
+                      out_schema="pos int, key bigint", shape=shape)
 
 
 def duplicate_spans(

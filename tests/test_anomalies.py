@@ -261,6 +261,22 @@ def test_non_finite_values_score_like_null(spark):
                 assert got[key] == (score, flag), (name, key, got[key])
 
 
+def test_iqr_scores_a_missing_value_as_null(spark):
+    """A NULL (or NaN) value is not a measured point: IQR gives it a NULL
+    score, as zscore, moving average and MAD do, not a score of 0.0 that
+    reads as a normal point."""
+    for missing in (None, float("nan")):
+        for name, slot in (("iqr", 3), ("iqr_rolling", 7)):
+            rows = [("m", i, missing if i == slot else v)
+                    for i, v in enumerate(SERIES[:10])]
+            df = spark.createDataFrame(
+                rows, "metric_name string, ts int, value double")
+            got = collect_scores(_DETECTORS[name](df))
+            assert got[slot] == (None, None), (missing, name, got[slot])
+            assert all(s is not None for ts, (s, _f) in got.items()
+                       if ts != slot), (name, got)
+
+
 def test_operators_take_braces_in_column_names(series_df):
     """The operators run their SQL text through ``spark.sql``, which
     ``str.format``s it: braces in a column name must reach Spark as written."""

@@ -5,7 +5,8 @@ top-level statement in the library, ``scripts/``, ``tests/``,
 ``perfbench/`` or ``bench.py`` mentions it as a ``Name``, an
 ``Attribute`` or a string literal (so ``getattr`` registries and
 ``"pkg.mod:Class"`` paths count). Imports and ``__all__`` entries do not:
-a re-export is not a use.
+a re-export is not a use. Imports, at module level and inside function
+bodies, must each be used.
 """
 
 from __future__ import annotations
@@ -104,13 +105,57 @@ def unused_imports(trees: dict[Path, ast.Module]) -> list[str]:
     return out
 
 
+def _scope_imports(stmts: list[ast.stmt]) -> list[ast.stmt]:
+    """Import statements of one function scope: nested functions and
+    classes are their own scopes, and imports guarded by ``except
+    ImportError`` are availability probes, not uses."""
+    out = []
+    for stmt in stmts:
+        if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+            out.append(stmt)
+        elif isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef,
+                               ast.ClassDef)):
+            continue
+        elif isinstance(stmt, ast.Try) and any(
+                h.type is not None and "ImportError" in ast.unparse(h.type)
+                for h in stmt.handlers):
+            out += _scope_imports(stmt.handlers + stmt.orelse
+                                  + stmt.finalbody)
+        else:
+            for field in ("body", "orelse", "finalbody", "handlers",
+                          "cases"):
+                out += _scope_imports(getattr(stmt, field, []))
+    return out
+
+
+def unused_function_imports(trees: dict[Path, ast.Module]) -> list[str]:
+    """``module:function:name`` for each import inside a library function
+    body that nothing in the function (closures included) mentions."""
+    out = []
+    for path, tree in trees.items():
+        if LIB not in path.parents:
+            continue
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            used = {node.id for node in ast.walk(fn)
+                    if isinstance(node, ast.Name)}
+            for stmt in _scope_imports(fn.body):
+                for alias in stmt.names:
+                    bound = (alias.asname or alias.name).split(".")[0]
+                    if bound not in used:
+                        out.append(
+                            f"{path.relative_to(ROOT)}:{fn.name}:{bound}")
+    return out
+
+
 def test_every_library_name_is_referenced_and_every_import_used():
     trees = _parse_all()
     dead = unreferenced_defs(trees)
-    unused = unused_imports(trees)
+    unused = unused_imports(trees) + unused_function_imports(trees)
     assert not dead and not unused, (
         "unreferenced top-level names:\n  " + "\n  ".join(dead)
-        + "\nunused module-level imports:\n  " + "\n  ".join(unused))
+        + "\nunused imports:\n  " + "\n  ".join(unused))
 
 
 def _pinned_sys_path(tree: ast.Module) -> list[str]:

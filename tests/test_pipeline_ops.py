@@ -19,10 +19,8 @@ def corpus(spark):
 
 
 def test_exact_duplicates(corpus):
-    from sparvi_spark.operators.dedup import dedup_exact, exact_duplicates
+    from sparvi_spark.operators.dedup import dedup_exact
 
-    groups = exact_duplicates(corpus, ["text"]).collect()
-    assert len(groups) == 1 and groups[0]["cnt"] == 2
     assert dedup_exact(corpus, ["text"]).count() == 5
 
 
@@ -575,6 +573,46 @@ def test_contamination_arrow_backend_parity(spark):
     assert got == sorted(contamination(
         hostile.where("doc_id >= 4"), hostile.where("doc_id < 4"),
         "doc_id", "text", n=3, backend="expr").collect())
+
+
+def test_arrow_gram_lanes_agree(spark):
+    """The three Arrow gram lanes build their keys from one rolling
+    combine: per doc, the MinHash lane's ``__grams`` set, the shingle
+    lane's ``gram`` set and the distinct window ``key``s are equal, and
+    window positions count from 0 within each doc. One partition puts
+    every doc in one Arrow batch, so the cross-document window mask
+    runs; the corpus has short docs, NULL and empty text, and repeated
+    grams."""
+    from sparvi_spark.operators.dedup import (
+        _gram_hash_sig_arrow, _shingle_hash_rows, _window_hash_rows)
+
+    texts = {1: "a b c a b c a b c", 2: None, 3: "one", 4: "x y",
+             5: "p q r s t", 6: "A  b\tc d", 7: "", 8: "a b c d e f a b c",
+             9: "r s t u"}
+    docs = spark.createDataFrame(list(texts.items()),
+                                 "doc_id int, text string").coalesce(1)
+    n = 3
+    lengths = {k: len(v.lower().split()) for k, v in texts.items()
+               if v is not None}
+    want = {k for k, ln in lengths.items() if ln >= n}
+    sig_sets = {r["__id"]: set(r["__grams"]) for r in
+                _gram_hash_sig_arrow(docs, "doc_id", "text", n, 8).collect()}
+    shingle_sets, windows = {}, {}
+    for r in _shingle_hash_rows(docs, "doc_id", "text", n).collect():
+        shingle_sets.setdefault(r["__id"], set()).add(r["gram"])
+        assert r["n_shingles"] == len(sig_sets[r["__id"]])
+    for r in _window_hash_rows(docs, "doc_id", "text", n).collect():
+        windows.setdefault(r["__id"], []).append((r["pos"], r["key"]))
+    assert set(sig_sets) == set(shingle_sets) == set(windows) == want
+    for k in want:
+        keys = {key for _p, key in windows[k]}
+        assert sig_sets[k] == shingle_sets[k] == keys, k
+        assert sorted(p for p, _k in windows[k]) == \
+            list(range(lengths[k] - n + 1)), k
+    # repeated grams collapse in the sets but not in the windows
+    assert len(windows[1]) == 7 and len(sig_sets[1]) == 3
+    # equal token runs hash equally across docs ('p q r' vs 'r s t')
+    assert sig_sets[5] & sig_sets[9]
 
 
 def test_minhash_lsh_bounded_lane_identical_pairs(spark):
