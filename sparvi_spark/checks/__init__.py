@@ -10,6 +10,8 @@ DECIMAL so float summation order cannot diverge between engines.
 
 from __future__ import annotations
 
+from sparvi_spark.functions import sql_str
+
 # The driver records at most 50 (query, oracle) pairs per round (observed:
 # CORRECTNESS_r01/r02 both cut at exactly entry 50 in insertion order).
 # Related same-schema checks are therefore unioned into one slot with a
@@ -18,11 +20,9 @@ DRIVER_CHECK_CAP = 50
 
 
 def _sq(s: str) -> str:
-    """Escape a string for splicing into a single-quoted SPARK SQL
-    literal: backslash first, then quote — quote-only escaping turns a
-    trailing backslash into an escaped delimiter and swallows the
+    """``functions.sql_str``'s body, for splicing into a Spark SQL
     literal (DuckDB sides use '' doubling instead)."""
-    return s.replace("\\", "\\\\").replace("'", "\\'")
+    return sql_str(s)[1:-1]
 
 
 def union_check(parts, tag_col: str = "mode"):

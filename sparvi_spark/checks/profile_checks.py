@@ -1,16 +1,37 @@
 """P1-P14 profiling checks (SURVEY.md §2.A) — Spark fn + DuckDB oracle pairs.
 
-Both sides are generated from the same column lists and the same scalar
-formula strings, so semantics cannot drift. All means/stddevs derive from
-exact DECIMAL sums (cross-engine float-order determinism, SURVEY §7.1-2).
+The Spark side renders the SQL-text builders of ``operators/profile.py``
+— the text ``profile_table`` runs — over the testdata views, so a graded
+slot grades the stored profile document's arithmetic (each ``*_sql``
+slot text below takes its relations as arguments, so the same slot runs
+over any frame). The DuckDB side is generated from the same column lists.
+All means/stddevs derive from exact decimal sums (cross-engine
+float-order determinism, SURVEY §7.1-2).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from sparvi_spark.operators.profile import type_bucket
+from sparvi_spark.checks import table_views
+from sparvi_spark.functions import ident, sql_str
+from sparvi_spark.operators.profile import (
+    aliased,
+    datetime_sqls,
+    distinct_sql,
+    dup_count_sql,
+    health_sql,
+    integral_columns,
+    nulls_sql,
+    numeric_sqls,
+    pct_sql,
+    row_hash_sql,
+    stage_sql,
+    text_finish_sql,
+    text_sqls,
+    top_values_sql,
+    type_bucket,
+)
 from sparvi_spark.testdata import SCHEMAS, TABLES, load_table
 
 # Fixed reference instant for freshness/future-date checks so Spark and the
@@ -31,44 +52,10 @@ TOPV_COLS = [("orders", "o_orderstatus"), ("orders", "o_orderpriority"),
 DUP_TABLES = ["lineitem", "orders", "documents", "nation"]
 
 
-# -- shared scalar formula strings (valid in BOTH Spark SQL and DuckDB) -----
-
-def _avg_formula(sum_alias: str, cnt_alias: str) -> str:
-    return f"round(cast({sum_alias} as double)/{cnt_alias}, 6)"
-
-
-def _std_formula(sum_alias: str, ssq_alias: str, cnt_alias: str) -> str:
-    sx = f"cast({sum_alias} as double)"
-    sxx = f"cast({ssq_alias} as double)"
-    n = cnt_alias
-    return (
-        f"case when {n} > 1 then "
-        f"round(sqrt(greatest(({sxx} - ({sx}*{sx})/{n})/({n} - 1), 0.0)), 4) end"
-    )
-
-
-def _num_agg_exprs(c: str) -> list[str]:
-    """Aggregate expressions for one numeric column (both dialects)."""
-    return [
-        f"count({c}) as {c}__cnt",
-        f"cast(min({c}) as double) as {c}__min",
-        f"cast(max({c}) as double) as {c}__max",
-        f"sum(cast({c} as decimal(28,8))) as {c}__sum",
-        # Squares via decimal(19,4)×decimal(18,4): one operand ≥19 digits
-        # forces DuckDB onto int128 multiply (it does not widen int64×int64);
-        # Spark's product precision is exactly 19+18+1 = 38 so no
-        # precision-loss scale adjustment occurs; |value| < 10^14 fits
-        # (decimal(12,4) overflowed-to-NULL at |value| >= 10^8).
-        f"sum(cast({c} as decimal(19,4)) "
-        f"* cast({c} as decimal(18,4))) as {c}__ssq",
-        f"count(case when {c} = 0 then 1 end) as {c}__zeros",
-        f"count(case when {c} < 0 then 1 end) as {c}__negs",
-        f"count(case when {c} > 0 then 1 end) as {c}__pos",
-    ]
-
-
-def _num_agg_sql(c: str) -> str:
-    return ", ".join(_num_agg_exprs(c))
+def _by_index(col: str, names: list[str]) -> str:
+    """The name at position ``col`` of ``names``, as a CASE."""
+    return ("case " + " ".join(f"when {col} = {i} then {sql_str(t)}"
+                               for i, t in enumerate(names)) + " end")
 
 
 # ---------------------------------------------------------------------------
@@ -77,53 +64,26 @@ def _num_agg_sql(c: str) -> str:
 # ---------------------------------------------------------------------------
 
 def q_row_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # ONE job, ~3 stages for all ten tables: every table projects to a
-    # (table_name, __h) row — an 8-byte xxhash64 of the full row for P9
-    # dup-counted tables (SCALING.md's hash-projection prescription; the
-    # shuffle never carries payload columns), NULL for count-only tables —
-    # then two keyed aggregations produce every row_count and
-    # duplicate_cnt at once. The previous per-table union built 2+ stages
-    # per table (22 stages total), and stage-scheduling latency — not
-    # compute — dominated this check. Literal position markers keep NULL
-    # columns position-distinct: xxhash64 skips NULL inputs, so without
-    # them (NULL,'a') and ('a',NULL) would collide structurally. The
-    # exact full-row path lives in p09_duplicate_counts.
-    # NOTE: a zero-row table contributes no union rows, so it would be
-    # absent from the output (the per-table agg form emitted 0). Fine
-    # here: the driver's testdata tables are never empty, and the engine
-    # API path (operators/profile.row_count) keeps per-table semantics.
-    # r12: group on an INT table id, not the literal table-name string —
-    # the (string, hash) first-level group key measured 0.81s vs 0.049s
-    # for the identical plan keyed (int, hash) at sf0.1 (the scan+hash
-    # union alone is 0.038s, so the string key was ~95% of the check);
-    # the name attaches back via a CASE over the 10 ids on the 10
-    # aggregated rows. Output rows/dtypes verified identical.
-    out = None
-    for i, t in enumerate(TABLES):
-        df = load_table(spark, t, sf_dir)
-        if t in DUP_TABLES:
-            args = ", ".join(f"{j}, `{c}`" for j, c in enumerate(df.columns))
-            h = f"xxhash64({args})"
-        else:
-            h = "cast(null as bigint)"
-        d = df.selectExpr(f"{i} as __tid", f"{h} as __h")
-        out = d if out is None else out.unionAll(d)
-    name_case = ("case " + " ".join(
-        f"when __tid = {i} then '{t}'" for i, t in enumerate(TABLES))
-        + " end")
+    # ONE job, ~3 stages for all ten tables: each projects to (__tid, __h)
+    # — duplicate_count's 8-byte ``row_hash_sql`` for the DUP_TABLES (the
+    # shuffle never carries payload columns), NULL otherwise — and
+    # ``dup_count_sql`` counts rows and duplicates per table (a per-table
+    # union was 22 stages, scheduling-bound). A zero-row table would be
+    # absent; the testdata tables never are. The key is an INT table id: a
+    # (string, hash) key measured 0.81s vs 0.049s at sf0.1.
+    v = table_views(spark, sf_dir, list(TABLES))
+    parts = " UNION ALL ".join(
+        f"SELECT {i} AS __tid, "
+        + (row_hash_sql(load_table(spark, t, sf_dir).columns) if t in DUP_TABLES
+           else "cast(null as bigint)")
+        + f" AS __h FROM {v[t]}" for i, t in enumerate(TABLES))
     dup_pred = " or ".join(
         f"__tid = {i}" for i, t in enumerate(TABLES) if t in DUP_TABLES)
-    per_hash = out.groupBy("__tid", "__h").agg(
-        F.count(F.lit(1)).alias("__c"))
-    return (
-        per_hash.groupBy("__tid")
-        .agg(F.sum("__c").alias("__rows"),
-             (F.sum("__c") - F.count(F.lit(1))).alias("__dups"))
-        .selectExpr(f"{name_case} as table_name",
-                    "cast(__rows as bigint) as row_count",
-                    f"cast(case when {dup_pred} then __dups end as bigint) "
-                    "as duplicate_cnt")
-    )
+    return spark.sql(
+        f"SELECT {_by_index('__tid', list(TABLES))} AS table_name, "
+        f"cast(__rows as bigint) AS row_count, "
+        f"cast(case when {dup_pred} then __dups end as bigint) "
+        f"AS duplicate_cnt FROM ({dup_count_sql(f'({parts})', ['__h'], '__tid')})")
 
 
 SQL_ROW_COUNTS = " UNION ALL ".join(
@@ -142,18 +102,19 @@ SQL_ROW_COUNTS = " UNION ALL ".join(
 # P2 null counts (lineitem, one scan for all columns)
 # ---------------------------------------------------------------------------
 
+def null_counts_sql(src: str, cols: list[str]) -> str:
+    """p02 over ``src``: (column_name, null_cnt, null_pct), one scan."""
+    aggs = ", ".join(f"{nulls_sql(c)} AS __{i}" for i, c in enumerate(cols))
+    rows = ", ".join(f"{sql_str(c)}, __{i}, {pct_sql(f'__{i}', '__n', 6)}"
+                     for i, c in enumerate(cols))
+    return (f"SELECT stack({len(cols)}, {rows}) "
+            f"AS (column_name, null_cnt, null_pct) "
+            f"FROM (SELECT count(1) AS __n, {aggs} FROM {src})")
+
+
 def q_null_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = load_table(spark, "lineitem", sf_dir)
-    aggs = [F.count(F.lit(1)).alias("__n")] + [
-        F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__nulls") for c in LINEITEM_ALL
-    ]
-    wide = df.agg(*aggs)
-    tuples = ", ".join(
-        f"'{c}', {c}__nulls, round({c}__nulls * cast(100 as double) / __n, 6)" for c in LINEITEM_ALL
-    )
-    return wide.select(F.expr(
-        f"stack({len(LINEITEM_ALL)}, {tuples}) as (column_name, null_cnt, null_pct)"
-    ))
+    v = table_views(spark, sf_dir, ["lineitem"])["lineitem"]
+    return spark.sql(null_counts_sql(v, LINEITEM_ALL))
 
 
 SQL_NULL_COUNTS = (
@@ -176,36 +137,25 @@ SQL_NULL_COUNTS = (
 # P3 distinct counts / uniqueness (lineitem)
 # ---------------------------------------------------------------------------
 
-def q_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One spark.sql statement (r12): a union of per-column two-level
-    aggregations — groupBy the single column (narrow, type-homogeneous
-    key), then count groups / sum group sizes. The previous
-    typed-slot melt put every row into a 3-typed-slot
-    shape first, so the first-level hash key was (16-char column_name
-    string + three slots, two of them NULL) on rows x columns melted
-    rows; here each subtree hashes just the column's own values and the
-    column name attaches as a literal AFTER aggregation (measured ~8%
-    exec win interleaved at sf0.1, plus the builder round trips). Same
-    two-exchange scale shape: the shuffle carries per-partition-deduped
-    values, bounded by column cardinality. Values/dtypes verified
-    identical (parity + oracle)."""
-    from sparvi_spark.checks import table_views
+def distinct_counts_sql(src: str, cols: list[str]) -> str:
+    """p03 over ``src``: (column_name, distinct_cnt, distinct_pct,
+    is_unique). A union of per-column single-distinct aggregates: Spark
+    plans each as groupBy(column) then one count, so every subtree hashes
+    just its own column's values (a typed-slot melt of all columns into
+    one key measured ~8% slower at sf0.1) and the shuffle carries
+    per-partition-deduped values, bounded by column cardinality."""
+    inner = " UNION ALL ".join(
+        f"SELECT {sql_str(c)} AS column_name, {distinct_sql(c)} AS "
+        f"distinct_cnt, count({ident(c)}) AS nonnull_cnt FROM {src}"
+        for c in cols)
+    return (f"SELECT column_name, distinct_cnt, "
+            f"{pct_sql('distinct_cnt', 'nonnull_cnt', 6)} AS distinct_pct, "
+            f"distinct_cnt = nonnull_cnt AS is_unique FROM ({inner})")
 
+
+def q_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = table_views(spark, sf_dir, ["lineitem"])["lineitem"]
-    parts = []
-    for c in LINEITEM_ALL:
-        parts.append(
-            f"SELECT '{c}' AS column_name, "
-            f"count(case when `{c}` is not null then 1 end) AS distinct_cnt, "
-            f"coalesce(sum(case when `{c}` is not null then cnt end), "
-            f"cast(0 as bigint)) AS nonnull_cnt "
-            f"FROM (SELECT `{c}`, count(1) AS cnt FROM {v} GROUP BY `{c}`)")
-    inner = " UNION ALL ".join(parts)
-    return spark.sql(
-        f"SELECT column_name, distinct_cnt, "
-        f"round(distinct_cnt * cast(100 as double) / nonnull_cnt, 6) "
-        f"AS distinct_pct, "
-        f"distinct_cnt = nonnull_cnt AS is_unique FROM ({inner})")
+    return spark.sql(distinct_counts_sql(v, LINEITEM_ALL))
 
 
 SQL_DISTINCT_COUNTS = (
@@ -226,81 +176,57 @@ SQL_DISTINCT_COUNTS = (
 # P4 numeric stats (lineitem, one scan, decimal-exact sums)
 # ---------------------------------------------------------------------------
 
-def _num_agg_exprs_scaled(c: str) -> list[str]:
-    """Spark-side fast path for `_num_agg_exprs`: identical VALUES, pure
-    long arithmetic per row. The decimal form costs ~10µs/row (sum buffers
-    at scale 8 exceed Spark's compact-long range, so every row update is a
-    BigDecimal allocation — measured 0.65s vs 0.14s for the all-double
-    plan on 600k cached rows). TPC-H money columns are exact cents, so
-    ``s = round(c*100)`` is the exact scaled integer (doubles carry ≤2
-    fractional decimals; exact while |c| < 2^53/100). Σs accumulates in a
-    plain long (exact while Σ|s| < 2^63 ≈ 9.2e18 — ~10^11 rows of prices).
-    Σs² needs ~10^22, so it is SPLIT: per-row q=s² div 2^30 and r=s² mod
-    2^30 sum separately (each bounded by n·2^30 resp. n·10^8 — exact to
-    ~8.6e9 rows) and `_num_finish_scaled` reconstructs the exact decimal
-    Σx² = (Σq·2^30 + Σr)/10^4. Past those row bounds use the generic
-    decimal form (`operators/profile.numeric_stats`)."""
-    s = f"cast(round({c} * 100) as bigint)"
-    return [
-        f"count({c}) as {c}__cnt",
-        f"cast(min({c}) as double) as {c}__min",
-        f"cast(max({c}) as double) as {c}__max",
-        f"sum({s}) as {c}__s1",
-        f"sum(({s} * {s}) div 1073741824) as {c}__sqd",
-        f"sum(({s} * {s}) % 1073741824) as {c}__sqm",
-        f"count(case when {c} = 0 then 1 end) as {c}__zeros",
-        f"count(case when {c} < 0 then 1 end) as {c}__negs",
-        f"count(case when {c} > 0 then 1 end) as {c}__pos",
-    ]
-
-
-def _num_finish_scaled(c: str) -> list[str]:
-    """Rebuild the exact decimal __sum/__ssq from the long partials (runs
-    on the ONE aggregated row — cost-free). Division by a power of ten on
-    a decimal(38,0) yields decimal(38,6), exact for ≤2-decimal inputs;
-    the downstream formulas only ever see `cast(x as double)`, and
-    Decimal→double is value-based, so hashes match the decimal oracle
-    bit-for-bit."""
-    return [
-        f"cast({c}__s1 as decimal(38,0)) / 100 as {c}__sum",
-        f"(cast({c}__sqd as decimal(38,0)) * 1073741824 + {c}__sqm) / 10000 "
-        f"as {c}__ssq",
-    ]
+def numeric_stats_sql(src: str, cols: list[str],
+                      integral: set[str] = frozenset()) -> str:
+    """p04 over ``src``: ``numeric_sqls`` in the scaled lane plus its
+    finish, one scan. The slot never takes ``profile_table``'s decimal
+    re-pass: a column failing the scaled lane's precondition reads NULL
+    sums here, which the oracle reports as a mismatch."""
+    stats = stage_sql(src, *numeric_sqls(
+        cols, [f"__{i}" for i in range(len(cols))], integral=integral))
+    rows = ", ".join(
+        f"{sql_str(c)}, __{i}_cnt, __{i}_min, __{i}_max, "
+        f"round(__{i}_sum_d, 4), __{i}_avg, __{i}_stddev, __{i}_zeros, "
+        f"__{i}_negatives, __{i}_positives" for i, c in enumerate(cols))
+    return (f"SELECT stack({len(cols)}, {rows}) AS (column_name, cnt, "
+            f"min_val, max_val, sum_val, avg_val, stddev_val, zero_cnt, "
+            f"negative_cnt, positive_cnt) FROM ({stats})")
 
 
 def q_numeric_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = load_table(spark, "lineitem", sf_dir)
-    wide = (df.selectExpr(
-        [e for c in LINEITEM_NUM for e in _num_agg_exprs_scaled(c)])
-        .selectExpr("*", *[e for c in LINEITEM_NUM
-                           for e in _num_finish_scaled(c)]))
-    tuples = ", ".join(
-        f"'{c}', {c}__cnt, {c}__min, {c}__max, round(cast({c}__sum as double), 4), "
-        f"{_avg_formula(f'{c}__sum', f'{c}__cnt')}, "
-        f"{_std_formula(f'{c}__sum', f'{c}__ssq', f'{c}__cnt')}, "
-        f"{c}__zeros, {c}__negs, {c}__pos"
-        for c in LINEITEM_NUM
-    )
-    return wide.select(F.expr(
-        f"stack({len(LINEITEM_NUM)}, {tuples}) as (column_name, cnt, min_val, "
-        "max_val, sum_val, avg_val, stddev_val, zero_cnt, negative_cnt, positive_cnt)"
-    ))
+    v = table_views(spark, sf_dir, ["lineitem"])["lineitem"]
+    return spark.sql(numeric_stats_sql(
+        v, LINEITEM_NUM,
+        integral_columns(load_table(spark, "lineitem", sf_dir))))
 
 
-SQL_NUMERIC_STATS = (
-    "WITH w AS (SELECT "
-    + ", ".join(_num_agg_sql(c) for c in LINEITEM_NUM)
-    + " FROM lineitem) "
-    + " UNION ALL ".join(
-        f"SELECT '{c}' AS column_name, {c}__cnt AS cnt, {c}__min AS min_val, "
-        f"{c}__max AS max_val, round(cast({c}__sum as double), 4) AS sum_val, "
-        f"{_avg_formula(f'{c}__sum', f'{c}__cnt')} AS avg_val, "
-        f"{_std_formula(f'{c}__sum', f'{c}__ssq', f'{c}__cnt')} AS stddev_val, "
-        f"{c}__zeros AS zero_cnt, {c}__negs AS negative_cnt, {c}__pos AS positive_cnt "
-        f"FROM w"
-        for c in LINEITEM_NUM
-    )
-)
+def _sql_numeric_stats() -> str:
+    aggs, rows = [], []
+    for c in LINEITEM_NUM:
+        # Squares via decimal(19,4)×decimal(18,4): one operand ≥19 digits
+        # forces DuckDB onto int128 multiply (it does not widen int64×int64)
+        aggs.append(
+            f"count({c}) as {c}__cnt, cast(min({c}) as double) as {c}__min, "
+            f"cast(max({c}) as double) as {c}__max, "
+            f"sum(cast({c} as decimal(28,8))) as {c}__sum, "
+            f"sum(cast({c} as decimal(19,4)) * cast({c} as decimal(18,4))) "
+            f"as {c}__ssq, count(case when {c} = 0 then 1 end) as {c}__zeros, "
+            f"count(case when {c} < 0 then 1 end) as {c}__negs, "
+            f"count(case when {c} > 0 then 1 end) as {c}__pos")
+        sx, sxx, n = (f"cast({c}__sum as double)", f"cast({c}__ssq as double)",
+                      f"{c}__cnt")
+        rows.append(
+            f"SELECT '{c}' AS column_name, {n} AS cnt, {c}__min AS min_val, "
+            f"{c}__max AS max_val, round({sx}, 4) AS sum_val, "
+            f"round({sx}/{n}, 6) AS avg_val, case when {n} > 1 then "
+            f"round(sqrt(greatest(({sxx} - ({sx}*{sx})/{n})/({n} - 1), 0.0)), 4) "
+            f"end AS stddev_val, {c}__zeros AS zero_cnt, {c}__negs AS "
+            f"negative_cnt, {c}__pos AS positive_cnt FROM w")
+    return (f"WITH w AS (SELECT {', '.join(aggs)} FROM lineitem) "
+            + " UNION ALL ".join(rows))
+
+
+SQL_NUMERIC_STATS = _sql_numeric_stats()
 
 # ---------------------------------------------------------------------------
 # P5 exact percentiles / quartiles (linear interpolation — SURVEY §7.2)
@@ -339,25 +265,30 @@ SQL_PERCENTILES = (
 # P6 date stats (min/max/future/past vs pinned AS_OF)
 # ---------------------------------------------------------------------------
 
+def _hours_behind(c: str) -> str:
+    """P10 freshness: whole hours from max(c) to AS_OF."""
+    return (f"cast(floor((cast(cast({sql_str(AS_OF)} as timestamp) as double)"
+            f" - cast(max({ident(c)}) as double)) / cast(3600 as double)) "
+            f"as bigint)")
+
+
+def date_stats_sql(parts: list[tuple[str, str, str]]) -> str:
+    """p06 over (table_name, relation, column) parts: ``datetime_sqls``
+    plus P10 freshness (hours behind AS_OF), one aggregate per part."""
+    out = []
+    for t, src, c in parts:
+        d = dict(datetime_sqls(c, AS_OF))
+        out.append(
+            f"SELECT {sql_str(t)} AS table_name, {sql_str(c)} AS column_name, "
+            f"{d['min_ts']} AS min_ts, {d['max_ts']} AS max_ts, "
+            f"{d['future']} AS future_cnt, {d['past']} AS past_cnt, "
+            f"{_hours_behind(c)} AS hours_behind FROM {src}")
+    return " UNION ALL ".join(out)
+
+
 def q_date_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P6 date min/max/future/past + P10 freshness (hours behind AS_OF) in
-    one pass per datetime column — same scan, one extra aggregate."""
-    out = None
-    for t, c in DATE_COLS:
-        df = load_table(spark, t, sf_dir)
-        d = df.agg(
-            F.date_format(F.min(c), "yyyy-MM-dd HH:mm:ss").alias("min_ts"),
-            F.date_format(F.max(c), "yyyy-MM-dd HH:mm:ss").alias("max_ts"),
-            F.count(F.when(F.col(c) > F.lit(AS_OF).cast("timestamp"), 1)).alias("future_cnt"),
-            F.count(F.when(F.col(c) <= F.lit(AS_OF).cast("timestamp"), 1)).alias("past_cnt"),
-            F.floor(
-                (F.lit(AS_OF).cast("timestamp").cast("double")
-                 - F.max(c).cast("double")) / 3600.0
-            ).cast("bigint").alias("hours_behind"),
-        ).select(F.lit(t).alias("table_name"), F.lit(c).alias("column_name"),
-                 "min_ts", "max_ts", "future_cnt", "past_cnt", "hours_behind")
-        out = d if out is None else out.unionAll(d)
-    return out
+    v = table_views(spark, sf_dir, sorted({t for t, _ in DATE_COLS}))
+    return spark.sql(date_stats_sql([(t, v[t], c) for t, c in DATE_COLS]))
 
 
 SQL_DATE_STATS = " UNION ALL ".join(
@@ -376,44 +307,41 @@ SQL_DATE_STATS = " UNION ALL ".join(
 # P7 string length stats
 # ---------------------------------------------------------------------------
 
-def q_string_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    by_table: dict[str, list[str]] = {}
-    for t, c in STR_COLS:
-        by_table.setdefault(t, []).append(c)
-    out = None
-    for t, cols in by_table.items():
-        df = load_table(spark, t, sf_dir)
-        aggs = []
-        for c in cols:
-            ln = F.length(F.col(c))
-            aggs += [
-                F.count(F.col(c)).alias(f"{c}__cnt"),
-                F.min(ln).cast("long").alias(f"{c}__minl"),
-                F.max(ln).cast("long").alias(f"{c}__maxl"),
-                F.sum(ln.cast("long")).alias(f"{c}__suml"),
-                F.count(F.when(F.col(c) == "", 1)).alias(f"{c}__empty"),
-            ]
-        wide = df.agg(*aggs)
-        tuples = ", ".join(
-            f"'{c}', {c}__cnt, {c}__minl, {c}__maxl, "
-            f"round({c}__suml * cast(1 as double) / {c}__cnt, 4), {c}__empty"
-            for c in cols
-        )
-        d = wide.select(
-            F.lit(t).alias("table_name"),
-            F.expr(f"stack({len(cols)}, {tuples}) as "
-                   "(column_name, cnt, min_len, max_len, avg_len, empty_cnt)"),
-        )
-        out = d if out is None else out.unionAll(d)
+def _by_table(pairs: list[tuple[str, str]]) -> dict[str, list[str]]:
+    out: dict[str, list[str]] = {}
+    for t, c in pairs:
+        out.setdefault(t, []).append(c)
     return out
 
 
+def string_stats_sql(parts: list[tuple[str, str, list[str]]]) -> str:
+    """p07 over (table_name, relation, columns) parts: ``text_sqls`` and
+    the average-length finish, one aggregate per part."""
+    out = []
+    for t, src, cols in parts:
+        aggs = [e for i, c in enumerate(cols)
+                for e in aliased(text_sqls(c), f"__{i}")]
+        rows = ", ".join(
+            f"{sql_str(c)}, __{i}_cnt, __{i}_min_len, __{i}_max_len, "
+            f"{text_finish_sql(f'__{i}')}, __{i}_empties"
+            for i, c in enumerate(cols))
+        out.append(
+            f"SELECT {sql_str(t)} AS table_name, stack({len(cols)}, {rows}) "
+            f"AS (column_name, cnt, min_len, max_len, avg_len, empty_cnt) "
+            f"FROM (SELECT {', '.join(aggs)} FROM {src})")
+    return " UNION ALL ".join(out)
+
+
+def q_string_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    by_table = _by_table(STR_COLS)
+    v = table_views(spark, sf_dir, list(by_table))
+    return spark.sql(string_stats_sql(
+        [(t, v[t], cols) for t, cols in by_table.items()]))
+
+
 def _sql_string_stats() -> str:
-    by_table: dict[str, list[str]] = {}
-    for t, c in STR_COLS:
-        by_table.setdefault(t, []).append(c)
     parts = []
-    for t, cols in by_table.items():
+    for t, cols in _by_table(STR_COLS).items():
         agg = ", ".join(
             f"count({c}) as {c}__cnt, cast(min(length({c})) as bigint) as {c}__minl, "
             f"cast(max(length({c})) as bigint) as {c}__maxl, "
@@ -438,49 +366,21 @@ SQL_STRING_STATS = _sql_string_stats()
 # ---------------------------------------------------------------------------
 
 def q_top_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # All tables' top-K in ONE groupBy + ONE window: melt every requested
-    # (table, column) into a (table_name, column_name, value) frame and
-    # rank per (table, column). Per-table totals (the pct denominator)
-    # union into one tiny frame and ride a single broadcast instead of one
-    # broadcast job per table. Same plan family as operators/profile
-    # top_values, one table-tagged level up (13 stages -> ~6).
-    from pyspark.sql import Window
-
-    by_table: dict[str, list[str]] = {}
-    for t, c in TOPV_COLS:
-        by_table.setdefault(t, []).append(c)
-    melted = None
-    totals = None
-    for t, cols in by_table.items():
-        df = load_table(spark, t, sf_dir)
-        stack = ", ".join(f"'{c}', cast(`{c}` as string)" for c in cols)
-        m = df.select(
-            F.lit(t).alias("table_name"),
-            F.expr(f"stack({len(cols)}, {stack}) as (column_name, value)"),
-        ).where(F.col("value").isNotNull())
-        tt = df.agg(F.count(F.lit(1)).alias("__total")).select(
-            F.lit(t).alias("table_name"), "__total")
-        melted = m if melted is None else melted.unionAll(m)
-        totals = tt if totals is None else totals.unionAll(tt)
-    counted = melted.groupBy("table_name", "column_name", "value").agg(
-        F.count(F.lit(1)).alias("cnt"))
-    w = Window.partitionBy("table_name", "column_name").orderBy(
-        F.desc("cnt"), F.asc("value"))
-    return (
-        counted.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 10)
-        .join(F.broadcast(totals), "table_name")
-        .select("table_name", "column_name", "value", "cnt",
-                F.round(F.col("cnt") * 100.0 / F.col("__total"), 4).alias("pct"))
-    )
+    # ``top_values_sql``, the text profile_table's top-K runs, over every
+    # table at once: ONE groupBy + ONE window for all (table, column)
+    # pairs, per-table totals in one broadcast (13 stages -> ~6).
+    by_table = _by_table(TOPV_COLS)
+    tables = list(by_table)
+    v = table_views(spark, sf_dir, tables)
+    text = top_values_sql([(v[t], by_table[t]) for t in tables], 10)
+    return spark.sql(
+        f"SELECT {_by_index('part', tables)} AS table_name, column_name, "
+        f"value, cnt, pct FROM ({text})")
 
 
 def _sql_top_values() -> str:
-    by_table: dict[str, list[str]] = {}
-    for t, c in TOPV_COLS:
-        by_table.setdefault(t, []).append(c)
     parts = []
-    for t, cols in by_table.items():
+    for t, cols in _by_table(TOPV_COLS).items():
         melt = " UNION ALL ".join(
             f"SELECT '{c}' AS column_name, cast({c} as varchar) AS value FROM {t} "
             f"WHERE {c} IS NOT NULL"
@@ -504,17 +404,14 @@ SQL_TOP_VALUES = _sql_top_values()
 # ---------------------------------------------------------------------------
 
 def q_duplicate_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = None
-    for t in DUP_TABLES:
-        df = load_table(spark, t, sf_dir)
-        dup = (
-            df.groupBy(*df.columns).agg(F.count(F.lit(1)).alias("__c"))
-            .agg((F.sum("__c") - F.count(F.lit(1))).alias("duplicate_cnt"))
-            .select(F.lit(t).alias("table_name"),
-                    F.col("duplicate_cnt").cast("bigint").alias("duplicate_cnt"))
-        )
-        out = dup if out is None else out.unionAll(dup)
-    return out
+    # ``dup_count_sql`` over every column: duplicate_count's exact path
+    v = table_views(spark, sf_dir, DUP_TABLES)
+    rows = {t: [ident(c) for c in load_table(spark, t, sf_dir).columns]
+            for t in DUP_TABLES}
+    return spark.sql(" UNION ALL ".join(
+        f"SELECT {sql_str(t)} AS table_name, cast(__dups as bigint) "
+        f"AS duplicate_cnt FROM ({dup_count_sql(v[t], rows[t])})"
+        for t in DUP_TABLES))
 
 
 SQL_DUPLICATE_COUNTS = " UNION ALL ".join(
@@ -529,14 +426,10 @@ SQL_DUPLICATE_COUNTS = " UNION ALL ".join(
 # ---------------------------------------------------------------------------
 
 def q_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = load_table(spark, "events", sf_dir)
-    return df.agg(
-        F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss").alias("max_ts"),
-        F.floor(
-            (F.lit(AS_OF).cast("timestamp").cast("double")
-             - F.max("ts").cast("double")) / 3600.0
-        ).cast("bigint").alias("hours_behind"),
-    )
+    v = table_views(spark, sf_dir, ["events"])["events"]
+    return spark.sql(f"SELECT {dict(datetime_sqls('ts', AS_OF))['max_ts']} "
+                     f"AS max_ts, {_hours_behind('ts')} AS hours_behind "
+                     f"FROM {v}")
 
 
 SQL_FRESHNESS = (
@@ -557,20 +450,20 @@ PATTERNS = [
 
 
 def q_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = None
-    for t, c, pat in PATTERNS:
-        df = load_table(spark, t, sf_dir)
-        d = df.agg(
-            F.count(F.col(c)).alias("total_nonnull"),
-            F.count(F.when(F.col(c).rlike(pat), 1)).alias("matching"),
-        ).select(
-            F.lit(t).alias("table_name"), F.lit(c).alias("column_name"),
-            "total_nonnull", "matching",
-            (F.col("total_nonnull") - F.col("matching")).alias("non_matching"),
-            F.round(F.col("matching") * 100.0 / F.col("total_nonnull"), 4).alias("match_pct"),
-        )
-        out = d if out is None else out.unionAll(d)
-    return out
+    # the match count is ``text.pattern_counts``' matched-rows aggregate
+    from sparvi_spark.operators.text import pattern_count_sqls
+
+    v = table_views(spark, sf_dir, sorted({t for t, _, _ in PATTERNS}))
+    inner = " UNION ALL ".join(
+        f"SELECT {sql_str(t)} AS table_name, {sql_str(c)} AS column_name, "
+        f"count({ident(c)}) AS total_nonnull, "
+        f"{pattern_count_sqls(c, pat)[0]} AS matching FROM {v[t]}"
+        for t, c, pat in PATTERNS)
+    return spark.sql(
+        f"SELECT table_name, column_name, total_nonnull, matching, "
+        f"total_nonnull - matching AS non_matching, "
+        f"{pct_sql('matching', 'total_nonnull', 4)} AS match_pct "
+        f"FROM ({inner})")
 
 
 def _sql_pattern_match() -> str:
@@ -627,54 +520,27 @@ SQL_TYPE_DISTRIBUTION = _sql_type_distribution()
 # the shared TableSpec on both sides, row count from data)
 # ---------------------------------------------------------------------------
 
-def _schema_penalty(t: str) -> int:
+def _health(t: str, row_count: str) -> str:
+    """``health_sql`` with the table's schema facts from its TableSpec."""
     spec = SCHEMAS[t]
-    pk_pen = 0 if spec.primary_keys else 20
-    n_cols = len(spec.columns)
-    nullable_pen = 15 if n_cols and sum(c.nullable for c in spec.columns) / n_cols > 0.8 else 0
-    width_pen = 10 if n_cols > 50 else 0
-    return pk_pen + nullable_pen + width_pen
+    return health_sql(row_count, len(spec.columns),
+                      sum(c.nullable for c in spec.columns),
+                      bool(spec.primary_keys))
 
 
 def q_health_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # One job / two stages for all ten tables: union (table_name) literal
-    # projections, count per table in ONE keyed aggregation, then apply the
-    # per-table schema penalty with a literal CASE. The per-table
-    # agg-union form was 2 stages per table and scheduling-bound.
-    # (Zero-row tables would be absent — see q_row_counts NOTE.)
-    out = None
-    for t in TABLES:
-        d = load_table(spark, t, sf_dir).select(F.lit(t).alias("table_name"))
-        out = d if out is None else out.unionAll(d)
-    case = None
-    for t in TABLES:
-        cond = F.when(F.col("table_name") == t, F.lit(100 - _schema_penalty(t)))
-        case = cond if case is None else case.when(
-            F.col("table_name") == t, F.lit(100 - _schema_penalty(t)))
-    return (
-        out.groupBy("table_name").agg(F.count(F.lit(1)).alias("__n"))
-        .select("table_name",
-                F.greatest(
-                    case - F.when(F.col("__n") == 0, 30).otherwise(0),
-                    F.lit(0)).cast("bigint").alias("health_score"))
-    )
+    # one count(1) per cached table view (see q_type_health)
+    v = table_views(spark, sf_dir, list(TABLES))
+    return spark.sql(" UNION ALL ".join(
+        f"SELECT {sql_str(t)} AS table_name, {_health(t, 'count(1)')} "
+        f"AS health_score FROM {v[t]}" for t in TABLES))
 
 
 def _sql_health_scores() -> str:
-    parts = []
-    for t in TABLES:
-        spec = SCHEMAS[t]
-        pk_pen = 0 if spec.primary_keys else 20
-        n_cols = len(spec.columns)
-        nullable_pen = 15 if n_cols and sum(c.nullable for c in spec.columns) / n_cols > 0.8 else 0
-        width_pen = 10 if n_cols > 50 else 0
-        base = 100 - pk_pen - nullable_pen - width_pen
-        parts.append(
-            f"SELECT '{t}' AS table_name, cast(greatest({base} - "
-            f"case when count(*) = 0 then 30 else 0 end, 0) as bigint) "
-            f"AS health_score FROM {t}"
-        )
-    return " UNION ALL ".join(parts)
+    # health_sql's text is dialect-common
+    return " UNION ALL ".join(
+        f"SELECT '{t}' AS table_name, {_health(t, 'count(*)')} "
+        f"AS health_score FROM {t}" for t in TABLES)
 
 
 SQL_HEALTH_SCORES = _sql_health_scores()
@@ -695,20 +561,11 @@ SQL_PREVIEW = "SELECT * FROM customer ORDER BY c_custkey LIMIT 50"
 # (table_name, section, key, value) — both are tiny schema-derived facts.
 
 def q_type_health(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One spark.sql statement (r12). The type-distribution section is a
-    driver-side schema walk — it becomes an inline VALUES literal (zero
-    jobs). The health section needs exactly ONE number per table (its
-    row count): a per-table count(*) agg over the cached table views
-    replaces the previous union-all-rows-then-groupBy plan, which
-    streamed every row of all ten tables through a union just to count
-    them (~1.3M row touches and 16 Exchanges at sf0.1; counts over the
-    cached relations read batch row counts instead of rows). Values are
-    identical on every non-empty table; an EMPTY table now emits its
-    base-30 row exactly like the DuckDB oracle always has (the old
-    groupBy-over-union form silently omitted it — this closes that
-    latent divergence rather than widening it)."""
-    from sparvi_spark.checks import table_views
-
+    """One spark.sql statement: the type-distribution section is a
+    driver-side schema walk, an inline VALUES literal (zero jobs); the
+    health section is ``health_sql`` over one count(1) per cached table
+    view (counts over cached relations read batch row counts, not rows;
+    an empty table emits its row like the oracle does)."""
     v = table_views(spark, sf_dir, list(TABLES))
     dist_rows = []
     for t in TABLES:
@@ -724,9 +581,7 @@ def q_type_health(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"FROM (VALUES {', '.join(dist_rows)})")
     health = " UNION ALL ".join(
         f"SELECT '{t}' AS table_name, 'health' AS section, "
-        f"'score' AS key, cast(greatest({100 - _schema_penalty(t)} - "
-        f"case when count(1) = 0 then 30 else 0 end, 0) as bigint) "
-        f"AS value FROM {v[t]}"
+        f"'score' AS key, {_health(t, 'count(1)')} AS value FROM {v[t]}"
         for t in TABLES)
     return spark.sql(f"{dist} UNION ALL {health}")
 

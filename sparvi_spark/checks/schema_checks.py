@@ -3,8 +3,9 @@
 Two snapshots built from the shared TableSpecs: snapshot B mutates A with
 one added/removed table, added/removed column, type change, nullable flip,
 and a PK change — asserting all seven change types plus the importance flag
-(FIXTURES.md §5). Spark side diffs DataFrames with full-outer joins; the
-oracle mirrors the joins over VALUES clauses generated from the same specs.
+(FIXTURES.md §5). The Spark side runs ``compare_schemas``; the oracle
+diffs with full-outer joins over VALUES clauses generated from the same
+specs.
 """
 
 from __future__ import annotations
@@ -51,80 +52,19 @@ def snapshot_rows() -> tuple[list[Row], list[Row]]:
 
 
 def q_schema_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r12: ONE spark.sql statement — the same single-Exchange diff
-    ``operators.schema_diff.compare_schemas`` builds (its expression
-    text is copied verbatim below), but rendered over inline VALUES in
-    one call instead of two local_df frames plus a ~15-call
-    builder chain (metadata-sized inputs; the py4j/build chatter was
-    2/3 of the check's wall). ``compare_schemas`` stays the engine API
-    for diffing arbitrary snapshot frames; parity is pinned by snapshot
-    + oracle at all three SFs."""
+    """``schema_diff_sql``, the diff ``Engine.track_schema`` runs, over
+    the two spec snapshots tagged in one local relation."""
+    from sparvi_spark.functions import local_df, rel, render_sql
+    from sparvi_spark.operators.schema_diff import (
+        SNAPSHOT_SCHEMA,
+        schema_diff_sql,
+    )
+
     old_rows, new_rows = snapshot_rows()
-
-    def lit(r: Row, src: int) -> str:
-        pk = "NULL" if r[4] is None else str(r[4])
-        return (f"('{r[0]}', '{r[1]}', '{r[2]}', {str(r[3]).lower()}, "
-                f"{pk}, {src})")
-
-    values = ", ".join([lit(r, 0) for r in old_rows]
-                       + [lit(r, 1) for r in new_rows])
-    st = ("named_struct('c', column_name, 't', col_type, "
-          "'n', nullable, 'p', pk_ordinal)")
-    chg = """
-            case
-              when o_n = 0 then array(struct('table_added' as change_type,
-                   cast(null as string) as column_name, cast(null as string) as details))
-              when n_n = 0 then array(struct('table_removed' as change_type,
-                   cast(null as string) as column_name, cast(null as string) as details))
-              else concat(
-                filter(transform(cols, x -> struct(
-                  case when x.o is null then 'column_added'
-                       when x.n is null then 'column_removed'
-                       when x.o.t <> x.n.t then 'column_type_changed'
-                       when x.o.n <> x.n.n then 'nullable_changed'
-                  end as change_type,
-                  x.c as column_name,
-                  case when x.o is not null and x.n is not null and x.o.t <> x.n.t
-                       then concat(x.o.t, ' -> ', x.n.t) end as details)),
-                 x -> x.change_type is not null),
-                case when o_pkstr <> n_pkstr then array(struct(
-                  'primary_key_changed' as change_type,
-                  cast(null as string) as column_name,
-                  concat(o_pkstr, ' -> ', n_pkstr) as details))
-                else array() end)
-            end
-    """
-    return spark.sql(f"""
-WITH tagged AS (
-  SELECT col1 AS table_name, col2 AS column_name, col3 AS col_type,
-         col4 AS nullable, cast(col5 AS int) AS pk_ordinal, col6 AS __src
-  FROM (VALUES {values})),
-pertab AS (
-  SELECT table_name,
-    collect_list(case when __src = 0 then {st} end) AS o_cols,
-    collect_list(case when __src = 1 then {st} end) AS n_cols
-  FROM tagged GROUP BY table_name),
-merged AS (
-  SELECT table_name, size(o_cols) AS o_n, size(n_cols) AS n_n,
-    transform(
-      array_distinct(concat(transform(o_cols, x -> x.c),
-                            transform(n_cols, x -> x.c))),
-      name -> struct(
-        name as c,
-        get(filter(o_cols, x -> x.c = name), 0) as o,
-        get(filter(n_cols, x -> x.c = name), 0) as n)) AS cols,
-    concat_ws(',', array_sort(
-      transform(filter(o_cols, x -> x.p is not null), x -> x.c))) AS o_pkstr,
-    concat_ws(',', array_sort(
-      transform(filter(n_cols, x -> x.p is not null), x -> x.c))) AS n_pkstr
-  FROM pertab),
-changes AS (SELECT table_name, explode({chg}) AS c FROM merged)
-SELECT c.change_type AS change_type, table_name,
-       c.column_name AS column_name, c.details AS details,
-       c.change_type IN ('table_removed', 'column_removed',
-                         'column_type_changed', 'primary_key_changed')
-         AS important
-FROM changes""")
+    tagged = local_df(spark, [r + (0,) for r in old_rows]
+                      + [r + (1,) for r in new_rows],
+                      SNAPSHOT_SCHEMA + ", __src int")
+    return render_sql(spark, schema_diff_sql(rel("tagged")), tagged=tagged)
 
 
 def _values_clause(rows: list[Row]) -> str:

@@ -32,8 +32,6 @@ desynchronize from the executors anyway.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 _SCALE_MODE = False
 
 
@@ -46,17 +44,6 @@ def set_scale_mode(on: bool) -> None:
     """Flip every scale-vs-parity default in one place (see module doc)."""
     global _SCALE_MODE
     _SCALE_MODE = bool(on)
-
-
-@contextmanager
-def scale_mode_ctx(on: bool):
-    """Temporarily set scale mode (tests; restores the prior value)."""
-    prev = _SCALE_MODE
-    set_scale_mode(on)
-    try:
-        yield
-    finally:
-        set_scale_mode(prev)
 
 
 # Spark conf knob: multi-session deployments configure scale mode the

@@ -20,7 +20,38 @@ __all__ = [
     "datediff_hours",
     "time_bucket",
     "local_df",
+    "ident",
+    "sql_str",
+    "rel",
+    "render_sql",
 ]
+
+
+def ident(name: str) -> str:
+    """A name as a Spark SQL identifier (dots, quotes, braces kept)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_str(s: str) -> str:
+    """A Spark SQL string literal: backslash first, then quote (quote-only
+    escaping turns a trailing backslash into an escaped delimiter)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def rel(name: str) -> str:
+    """Placeholder for a frame that :func:`render_sql` binds by name."""
+    return f"\0{name}\0"
+
+
+def render_sql(spark, text: str, **frames):
+    """Run builder text with each ``rel(name)`` bound to ``frames[name]``.
+    ``spark.sql(text, name=df)`` registers each frame as a view for
+    analysis only and ``str.format``s the whole text, so braces that a
+    column name or literal brings are doubled first."""
+    text = text.replace("{", "{{").replace("}", "}}")
+    for name in frames:
+        text = text.replace(rel(name), "{" + name + "}")
+    return spark.sql(text, **frames)
 
 
 def local_df(spark, rows, schema):

@@ -45,6 +45,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from sparvi_spark.functions import rel, render_sql
+
 ZSCORE_BASE_THRESHOLD = 3.0
 IQR_BASE_THRESHOLD = 1.5
 MA_BASE_THRESHOLD = 2.0
@@ -54,7 +56,7 @@ MAD_K = 1.4826022185056018  # 1 / Phi^-1(3/4): MAD -> sigma for normals
 
 _INF = "cast('Infinity' as double)"
 # stands in for the input relation while an operator builds its text
-_SRC = "\0src\0"
+_SRC = rel("src")
 
 
 def _d(x: float) -> str:
@@ -103,11 +105,8 @@ def _with_v(src: str, value_col: str) -> str:
 
 
 def _render(df: DataFrame, text: str) -> DataFrame:
-    """Run builder text over ``df``. ``spark.sql(text, src=df)`` registers
-    ``df`` as a temp view for analysis only, and ``str.format``s the whole
-    text, so braces a column name brings are doubled first."""
-    text = text.replace("{", "{{").replace("}", "}}").replace(_SRC, "{src}")
-    return df.sparkSession.sql(text, src=df)
+    """Run builder text over ``df`` (see ``functions.render_sql``)."""
+    return render_sql(df.sparkSession, text, src=df)
 
 
 def zscore_sql(src: str, keys: list[str], order_col: str = "ts",

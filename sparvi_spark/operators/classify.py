@@ -24,8 +24,7 @@ Two engineering choices make it scale- and oracle-clean:
   tokens/doc, order-free, bit-identical in every engine — and the only
   float ops are one division and one add at the end (IEEE basic ops,
   correctly rounded everywhere). The oracle recomputes margins
-  bit-for-bit; no transcendental enters the compared columns (sigmoid is
-  offered as a separate convenience expression).
+  bit-for-bit; no transcendental enters the compared columns.
 - **Model as one constant-folded literal**: the dim-int weight table
   (kilobytes) rides in the plan like the IVF centroid table
   (similarity.centroid_probe_expr) — parsed JVM-side in one call,
@@ -39,7 +38,7 @@ oracles replay in DuckDB.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparvi_spark.operators.dedup import portable_hash_expr
@@ -117,13 +116,6 @@ def linear_scores(
                 *([f"__fsum AS feature_sum"] if emit_sum else []),
                 *keep,
             ))
-
-
-def sigmoid_expr(margin_col: str) -> Column:
-    """P(label) from a margin column — convenience for consumers that
-    want calibrated-ish probabilities; exp() is libm-bound, so this is
-    deliberately NOT part of the oracle-compared projection."""
-    return F.expr(f"1.0d / (1.0d + exp(-`{margin_col}`))")
 
 
 def token_bucket_counts(

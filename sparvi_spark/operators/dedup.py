@@ -35,25 +35,27 @@ def tokens_expr(text_col: str) -> str:
     return f"split(lower(trim({text_col})), '\\\\s+')"
 
 
-def word_shingles(text_col: str, n: int) -> Column:
-    """n-gram word shingles as an array<string> (JVM-side, no UDF).
-
-    Fewer than n tokens -> empty array; NULL text -> NULL. The short-doc
-    branch must be a lazily-evaluated CASE: ``sequence(1, 0)`` is
-    DESCENDING in Spark ([1, 0]) and ``slice(toks, 0, n)`` throws, so the
-    old ``greatest(size - (n-1), 0)`` bound CRASHED on one-word documents
-    instead of guarding them (see _doc_gram_arrays, which filters by
-    token count instead)."""
-    toks = tokens_expr(text_col)
+def gram_sql(toks: str, n: int) -> str:
+    """The word n-grams of the token array ``toks``: a column or lambda
+    variable, never a split expression (a lambda body re-evaluates it per
+    gram, O(tokens²) per doc). Fewer than n tokens -> empty array, via a
+    lazy CASE: ``sequence(1, 0)`` is DESCENDING in Spark and
+    ``slice(toks, 0, n)`` throws (see _doc_gram_arrays)."""
     if n == 1:
-        return F.expr(toks)
-    return F.expr(
-        f"case when {toks} is null then null "
-        f"when size({toks}) >= {n} then "
-        f"transform(sequence(1, size({toks}) - {n - 1}), "
-        f"i -> concat_ws(' ', slice({toks}, i, {n}))) "
-        f"else cast(array() as array<string>) end"
-    )
+        return toks
+    return (f"case when size({toks}) >= {n} then "
+            f"transform(sequence(1, size({toks}) - {n - 1}), "
+            f"i -> concat_ws(' ', slice({toks}, i, {n}))) "
+            f"else cast(array() as array<string>) end")
+
+
+def word_shingles(text_col: str, n: int) -> Column:
+    """n-gram word shingles as an array<string> (JVM-side, no UDF): fewer
+    than n tokens -> empty array, NULL text -> NULL. The text splits once:
+    the tokens bind to a lambda variable that ``gram_sql`` reads."""
+    return F.expr(f"element_at(transform(array({tokens_expr(text_col)}), "
+                  f"t -> case when t is not null then {gram_sql('t', n)} "
+                  f"end), 1)")
 
 
 def dedup_exact(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -72,7 +74,7 @@ def _doc_gram_arrays(df: DataFrame, id_col: str, text_col: str, n: int) -> DataF
     The tokens array is materialized as its own column BEFORE the n-gram
     transform: an expression embedded in a lambda body is re-evaluated per
     array element, turning shingling O(tokens²)-per-doc (measured ~5×
-    slower). Same idiom as word_shingles but projection-staged.
+    slower). The n-gram CASE is ``gram_sql``, shared with word_shingles.
 
     Docs with zero shingles (NULL text, or fewer than n tokens) are
     dropped, matching the exploded form where they contribute no rows.
@@ -108,14 +110,8 @@ def _doc_gram_arrays(df: DataFrame, id_col: str, text_col: str, n: int) -> DataF
     toks = (df.select(F.col(id_col).alias("__id"),
                       F.expr(tokens_expr(text_col)).alias("__toks"))
             .where(f"size(__toks) >= {n}"))
-    if n == 1:
-        gram = "__toks"
-    else:
-        gram = (f"case when size(__toks) >= {n} then "
-                f"transform(sequence(1, size(__toks) - {n - 1}), "
-                f"i -> concat_ws(' ', slice(__toks, i, {n}))) "
-                f"else cast(array() as array<string>) end")
-    return toks.select("__id", F.array_distinct(F.expr(gram)).alias("__grams"))
+    return toks.select(
+        "__id", F.array_distinct(F.expr(gram_sql("__toks", n))).alias("__grams"))
 
 
 def _doc_shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:

@@ -2,32 +2,44 @@
 
 The reference batches all per-column aggregates of a type class into one
 SELECT per class (reference: backend/app.py:3291-3857). We go further and
-fuse ALL type classes into ONE ``df.agg`` pass — a single scan, no shuffle
+fuse ALL type classes into ONE aggregate — a single scan, no shuffle
 (partial aggregation map-side, final merge on one reducer row). Top-K (P8)
-and exact duplicate count (P9) each need a shuffle and run as separate jobs.
+and the duplicate count (P9) each need a shuffle and run as separate jobs.
+
+One implementation: each aggregate family and finish formula is a SQL-text
+builder below (``nulls_sql`` ... ``health_sql``). ``profile_table``
+renders them over one table, and the graded profile checks render the
+same text over their multi-table unions, so the stored document is what
+the oracle grades.
 
 Scale notes (100 TB):
-- ``exact=False`` switches COUNT(DISTINCT) -> approx_count_distinct and
-  exact percentiles -> percentile_approx, turning the multi-expand exact
-  distinct plan into a single-pass sketch plan.
+- ``exact=False`` switches COUNT(DISTINCT) -> approx_count_distinct,
+  decimal-exact sums -> double sums and the exact duplicate count -> an
+  8-byte row hash, turning the multi-expand exact distinct plan into a
+  single-pass sketch plan.
 - No driver-side collect until the final one-row aggregate / top-K rows
   (bounded by k * n_columns).
-- All heavy expressions are built-in Column functions => whole-stage codegen.
+- Text is parsed JVM-side in one ``spark.sql`` call per action: one py4j
+  round trip and one analysis instead of one per Column object.
 
-Oracle-determinism notes: sums feeding averages/stddev go through DECIMAL so
-cross-engine (Spark vs DuckDB) float summation order cannot change results;
-stddev is computed from exact decimal Σx / Σx² then a deterministic double
-formula (see SURVEY.md §7 "hard parts" 1-2).
+Oracle-determinism notes: sums feeding averages/stddev are exact decimals
+(the scaled-long lane rebuilds them exactly, the decimal lane sums them
+directly), so cross-engine (Spark vs DuckDB) float summation order
+cannot change results; stddev is a deterministic double formula over the
+exact Σx / Σx² (see SURVEY.md §7 "hard parts" 1-2).
 """
 
 from __future__ import annotations
 
 import datetime as _dt
-from typing import Iterable
+from typing import Collection, Iterable
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from sparvi_spark.config import check_lane, resolve_exact
+from sparvi_spark.functions import ident, local_df, rel, render_sql, sql_str
 
 # ---------------------------------------------------------------------------
 # type bucketing (reference: backend/core/metadata/collector.py:610-625)
@@ -45,6 +57,11 @@ def type_bucket(dt: T.DataType) -> str:
     return "other"
 
 
+def integral_columns(df: DataFrame) -> set[str]:
+    return {f.name for f in df.schema.fields
+            if isinstance(f.dataType, T.IntegralType)}
+
+
 def bucket_columns(df: DataFrame) -> dict[str, list[str]]:
     out: dict[str, list[str]] = {"numeric": [], "text": [], "datetime": [], "boolean": [], "other": []}
     for f in df.schema.fields:
@@ -53,22 +70,247 @@ def bucket_columns(df: DataFrame) -> dict[str, list[str]]:
 
 
 # ---------------------------------------------------------------------------
-# expression builders (shared by the one-pass profiler and the paired checks)
+# SQL-text builders of P1-P4, P6-P9 and P13, rendered by profile_table and
+# the graded p01-p08/p12 slots. Identifiers go through ``ident``, literals
+# through ``sql_str``. Aggregates are aliased ``{a}_<field>`` (``a`` a safe
+# per-column prefix); finish formulas read them on the one aggregated row.
 # ---------------------------------------------------------------------------
 
 DEC = "decimal(28,8)"
+_INF = "cast('Infinity' as double)"
+# the scaled lane's precondition bound: |value| below it keeps every
+# scaled square inside a long (see numeric_sqls)
+_SCALED_MAX = "cast(10000000 as double)"
+NUMERIC_LANES = ("scaled", "decimal", "double")
 
 
-def null_count(c: str) -> Column:
-    # SUM(CASE WHEN c IS NULL THEN 1 ELSE 0 END)  (app.py:3379-3404)
-    # coalesce: SUM over an EMPTY table is NULL; an empty table has 0 nulls
-    return F.coalesce(F.sum(F.col(c).isNull().cast("long")), F.lit(0)) \
-        .alias(f"{c}__nulls")
+def stage_sql(src: str, stage: list[str], aggs: list[str],
+              *finish: list[str]) -> str:
+    """One aggregate over ``src`` plus its per-row ``stage`` projection,
+    then each ``finish`` layer as a projection over the aggregated row."""
+    text = (f"SELECT {', '.join(aggs)} FROM "
+            + (f"(SELECT *, {', '.join(stage)} FROM {src})" if stage else src))
+    for layer in finish:
+        text = f"SELECT *{''.join(', ' + f for f in layer)} FROM ({text})"
+    return text
+
+
+def aliased(pairs: list[tuple[str, str]], a: str) -> list[str]:
+    """``expr AS {a}_<field>`` for each (field, expr) a builder returns."""
+    return [f"{e} AS {a}_{k}" for k, e in pairs]
+
+
+def nulls_sql(c: str) -> str:
+    """P2: NULLs in ``c``. SUM over no rows is NULL; an empty table has 0
+    nulls (app.py:3379-3404)."""
+    return f"coalesce(sum(cast({ident(c)} is null as bigint)), 0)"
+
+
+def distinct_sql(c: str, exact: bool = True) -> str:
+    """P3: exact COUNT(DISTINCT), or the HyperLogLog++ sketch at scale."""
+    q = ident(c)
+    return f"count(DISTINCT {q})" if exact else f"approx_count_distinct({q})"
 
 
 def distinct_count(c: str, exact: bool = True) -> Column:
-    expr = F.countDistinct(F.col(c)) if exact else F.approx_count_distinct(F.col(c))
-    return expr.alias(f"{c}__distinct")
+    """``distinct_sql`` as a Column, aliased ``{c}__distinct``."""
+    return F.expr(distinct_sql(c, exact)).alias(f"{c}__distinct")
+
+
+def pct_sql(num: str, den: str, digits: int) -> str:
+    """100 * num / den rounded to ``digits``; 0.0 over an empty
+    denominator (the document's empty-table convention)."""
+    return (f"case when {den} > 0 then round({num} * cast(100 as double) "
+            f"/ {den}, {digits}) else cast(0 as double) end")
+
+
+def dec_product(x: str, y: str) -> str:
+    """x·y exact at scale 8: decimal(19,4) x decimal(18,4) fits Spark's
+    decimal(38,8) product for |x|, |y| < 10^15 (dec*dec at (28,8) would
+    lose scale); beyond it ``try_*`` yields NULL instead of an ANSI
+    crash."""
+    return (f"try_multiply(try_cast({x} as decimal(19,4)), "
+            f"try_cast({y} as decimal(18,4)))")
+
+
+def numeric_sqls(cols: list[str], prefixes: list[str], lane: str = "scaled",
+                 integral: Collection[str] = ()
+                 ) -> tuple[list[str], list[str], list[str], list[str]]:
+    """P4 of numeric columns in one of three lanes -> ``stage_sql``'s
+    (stage, aggs, finish layers 1 and 2), aliased ``{prefix}_<field>``.
+    The stage computes once per row what several aggregates read (inline,
+    p04 ran 2.3x slower): the finite value ``_f`` (NaN and ±Inf counted as
+    ``nonfinite``; sign counts keep ordering: ±Inf signed, NaN neither)
+    and the lane's term ``_t``. The finish yields ``exact``, ``sx``/``sxx``,
+    ``sum_d``, ``avg`` (6 dp) and the sample ``stddev`` (4 dp); a
+    non-finite sum or a failed precondition reads NULL.
+
+    - ``scaled`` (parity; SCALING.md "The scaled-long sum lane"): Σs and
+      Σs² (split ``div``/``mod`` 2^30) of the long ``s = round(v * 100)``,
+      2-3x faster than Spark's BigDecimal-per-row decimal sum buffer.
+      ``inexact`` counts, in the same pass, values outside the
+      precondition — the double nearest a number with at most two
+      decimals (``s / 100`` reads back as it), |value| < 1e7 (s² fits a
+      long); ``integral`` columns sum ``s = v``, |v| < 10^9 — under which
+      the finish rebuilds the decimal lane's Σx and Σx² exactly.
+      ``try_sum`` reads a long overflow as NULL. ``profile_table`` re-runs
+      a column whose ``exact`` is false in the decimal lane.
+    - ``decimal``: decimal(28,8) sums, ``dec_product`` squares; ``sq_ovfl``
+      counts squares past its bound (stddev unknown, not a partial sum).
+    - ``double`` (``exact=False``, 100 TB): double sums, ~1e-10 relative
+      error like DuckDB's SUM(double).
+    """
+    check_lane(lane, NUMERIC_LANES, "numeric lane")
+    stage, aggs, sums, finish = [], [], [], []
+    for c, a in zip(cols, prefixes):
+        q, f, t, n = ident(c), f"{a}_f", f"{a}_t", f"{a}_cnt"
+        d = f"cast({q} as double)"
+        fin = q if c in integral else (
+            f"case when isnan({d}) or abs({d}) = {_INF} then null else {q} end")
+        fd = f"cast(({fin}) as double)"
+        ovfl, exact = "0", "true"
+        if lane == "scaled" and c in integral:
+            term = (f"case when {q} between -999999999 and 999999999 "
+                    f"then cast({q} as bigint) end")
+            inexact, scale = f"count({f}) - count({t})", ("", "")
+        elif lane == "scaled":
+            term = (f"case when abs({fd}) < {_SCALED_MAX} "
+                    f"then cast(round({fd} * 100) as bigint) end")
+            inexact = (f"count(case when {f} is not null and ({t} is null or "
+                       f"cast({t} as double) / 100 <> cast({f} as double)) "
+                       f"then 1 end)")
+            scale = (" / 100", " / 10000")
+        elif lane == "decimal":
+            term, ovfl = dec_product(f"({fin})", f"({fin})"), f"{a}_sq_ovfl"
+        else:
+            term = fd
+        if lane == "scaled":
+            aggs += [f"try_sum({t}) AS {a}_s1",
+                     f"try_sum(({t} * {t}) div 1073741824) AS {a}_sqd",
+                     f"try_sum(({t} * {t}) % 1073741824) AS {a}_sqm",
+                     f"{inexact} AS {a}_inexact"]
+            s = f"cast({a}_s1 as decimal(38,0)){scale[0]}"
+            ss = (f"(cast({a}_sqd as decimal(38,0)) * 1073741824 + {a}_sqm)"
+                  f"{scale[1]}")
+            exact = (f"({a}_inexact = 0 and ({n} = 0 or ({a}_s1 is not null "
+                     f"and {a}_sqd is not null and {a}_sqm is not null)))")
+        elif lane == "decimal":
+            aggs += [f"sum(cast({f} as {DEC})) AS {a}_sum",
+                     f"cast(sum({t}) as decimal(38,8)) AS {a}_sumsq",
+                     f"count(case when {f} is not null and {t} is null "
+                     f"then 1 end) AS {ovfl}"]
+            s, ss = f"{a}_sum", f"{a}_sumsq"
+        else:
+            aggs += [f"sum({t}) AS {a}_sum", f"sum({t} * {t}) AS {a}_sumsq"]
+            s, ss = f"{a}_sum", f"{a}_sumsq"
+        stage += [f"{fin} AS {f}", f"{term} AS {t}"]
+        nan = "" if c in integral else f" and not isnan({d})"
+        aggs += [f"count({f}) AS {n}", f"cast(min({f}) as double) AS {a}_min",
+                 f"cast(max({f}) as double) AS {a}_max",
+                 f"count({q}) - count({f}) AS {a}_nonfinite",
+                 f"count(case when {f} = 0 then 1 end) AS {a}_zeros",
+                 f"count(case when {q} < 0 then 1 end) AS {a}_negatives",
+                 f"count(case when {q} > 0{nan} then 1 end) AS {a}_positives"]
+        sx, sxx = f"{a}_sx", f"{a}_sxx"
+        sums += [f"{exact} AS {a}_exact", f"cast({s} as double) AS {sx}",
+                 f"cast({ss} as double) AS {sxx}"]
+        ok = f"{a}_exact and abs({sx}) < {_INF}"
+        var = f"({sxx} - {sx} * {sx} / {n}) / ({n} - 1)"
+        finish += [
+            f"case when {ok} then {sx} end AS {a}_sum_d",
+            f"case when {ok} and {n} > 0 then round({sx} / {n}, 6) end "
+            f"AS {a}_avg",
+            f"case when {ok} and {n} > 1 and {ovfl} = 0 and abs({sxx}) < "
+            f"{_INF} then round(sqrt(greatest({var}, 0.0)), 4) end "
+            f"AS {a}_stddev"]
+    return stage, aggs, sums, finish
+
+
+def datetime_sqls(c: str, as_of: str) -> list[tuple[str, str]]:
+    """P6 aggregates: min/max as text, and the values after / at-or-before
+    ``as_of``."""
+    q, ref = ident(c), f"cast({sql_str(as_of)} as timestamp)"
+    return [
+        ("min_ts", f"date_format(min({q}), 'yyyy-MM-dd HH:mm:ss')"),
+        ("max_ts", f"date_format(max({q}), 'yyyy-MM-dd HH:mm:ss')"),
+        ("future", f"count(case when {q} > {ref} then 1 end)"),
+        ("past", f"count(case when {q} <= {ref} then 1 end)"),
+    ]
+
+
+def text_sqls(c: str) -> list[tuple[str, str]]:
+    """P7 aggregates: non-null count, length min/max/sum, empty strings."""
+    q = ident(c)
+    ln = f"length({q})"
+    return [
+        ("cnt", f"count({q})"),
+        ("min_len", f"cast(min({ln}) as bigint)"),
+        ("max_len", f"cast(max({ln}) as bigint)"),
+        ("sum_len", f"sum(cast({ln} as bigint))"),
+        ("empties", f"count(case when {q} = '' then 1 end)"),
+    ]
+
+
+def text_finish_sql(a: str, digits: int = 4) -> str:
+    """P7 finish over ``text_sqls``' aliases: the average length."""
+    return (f"case when {a}_cnt > 0 then "
+            f"round(cast({a}_sum_len as double) / {a}_cnt, {digits}) end")
+
+
+def top_values_sql(parts: list[tuple[str, list[str]]], k: int) -> str:
+    """P8: the ``k`` most frequent values of each column of each
+    ``(relation, columns)`` part -> (part, column_name, value, cnt, pct of
+    the part's rows): ONE groupBy and ONE window over a ``stack`` melt,
+    part totals in one broadcast, ties by value (SURVEY §7.5)."""
+    melts, totals = [], []
+    for i, (src, cols) in enumerate(parts):
+        stack = ", ".join(f"{sql_str(c)}, cast({ident(c)} as string)"
+                          for c in cols)
+        melts.append(f"SELECT {i} AS part, stack({len(cols)}, {stack}) "
+                     f"AS (column_name, value) FROM {src}")
+        totals.append(f"SELECT {i} AS part, count(1) AS total FROM {src}")
+    counted = (f"SELECT part, column_name, value, count(1) AS cnt "
+               f"FROM ({' UNION ALL '.join(melts)}) "
+               f"WHERE value IS NOT NULL GROUP BY part, column_name, value")
+    ranked = (f"SELECT *, row_number() OVER (PARTITION BY part, column_name "
+              f"ORDER BY cnt DESC, value ASC) AS rn FROM ({counted})")
+    return (f"SELECT /*+ BROADCAST(t) */ r.part, column_name, value, cnt, "
+            f"{pct_sql('cnt', 'total', 4)} AS pct FROM ({ranked}) r "
+            f"JOIN ({' UNION ALL '.join(totals)}) t ON r.part = t.part "
+            f"WHERE rn <= {k}")
+
+
+def row_hash_sql(cols: list[str]) -> str:
+    """An 8-byte xxhash64 of a whole row. xxhash64 SKIPS null inputs, so
+    without the literal position markers (NULL, 'a') and ('a', NULL)
+    would hash alike."""
+    return "xxhash64(" + ", ".join(
+        f"{i}, {ident(c)}" for i, c in enumerate(cols)) + ")"
+
+
+def dup_count_sql(src: str, row: list[str], by: str | None = None) -> str:
+    """P1 + P9: (by, __rows, __dups) — rows of ``src`` and rows repeating
+    an earlier one, per ``by`` group; NULL counts over no rows. A row is
+    identified by ``row``: every column (exact) or one ``row_hash_sql``
+    (the shuffle carries 8 bytes; a 64-bit collision undercounts by 1,
+    expected n²/2⁶⁵ — ~0.003 rows at a billion rows)."""
+    head = f"{by}, " if by else ""
+    tail = f" GROUP BY {by}" if by else ""
+    return (f"SELECT {head}sum(__c) AS __rows, sum(__c) - count(1) AS __dups "
+            f"FROM (SELECT {head}count(1) AS __c FROM {src} "
+            f"GROUP BY {head}{', '.join(row)}){tail}")
+
+
+def health_sql(row_count: str, n_columns: int, n_nullable: int,
+               has_primary_key: bool) -> str:
+    """P13 table health score (collector.py:661-687): 100, less 20
+    without a primary key, 15 when over 80% of the columns are nullable,
+    10 beyond 50 columns and 30 for an empty table; never below 0."""
+    base = (100 - (0 if has_primary_key else 20)
+            - (15 if n_columns and n_nullable / n_columns > 0.8 else 0)
+            - (10 if n_columns > 50 else 0))
+    return (f"cast(greatest({base} - case when {row_count} = 0 then 30 "
+            f"else 0 end, 0) as bigint)")
 
 
 def exact_percentiles(
@@ -107,8 +349,6 @@ def exact_percentiles(
     # selectExpr/expr calls — the Column-object form of this plan cost ~690
     # py4j round trips (~0.2 s, GIL-serialized) per build (see anomalies.py
     # module docstring for the measurement; the resolved plan is identical).
-    from sparvi_spark.functions import local_df
-
     stack = ", ".join(f"'{c}', cast(`{c}` as double)" for c in cols)
     melted = (
         df.selectExpr(f"stack({len(cols)}, {stack}) as (column_name, v)")
@@ -276,8 +516,6 @@ def exact_percentiles_refine(
     import math
     from decimal import ROUND_HALF_UP, Decimal
 
-    from sparvi_spark.functions import local_df
-
     spark = df.sparkSession
     eps = 1.0 / accuracy
     lo_p = {p: max(0.0, p - 4 * eps) for p in ps}
@@ -438,179 +676,52 @@ def exact_percentiles_refine(
     return local_df(spark, out_rows, schema)
 
 
-def numeric_exprs(c: str, exact: bool = True) -> list[Column]:
-    """Per-column numeric aggregate expressions, in two lanes.
-
-    ``exact=True`` (oracle-parity): sums route through DECIMAL so the
-    totals are order-independent and replay bit-for-bit in a SQL oracle.
-    Sum of squares via decimal(19,4) x decimal(18,4) — exact scale-8
-    product up to |value| < 10^15 (the same widening the check-side
-    _num_agg_exprs documents; dec*dec at (28,8) overflows the product's
-    decimal(38,6) for |value| >= ~1e16). Beyond the bound the TRY
-    arithmetic yields NULL per row instead of an ANSI crash, and the
-    overflow counter lets profile_table report stddev as honestly
-    unknown (None) rather than a silently-wrong partial sum.
-
-    ``exact=False`` (the 100 TB lane): sums accumulate in DOUBLE.
-    Spark's decimal aggregation buffer above Long-backed precision 18 is
-    BigDecimal-per-row — measured on a 60M-row lineitem (r11 sweep):
-    sum(decimal(28,8)) 6.0s vs sum(double) 0.47s for the same three
-    columns, a ~13x/core cliff that turned the whole fused profile pass
-    18x slower than DuckDB (whose decimal sums are native int128) at
-    100x. Double sums under Spark's partial-aggregation tree accumulate
-    per-partition then merge — pairwise-summation-like error, ~1e-10
-    relative on random data, and the same accuracy class as DuckDB's own
-    SUM(double). The profile document rounds avg to 6dp / stddev to 4dp,
-    so the sketch-mode outputs agree with the exact lane in practice
-    (pinned by test); the decimal lane stays the parity default.
-
-    NON-FINITE VALUES (r11): NaN/±Inf are EXCLUDED from cnt/min/max/
-    sum/sumsq in both lanes and surfaced as ``{c}__nonfinite``
-    (summary key ``non_finite_count``). Before this, the lanes silently
-    DIVERGED on poisoned input: the decimal casts null NaN/Inf out of
-    the sum but count(col) kept them in the denominator (avg over
-    [1, NaN, Inf, 2] reported 0.75 — a plausible, wrong number), while
-    the double lane propagated NaN into every stat. Finite-only stats
-    + an explicit count is the only honest shape; sign counts keep
-    their ordering semantics (±Inf IS positive/negative, NaN neither).
-    """
-    col = F.col(c)
-    d_sql = f"cast(`{c}` as double)"
-    fin_sql = (f"(case when isnan({d_sql}) or "
-               f"abs({d_sql}) = cast('Infinity' as double) "
-               f"then null else `{c}` end)")
-    fin = F.expr(fin_sql)
-    nonfinite = F.count(F.when(
-        F.expr(f"isnan({d_sql}) or "
-               f"abs({d_sql}) = cast('Infinity' as double)"), 1)
-    ).alias(f"{c}__nonfinite")
-    if not exact:
-        d = fin.cast("double")
-        return [
-            F.count(fin).alias(f"{c}__cnt"),
-            F.min(fin).cast("double").alias(f"{c}__min"),
-            F.max(fin).cast("double").alias(f"{c}__max"),
-            F.sum(d).alias(f"{c}__sum_dec"),
-            F.sum(d * d).alias(f"{c}__sumsq_dec"),
-            F.lit(0).alias(f"{c}__sq_ovfl"),
-            nonfinite,
-            F.count(F.when(col == 0, 1)).alias(f"{c}__zeros"),
-            F.count(F.when(col < 0, 1)).alias(f"{c}__negatives"),
-            # Spark ORDERS NaN above every double (NaN > 0 is true), unlike
-            # IEEE comparison — exclude it so NaN is signed neither way
-            F.count(F.when((col > 0) & ~F.expr(f"isnan({d_sql})"), 1))
-            .alias(f"{c}__positives"),
-        ]
-    dec = fin.cast(DEC)
-    sq = (f"try_multiply(try_cast({fin_sql} as decimal(19,4)), "
-          f"try_cast({fin_sql} as decimal(18,4)))")
-    return [
-        F.count(fin).alias(f"{c}__cnt"),
-        F.min(fin).cast("double").alias(f"{c}__min"),
-        F.max(fin).cast("double").alias(f"{c}__max"),
-        F.sum(dec).alias(f"{c}__sum_dec"),
-        F.sum(F.expr(sq)).cast("decimal(38,8)").alias(f"{c}__sumsq_dec"),
-        F.count(F.when(fin.isNotNull() & F.expr(sq).isNull(), 1))
-        .alias(f"{c}__sq_ovfl"),
-        nonfinite,
-        F.count(F.when(col == 0, 1)).alias(f"{c}__zeros"),
-        F.count(F.when(col < 0, 1)).alias(f"{c}__negatives"),
-        # Spark ORDERS NaN above every double (NaN > 0 is true), unlike
-        # IEEE comparison — exclude it so NaN is signed neither way
-        F.count(F.when((col > 0) & ~F.expr(f"isnan({d_sql})"), 1))
-        .alias(f"{c}__positives"),
-    ]
-
-
-def datetime_exprs(c: str, as_of: str) -> list[Column]:
-    col = F.col(c)
-    ref = F.lit(as_of).cast("timestamp")
-    return [
-        F.date_format(F.min(col), "yyyy-MM-dd HH:mm:ss").alias(f"{c}__min_ts"),
-        F.date_format(F.max(col), "yyyy-MM-dd HH:mm:ss").alias(f"{c}__max_ts"),
-        F.count(F.when(col > ref, 1)).alias(f"{c}__future"),
-        F.count(F.when(col <= ref, 1)).alias(f"{c}__past"),
-    ]
-
-
-def text_exprs(c: str) -> list[Column]:
-    ln = F.length(F.col(c))
-    return [
-        F.count(F.col(c)).alias(f"{c}__cnt"),
-        F.min(ln).cast("long").alias(f"{c}__min_len"),
-        F.max(ln).cast("long").alias(f"{c}__max_len"),
-        F.sum(ln.cast("long")).alias(f"{c}__sum_len"),
-        F.count(F.when(F.col(c) == "", 1)).alias(f"{c}__empties"),
-    ]
-
-
 # ---------------------------------------------------------------------------
-# P8 top-K frequent values — melt + single window (one shuffle for all cols)
+# P8 top-K and P9 duplicates as frames / scalars
 # ---------------------------------------------------------------------------
 
 def top_values(df: DataFrame, columns: Iterable[str], k: int = 10) -> DataFrame:
-    """Top-k most frequent values per column with deterministic tie-break.
-
-    Reference runs one GROUP BY query per column (app.py:3620-3677); we melt
-    all requested columns via ``stack`` and use ONE groupBy + ONE window —
-    a single shuffle regardless of column count. Ties break by value ASC
-    (SURVEY §7.5: ORDER BY count DESC alone is nondeterministic).
-
-    Output: (column_name, value: string, cnt, pct) with pct of table rows.
-    """
-    cols = list(columns)
-    # the table total rides as a broadcast one-row aggregate instead of an
-    # eager df.count(): building the frame costs no job, and the whole
-    # top-K (total + counts + window) executes as ONE action
-    total = df.agg(F.count(F.lit(1)).alias("__total"))
-    stack_expr = ", ".join(f"'{c}', cast(`{c}` as string)" for c in cols)
-    melted = df.select(
-        F.expr(f"stack({len(cols)}, {stack_expr}) as (column_name, value)")
-    ).where(F.col("value").isNotNull())
-    counted = melted.groupBy("column_name", "value").agg(F.count(F.lit(1)).alias("cnt"))
-    w = Window.partitionBy("column_name").orderBy(F.desc("cnt"), F.asc("value"))
-    return (
-        counted.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .crossJoin(F.broadcast(total))
-        .withColumn("pct", F.round(F.col("cnt") * 100.0 / F.col("__total"), 4))
-        .select("column_name", "value", "cnt", "pct")
-    )
+    """``top_values_sql`` over one frame -> (column_name, value, cnt, pct).
+    Building it costs no job; the whole top-K (total, counts, window) runs
+    as one action."""
+    text = top_values_sql([(rel("src"), list(columns))], k)
+    return render_sql(df.sparkSession, f"SELECT column_name, value, cnt, pct "
+                      f"FROM ({text})", src=df)
 
 
 def duplicate_count(df: DataFrame, exact: bool = False) -> int:
     """P9 full-row duplicate count (profile key ``duplicate_count``,
-    reference consumption: core/storage/supabase_manager.py:250).
-
-    Default (hash) mode projects every row to ``xxhash64(struct(*))`` FIRST
-    and counts distinct hashes in one aggregate — the shuffle carries an
-    8-byte hash + partial counts instead of full-width rows (at 100 TB the
-    full-row dedup exchange is the single biggest shuffle in the profiler;
-    SCALING.md prescribes exactly this projection). A 64-bit collision
-    undercounts distincts by 1 (expected collisions ≈ n²/2⁶⁵ — ~0.003 rows
-    at a billion rows); ``exact=True`` keeps the full-row
-    ``dropDuplicates`` path for oracle-parity / audit runs.
-    """
-    if exact:
-        return df.count() - df.dropDuplicates().count()
-    # interleave literal position markers: xxhash64 SKIPS null inputs (the
-    # running hash passes through), so without markers (NULL,'a') and
-    # ('a',NULL) hash identically — the always-present marker keeps each
-    # column's contribution position-distinct
-    parts: list[Column] = []
-    for i, c in enumerate(df.columns):
-        parts.append(F.lit(i))
-        parts.append(F.col(c))
-    r = df.agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.countDistinct(F.xxhash64(*parts)).alias("__d"),
-    ).collect()[0]
-    return r["__n"] - r["__d"]
+    reference consumption: core/storage/supabase_manager.py:250) in one
+    action: ``dup_count_sql`` over the 8-byte row hash by default (at
+    100 TB the full-row dedup exchange is the profiler's biggest shuffle;
+    SCALING.md prescribes the projection), over every column with
+    ``exact=True`` (oracle-parity / audit runs)."""
+    cols = df.columns
+    row = [ident(c) for c in cols] if exact else [row_hash_sql(cols)]
+    text = dup_count_sql(rel("src"), row)
+    got = render_sql(df.sparkSession, text, src=df).collect()[0]["__dups"]
+    return got or 0
 
 
 # ---------------------------------------------------------------------------
 # the one-pass profiler -> profile document (SURVEY §1.3 contract)
 # ---------------------------------------------------------------------------
+
+# document key -> aggregate/finish field, per section
+_COMPLETENESS = {"nulls": "nulls", "null_percentage": "null_pct",
+                 "distinct_count": "distinct",
+                 "distinct_percentage": "distinct_pct"}
+_SUMMARY = {
+    "numeric": {"min": "min", "max": "max", "avg": "avg", "sum": "sum_d",
+                "stddev": "stddev", "zero_count": "zeros",
+                "negative_count": "negatives", "positive_count": "positives",
+                "non_finite_count": "nonfinite"},
+    "datetime": {"min": "min_ts", "max": "max_ts", "future_count": "future",
+                 "past_count": "past"},
+    "text": {"min_length": "min_len", "max_length": "max_len",
+             "avg_length": "avg_len", "empty_count": "empties"},
+}
+
 
 def profile_table(
     df: DataFrame,
@@ -622,99 +733,76 @@ def profile_table(
     top_k_distinct_cap: int = 1000,
     as_of: str | _dt.datetime | None = None,
 ) -> dict:
-    """Compute the full profile document in 3 jobs (1 scan + top-K + dupes).
+    """Compute the full profile document in 3 actions — the fused
+    aggregate with its finish, top-K, the duplicate count — plus a decimal
+    re-pass when a numeric column fails the scaled lane's precondition.
 
-    Mirrors the output contract of the reference's ``profile_table``
-    (consumption sites: backend/routes/profiles.py:75-78,
-    backend/core/storage/supabase_manager.py:249-257,
-    sparvi-frontend TableProfile.js:58-70). ``exact=False`` is the 100 TB
-    mode (sketch distinct counts, hash-projection dup count);
-    ``exact=None`` (the default) resolves from the engine-wide scale
-    mode (``sparvi_spark.config``): exact in parity mode, sketches at
-    scale.
+    Every type class fuses into ONE aggregate (the reference runs one
+    SELECT per class, backend/app.py:3291-3857), and the finish formulas
+    (percentages, avg, stddev, average length) run in SQL over its one
+    row, so the document and the graded slots share one rounding. Top-K
+    waits for the distinct counts that pick its columns.
+
+    Output contract: the reference's ``profile_table`` (consumption
+    sites: backend/routes/profiles.py:75-78,
+    backend/core/storage/supabase_manager.py:249-257, sparvi-frontend
+    TableProfile.js:58-70). ``exact=False`` is the 100 TB mode (sketch
+    distinct counts, double sums, hashed dup count); ``exact=None``
+    resolves from the engine-wide scale mode (``sparvi_spark.config``).
     """
-    from sparvi_spark.config import resolve_exact
-
     exact = resolve_exact(exact)
     if as_of is None:
         as_of = _dt.datetime.now(_dt.timezone.utc).strftime("%Y-%m-%d %H:%M:%S")
-    buckets = bucket_columns(df)
-    all_cols = [f.name for f in df.schema.fields]
-    simple_cols = [c for c in all_cols if type_bucket(df.schema[c].dataType) != "other"]
+    spark = df.sparkSession
+    by_kind = bucket_columns(df)
+    all_cols = df.columns
+    simple = [c for c in all_cols if c not in by_kind["other"]]
+    a = {c: f"__{i}" for i, c in enumerate(all_cols)}
 
-    exprs: list[Column] = [F.count(F.lit(1)).alias("__row_count")]
-    for c in simple_cols:
-        exprs.append(null_count(c))
-        exprs.append(distinct_count(c, exact=exact))
-    for c in buckets["numeric"]:
-        exprs.extend(numeric_exprs(c, exact=exact))
-    for c in buckets["datetime"]:
-        exprs.extend(datetime_exprs(c, str(as_of)))
-    for c in buckets["text"]:
-        exprs.extend(text_exprs(c))
+    nums = by_kind["numeric"]
+    ints = integral_columns(df)
+    stage, aggs, sums, finish = numeric_sqls(
+        nums, [a[c] for c in nums], "scaled" if exact else "double", ints)
+    aggs = ["count(1) AS __n"] + aggs
+    for c in simple:
+        aggs += [f"{nulls_sql(c)} AS {a[c]}_nulls",
+                 f"{distinct_sql(c, exact)} AS {a[c]}_distinct"]
+        finish += [
+            f"{pct_sql(f'{a[c]}_nulls', '__n', 4)} AS {a[c]}_null_pct",
+            f"{pct_sql(f'{a[c]}_distinct', f'(__n - {a[c]}_nulls)', 4)} "
+            f"AS {a[c]}_distinct_pct",
+            f"case when __n > 0 then {a[c]}_nulls / __n "
+            f"else cast(0 as double) end AS {a[c]}_null_frac"]
+    for c in by_kind["datetime"]:
+        aggs += aliased(datetime_sqls(c, str(as_of)), a[c])
+    for c in by_kind["text"]:
+        aggs += aliased(text_sqls(c), a[c])
+        finish.append(f"{text_finish_sql(a[c])} AS {a[c]}_avg_len")
 
-    row = df.agg(*exprs).collect()[0].asDict()
-    n = row["__row_count"]
+    def run(*parts: list[str]) -> dict:
+        text = stage_sql(rel("src"), *parts)
+        return render_sql(spark, text, src=df).collect()[0].asDict()
 
-    completeness, null_fractions, distinct_counts, summary = {}, {}, {}, {}
-    for c in simple_cols:
-        nulls = row[f"{c}__nulls"]
-        dist = row[f"{c}__distinct"]
-        nonnull = n - nulls
-        completeness[c] = {
-            "nulls": nulls,
-            "null_percentage": round(nulls * 100.0 / n, 4) if n else 0.0,
-            "distinct_count": dist,
-            "distinct_percentage": round(dist * 100.0 / nonnull, 4) if nonnull else 0.0,
-        }
-        null_fractions[c] = (nulls / n) if n else 0.0
-        distinct_counts[c] = dist
+    row = run(stage, aggs, sums, finish)
+    redo = [c for c in nums if not row[f"{a[c]}_exact"]]
+    if redo:  # the scaled lane's precondition failed: decimal re-pass
+        row.update(run(*numeric_sqls(redo, [a[c] for c in redo], "decimal",
+                                     ints)))
+    n = row["__n"]
 
-    for c in buckets["numeric"]:
-        cnt, sd, ssd = row[f"{c}__cnt"], row[f"{c}__sum_dec"], row[f"{c}__sumsq_dec"]
-        # The double scale lane has no per-row overflow counter (its
-        # __sq_ovfl is a literal 0): |value| >= ~1.34e154 squares to
-        # +Inf and the sums come back Inf/NaN. Honest-None at read time
-        # covers BOTH lanes — same contract as the decimal lane's
-        # try_multiply counter, detected on the aggregate instead.
-        import math as _math
-        if sd is not None and not _math.isfinite(float(sd)):
-            sd = None
-        if ssd is not None and not _math.isfinite(float(ssd)):
-            ssd = None
-        avg = None
-        std = None
-        if cnt and sd is not None:
-            avg = round(float(sd) / cnt, 6)
-            if cnt > 1 and ssd is not None and not row[f"{c}__sq_ovfl"]:
-                var = (float(ssd) - float(sd) ** 2 / cnt) / (cnt - 1)
-                std = round(max(var, 0.0) ** 0.5, 4)
-        summary[c] = {
-            "min": row[f"{c}__min"], "max": row[f"{c}__max"],
-            "avg": avg, "sum": float(sd) if sd is not None else None, "stddev": std,
-            "zero_count": row[f"{c}__zeros"], "negative_count": row[f"{c}__negatives"],
-            "positive_count": row[f"{c}__positives"],
-            "non_finite_count": row[f"{c}__nonfinite"],
-        }
-    for c in buckets["datetime"]:
-        summary[c] = {
-            "min": row[f"{c}__min_ts"], "max": row[f"{c}__max_ts"],
-            "future_count": row[f"{c}__future"], "past_count": row[f"{c}__past"],
-        }
-    for c in buckets["text"]:
-        cnt = row[f"{c}__cnt"]
-        summary[c] = {
-            "min_length": row[f"{c}__min_len"], "max_length": row[f"{c}__max_len"],
-            "avg_length": round(row[f"{c}__sum_len"] / cnt, 4)
-            if cnt and row[f"{c}__sum_len"] is not None else None,
-            "empty_count": row[f"{c}__empties"],
-        }
+    def doc(c: str, fields: dict[str, str]) -> dict:
+        return {k: row[f"{a[c]}_{f}"] for k, f in fields.items()}
+
+    completeness = {c: doc(c, _COMPLETENESS) for c in simple}
+    null_fractions = {c: row[f"{a[c]}_null_frac"] for c in simple}
+    distinct_counts = {c: row[f"{a[c]}_distinct"] for c in simple}
+    summary = {c: doc(c, _SUMMARY[k]) for k in _SUMMARY for c in by_kind[k]}
 
     # P8: only low-cardinality columns, capped (app.py:3636-3645 policy).
     tv_cols = [
-        c for c in simple_cols
-        if distinct_counts.get(c, 0) < top_k_distinct_cap
-        and type_bucket(df.schema[c].dataType) in ("text", "numeric")
+        c for c in simple
+        if distinct_counts[c] < top_k_distinct_cap
+        and (c in by_kind["text"] or c in by_kind["numeric"])
     ][:top_k_max_columns]
     top_vals: dict[str, list[dict]] = {c: [] for c in tv_cols}
     if tv_cols and n:
@@ -723,8 +811,7 @@ def profile_table(
                 {"value": r["value"][:100], "count": r["cnt"], "percentage": r["pct"]}
             )
 
-    # exact mode keeps the full-row dedup (oracle-parity); approx mode uses
-    # the 8-byte hash projection — cheap enough to always compute
+    # exact: full-row dedup (oracle parity); approx: the 8-byte row hash
     dup = duplicate_count(df, exact=exact)
 
     profile = {
@@ -761,7 +848,7 @@ def correlation_matrix(
     (col_a, col_b, n_pairs, pearson) for every unordered pair.
 
     Pairwise-complete semantics: each pair's sums run over rows where BOTH
-    columns are non-null (`when` guards inside the aggregates), so one
+    columns are non-null (CASE guards inside the aggregates), so one
     sparse column doesn't poison the whole matrix. All sums go through
     DECIMAL (the profiler's cross-engine determinism rule) and the final
     r = (n·Σxy − Σx·Σy) / √((n·Σx² − (Σx)²)(n·Σy² − (Σy)²)) folds in one
@@ -773,60 +860,27 @@ def correlation_matrix(
     single-column moments); standard profiling for feature/training data.
     """
     pairs = [(a, b) for i, a in enumerate(cols) for b in cols[i + 1:]]
-    exprs: list[Column] = []
+    aggs, rows = [], []
     for i, (a, b) in enumerate(pairs):
-        both = F.col(a).isNotNull() & F.col(b).isNotNull()
-        xa = F.when(both, F.col(a).cast(DEC))
-        xb = F.when(both, F.col(b).cast(DEC))
-        sq = lambda c: (f"try_multiply(try_cast(`{c}` as decimal(19,4)), "  # noqa: E731
-                        f"try_cast(`{c}` as decimal(18,4)))")
-        xy = (f"case when `{a}` is not null and `{b}` is not null then "
-              f"try_multiply(try_cast(`{a}` as decimal(19,4)), "
-              f"try_cast(`{b}` as decimal(18,4))) end")
-        exprs += [
-            F.count(F.when(both, 1)).alias(f"n_{i}"),
-            F.sum(xa).alias(f"sx_{i}"),
-            F.sum(xb).alias(f"sy_{i}"),
-            F.sum(F.expr(xy)).cast("decimal(38,8)").alias(f"sxy_{i}"),
-            F.sum(F.when(both, F.expr(sq(a)))).cast("decimal(38,8)")
-            .alias(f"sxx_{i}"),
-            F.sum(F.when(both, F.expr(sq(b)))).cast("decimal(38,8)")
-            .alias(f"syy_{i}"),
-        ]
-    wide = df.agg(*exprs)
-    tuples = []
-    for i, (a, b) in enumerate(pairs):
-        n = f"cast(n_{i} as double)"
-        sx, sy = f"cast(sx_{i} as double)", f"cast(sy_{i} as double)"
-        sxy = f"cast(sxy_{i} as double)"
-        sxx, syy = f"cast(sxx_{i} as double)", f"cast(syy_{i} as double)"
+        qa, qb = ident(a), ident(b)
+        both = f"{qa} is not null and {qb} is not null"
+        aggs += [f"count(case when {both} then 1 end) AS n_{i}"] + [
+            f"sum(case when {both} then cast({q} as {DEC}) end) AS {k}_{i}"
+            for k, q in (("sx", qa), ("sy", qb))] + [
+            f"cast(sum(case when {both} then {dec_product(x, y)} end) "
+            f"as decimal(38,8)) AS {k}_{i}"
+            for k, x, y in (("sxy", qa, qb), ("sxx", qa, qa), ("syy", qb, qb))]
+        n, sx, sy, sxy, sxx, syy = (f"cast({k}_{i} as double)" for k in (
+            "n", "sx", "sy", "sxy", "sxx", "syy"))
         denom = (f"sqrt(({n} * {sxx} - {sx} * {sx}) "
                  f"* ({n} * {syy} - {sy} * {sy}))")
         r = (f"case when n_{i} > 1 and {denom} > 0 then "
              f"round(({n} * {sxy} - {sx} * {sy}) / {denom}, {round_to}) end")
-        tuples.append(f"'{a}', '{b}', n_{i}, {r}")
-    return wide.selectExpr(
-        f"stack({len(pairs)}, {', '.join(tuples)}) "
-        f"as (col_a, col_b, n_pairs, pearson)")
-
-
-# ---------------------------------------------------------------------------
-# P13 table health score (collector.py:661-687)
-# ---------------------------------------------------------------------------
-
-def health_score(
-    row_count: int, n_columns: int, n_nullable: int, has_primary_key: bool
-) -> int:
-    score = 100
-    if not has_primary_key:
-        score -= 20
-    if row_count == 0:
-        score -= 30
-    if n_columns and n_nullable / n_columns > 0.8:
-        score -= 15
-    if n_columns > 50:
-        score -= 10
-    return max(score, 0)
+        rows.append(f"{sql_str(a)}, {sql_str(b)}, n_{i}, {r}")
+    return render_sql(df.sparkSession, (
+        f"SELECT stack({len(pairs)}, {', '.join(rows)}) "
+        f"AS (col_a, col_b, n_pairs, pearson) "
+        f"FROM (SELECT {', '.join(aggs)} FROM {rel('src')})"), src=df)
 
 
 # ---------------------------------------------------------------------------

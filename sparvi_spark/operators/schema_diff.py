@@ -2,9 +2,10 @@
 
 The reference diffs two JSON schema snapshots with Python set ops
 (backend/core/metadata/schema_change_detector.py:185-421); we represent a
-snapshot as two small DataFrames (tables+columns, primary keys) and diff via
-full-outer joins, so the same code scales to catalogs with millions of
-columns.
+snapshot as a small DataFrame (one row per column, with its primary-key
+ordinal) and diff two of them with one SQL text (``schema_diff_sql``) that
+the engine and the graded s01 slot both run, so the same code scales to
+catalogs with millions of columns.
 
 Change rows: (change_type, table_name, column_name, details, important).
 Importance (S7, :408-421): table_removed, column_removed,
@@ -14,7 +15,8 @@ column_type_changed, primary_key_changed.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from sparvi_spark.functions import local_df, rel, render_sql, sql_str
 
 IMPORTANT_CHANGES = (
     "table_removed", "column_removed", "column_type_changed", "primary_key_changed",
@@ -35,95 +37,83 @@ def snapshot_from_dataframe(spark: SparkSession, df: DataFrame, table: str,
         (table, f.name, type_bucket(f.dataType), f.nullable, pk_pos.get(f.name))
         for f in df.schema.fields
     ]
-    from sparvi_spark.functions import local_df
-
     return local_df(spark, rows, SNAPSHOT_SCHEMA)
 
 
-def compare_schemas(old: DataFrame, new: DataFrame) -> DataFrame:
-    """S1-S7: diff two snapshot DataFrames with ONE shuffle, no joins.
-
-    Both snapshots are tagged with a side flag and aggregated straight to
-    one row per table (collect_list of per-column structs — bounded by
-    columns-per-table, not catalog size, so no skew risk even on catalogs
-    with millions of columns). All seven change classes are then pure
-    per-row array expressions: table add/remove from side presence, column
-    changes by exploding the two column lists' high-level full-outer merge,
-    PK change from name-sorted PK lists (set-equality semantics,
-    schema_change_detector.py:335-359). The round-1 formulation chained four
-    full-outer/left joins (~8 exchanges); round 2 used two groupBys plus a
-    broadcast join back (3 exchanges + a broadcast build job); this is a
-    single Exchange on table_name.
+def schema_diff_sql(tagged: str) -> str:
+    """S1-S7 as SQL text over ``tagged``, the rows of both snapshots with
+    ``__src`` 0 (old) or 1 (new): ONE Exchange on
+    table_name, no joins (round 1 chained four outer joins, ~8
+    exchanges). Both sides aggregate to one row per table
+    (collect_list of column structs, bounded by columns per table, so no
+    skew on catalogs with millions of columns); every change class is then
+    a per-row array expression: table add/remove from side presence,
+    column changes from merging the two lists by name, the PK change from
+    name-sorted PK lists (set equality, schema_change_detector.py:335-359).
     """
-    tagged = old.select("*", F.lit(0).alias("__src")).unionAll(
-        new.select("*", F.lit(1).alias("__src")))
+    st = ("named_struct('c', column_name, 't', col_type, "
+          "'n', nullable, 'p', pk_ordinal)")
+    none = "cast(null as string)"
 
-    def side_cols(src: int):
-        return F.collect_list(F.when(F.col("__src") == src, F.struct(
-            F.col("column_name").alias("c"), F.col("col_type").alias("t"),
-            F.col("nullable").alias("n"), F.col("pk_ordinal").alias("p"))))
+    def table_change(kind: str) -> str:
+        return (f"array(struct({sql_str(kind)} as change_type, "
+                f"{none} as column_name, {none} as details))")
 
-    pertab = tagged.groupBy("table_name").agg(
-        side_cols(0).alias("o_cols"), side_cols(1).alias("n_cols"))
+    important = ", ".join(sql_str(k) for k in IMPORTANT_CHANGES)
+    return f"""
+WITH pertab AS (
+  SELECT table_name,
+    collect_list(case when __src = 0 then {st} end) AS o_cols,
+    collect_list(case when __src = 1 then {st} end) AS n_cols
+  FROM {tagged} GROUP BY table_name),
+merged AS (
+  SELECT table_name, size(o_cols) AS o_n, size(n_cols) AS n_n,
+    transform(
+      array_distinct(concat(transform(o_cols, x -> x.c),
+                            transform(n_cols, x -> x.c))),
+      name -> struct(
+        name as c,
+        get(filter(o_cols, x -> x.c = name), 0) as o,
+        get(filter(n_cols, x -> x.c = name), 0) as n)) AS cols,
+    concat_ws(',', array_sort(
+      transform(filter(o_cols, x -> x.p is not null), x -> x.c))) AS o_pkstr,
+    concat_ws(',', array_sort(
+      transform(filter(n_cols, x -> x.p is not null), x -> x.c))) AS n_pkstr
+  FROM pertab),
+changes AS (
+  SELECT table_name, explode(case
+    when o_n = 0 then {table_change('table_added')}
+    when n_n = 0 then {table_change('table_removed')}
+    else concat(
+      filter(transform(cols, x -> struct(
+        case when x.o is null then 'column_added'
+             when x.n is null then 'column_removed'
+             when x.o.t <> x.n.t then 'column_type_changed'
+             when x.o.n <> x.n.n then 'nullable_changed'
+        end as change_type,
+        x.c as column_name,
+        case when x.o is not null and x.n is not null and x.o.t <> x.n.t
+             then concat(x.o.t, ' -> ', x.n.t) end as details)),
+       x -> x.change_type is not null),
+      case when o_pkstr <> n_pkstr then array(struct(
+        'primary_key_changed' as change_type, {none} as column_name,
+        concat(o_pkstr, ' -> ', n_pkstr) as details))
+      else array() end)
+  end) AS c FROM merged)
+SELECT c.change_type AS change_type, table_name,
+       c.column_name AS column_name, c.details AS details,
+       c.change_type IN ({important}) AS important
+FROM changes"""
 
-    # Merge the two column lists by column name inside the row: for each name
-    # present on either side, pair up the old/new structs (null when absent).
-    merged = pertab.select(
-        "table_name",
-        F.size("o_cols").alias("o_n"), F.size("n_cols").alias("n_n"),
-        F.expr("""
-            transform(
-              array_distinct(concat(transform(o_cols, x -> x.c),
-                                    transform(n_cols, x -> x.c))),
-              name -> struct(
-                name as c,
-                get(filter(o_cols, x -> x.c = name), 0) as o,
-                get(filter(n_cols, x -> x.c = name), 0) as n))
-        """).alias("cols"),
-        F.expr("concat_ws(',', array_sort("
-               "transform(filter(o_cols, x -> x.p is not null), x -> x.c)))"
-               ).alias("o_pkstr"),
-        F.expr("concat_ws(',', array_sort("
-               "transform(filter(n_cols, x -> x.p is not null), x -> x.c)))"
-               ).alias("n_pkstr"),
-    )
 
-    # change rows as one per-table array expression, then one explode
-    changes = merged.select(
-        "table_name",
-        F.expr("""
-            case
-              when o_n = 0 then array(struct('table_added' as change_type,
-                   cast(null as string) as column_name, cast(null as string) as details))
-              when n_n = 0 then array(struct('table_removed' as change_type,
-                   cast(null as string) as column_name, cast(null as string) as details))
-              else concat(
-                filter(transform(cols, x -> struct(
-                  case when x.o is null then 'column_added'
-                       when x.n is null then 'column_removed'
-                       when x.o.t <> x.n.t then 'column_type_changed'
-                       when x.o.n <> x.n.n then 'nullable_changed'
-                  end as change_type,
-                  x.c as column_name,
-                  case when x.o is not null and x.n is not null and x.o.t <> x.n.t
-                       then concat(x.o.t, ' -> ', x.n.t) end as details)),
-                 x -> x.change_type is not null),
-                case when o_pkstr <> n_pkstr then array(struct(
-                  'primary_key_changed' as change_type,
-                  cast(null as string) as column_name,
-                  concat(o_pkstr, ' -> ', n_pkstr) as details))
-                else array() end)
-            end
-        """).alias("chg"),
-    ).select("table_name", F.explode("chg").alias("c")).select(
-        F.col("c.change_type").alias("change_type"),
-        "table_name",
-        F.col("c.column_name").alias("column_name"),
-        F.col("c.details").alias("details"),
-    )
-    return changes.withColumn(
-        "important", F.col("change_type").isin(*IMPORTANT_CHANGES)
-    )
+def compare_schemas(old: DataFrame, new: DataFrame) -> DataFrame:
+    """S1-S7: ``schema_diff_sql`` over two snapshot frames -> change rows
+    (change_type, table_name, column_name, details, important)."""
+    cols = "table_name, column_name, col_type, nullable, pk_ordinal"
+    tagged = (f"(SELECT {cols}, 0 AS __src FROM {rel('old')} UNION ALL "
+              f"SELECT {cols}, 1 AS __src FROM {rel('new')})")
+    return render_sql(old.sparkSession, schema_diff_sql(tagged),
+                      old=old, new=new)
 
 
 def detect_changes(

@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from sparvi_spark.config import check_lane
+from sparvi_spark.functions import ident, rel, render_sql, sql_str
 from sparvi_spark.operators.dedup import tokens_expr
 
 # Tiny per-language function-word lists for the n-gram/stopword heuristic.
@@ -269,6 +270,13 @@ PII_PATTERNS: dict[str, str] = {
 }
 
 
+def pattern_count_sqls(text_col: str, rx: str) -> tuple[str, str]:
+    """Aggregates of one regex over ``text_col``: the rows it matches and
+    its total matches."""
+    c = f"regexp_count({ident(text_col)}, {sql_str(rx)})"
+    return f"sum(cast({c} > 0 as bigint))", f"cast(sum({c}) as bigint)"
+
+
 def pattern_counts(
     df: DataFrame,
     text_col: str,
@@ -284,21 +292,17 @@ def pattern_counts(
     pattern adds zero I/O.
     """
     pats = patterns if patterns is not None else PII_PATTERNS
-    exprs: list[Column] = []
-    for name, rx in pats.items():
-        c = F.regexp_count(F.col(text_col), F.lit(rx))
-        exprs.append(
-            F.sum((c > 0).cast("long")).alias(f"{name}__rows"))
-        exprs.append(F.sum(c).cast("long").alias(f"{name}__matches"))
-    grouped = df.groupBy(group_by) if group_by else df.groupBy()
-    wide = grouped.agg(*exprs)
-    stack = ", ".join(
-        f"'{name}', {name}__rows, {name}__matches" for name in pats)
-    head = [group_by] if group_by else []
-    return wide.selectExpr(
-        *head,
-        f"stack({len(pats)}, {stack}) as (pattern, n_rows_matched, n_matches)",
-    )
+    aggs = [f"{e} AS __{k}{i}" for i, rx in enumerate(pats.values())
+            for k, e in zip("rm", pattern_count_sqls(text_col, rx))]
+    stack = ", ".join(f"{sql_str(name)}, __r{i}, __m{i}"
+                      for i, name in enumerate(pats))
+    head = f"{ident(group_by)}, " if group_by else ""
+    tail = f" GROUP BY {ident(group_by)}" if group_by else ""
+    return render_sql(df.sparkSession, (
+        f"SELECT {head}stack({len(pats)}, {stack}) "
+        f"AS (pattern, n_rows_matched, n_matches) "
+        f"FROM (SELECT {head}{', '.join(aggs)} FROM {rel('src')}{tail})"),
+        src=df)
 
 
 def redact_pii(

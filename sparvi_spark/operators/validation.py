@@ -672,15 +672,6 @@ def collect_rule_jobs(
         spark, [(tname, labels, v) for (tname, labels, _df), v in zip(jobs, values)])
 
 
-def run_rules_multi(
-    inputs: list[tuple[str, DataFrame, list["Rule"],
-                       dict[str, DataFrame] | None,
-                       frozenset[str] | set[str]]],
-) -> DataFrame:
-    """One-shot ``PreparedRulesMulti(...).run()`` (see class docstring)."""
-    return PreparedRulesMulti(inputs).run()
-
-
 def run_validations(
     df: DataFrame,
     rules: list[Rule],

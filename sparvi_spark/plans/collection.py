@@ -14,9 +14,9 @@ from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from sparvi_spark.operators.profile import bucket_columns, type_bucket
+from sparvi_spark.functions import ident
+from sparvi_spark.operators.profile import bucket_columns, nulls_sql, type_bucket
 
 DEPTHS = {  # collector.py:21-46
     "low": {"tiers": (1, 2), "stat_columns": 0},
@@ -119,9 +119,10 @@ def collect_metadata(
             cols = cols[: plan.stat_columns]
             exprs = []
             for c in cols:
-                exprs.append(F.count(F.when(F.col(c).isNull(), 1)).alias(f"{c}__nulls"))
+                exprs.append(f"{nulls_sql(c)} AS {ident(c + '__nulls')}")
                 if type_bucket(df.schema[c].dataType) == "numeric":
-                    exprs += [F.min(c).alias(f"{c}__min"), F.max(c).alias(f"{c}__max")]
+                    exprs += [f"{f}({ident(c)}) AS {ident(f'{c}__{f}')}"
+                              for f in ("min", "max")]
             if exprs:
-                out["statistics"][t] = df.agg(*exprs).collect()[0].asDict()
+                out["statistics"][t] = df.selectExpr(*exprs).collect()[0].asDict()
     return out

@@ -14,6 +14,10 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
+# the directory holding the sparvi_spark package: Python workers (the Arrow
+# lanes' mapInPandas / applyInPandas kernels) import it by module name
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "sparvi_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession.
@@ -43,6 +47,12 @@ def get_spark(app_name: str = "sparvi_spark", shuffle_partitions: int | None = N
         .config("spark.sql.session.timeZone", "UTC")
         # Arrow for any pandas_udf / toPandas path.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Python workers import sparvi_spark by module name; callers that
+        # put the package root only on their own sys.path (the scripts,
+        # __spark_entry__.py) would otherwise fail every Arrow lane with
+        # ModuleNotFoundError when started from another directory. Spark
+        # merges this ahead of the workers' inherited PYTHONPATH.
+        .config("spark.executorEnv.PYTHONPATH", _ROOT)
         # Driver testdata writes TIMESTAMP(NANOS) parquet (events.ts); Spark
         # reads them as nanosecond longs, converted back in testdata.load_table.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -1,5 +1,6 @@
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -15,3 +16,17 @@ def spark():
 
     s = get_spark("sparvi_tests", shuffle_partitions=8)
     yield s
+
+
+@contextmanager
+def scale_mode_ctx(on: bool):
+    """Temporarily set the engine-wide scale mode; restores the prior
+    value."""
+    from sparvi_spark.config import scale_mode, set_scale_mode
+
+    prev = scale_mode()
+    set_scale_mode(on)
+    try:
+        yield
+    finally:
+        set_scale_mode(prev)

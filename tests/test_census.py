@@ -2,11 +2,19 @@
 
 AST only, no Spark session. A name counts as used when some other
 top-level statement in the library, ``scripts/``, ``tests/``,
-``perfbench/`` or ``bench.py`` mentions it as a ``Name``, an
-``Attribute`` or a string literal (so ``getattr`` registries and
-``"pkg.mod:Class"`` paths count). Imports and ``__all__`` entries do not:
-a re-export is not a use. Imports, at module level and inside function
-bodies, must each be used.
+``perfbench/`` or ``bench.py`` mentions it as a ``Name`` or an
+``Attribute``, or as a string literal in a lookup position: the name
+argument of ``getattr``/``hasattr``/``setattr``/``patch.object``, a
+``"pkg.mod:Class"`` path, or a registry row that names its module
+(``("sparvi_spark.engine", "profile_table", ...)``). Any other string
+literal — a column alias like ``"health_score"`` — is data, not a use.
+Imports and ``__all__`` entries do not count either: a re-export is not
+a use. Imports, at module level and inside function bodies, must each
+be used.
+
+A library name whose only users are tests must be declared in
+``TEST_ONLY``: public API kept on purpose with no library caller. A new
+test-only name, or a declared one that gained a caller, fails the census.
 """
 
 from __future__ import annotations
@@ -18,6 +26,9 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 LIB = ROOT / "sparvi_spark"
 _PATH_LIKE = re.compile(r"[A-Za-z_][\w.:]*")
+_IDENT = re.compile(r"[A-Za-z_]\w*")
+# calls whose second argument names an attribute
+_LOOKUPS = {"getattr", "hasattr", "setattr", "delattr", "object"}
 
 
 def _sources() -> list[Path]:
@@ -29,6 +40,12 @@ def _sources() -> list[Path]:
 
 def _is_dunder(name: str) -> bool:
     return name.startswith("__") and name.endswith("__")
+
+
+def _str(node: ast.AST) -> str | None:
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        return node.value
+    return None
 
 
 def _mentions(stmt: ast.stmt) -> set[str]:
@@ -45,9 +62,19 @@ def _mentions(stmt: ast.stmt) -> set[str]:
             out.add(node.id)
         elif isinstance(node, ast.Attribute):
             out.add(node.attr)
-        elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
-              and _PATH_LIKE.fullmatch(node.value)):
-            out.update(re.split(r"[.:]", node.value))
+        elif isinstance(node, ast.Call):
+            f = node.func
+            fname = getattr(f, "id", None) or getattr(f, "attr", None)
+            if fname in _LOOKUPS and len(node.args) > 1:
+                out.add(_str(node.args[1]) or "")
+        elif isinstance(node, (ast.Tuple, ast.List)):
+            strs = [v for v in map(_str, node.elts) if v is not None]
+            if any(v.startswith("sparvi_spark.") for v in strs):
+                out.update(v for v in strs if _IDENT.fullmatch(v))
+        value = _str(node)
+        if (value is not None and _PATH_LIKE.fullmatch(value)
+                and ("." in value or ":" in value)):
+            out.update(re.split(r"[.:]", value))
     return out
 
 
@@ -65,11 +92,14 @@ def _parse_all() -> dict[Path, ast.Module]:
     return {p: ast.parse(p.read_text(), str(p)) for p in _sources()}
 
 
-def unreferenced_defs(trees: dict[Path, ast.Module]) -> list[str]:
+def unreferenced_defs(trees: dict[Path, ast.Module],
+                      skip: Path | None = None) -> list[str]:
     """``module:name`` for each library top-level name no other top-level
-    statement mentions."""
+    statement mentions (statements under ``skip`` do not count)."""
     uses: dict[str, set[tuple[Path, int]]] = {}
     for path, tree in trees.items():
+        if skip is not None and skip in path.parents:
+            continue
         for i, stmt in enumerate(tree.body):
             for name in _mentions(stmt):
                 uses.setdefault(name, set()).add((path, i))
@@ -147,6 +177,75 @@ def unused_function_imports(trees: dict[Path, ast.Module]) -> list[str]:
                         out.append(
                             f"{path.relative_to(ROOT)}:{fn.name}:{bound}")
     return out
+
+
+# Public API whose only callers are tests, each kept on purpose: engine
+# surface documented in README/COVERAGE (streaming, sources, automation),
+# scalar translations of the reference's SQL (functions), and operators
+# graded by their own tests rather than an oracle slot.
+TEST_ONLY = {
+    "sparvi_spark/automation.py:due_jobs",
+    "sparvi_spark/config.py:set_scale_mode",
+    "sparvi_spark/functions/__init__.py:similar_to",
+    "sparvi_spark/functions/__init__.py:not_regexp",
+    "sparvi_spark/functions/__init__.py:count_filter",
+    "sparvi_spark/functions/__init__.py:datediff_hours",
+    "sparvi_spark/operators/anomalies.py:moving_average_anomalies",
+    "sparvi_spark/operators/bloom.py:bloom_filter_members",
+    "sparvi_spark/operators/classify.py:train_nb_classifier",
+    "sparvi_spark/operators/classify.py:save_classifier",
+    "sparvi_spark/operators/classify.py:load_classifier",
+    "sparvi_spark/operators/corpus.py:corpus_diff_summary",
+    "sparvi_spark/operators/dedup.py:word_shingles",
+    "sparvi_spark/operators/incremental.py:incremental_profile",
+    "sparvi_spark/operators/incremental.py:bucket_bounds",
+    "sparvi_spark/operators/joins.py:salted_join",
+    "sparvi_spark/operators/joins.py:broadcast_threshold_join",
+    "sparvi_spark/operators/multimodal.py:resize_images",
+    "sparvi_spark/operators/multimodal.py:sample_frames",
+    "sparvi_spark/operators/sampling.py:temperature_sample",
+    "sparvi_spark/operators/similarity.py:lsh_topk",
+    "sparvi_spark/operators/text.py:repetition_features",
+    "sparvi_spark/operators/text.py:dedup_lines_in_doc",
+    "sparvi_spark/operators/text.py:pack_summary",
+    "sparvi_spark/operators/text.py:binpack_summary",
+    "sparvi_spark/operators/validation.py:evaluate_rule",
+    "sparvi_spark/operators/vectors.py:l2_normalize_expr",
+    "sparvi_spark/operators/vectors.py:pca_train",
+    "sparvi_spark/operators/vectors.py:pca_project",
+    "sparvi_spark/plans/audit.py:assert_plan",
+    "sparvi_spark/plans/collection.py:collect_metadata",
+    "sparvi_spark/sources/bucketing.py:write_bucketed",
+    "sparvi_spark/sources/bucketing.py:colocated_join",
+    "sparvi_spark/sources/export.py:leakage_safe_split",
+    "sparvi_spark/sources/layout.py:write_zordered",
+    "sparvi_spark/sources/layout.py:file_column_spans",
+    "sparvi_spark/sources/readers.py:read_table",
+    "sparvi_spark/sources/readers.py:read_corpus",
+    "sparvi_spark/sources/writers.py:compact_table",
+    "sparvi_spark/streaming/dedup.py:streaming_dedup_exact",
+    "sparvi_spark/streaming/dedup.py:streaming_dedup_fingerprint",
+    "sparvi_spark/streaming/detect.py:streaming_detection",
+    "sparvi_spark/streaming/monitor.py:stream_source",
+    "sparvi_spark/streaming/monitor.py:windowed_counts",
+    "sparvi_spark/streaming/monitor.py:windowed_quality",
+    "sparvi_spark/streaming/monitor.py:freshness",
+    "sparvi_spark/streaming/profile.py:streaming_incremental_profile",
+    "sparvi_spark/streaming/sessions.py:streaming_sessions",
+    "sparvi_spark/streaming/stateful.py:running_metrics",
+}
+
+
+def test_test_only_names_are_declared():
+    """A library name only tests use is either declared public API or
+    dead weight (a second copy of logic the library has elsewhere, like
+    a helper whose graded twin lives in a check module)."""
+    got = set(unreferenced_defs(_parse_all(), skip=ROOT / "tests"))
+    assert got == TEST_ONLY, (
+        "undeclared test-only names:\n  "
+        + "\n  ".join(sorted(got - TEST_ONLY))
+        + "\ndeclared names that are no longer test-only:\n  "
+        + "\n  ".join(sorted(TEST_ONLY - got)))
 
 
 def test_every_library_name_is_referenced_and_every_import_used():

@@ -6,7 +6,8 @@ final ULP, never in the result set)."""
 
 import pytest
 
-from sparvi_spark.config import scale_mode, scale_mode_ctx, set_scale_mode
+from sparvi_spark.config import scale_mode, set_scale_mode
+from tests.conftest import scale_mode_ctx
 
 
 def _plan(df) -> str:
@@ -183,6 +184,7 @@ def _bad_lane_calls():
     unknown lane name — near-misses of real values (case, spelling),
     the typo class an else-branch would swallow."""
     from sparvi_spark.operators import dedup as d
+    from sparvi_spark.operators import profile as p
     from sparvi_spark.operators import similarity as s
     from sparvi_spark.operators.text import dedup_lines_corpus
     from sparvi_spark.sources.export import shard_expr
@@ -200,6 +202,8 @@ def _bad_lane_calls():
                                      "vec_id int, embedding array<float>")
 
     return [
+        ("numeric_sqls.lane",
+         lambda sp: p.numeric_sqls(["x"], ["a"], "Scaled")),
         ("minhash_signatures.hash_fn", lambda sp: d.minhash_signatures(
             docs(sp), "doc_id", "text", hash_fn="xxHash64")),
         ("minhash_signed.hash_fn", lambda sp: d.minhash_signed(

@@ -872,3 +872,36 @@ def test_read_corpus_jsonl_and_text(spark, tmp_path):
         read_corpus(spark, str(jd / "*.jsonl"), fmt="jsonl", text_col="nope")
     with pytest.raises(NotImplementedError):
         read_corpus(spark, str(jd), fmt="avro")
+
+
+def test_arrow_lane_runs_from_outside_the_repository(tmp_path):
+    """Arrow lanes run Python workers that import sparvi_spark by module
+    name. A script that puts the repository root only on its own
+    sys.path and starts from another directory must still run one: the
+    session exports the root to the workers."""
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "arrow_lane.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {repo!r})
+        from sparvi_spark.functions import local_df
+        from sparvi_spark.operators.dedup import minhash_signed
+        from sparvi_spark.session import get_spark
+
+        spark = get_spark("arrow_lane_cwd")
+        docs = local_df(spark, [(1, "aa bb cc dd"), (2, "aa bb cc ee")],
+                        "doc_id int, text string")
+        rows = minhash_signed(docs, "doc_id", "text", n=2, num_hashes=8,
+                              hash_fn="arrow").collect()
+        print("SIGNED", len(rows))
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run([sys.executable, str(script)], cwd=tmp_path,
+                         env=env, capture_output=True, text=True,
+                         timeout=600)
+    assert "SIGNED 2" in out.stdout, out.stderr[-3000:]

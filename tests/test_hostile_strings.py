@@ -12,7 +12,7 @@ round trip for the routes rows take: ``local_df`` itself, a state write
 (``StateStore.append_rows`` -> ``read``), and both rule runners' result
 relations. Rule names used to be rendered into Spark SQL literals with
 quote-only escaping, so every rule kind is sent through ``run_rules`` and
-``run_rules_multi`` with hostile names, and ``Engine.run_validations``
+``PreparedRulesMulti`` with hostile names, and ``Engine.run_validations``
 runs its generated suite on a table whose name holds a backslash.
 """
 
@@ -48,8 +48,8 @@ def test_hostile_values_round_trip_every_route(spark, tmp_path):
     from sparvi_spark.operators.validation import (
         Rule,
         generate_default_rules,
+        PreparedRulesMulti,
         run_rules,
-        run_rules_multi,
         spec_from_dataframe,
     )
     from sparvi_spark.sources.state import StateStore
@@ -87,7 +87,7 @@ def test_hostile_values_round_trip_every_route(spark, tmp_path):
                   agg_expr=e)
              for s, e in zip(STRINGS[:-1] + ["none"], exprs)]
     src = spark.range(3)
-    res = run_rules_multi([(tname, src, rules, None, frozenset())])
+    res = PreparedRulesMulti([(tname, src, rules, None, frozenset())]).run()
     assert _plan_leaf(res) == "LocalRelation"
     out = {r["rule_name"]: r for r in res.collect()}
     assert set(out) == {r.name for r in rules}
@@ -115,7 +115,8 @@ def test_hostile_values_round_trip_every_route(spark, tmp_path):
              for kind, (want, kw) in kinds.items() for s in STRINGS if s]
     want = {r.name: (r.expected_value, True) for r in rules}
     for res in (run_rules(base, rules, ref_tables=refs),
-                run_rules_multi([(tname, base, rules, refs, frozenset())])):
+                PreparedRulesMulti(
+                    [(tname, base, rules, refs, frozenset())]).run()):
         assert {r["rule_name"]: (r["actual_value"], r["is_valid"])
                 for r in res.collect()} == want
 
@@ -137,3 +138,68 @@ def test_hostile_values_round_trip_every_route(spark, tmp_path):
     failed = events["validation_failure"].split(",")
     assert f"check_{table}_not_empty" in failed
     assert set(failed) <= set(generated)
+
+
+HOSTILE_NAMES = ["a.b", "x`y", "quo'te", "p{q}", "back\\slash"]
+
+
+def test_hostile_column_names_profile_and_schema_like_plain_twins(
+        spark, tmp_path):
+    """Column names that are SQL syntax — a dot, a backquote, a quote,
+    braces, a backslash — profile and diff exactly like a plain-named
+    twin holding the same data: every document field and every schema
+    change row matches the twin's."""
+    from pyspark.sql import types as T
+
+    from sparvi_spark.engine import Engine
+    from sparvi_spark.functions import local_df
+
+    def ident(name: str) -> str:
+        return "`" + name.replace("`", "``") + "`"
+
+    nums = [1.5, None, 2.25, 1.5, -3.0, 0.0, 1.5]
+    strs = ["x", "", None, "x", "yz", "it's", "x"]
+    kinds = [("", T.DoubleType(), nums), ("_t", T.StringType(), strs)]
+    names = ["plain"] + HOSTILE_NAMES
+    fields, cols = [], []
+    for n in names:
+        for suffix, dtype, values in kinds:
+            fields.append(T.StructField(n + suffix, dtype))
+            cols.append(values)
+    df = local_df(spark, list(zip(*cols)), T.StructType(fields))
+
+    # one profile per name: the document keeps top values for at most
+    # ten columns
+    engine = Engine(spark, str(tmp_path / "wh"))
+    keys = ("completeness", "null_fractions", "distinct_counts",
+            "summary_statistics", "top_values")
+    for n in HOSTILE_NAMES:
+        pair = [c for c in df.columns if c in (n, n + "_t")]
+        doc = engine.run_profile(
+            df.selectExpr(*[ident(c) for c in ["plain", "plain_t"] + pair]),
+            n, as_of="2026-01-01 00:00:00")
+        for suffix, _, _ in kinds:
+            for k in keys:
+                assert doc[k][n + suffix] == doc[k]["plain" + suffix], (
+                    n + suffix, k)
+
+    # the schema diff: retype every numeric column, drop every text
+    # column and add one new column per name
+    assert engine.track_schema(df, "hostile", as_of="2026-01-01 00:00:00") \
+        is None
+    changed = df.selectExpr(
+        *[f"cast({ident(n)} as string) AS {ident(n)}" for n in names],
+        *[f"{ident(n)} AS {ident(n + '_new')}" for n in names])
+    rows = engine.track_schema(changed, "hostile",
+                               as_of="2026-01-02 00:00:00").collect()
+    by_col: dict = {}
+    for r in rows:
+        name = r["column_name"]
+        base = next(n for n in names if name in (n, n + "_t", n + "_new"))
+        by_col.setdefault(base, set()).add(
+            (r["change_type"], name[len(base):], r["details"],
+             r["important"]))
+    want = {("column_type_changed", "", "numeric -> text", True),
+            ("column_removed", "_t", None, True),
+            ("column_added", "_new", None, False)}
+    assert by_col == {n: want for n in names}

@@ -59,6 +59,35 @@ def test_short_docs_never_crash_gram_pipelines(spark):
     assert by_id[5] == ["aa bb cc", "bb cc dd", "cc dd ee"]
 
 
+def test_word_shingles_and_doc_gram_arrays_share_one_gram_builder(spark):
+    """word_shingles and _doc_gram_arrays both render gram_sql: the same
+    gram sets on short, NULL and empty docs for every n, and
+    word_shingles splits each text once (its tokens bind to a lambda
+    variable instead of being re-split inside the gram lambda)."""
+    from pyspark.sql import functions as F
+
+    from sparvi_spark.operators.dedup import (
+        _doc_gram_arrays, gram_sql, word_shingles)
+
+    rows = [(1, None), (2, ""), (3, "one"), (4, "one two"),
+            (5, "aa bb cc dd ee"), (6, "x x x x"), (7, "  A b  ")]
+    df = spark.createDataFrame(rows, "doc_id int, text string")
+    for n in (1, 2, 3):
+        arrays = {r["__id"]: sorted(r["__grams"]) for r in
+                  _doc_gram_arrays(df, "doc_id", "text", n).collect()}
+        shingles = {r["doc_id"]: r["s"] for r in df.select(
+            "doc_id", F.array_distinct(word_shingles("text", n)).alias("s")
+        ).collect()}
+        for doc_id, text in rows:
+            got = shingles[doc_id]
+            if doc_id not in arrays:  # dropped: NULL text or < n tokens
+                assert got == (None if text is None else []), (n, doc_id)
+            else:
+                assert sorted(got) == arrays[doc_id], (n, doc_id)
+        assert str(word_shingles("text", n)).count("split(") == 1
+    assert gram_sql("t", 1) == "t"
+
+
 def test_jaccard_pairs_exact_math(corpus):
     from sparvi_spark.operators.dedup import jaccard_pairs
 
@@ -564,7 +593,7 @@ def test_contamination_arrow_backend_parity(spark):
                                      backend="arrow").collect())
         assert arrow == expr
     # scale mode flips the default to the arrow lane; explicit arg wins
-    from sparvi_spark.config import scale_mode_ctx
+    from tests.conftest import scale_mode_ctx
 
     with scale_mode_ctx(True):
         got = sorted(contamination(hostile.where("doc_id >= 4"),
@@ -650,7 +679,7 @@ def test_minhash_arrow_lane_matches_expr_pairs(spark):
     cross variant, hostile short docs, and the scale-mode default."""
     from pyspark.sql import functions as F
 
-    from sparvi_spark.config import scale_mode_ctx
+    from tests.conftest import scale_mode_ctx
     from sparvi_spark.operators.dedup import (
         minhash_lsh_pairs, minhash_lsh_pairs_cross, minhash_signatures)
     from sparvi_spark.testdata import load_table
@@ -723,7 +752,7 @@ def test_simhash_arrow_lane_matches_expr(spark):
     including null docs. Also pins the scale-mode default."""
     from pyspark.sql import functions as F
 
-    from sparvi_spark.config import scale_mode_ctx
+    from tests.conftest import scale_mode_ctx
     from sparvi_spark.operators.dedup import simhash, simhash_pairs
     from sparvi_spark.testdata import load_table
 
@@ -1592,7 +1621,6 @@ def test_linear_classifier_scores_match_python(spark):
         WEIGHT_SCALE,
         linear_scores,
         quantize_weights,
-        sigmoid_expr,
     )
     from sparvi_spark.operators.dedup import PORTABLE_P
 
@@ -1625,7 +1653,7 @@ def test_linear_classifier_scores_match_python(spark):
 
     probs = docs.select("doc_id").join(
         linear_scores(docs, weights, bias=0.1), "doc_id").select(
-        "doc_id", sigmoid_expr("margin").alias("p")).collect()
+        "doc_id", F.expr("1.0d / (1.0d + exp(-margin))").alias("p")).collect()
     assert all(0.0 < r["p"] < 1.0 for r in probs)
 
 

@@ -4,7 +4,7 @@ import pytest
 
 from sparvi_spark.operators.profile import (
     duplicate_count,
-    health_score,
+    health_sql,
     profile_table,
     top_values,
     type_bucket,
@@ -70,7 +70,11 @@ def test_duplicate_count_detects_dupes(spark):
     assert duplicate_count(df.unionAll(df.limit(3))) == 3
 
 
-def test_health_score_heuristic():
+def test_health_score_heuristic(spark):
+    def health_score(rows, n_columns, n_nullable, has_pk):
+        return spark.sql("SELECT " + health_sql(
+            str(rows), n_columns, n_nullable, has_pk)).collect()[0][0]
+
     assert health_score(100, 5, 1, True) == 100
     assert health_score(0, 5, 1, True) == 70
     assert health_score(100, 5, 5, False) == 65  # no PK, all nullable
@@ -112,7 +116,7 @@ def test_profile_approx_mode(spark):
     for c, d in exact["distinct_counts"].items():
         a = approx["distinct_counts"][c]
         assert a == 0 or abs(a - d) <= max(0.1 * d, 2), (c, a, d)
-    # the scale lane's DOUBLE sums (numeric_exprs exact=False — the
+    # the scale lane's DOUBLE sums (numeric_sqls' double lane — the
     # decimal agg buffer is a measured 13x/core cliff at 100x, r11)
     # must agree with the decimal parity lane after the document's own
     # rounding: avg to 6dp, stddev to 4dp, both compared with one-ulp
@@ -356,3 +360,123 @@ def test_refine_rounding_matches_spark_shortest_repr(spark):
     spark_rounded = spark.sql(
         "select round(cast(3.0000025 as double), 6) as r").collect()[0]["r"]
     assert got["p50"] == spark_rounded == 3.000003
+
+
+def _pct_close(doc_pct: float, slot_pct: float) -> bool:
+    # the document rounds percentages to 4 dp, the p02/p03 slots to 6
+    return abs(doc_pct - slot_pct) <= 5e-5 + 1e-12
+
+
+def _assert_numeric_matches(summary: dict, row) -> None:
+    for doc_key, slot_key in (("min", "min_val"), ("max", "max_val"),
+                              ("avg", "avg_val"), ("stddev", "stddev_val"),
+                              ("zero_count", "zero_cnt"),
+                              ("negative_count", "negative_cnt"),
+                              ("positive_count", "positive_cnt")):
+        assert summary[doc_key] == row[slot_key], (doc_key, summary, row)
+    if summary["sum"] is None:
+        assert row["sum_val"] is None
+    else:
+        assert abs(summary["sum"] - row["sum_val"]) <= 5e-5 + 1e-9
+
+
+def test_profile_document_equals_graded_slots(spark):
+    """The stored profile document and the graded p02/p03/p04/p06/p07/p08
+    slots render the same builders, so on the sf0.001 tables every field
+    they share is equal (percentages up to their own rounding digits),
+    and on a frame with NaN and ±Inf the p02/p03/p04 slot text rendered
+    over that frame equals the document too."""
+    from sparvi_spark.checks import profile_checks as pc
+    from sparvi_spark.functions import local_df, rel, render_sql
+
+    tables = {"lineitem"} | {t for t, _ in pc.DATE_COLS} \
+        | {t for t, _ in pc.STR_COLS} | {t for t, _ in pc.TOPV_COLS}
+    docs = {t: profile_table(load_table(spark, t, SF_DIR), t, as_of=pc.AS_OF)
+            for t in sorted(tables)}
+
+    def check_counts(doc, nulls, distincts):
+        for r in nulls:
+            comp = doc["completeness"][r["column_name"]]
+            assert comp["nulls"] == r["null_cnt"], r
+            assert _pct_close(comp["null_percentage"], r["null_pct"]), r
+        for r in distincts:
+            comp = doc["completeness"][r["column_name"]]
+            assert comp["distinct_count"] == r["distinct_cnt"], r
+            assert _pct_close(comp["distinct_percentage"],
+                              r["distinct_pct"]), r
+
+    li = docs["lineitem"]
+    check_counts(li, pc.q_null_counts(spark, SF_DIR).collect(),
+                 pc.q_distinct_counts(spark, SF_DIR).collect())
+    for r in pc.q_numeric_stats(spark, SF_DIR).collect():
+        _assert_numeric_matches(
+            li["summary_statistics"][r["column_name"]], r)
+    for r in pc.q_date_stats(spark, SF_DIR).collect():
+        d = docs[r["table_name"]]["summary_statistics"][r["column_name"]]
+        assert (d["min"], d["max"], d["future_count"], d["past_count"]) == (
+            r["min_ts"], r["max_ts"], r["future_cnt"], r["past_cnt"]), r
+    for r in pc.q_string_stats(spark, SF_DIR).collect():
+        d = docs[r["table_name"]]["summary_statistics"][r["column_name"]]
+        assert (d["min_length"], d["max_length"], d["avg_length"],
+                d["empty_count"]) == (r["min_len"], r["max_len"],
+                                      r["avg_len"], r["empty_cnt"]), r
+    slot_top: dict = {}
+    for r in pc.q_top_values(spark, SF_DIR).collect():
+        slot_top.setdefault((r["table_name"], r["column_name"]), set()).add(
+            (r["value"], r["cnt"], r["pct"]))
+    assert set(slot_top) == set(pc.TOPV_COLS)
+    for (t, c), want in slot_top.items():
+        got = {(v["value"], v["count"], v["percentage"])
+               for v in docs[t]["top_values"][c]}
+        assert got == want, (t, c)
+
+    nan, inf = float("nan"), float("inf")
+    frame = local_df(spark, [(1.0, 1), (nan, 2), (inf, 2), (2.0, None),
+                             (-inf, 3), (None, 3), (0.0, 3), (-3.5, 4)],
+                     "x double, k int")
+    doc = profile_table(frame, "nonfinite")
+    assert doc["summary_statistics"]["x"]["non_finite_count"] == 3
+
+    def slot(text):
+        return render_sql(spark, text, src=frame).collect()
+
+    cols = ["x", "k"]
+    check_counts(doc, slot(pc.null_counts_sql(rel("src"), cols)),
+                 slot(pc.distinct_counts_sql(rel("src"), cols)))
+    for r in slot(pc.numeric_stats_sql(rel("src"), cols, {"k"})):
+        _assert_numeric_matches(
+            doc["summary_statistics"][r["column_name"]], r)
+
+
+def test_scaled_lane_guard_repasses_inexact_columns(spark):
+    """The parity lane sums scaled longs only for columns whose every
+    value passed the same-pass exactness check; a column with a value
+    of more than two decimals, or beyond the long-square bound, is
+    re-aggregated in the decimal lane, so the document equals the
+    decimal lane on every column."""
+    from sparvi_spark.functions import local_df, rel, render_sql
+    from sparvi_spark.operators.profile import (
+        integral_columns, numeric_sqls, stage_sql)
+
+    frame = local_df(spark, [(0.125, 1.25, 3e8, 1, 3),
+                             (2.5, 2.5, 1.0, 2, 5_000_000_000),
+                             (1.1, 3.75, None, 3, None)],
+                     "frac double, cents double, big double, n int, "
+                     "huge bigint")
+    cols = frame.columns
+    ints = integral_columns(frame)
+
+    def lane_row(lane):
+        text = stage_sql(rel("src"), *numeric_sqls(
+            cols, [f"a{i}" for i in range(len(cols))], lane, ints))
+        return render_sql(spark, text, src=frame).collect()[0]
+
+    doc = profile_table(frame, "guard")["summary_statistics"]
+    want = lane_row("decimal")
+    for i, c in enumerate(cols):
+        assert (doc[c]["sum"], doc[c]["avg"], doc[c]["stddev"]) == (
+            want[f"a{i}_sum_d"], want[f"a{i}_avg"], want[f"a{i}_stddev"]), c
+    # the scaled lane alone flags the columns it cannot sum exactly
+    flags = lane_row("scaled")
+    assert [flags[f"a{i}_exact"] for i in range(len(cols))] == [
+        False, True, False, True, False]
