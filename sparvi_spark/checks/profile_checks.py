@@ -139,14 +139,19 @@ SQL_NULL_COUNTS = (
 
 def distinct_counts_sql(src: str, cols: list[str]) -> str:
     """p03 over ``src``: (column_name, distinct_cnt, distinct_pct,
-    is_unique). A union of per-column single-distinct aggregates: Spark
-    plans each as groupBy(column) then one count, so every subtree hashes
-    just its own column's values (a typed-slot melt of all columns into
-    one key measured ~8% slower at sf0.1) and the shuffle carries
-    per-partition-deduped values, bounded by column cardinality."""
+    is_unique). A union of per-column branches, each ``distinct_sql``
+    over its column's explicit GROUP BY: every subtree hashes just its
+    own column's values (a typed-slot melt of all columns into one key
+    measured ~8% slower at sf0.1), the shuffle carries per-partition-
+    deduped values bounded by column cardinality, and the distinct
+    aggregate reuses that partitioning (no second exchange). A bare
+    ``count(DISTINCT c), count(c)`` per branch measured 1.9x slower
+    (median, sf0.1, SCALING.md)."""
     inner = " UNION ALL ".join(
         f"SELECT {sql_str(c)} AS column_name, {distinct_sql(c)} AS "
-        f"distinct_cnt, count({ident(c)}) AS nonnull_cnt FROM {src}"
+        f"distinct_cnt, coalesce(sum(case when {ident(c)} is not null "
+        f"then __c end), 0) AS nonnull_cnt FROM (SELECT {ident(c)}, "
+        f"count(1) AS __c FROM {src} GROUP BY {ident(c)})"
         for c in cols)
     return (f"SELECT column_name, distinct_cnt, "
             f"{pct_sql('distinct_cnt', 'nonnull_cnt', 6)} AS distinct_pct, "
@@ -176,14 +181,12 @@ SQL_DISTINCT_COUNTS = (
 # P4 numeric stats (lineitem, one scan, decimal-exact sums)
 # ---------------------------------------------------------------------------
 
-def numeric_stats_sql(src: str, cols: list[str],
-                      integral: set[str] = frozenset()) -> str:
+def numeric_stats_sql(src: str, cols: list[str], integral: set[str]) -> str:
     """p04 over ``src``: ``numeric_sqls`` in the scaled lane plus its
-    finish, one scan. The slot never takes ``profile_table``'s decimal
-    re-pass: a column failing the scaled lane's precondition reads NULL
-    sums here, which the oracle reports as a mismatch."""
+    finish, one scan. The lane is exact for TPC-H's cent-valued money
+    columns, where it equals ``profile_table``'s decimal lane."""
     stats = stage_sql(src, *numeric_sqls(
-        cols, [f"__{i}" for i in range(len(cols))], integral=integral))
+        cols, [f"__{i}" for i in range(len(cols))], "scaled", integral))
     rows = ", ".join(
         f"{sql_str(c)}, __{i}_cnt, __{i}_min, __{i}_max, "
         f"round(__{i}_sum_d, 4), __{i}_avg, __{i}_stddev, __{i}_zeros, "

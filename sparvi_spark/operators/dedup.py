@@ -16,7 +16,7 @@ near-dup — all as declarative DataFrame programs designed for 100 TB:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from sparvi_spark.config import (
@@ -36,9 +36,9 @@ def tokens_expr(text_col: str) -> str:
 
 
 def gram_sql(toks: str, n: int) -> str:
-    """The word n-grams of the token array ``toks``: a column or lambda
-    variable, never a split expression (a lambda body re-evaluates it per
-    gram, O(tokens²) per doc). Fewer than n tokens -> empty array, via a
+    """The word n-grams of the token array ``toks``: a column, never a
+    split expression (a lambda body re-evaluates it per gram, O(tokens²)
+    per doc). Fewer than n tokens -> empty array, via a
     lazy CASE: ``sequence(1, 0)`` is DESCENDING in Spark and
     ``slice(toks, 0, n)`` throws (see _doc_gram_arrays)."""
     if n == 1:
@@ -47,15 +47,6 @@ def gram_sql(toks: str, n: int) -> str:
             f"transform(sequence(1, size({toks}) - {n - 1}), "
             f"i -> concat_ws(' ', slice({toks}, i, {n}))) "
             f"else cast(array() as array<string>) end")
-
-
-def word_shingles(text_col: str, n: int) -> Column:
-    """n-gram word shingles as an array<string> (JVM-side, no UDF): fewer
-    than n tokens -> empty array, NULL text -> NULL. The text splits once:
-    the tokens bind to a lambda variable that ``gram_sql`` reads."""
-    return F.expr(f"element_at(transform(array({tokens_expr(text_col)}), "
-                  f"t -> case when t is not null then {gram_sql('t', n)} "
-                  f"end), 1)")
 
 
 def dedup_exact(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -74,7 +65,7 @@ def _doc_gram_arrays(df: DataFrame, id_col: str, text_col: str, n: int) -> DataF
     The tokens array is materialized as its own column BEFORE the n-gram
     transform: an expression embedded in a lambda body is re-evaluated per
     array element, turning shingling O(tokens²)-per-doc (measured ~5×
-    slower). The n-gram CASE is ``gram_sql``, shared with word_shingles.
+    slower). The n-gram CASE is ``gram_sql``.
 
     Docs with zero shingles (NULL text, or fewer than n tokens) are
     dropped, matching the exploded form where they contribute no rows.

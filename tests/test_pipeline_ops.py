@@ -30,13 +30,11 @@ def test_short_docs_never_crash_gram_pipelines(spark):
     old ``greatest(size-(n-1), 0)`` bound fed ``slice(toks, 0, n)`` and
     threw INVALID_PARAMETER_VALUE.START on any one-word document —
     killing every gram consumer (jaccard/minhash/contamination) on real
-    corpora. word_shingles (expression form) returns an empty array for
-    short docs and NULL for NULL text."""
-    from pyspark.sql import functions as F
-
+    corpora. gram_sql (the expression form over a staged tokens column)
+    returns an empty array for short, NULL and empty docs."""
     from sparvi_spark.operators.dedup import (
-        _doc_gram_arrays, contamination, jaccard_pairs, minhash_lsh_pairs,
-        word_shingles)
+        _doc_gram_arrays, contamination, gram_sql, jaccard_pairs,
+        minhash_lsh_pairs, tokens_expr)
 
     rows = [(1, None), (2, ""), (3, "one"), (4, "one two"),
             (5, "aa bb cc dd ee"), (6, "aa bb cc dd ff")]
@@ -52,39 +50,11 @@ def test_short_docs_never_crash_gram_pipelines(spark):
     contam = contamination(df.where("doc_id >= 4"), df.where("doc_id < 4"),
                            "doc_id", "text", n=3).collect()
     assert {r["doc_id"] for r in contam} == {5, 6}  # short cand dropped
-    sh = df.select("doc_id",
-                   word_shingles("text", 3).alias("s")).collect()
+    sh = (df.selectExpr("doc_id", f"{tokens_expr('text')} AS t")
+          .selectExpr("doc_id", f"{gram_sql('t', 3)} AS s").collect())
     by_id = {r["doc_id"]: r["s"] for r in sh}
-    assert by_id[1] is None and by_id[3] == [] and by_id[4] == []
+    assert by_id[1] == by_id[2] == by_id[3] == by_id[4] == []
     assert by_id[5] == ["aa bb cc", "bb cc dd", "cc dd ee"]
-
-
-def test_word_shingles_and_doc_gram_arrays_share_one_gram_builder(spark):
-    """word_shingles and _doc_gram_arrays both render gram_sql: the same
-    gram sets on short, NULL and empty docs for every n, and
-    word_shingles splits each text once (its tokens bind to a lambda
-    variable instead of being re-split inside the gram lambda)."""
-    from pyspark.sql import functions as F
-
-    from sparvi_spark.operators.dedup import (
-        _doc_gram_arrays, gram_sql, word_shingles)
-
-    rows = [(1, None), (2, ""), (3, "one"), (4, "one two"),
-            (5, "aa bb cc dd ee"), (6, "x x x x"), (7, "  A b  ")]
-    df = spark.createDataFrame(rows, "doc_id int, text string")
-    for n in (1, 2, 3):
-        arrays = {r["__id"]: sorted(r["__grams"]) for r in
-                  _doc_gram_arrays(df, "doc_id", "text", n).collect()}
-        shingles = {r["doc_id"]: r["s"] for r in df.select(
-            "doc_id", F.array_distinct(word_shingles("text", n)).alias("s")
-        ).collect()}
-        for doc_id, text in rows:
-            got = shingles[doc_id]
-            if doc_id not in arrays:  # dropped: NULL text or < n tokens
-                assert got == (None if text is None else []), (n, doc_id)
-            else:
-                assert sorted(got) == arrays[doc_id], (n, doc_id)
-        assert str(word_shingles("text", n)).count("split(") == 1
     assert gram_sql("t", 1) == "t"
 
 

@@ -448,12 +448,11 @@ def test_profile_document_equals_graded_slots(spark):
             doc["summary_statistics"][r["column_name"]], r)
 
 
-def test_scaled_lane_guard_repasses_inexact_columns(spark):
-    """The parity lane sums scaled longs only for columns whose every
-    value passed the same-pass exactness check; a column with a value
-    of more than two decimals, or beyond the long-square bound, is
-    re-aggregated in the decimal lane, so the document equals the
-    decimal lane on every column."""
+def test_profile_sums_in_the_decimal_lane_and_p04_lane_agrees_on_cents(spark):
+    """profile_table sums every numeric column in the decimal lane, in its
+    one aggregate, whatever the values' decimals; the graded p04 slot's
+    scaled-long lane equals it on integral and cent-valued columns (its
+    precondition) and not on a value with more than two decimals."""
     from sparvi_spark.functions import local_df, rel, render_sql
     from sparvi_spark.operators.profile import (
         integral_columns, numeric_sqls, stage_sql)
@@ -466,17 +465,22 @@ def test_scaled_lane_guard_repasses_inexact_columns(spark):
     cols = frame.columns
     ints = integral_columns(frame)
 
-    def lane_row(lane):
+    def lane_row(lane, names):
         text = stage_sql(rel("src"), *numeric_sqls(
-            cols, [f"a{i}" for i in range(len(cols))], lane, ints))
+            names, [f"a{i}" for i in range(len(names))], lane, ints))
         return render_sql(spark, text, src=frame).collect()[0]
 
-    doc = profile_table(frame, "guard")["summary_statistics"]
-    want = lane_row("decimal")
+    def stats(row, i):
+        return row[f"a{i}_sum_d"], row[f"a{i}_avg"], row[f"a{i}_stddev"]
+
+    doc = profile_table(frame, "lanes")["summary_statistics"]
+    want = lane_row("decimal", cols)
     for i, c in enumerate(cols):
-        assert (doc[c]["sum"], doc[c]["avg"], doc[c]["stddev"]) == (
-            want[f"a{i}_sum_d"], want[f"a{i}_avg"], want[f"a{i}_stddev"]), c
-    # the scaled lane alone flags the columns it cannot sum exactly
-    flags = lane_row("scaled")
-    assert [flags[f"a{i}_exact"] for i in range(len(cols))] == [
-        False, True, False, True, False]
+        assert (doc[c]["sum"], doc[c]["avg"], doc[c]["stddev"]) == stats(
+            want, i), c
+    exact = ["cents", "n"]
+    scaled, dec = lane_row("scaled", exact), lane_row("decimal", exact)
+    assert [stats(scaled, i) for i in range(2)] == [
+        stats(dec, i) for i in range(2)]
+    assert stats(lane_row("scaled", ["frac"]), 0) != stats(
+        lane_row("decimal", ["frac"]), 0)
