@@ -8,13 +8,14 @@ builder's output against the saved pre-refactor snapshot pickles at
 sf0.001/0.01/0.1 (columns, dtypes, order-insensitive normalized row
 multiset — the driver-hash normalization), then times build+execute with
 the bench discipline (fresh plan per run via prepared=False, warm table
-cache, best-of-N) at the timing SF.
+cache, best and median of N draws) at the timing SF.
 """
 
 from __future__ import annotations
 
 import os
 import pickle
+import statistics
 import sys
 import time
 
@@ -106,7 +107,8 @@ def main() -> int:
         fn, _sql = checks[name]
         fn(spark, sf_dir).toPandas()  # warm codegen
         isolate()
-        best_b = best_e = best_t = float("inf")
+        best_b = best_e = float("inf")
+        draws = []
         for _ in range(reps):
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
@@ -115,10 +117,12 @@ def main() -> int:
             t2 = time.perf_counter()
             best_b = min(best_b, t1 - t0)
             best_e = min(best_e, t2 - t1)
-            best_t = min(best_t, t2 - t0)
+            draws.append(t2 - t0)
             isolate()
         print(f"TIME {name} sf{sf}: build {best_b:.3f} exec {best_e:.3f} "
-              f"total(best) {best_t:.3f}")
+              f"total(best) {min(draws):.3f} "
+              f"median {statistics.median(draws):.3f} "
+              f"draws {' '.join(f'{d:.3f}' for d in draws)}")
     spark.stop()
     return 1 if bad else 0
 

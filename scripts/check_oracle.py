@@ -49,17 +49,12 @@ def frame_key(df: pd.DataFrame) -> list[tuple]:
 
 def main() -> int:
     prefixes = sys.argv[1:]
-    from sparvi_spark.checks import collect_all_checks
+    from sparvi_spark.checks import collect_all_checks, collect_extra_checks
     from sparvi_spark.session import get_spark
 
     checks = dict(collect_all_checks())
     # modules may cede driver-recorded slots but keep pairs locally verified
-    from sparvi_spark.checks import (anomaly_checks, pipeline_checks,
-                                     profile_checks, schema_checks,
-                                     trend_checks, validation_checks)
-    for mod in (anomaly_checks, pipeline_checks, profile_checks,
-                schema_checks, trend_checks, validation_checks):
-        checks.update(getattr(mod, "EXTRA_CHECKS", {}))
+    checks.update(collect_extra_checks())
     if prefixes:
         checks = {k: v for k, v in checks.items() if any(k.startswith(p) for p in prefixes)}
 

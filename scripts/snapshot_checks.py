@@ -8,6 +8,10 @@ Usage:
 ``compare`` re-runs the current builders and fails on ANY difference in
 columns, dtypes, or the order-insensitive row multiset (the driver-hash
 normalization: dtype-prefixed cells, sorted rows over sorted columns).
+
+The set covers everything the oracle sweep grades or runs: the graded
+slots, every module's ``EXTRA_CHECKS`` (``collect_extra_checks``) and the
+bench headline queries that are not a graded slot (``bench_<name>``).
 """
 
 from __future__ import annotations
@@ -49,12 +53,18 @@ def main() -> int:
     mode, out_dir = sys.argv[1], sys.argv[2]
     sfs = sys.argv[3:] or DEFAULT_SFS
 
-    from sparvi_spark.checks import collect_all_checks
+    from bench import headline_queries
+    from sparvi_spark.checks import collect_all_checks, collect_extra_checks
     from sparvi_spark.session import get_spark
 
     spark = get_spark("snapshot_checks")
     spark.sparkContext.setLogLevel("ERROR")
     checks = collect_all_checks(prepared=False)
+    checks.update(collect_extra_checks())
+    graded = {fn for fn, _sql in checks.values()}
+    checks.update((f"bench_{name}", (fn, None))
+                  for name, fn in headline_queries().items()
+                  if fn not in graded)
     bad = 0
     for sf in sfs:
         sf_dir = f"/root/testdata/sf{sf}"

@@ -312,3 +312,22 @@ def collect_all_checks(prepared: bool = True) -> dict:
         return dict(out)
     return {name: (prepared_check(name, fn), sql)
             for name, (fn, sql) in out.items()}
+
+
+def collect_extra_checks() -> dict:
+    """The locally verified pairs each module keeps beside its graded
+    slots (its ``EXTRA_CHECKS``): standalone shapes a merged slot absorbed
+    and checks past the driver's recording cap. Raw builders, like
+    ``collect_all_checks(prepared=False)``."""
+    from sparvi_spark.checks import (
+        anomaly_checks,
+        pipeline_checks,
+        profile_checks,
+        trend_checks,
+    )
+
+    out: dict = {}
+    for mod in (anomaly_checks, pipeline_checks, profile_checks,
+                trend_checks):
+        out.update(mod.EXTRA_CHECKS)
+    return out

@@ -22,7 +22,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparvi_spark.functions import local_df
+from sparvi_spark.functions import local_df, melt_sql
 from sparvi_spark.operators.anomalies import detect_anomalies
 from sparvi_spark.operators.profile import profile_table
 from sparvi_spark.operators.schema_diff import (
@@ -296,8 +296,7 @@ class Engine:
                     for r in base_rows}),
             "column_name string, mn double, mx double")
         cols = [r[0] for r in edges.collect()]
-        stack = ", ".join(f"'{c}', cast(`{c}` as double)" for c in cols)
-        cur = (df.selectExpr(f"stack({len(cols)}, {stack}) as (column_name, v)")
+        cur = (df.selectExpr(melt_sql(cols, "double"))
                .where("v is not null")
                .join(F.broadcast(edges), "column_name")
                .selectExpr("column_name", f"{bucket_expr(bins)} AS b")

@@ -38,6 +38,14 @@ def sql_str(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+def melt_sql(cols, typ: str, value: str = "v") -> str:
+    """``stack`` text that melts ``cols`` into (column_name, ``value``)
+    rows, each value cast to ``typ``: the name renders as a string literal
+    and the column as a quoted identifier, so any column name melts."""
+    body = ", ".join(f"{sql_str(c)}, cast({ident(c)} as {typ})" for c in cols)
+    return f"stack({len(cols)}, {body}) as (column_name, {value})"
+
+
 def rel(name: str) -> str:
     """Placeholder for a frame that :func:`render_sql` binds by name."""
     return f"\0{name}\0"

@@ -40,7 +40,6 @@ from sparvi_spark.operators.similarity import (
     ivf_topk,
     ivf_topk_trained,
     kmeans_train,
-    lsh_topk,
     ivfpq_encode,
     ivfpq_topk,
     ivfpq_train,
@@ -79,7 +78,7 @@ __all__ = [
     "dedup_exact", "dedup_near", "jaccard_pairs",
     "minhash_lsh_pairs", "simhash_pairs", "contamination",
     "bloom_build", "bloom_filter_members", "contamination_bloom",
-    "cosine_topk", "ivf_topk", "ivf_topk_trained", "kmeans_train", "lsh_topk",
+    "cosine_topk", "ivf_topk", "ivf_topk_trained", "kmeans_train",
     "pq_train", "pq_encode", "pq_topk",
     "ivfpq_train", "ivfpq_encode", "ivfpq_topk",
     "quality_features", "quality_filter", "repetition_features",

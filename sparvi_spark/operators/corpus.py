@@ -16,8 +16,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from sparvi_spark.functions import local_df
-
 
 def _joined(old: DataFrame, new: DataFrame,
             id_col: str, text_col: str) -> tuple[DataFrame, Column]:
@@ -54,32 +52,8 @@ def corpus_diff(
 ) -> DataFrame:
     """Per-document changes old -> new: (id, status) with status in
     {added, removed, modified} — unchanged docs emit no row (at corpus
-    scale they are almost everything; see ``corpus_diff_summary`` for
-    their count)."""
+    scale they are almost everything)."""
     j, status = _joined(old, new, id_col, text_col)
     return (j.withColumn("status", status)
             .where(F.col("status").isNotNull())
             .select(F.col("__id").alias(id_col), "status"))
-
-
-def corpus_diff_summary(
-    old: DataFrame,
-    new: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """One row per status — (status, n_docs) over {added, removed,
-    modified, unchanged} — always all four rows, zeros included, so
-    trend consumers get a fixed schema. Same single-join plan as
-    ``corpus_diff`` (shared builder) with unchanged counted instead of
-    materialized per doc."""
-    j, status = _joined(old, new, id_col, text_col)
-    counts = (j.select(F.coalesce(status, F.lit("unchanged")).alias("status"))
-              .groupBy("status").agg(F.count(F.lit(1)).alias("n_docs")))
-    spine = local_df(
-        old.sparkSession,
-        [("added",), ("removed",), ("modified",), ("unchanged",)],
-        "status string")
-    return (spine.join(counts, "status", "left")
-            .select("status",
-                    F.coalesce("n_docs", F.lit(0)).alias("n_docs")))

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from sparvi_spark.config import (
     FOLD_GRAM, check_lane, resolve_backend, resolve_hash_fn)
+from sparvi_spark.functions import ident
 from sparvi_spark.session import scoped_persist
 
 # Hot-shingle ceiling for the exact-Jaccard self-join (see jaccard_pairs).
@@ -963,46 +964,30 @@ def embedding_neardup_pairs(
     because the caller asked for a contradiction).
     """
     from sparvi_spark.operators.similarity import (
-        _cosine_with_norms, lsh_bucket_expr, norm_expr)
+        cosine_join, cosine_side, lsh_bucket_expr)
 
     auto = pair_backend is None
     pair_backend = resolve_backend(pair_backend, "gram", allowed=FOLD_GRAM,
                                    lane="pair_backend")
     if auto and pair_backend == "gram" and not bucket_col and lsh_bits is None:
         lsh_bits = 16
-    cols = [F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"),
-            norm_expr(vec_col).alias("__n")]
-    if bucket_col:
-        cols.append(F.col(bucket_col).alias("__b"))
-    elif lsh_bits:
-        cols.append(lsh_bucket_expr(vec_col, n_bits=lsh_bits).alias("__b"))
-        bucket_col = "__b"
-    if pair_backend == "gram" and not bucket_col:
-        raise ValueError("pair_backend='gram' needs bucket_col or "
-                         "lsh_bits (an unbucketed Gram is one n² task)")
-    v = df.select(*cols)
+    bucket = (F.col(bucket_col) if bucket_col
+              else lsh_bucket_expr(vec_col, n_bits=lsh_bits) if lsh_bits
+              else None)
     if pair_backend == "gram":
-        return _gram_pairs(v.select("__id", "__v", "__b"),
+        if bucket is None:
+            raise ValueError("pair_backend='gram' needs bucket_col or "
+                             "lsh_bits (an unbucketed Gram is one n² task)")
+        return _gram_pairs(df.select(F.col(id_col).alias("__id"),
+                                     F.col(vec_col).alias("__v"),
+                                     bucket.alias("__b")),
                            df.schema[id_col].dataType.simpleString(),
                            threshold)
-    a = v.select(F.col("__id").alias("id_a"), F.col("__v").alias("va"),
-                 F.col("__n").alias("na"),
-                 *([F.col("__b").alias("ba")] if bucket_col else []))
-    b = v.select(F.col("__id").alias("id_b"), F.col("__v").alias("vb"),
-                 F.col("__n").alias("nb"),
-                 *([F.col("__b").alias("bb")] if bucket_col else []))
-    joined = a.crossJoin(b) if not bucket_col else a.join(b, F.col("ba") == F.col("bb"))
-    return (
-        joined.where(F.col("id_a") < F.col("id_b"))
-        # norms precomputed per vector below the join (same IEEE op order)
-        .withColumn("cosine", _cosine_with_norms("va", "vb", "na", "nb"))
-        # contract shared with the gram backend: NULL vectors and
-        # zero-norm vectors (whose cosine is ±inf/NaN) match nothing
-        .where(F.col("cosine").isNotNull() & ~F.isnan("cosine")
-               & (F.abs("cosine") != float("inf"))
-               & (F.col("cosine") >= threshold))
-        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-    )
+    # norms precomputed per vector below the join (same IEEE op order)
+    pairs = cosine_join(cosine_side(df, id_col, vec_col, "id_a", "a", bucket),
+                        cosine_side(df, id_col, vec_col, "id_b", "b", bucket),
+                        "a", "b", F.col("id_a") < F.col("id_b"), threshold)
+    return pairs.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
 
 
 def _gram_pairs(v: DataFrame, id_type: str, threshold: float) -> DataFrame:
@@ -1021,17 +1006,17 @@ def _gram_pairs(v: DataFrame, id_type: str, threshold: float) -> DataFrame:
     import numpy as np
     import pandas as pd
 
+    from sparvi_spark.operators.vectors import vector_rows
+
     raw_schema = f"id_a {id_type}, id_b {id_type}, cosine double"
     block = 2048
 
     def pairs_of(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf[pdf["__v"].notna()]
-        n = len(pdf)
+        mask, V = vector_rows(pdf["__v"])
+        ids = pdf["__id"].to_numpy()[mask]
+        n = len(ids)
         if n < 2:
             return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-        V = np.asarray([np.asarray(x, dtype=np.float64)
-                        for x in pdf["__v"]])
-        ids = pdf["__id"].to_numpy()
         nrm = np.sqrt((V * V).sum(axis=1))
         zero = nrm == 0.0
         nrm[zero] = np.inf
@@ -1311,7 +1296,7 @@ def semantic_dedup(
         assigned = _numpy_assign(df, vec_col, centroids,
                                  emit_pref=keep == "far_from_centroid")
     else:
-        dists = _l2_dists_expr(f"`{vec_col}`", centroids)
+        dists = _l2_dists_expr(ident(vec_col), centroids)
         assigned = (df.withColumn("__sem_d", F.expr(dists))
                     .withColumn("__sem_cluster", l2_argmin_expr("__sem_d")))
         if keep == "far_from_centroid":
@@ -1338,37 +1323,21 @@ def _numpy_assign(df: DataFrame, vec_col: str,
     can never pair. Final-ULP distances may differ from the fold's
     left-associated sums; parity checks stay on the fold path."""
     import numpy as np
-    import pandas as pd
+
+    from sparvi_spark.operators.vectors import map_vectors
 
     C = np.asarray(centroids, dtype=np.float64)
     csq = (C * C).sum(axis=1)
-    extra = ", __sem_cluster int" + (", __sem_pref double" if emit_pref
-                                     else "")
-    out_schema = (
-        ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                  for f in df.schema.fields) + extra)
 
-    def assign(batches):
-        for pdf in batches:
-            mask = pdf[vec_col].notna().to_numpy()
-            cl = np.full(len(pdf), -1, dtype=np.int64)
-            pref = np.full(len(pdf), np.nan)
-            if mask.any():
-                V = np.asarray([np.asarray(x, dtype=np.float64)
-                                for x in pdf[vec_col][mask]])
-                d2 = ((V * V).sum(axis=1)[:, None]
-                      - 2.0 * (V @ C.T) + csq[None, :])
-                a = d2.argmin(axis=1)
-                cl[mask] = a
-                pref[mask] = d2[np.arange(len(a)), a]
-            pdf = pdf.copy()
-            pdf["__sem_cluster"] = pd.array(
-                [int(c) if c >= 0 else None for c in cl], dtype="Int32")
-            if emit_pref:
-                pdf["__sem_pref"] = pref
-            yield pdf
+    def assign(V):
+        d2 = (V * V).sum(axis=1)[:, None] - 2.0 * (V @ C.T) + csq[None, :]
+        a = d2.argmin(axis=1)
+        return {"__sem_cluster": a, "__sem_pref": d2[np.arange(len(a)), a]}
 
-    return df.mapInPandas(assign, out_schema)
+    cols = {"__sem_cluster": "int"}
+    if emit_pref:
+        cols["__sem_pref"] = "double"
+    return map_vectors(df, vec_col, cols, assign)
 
 
 # ---------------------------------------------------------------------------

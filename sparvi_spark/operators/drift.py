@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sparvi_spark.functions import ident, melt_sql
+
 # decimal(38,18): wide enough that per-bin terms in [0, 1e4] sum exactly
 # for any realistic bin count; scale 18 keeps ~3 guard digits past the
 # 15dp term rounding.
@@ -41,8 +43,7 @@ _DEC = "decimal(38,18)"
 
 
 def _melt(df: DataFrame, cols: list[str], side: str) -> DataFrame:
-    stack = ", ".join(f"'{c}', cast(`{c}` as double)" for c in cols)
-    return (df.selectExpr(f"stack({len(cols)}, {stack}) as (column_name, v)")
+    return (df.selectExpr(melt_sql(cols, "double"))
             .where("v is not null")
             .selectExpr("column_name", "v", f"'{side}' as side"))
 
@@ -160,7 +161,7 @@ def categorical_drift(
     """
     def side(df: DataFrame, name: str) -> DataFrame:
         return (df.selectExpr(
-            f"coalesce(cast(`{col}` as string), '<<NULL>>') AS category")
+            f"coalesce(cast({ident(col)} as string), '<<NULL>>') AS category")
             .groupBy("category")
             .agg(F.expr("count(1)").alias(f"c_{name}")))
 

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sparvi_spark.functions import melt_sql
+
 # NULL partition keys are first-class: every state row, change-detection
 # compare, scan filter, and purge keys on this sentinel instead of SQL NULL
 # (isin()/!= never match NULL — NULL-keyed rows would be re-flagged every
@@ -191,10 +193,9 @@ def partition_quantile_sketch(
     bucket, cnt). One melt + one groupBy; shuffle size is O(occupied
     buckets) — a few hundred rows per (partition, column) no matter how
     many rows were scanned."""
-    stack = ", ".join(f"'{c}', cast(`{c}` as double)" for c in numeric_cols)
     melted = df.select(
         partition_key(partition_col).alias("partition_value"),
-        F.expr(f"stack({len(numeric_cols)}, {stack}) as (column_name, v)"))
+        F.expr(melt_sql(numeric_cols, "double")))
     return (
         melted.where(F.col("v").isNotNull())
         .withColumn("bucket", log_bucket_expr("v", sub_bits))
@@ -283,10 +284,9 @@ def partition_distinct_sketch(
     # does not null-propagate (a NULL input hashes to the seed), so
     # hashing first would count NULL as one extra distinct value —
     # COUNT(DISTINCT) ignores nulls and so must the sketch
-    stack = ", ".join(f"'{c}', cast(`{c}` as string)" for c in cols)
     melted = (df.select(
         partition_key(partition_col).alias("partition_value"),
-        F.expr(f"stack({len(cols)}, {stack}) as (column_name, v)"))
+        F.expr(melt_sql(cols, "string")))
         .where(F.col("v").isNotNull())
         .select("partition_value", "column_name",
                 F.xxhash64("v").alias("h")))
@@ -372,10 +372,9 @@ def partition_topk_sketch(
     tie-break (cnt DESC, value ASC)."""
     from pyspark.sql import Window
 
-    stack = ", ".join(f"'{c}', cast(`{c}` as string)" for c in cols)
     melted = (df.select(
         partition_key(partition_col).alias("partition_value"),
-        F.expr(f"stack({len(cols)}, {stack}) as (column_name, value)"))
+        F.expr(melt_sql(cols, "string", "value")))
         .where(F.col("value").isNotNull()))
     counted = (melted.groupBy("partition_value", "column_name", "value")
                .agg(F.count(F.lit(1)).alias("cnt")))

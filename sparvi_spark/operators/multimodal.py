@@ -21,13 +21,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("payload", T.BinaryType(), True),
-    T.StructField("media_type", T.StringType(), True),  # image|audio|video
-    T.StructField("format", T.StringType(), True),      # png|jpg|wav|mp4...
-])
-
 IMAGE_FEATURES_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
     T.StructField("width", T.IntegerType(), True),
@@ -35,13 +28,6 @@ IMAGE_FEATURES_SCHEMA = T.StructType([
     T.StructField("n_bytes", T.LongType(), True),
     T.StructField("mean_intensity", T.DoubleType(), True),
 ])
-
-FRAME_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("frame_idx", T.IntegerType(), False),
-    T.StructField("frame_payload", T.BinaryType(), True),
-])
-
 
 def pillow_available() -> bool:
     """True when Pillow is importable — the opportunistic real-image path."""
@@ -234,75 +220,3 @@ def extract_audio_features(media: DataFrame, fake: bool | str = True,
             })
 
     return media.mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
-
-
-def _pil_resize(payload: bytes, width: int, height: int) -> bytes:
-    """Real resize body: decode with Pillow, bilinear-resize, re-encode PNG.
-    Raises the documented NotImplementedError where Pillow is absent."""
-    try:
-        import io
-
-        from PIL import Image
-    except ImportError as e:  # pragma: no cover - env-dependent
-        raise NotImplementedError(
-            "real resize requires Pillow; not available in this env") from e
-    img = Image.open(io.BytesIO(payload)).resize((width, height))
-    buf = io.BytesIO()
-    img.save(buf, format="PNG")
-    return buf.getvalue()
-
-
-def resize_images(media: DataFrame, width: int, height: int,
-                  fake: bool | str = True, resizer=None) -> DataFrame:
-    """Resize with the real batch plumbing (payload in, payload out).
-
-    ``fake=False`` resizes with ``resizer`` (payload, w, h -> payload),
-    defaulting to the Pillow body; ``fake="auto"`` picks the real path
-    when available. The fake truncates/pads to width*height bytes —
-    deterministic, schema-identical."""
-    fake = _resolve_fake(fake, resizer, pillow_available())
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rz = resizer or _pil_resize
-        for pdf in batches:
-            target = width * height
-            pdf = pdf.copy()
-            if fake:
-                # deterministic fake: truncate/pad payload to w*h bytes
-                pdf["payload"] = [
-                    None if p is None else (bytes(p)[:target]).ljust(target, b"\0")
-                    for p in pdf["payload"]
-                ]
-            else:
-                pdf["payload"] = [
-                    None if p is None else rz(bytes(p), width, height)
-                    for p in pdf["payload"]
-                ]
-            yield pdf[["media_id", "payload", "media_type", "format"]]
-
-    return media.mapInPandas(run, schema=MEDIA_SCHEMA)
-
-
-def sample_frames(media: DataFrame, every_n: int = 2, max_frames: int = 3,
-                  fake: bool = True) -> DataFrame:
-    """Video frame-sampling stub: one row per sampled frame (explode shape)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not fake:
-                raise NotImplementedError("real frame sampling requires a video codec")
-            out: dict[str, list] = {"media_id": [], "frame_idx": [], "frame_payload": []}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                if p is None:
-                    continue
-                chunk = max(len(p) // max(every_n * max_frames, 1), 1)
-                for i in range(max_frames):
-                    start = i * every_n * chunk
-                    if start >= len(p):
-                        break
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(i)
-                    out["frame_payload"].append(bytes(p)[start:start + chunk])
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(run, schema=FRAME_SCHEMA)

@@ -40,7 +40,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sparvi_spark.config import check_lane, resolve_exact
-from sparvi_spark.functions import ident, local_df, rel, render_sql, sql_str
+from sparvi_spark.functions import (
+    ident, local_df, melt_sql, rel, render_sql, sql_str)
 
 # ---------------------------------------------------------------------------
 # type bucketing (reference: backend/core/metadata/collector.py:610-625)
@@ -330,9 +331,8 @@ def exact_percentiles(
     # selectExpr/expr calls — the Column-object form of this plan cost ~690
     # py4j round trips (~0.2 s, GIL-serialized) per build (see anomalies.py
     # module docstring for the measurement; the resolved plan is identical).
-    stack = ", ".join(f"'{c}', cast(`{c}` as double)" for c in cols)
     melted = (
-        df.selectExpr(f"stack({len(cols)}, {stack}) as (column_name, v)")
+        df.selectExpr(melt_sql(cols, "double"))
         .where("v is not null")
     )
     counts = melted.groupBy("column_name", "v").agg(
@@ -507,7 +507,8 @@ def exact_percentiles_refine(
 
     import os
 
-    ndf = df.selectExpr(*[f"cast(`{c}` as double) as `{c}`" for c in cols])
+    ndf = df.selectExpr(*[f"cast({ident(c)} as double) as {ident(c)}"
+                          for c in cols])
     # pass-1 memo (module doc above _BRACKET_CACHE): key on the SEMANTIC
     # hash of the input's analyzed plan, so two builds of the same query
     # over the same source share brackets while different frames never
@@ -524,9 +525,9 @@ def exact_percentiles_refine(
             cache_key = None
     if p1 is None:
         p1 = ndf.selectExpr(
-            *[f"count(`{c}`) as `{c}__n`" for c in cols],
-            *[f"percentile_approx(`{c}`, array({probe_arr}), "
-              f"{accuracy}) as `{c}__br`" for c in cols]).collect()[0]
+            *[f"count({ident(c)}) as {ident(c + '__n')}" for c in cols],
+            *[f"percentile_approx({ident(c)}, array({probe_arr}), "
+              f"{accuracy}) as {ident(c + '__br')}" for c in cols]).collect()[0]
         if cache_key is not None:
             _BRACKET_CACHE[cache_key] = p1
 
@@ -578,7 +579,7 @@ def exact_percentiles_refine(
             if c not in fallback_cols]
     structs = []
     for i, (c, _j, _n, wlo, whi) in enumerate(live):
-        v = f"`{c}`"
+        v = ident(c)
         # case order encodes strictness: 'b' strictly below, endpoint
         # runs 'l'/'h' as single count rows, 'i' strictly inside (the
         # >wlo is implied once the first two branches fail); values
@@ -903,16 +904,17 @@ def numeric_histogram(df: DataFrame, col: str, bins: int = 20) -> DataFrame:
     order — (v - mn) / ((mx - mn) / bins) — so any engine repeating the
     same IEEE ops bins identically (oracle-portable). Nulls are excluded.
     """
+    c = F.col(ident(col))
     stats = df.agg(
-        F.min(F.col(col).cast("double")).alias("__mn"),
-        F.max(F.col(col).cast("double")).alias("__mx"),
+        F.min(c.cast("double")).alias("__mn"),
+        F.max(c.cast("double")).alias("__mx"),
     )
     width = (F.col("__mx") - F.col("__mn")) / bins
-    v = F.col(col).cast("double")
+    v = c.cast("double")
     bin_ = F.when(F.col("__mx") == F.col("__mn"), F.lit(0)).otherwise(
         F.least(F.floor((v - F.col("__mn")) / width), F.lit(bins - 1)))
     return (
-        df.where(F.col(col).isNotNull())
+        df.where(c.isNotNull())
         .crossJoin(F.broadcast(stats))
         .select(bin_.cast("long").alias("bin"), "__mn", "__mx")
         .groupBy("bin", "__mn", "__mx")

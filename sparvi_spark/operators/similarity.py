@@ -18,18 +18,12 @@ from pyspark.sql import functions as F
 
 from sparvi_spark.config import FOLD_GRAM, resolve_backend
 from sparvi_spark.functions import local_df
-
-
-def dot_expr(a: str, b: str) -> Column:
-    """Deterministic fold-based dot product of two float arrays."""
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), "
-        f"cast(0 as double), (acc, v) -> acc + v)"
-    )
+from sparvi_spark.operators.vectors import (
+    array_sql, fold_dot_sql, map_vectors, vector_rows)
 
 
 def norm_expr(a: str) -> Column:
-    return F.sqrt(dot_expr(a, a))
+    return F.sqrt(F.expr(fold_dot_sql(a, a)))
 
 
 def _cosine_with_norms(a: str, b: str, norm_a: str, norm_b: str) -> Column:
@@ -40,8 +34,69 @@ def _cosine_with_norms(a: str, b: str, norm_a: str, norm_b: str) -> Column:
     -> 1. Zero-norm sides yield NULL through the nullif guard: under
     ANSI a bare /0.0 throws, and one zero-norm vector would kill the
     whole scan."""
-    return dot_expr(a, b) / F.nullif(F.col(norm_a) * F.col(norm_b),
-                                     F.lit(0.0))
+    return F.expr(fold_dot_sql(a, b)) / F.nullif(
+        F.col(norm_a) * F.col(norm_b), F.lit(0.0))
+
+
+def cosine_side(df: DataFrame, id_col: str, vec_col: str, id_alias: str,
+                side: str, bucket: Column | None = None) -> DataFrame:
+    """One side of a cosine join: (``id_alias``, ``{side}v`` vector,
+    ``{side}n`` norm[, ``{side}b`` bucket]), norms folded below the join."""
+    cols = [F.col(id_col).alias(id_alias), F.col(vec_col).alias(f"{side}v"),
+            norm_expr(vec_col).alias(f"{side}n")]
+    if bucket is not None:
+        cols.append(bucket.alias(f"{side}b"))
+    return df.select(*cols)
+
+
+def cosine_join(left: DataFrame, right: DataFrame, a: str, b: str,
+                pair: Column | None = None,
+                min_cosine: float | None = None) -> DataFrame:
+    """Join two ``cosine_side`` frames on their buckets (cross join without)
+    and add the cosine of the pairs that pass ``pair`` — filtered below
+    the cosine, so the folds run only for them — at least ``min_cosine``.
+    NULL and zero-norm vectors never score: their NULL/NaN/±inf cosine is
+    dropped (NaN sorts FIRST under desc, so noise would win rank 1)."""
+    joined = (left.join(right, F.col(f"{a}b") == F.col(f"{b}b"))
+              if f"{a}b" in left.columns else left.crossJoin(right))
+    if pair is not None:
+        joined = joined.where(pair)
+    cos = F.col("cosine")
+    keep = cos.isNotNull() & ~F.isnan(cos) & (F.abs(cos) != float("inf"))
+    if min_cosine is not None:
+        keep &= cos >= min_cosine
+    return (joined
+            .withColumn("cosine", _cosine_with_norms(
+                f"{a}v", f"{b}v", f"{a}n", f"{b}n"))
+            .where(keep))
+
+
+def _rank_tail(scored: DataFrame, score: str, order: Column, k: int,
+               neighbor: str = "neighbor_id") -> DataFrame:
+    """Each query's first ``k`` rows under ``order`` then neighbor id
+    ascending: (query_id, neighbor_id, rank, ``score`` rounded HALF_UP to
+    6 dp) — the output contract of every top-k search here."""
+    w = Window.partitionBy("query_id").orderBy(order, F.asc(neighbor))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k)
+            .select("query_id", F.col(neighbor).alias("neighbor_id"), "rank",
+                    F.round(score, 6).alias(score)))
+
+
+def _cosine_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
+                 vec_col: str, k: int, exclude_self: bool,
+                 corpus_bucket: Column | None = None,
+                 query_bucket: Column | None = None) -> DataFrame:
+    """The one cosine top-k: broadcast query side against the corpus side
+    (cross join without buckets, equi-join on bucket with them), exact
+    fold cosine, rank tail."""
+    c = cosine_side(corpus, id_col, vec_col, "neighbor_id", "c",
+                    corpus_bucket)
+    q = cosine_side(queries, id_col, vec_col, "query_id", "q", query_bucket)
+    scored = cosine_join(c, F.broadcast(q), "c", "q",
+                         F.col("neighbor_id") != F.col("query_id")
+                         if exclude_self else None)
+    return _rank_tail(scored, "cosine", F.desc("cosine"), k)
 
 
 def cosine_topk(
@@ -83,27 +138,7 @@ def cosine_topk(
     if backend == "gram":
         return _cosine_topk_gram(corpus, queries, id_col, vec_col, k,
                                  exclude_self, max_gram_queries)
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-                       norm_expr(vec_col).alias("qn"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
-                      norm_expr(vec_col).alias("cn"))
-    scored = c.crossJoin(F.broadcast(q)).withColumn(
-        "cosine", _cosine_with_norms("cv", "qv", "cn", "qn"))
-    if exclude_self:
-        scored = scored.where(F.col("neighbor_id") != F.col("query_id"))
-    # contract shared with the gram backend: NULL vectors and zero-norm
-    # vectors (±inf/NaN cosine) never rank — without this filter a NaN
-    # cosine sorts FIRST under desc (NaN > all doubles in Spark) and a
-    # noise row wins rank 1
-    scored = scored.where(F.col("cosine").isNotNull()
-                          & ~F.isnan("cosine")
-                          & (F.abs("cosine") != float("inf")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine"))
-    )
+    return _cosine_topk(corpus, queries, id_col, vec_col, k, exclude_self)
 
 
 def _cosine_topk_gram(corpus, queries, id_col, vec_col, k, exclude_self,
@@ -120,34 +155,26 @@ def _cosine_topk_gram(corpus, queries, id_col, vec_col, k, exclude_self,
             f"cosine_topk backend='gram' holds the query matrix in the "
             f"task closure; got >{max_queries} queries — raise "
             f"max_gram_queries or batch the queries")
-    if not qrows:
-        schema = (f"query_id {corpus.schema[id_col].dataType.simpleString()},"
-                  f" neighbor_id "
-                  f"{corpus.schema[id_col].dataType.simpleString()},"
-                  f" rank int, cosine double")
-        return local_df(corpus.sparkSession, [], schema)
+    id_type = corpus.schema[id_col].dataType.simpleString()
     qids = np.asarray([r[0] for r in qrows])
-    Q = np.asarray([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    Qn = np.sqrt((Q * Q).sum(axis=1))
-    live = Qn > 0.0  # zero-norm queries match nothing (fold filters
-    qids, Q, Qn = qids[live], Q[live], Qn[live]  # their inf/NaN cosines)
+    if qrows:
+        _mask, Q = vector_rows([r[1] for r in qrows])
+        Qn = np.sqrt((Q * Q).sum(axis=1))
+        live = Qn > 0.0  # zero-norm queries match nothing (fold filters
+        qids, Q, Qn = qids[live], Q[live], Qn[live]  # their inf/NaN cosines)
     if not len(qids):
-        id_type = corpus.schema[id_col].dataType.simpleString()
         return local_df(
             corpus.sparkSession, [], f"query_id {id_type}, neighbor_id "
                                      f"{id_type}, rank int, cosine double")
-    id_type = corpus.schema[id_col].dataType.simpleString()
     out_schema = (f"query_id {id_type}, neighbor_id {id_type}, "
                   f"cosine double")
 
     def local_topk(batches):
         for pdf in batches:
-            pdf = pdf[pdf[vec_col].notna()]
-            if not len(pdf):
+            mask, V = vector_rows(pdf[vec_col])
+            if not mask.any():
                 continue
-            V = np.asarray([np.asarray(x, dtype=np.float64)
-                            for x in pdf[vec_col]])
-            ids = pdf[id_col].to_numpy()
+            ids = pdf[id_col].to_numpy()[mask]
             Vn = np.sqrt((V * V).sum(axis=1))
             vzero = Vn == 0.0
             Vn[vzero] = np.inf
@@ -181,14 +208,10 @@ def _cosine_topk_gram(corpus, queries, id_col, vec_col, k, exclude_self,
         local_topk, out_schema)
     # merge order = the local_topk order (round-6 desc, id asc) — rank is
     # consistent with the EMITTED cosine, so duplicate vectors tie-break
-    # by id no matter which partition scored them (see local_topk note)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.bround("cosine", 6)), F.asc("neighbor_id"))  # bround =
-    # HALF_EVEN, matching np.round in local_topk (plain round is HALF_UP)
-    return (partial.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round("cosine", 6).alias("cosine")))
+    # by id no matter which partition scored them (see local_topk note);
+    # bround = HALF_EVEN, matching np.round in local_topk (plain round is
+    # HALF_UP)
+    return _rank_tail(partial, "cosine", F.desc(F.bround("cosine", 6)), k)
 
 
 def ivf_topk(
@@ -206,27 +229,8 @@ def ivf_topk(
     in production a trained coarse quantizer / LSH bucket). The join on
     bucket replaces the cross join — this is the 100 TB plan shape.
     """
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-                       F.col(bucket_col).alias("qb"), norm_expr(vec_col).alias("qn"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
-                      F.col(bucket_col).alias("cb"), norm_expr(vec_col).alias("cn"))
-    scored = (
-        c.join(F.broadcast(q), F.col("cb") == F.col("qb"))
-        .withColumn("cosine", _cosine_with_norms("cv", "qv", "cn", "qn"))
-    )
-    if exclude_self:
-        scored = scored.where(F.col("neighbor_id") != F.col("query_id"))
-    # NULL/zero-norm vectors (NULL/NaN/inf cosine) never rank — NaN sorts
-    # FIRST under desc in Spark, so an unfiltered noise row wins rank 1
-    scored = scored.where(F.col("cosine").isNotNull()
-                          & ~F.isnan("cosine")
-                          & (F.abs("cosine") != float("inf")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine"))
-    )
+    return _cosine_topk(corpus, queries, id_col, vec_col, k, exclude_self,
+                        F.col(bucket_col), F.col(bucket_col))
 
 
 def lsh_bucket_expr(vec_col: str, n_bits: int = 12, seed: int = 7) -> Column:
@@ -243,60 +247,14 @@ def lsh_bucket_expr(vec_col: str, n_bits: int = 12, seed: int = 7) -> Column:
     index is cast to long, matching the former bigint literal), one codegen
     block. At 100 TB the bucket assignment is one projection over the scan.
     """
-    comp = (f"(pmod(xxhash64(cast(b as long), cast(i as long), {seed}L), 2000000) "
+    comp = (f"(pmod(xxhash64(cast(b as long), cast(y as long), {seed}L), 2000000) "
             f"/ cast(1000000 as double) - 1.0)")
-    dot = (f"aggregate(zip_with({vec_col}, sequence(0, size({vec_col}) - 1), "
-           f"(x, i) -> cast(x as double) * {comp}), "
-           f"cast(0 as double), (acc, v) -> acc + v)")
+    dot = fold_dot_sql(vec_col, f"sequence(0, size({vec_col}) - 1)",
+                       f"cast(x as double) * {comp}")
     return F.expr(
         f"aggregate(transform(sequence(0, {n_bits - 1}), "
         f"b -> case when {dot} >= 0 then shiftleft(1L, b) else 0L end), "
         f"0L, (acc, x) -> acc | x)")
-
-
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_bits: int = 8,
-    seed: int = 7,
-    exclude_self: bool = True,
-) -> DataFrame:
-    """ANN top-k probing only the query's LSH bucket.
-
-    Same output contract as cosine_topk, restricted to same-bucket
-    candidates: recall depends on n_bits (fewer bits = bigger buckets =
-    higher recall, more compute). Multi-probe: union over several seeds.
-    """
-    bucket = lambda col: lsh_bucket_expr(col, n_bits=n_bits, seed=seed)  # noqa: E731
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-                       bucket(vec_col).alias("qb"), norm_expr(vec_col).alias("qn"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
-                      bucket(vec_col).alias("cb"), norm_expr(vec_col).alias("cn"))
-    scored = (
-        c.join(F.broadcast(q), F.col("cb") == F.col("qb"))
-        .withColumn("cosine", _cosine_with_norms("cv", "qv", "cn", "qn"))
-    )
-    if exclude_self:
-        scored = scored.where(F.col("neighbor_id") != F.col("query_id"))
-    # NULL/zero-norm vectors (NULL/NaN/inf cosine) never rank — NaN sorts
-    # FIRST under desc in Spark, so an unfiltered noise row wins rank 1
-    scored = scored.where(F.col("cosine").isNotNull()
-                          & ~F.isnan("cosine")
-                          & (F.abs("cosine") != float("inf")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine"))
-    )
-
-
-def _f(x: float) -> str:
-    """Full-precision float literal (repr round-trips IEEE doubles)."""
-    return repr(float(x))
 
 
 def centroid_probe_expr(
@@ -318,20 +276,10 @@ def centroid_probe_expr(
     ids = [int(b) for b, _ in centroids]
     vecs = [[float(x) for x in v] for _, v in centroids]
     invs = [1.0 / (sum(x * x for x in v) ** 0.5 or 1.0) for v in vecs]
-    # SQL text, not Column-API lits: PySpark expands a Python list literal
-    # into one py4j Literal call PER ELEMENT (512 round trips for 8x64),
-    # where this whole expression parses JVM-side in one call and
-    # ConstantFolding collapses each foldable array(...) to a single
-    # Literal node before codegen.
-    cents = "array(%s)" % ", ".join(
-        "array(%s)" % ", ".join(_f(x) for x in v) for v in vecs)
-    invl = "array(%s)" % ", ".join(_f(x) for x in invs)
     idl = "array(%s)" % ", ".join(str(i) for i in ids)
-    dot = (f"aggregate(zip_with({vec_col}, element_at({cents}, i + 1), "
-           f"(x, y) -> cast(x as double) * y), cast(0 as double), "
-           f"(acc, v) -> acc + v)")
+    dot = fold_dot_sql(vec_col, f"element_at({array_sql(vecs)}, i + 1)")
     scored = (f"transform(sequence(0, {len(ids) - 1}), i -> "
-              f"struct({dot} * element_at({invl}, i + 1) as s, "
+              f"struct({dot} * element_at({array_sql(invs)}, i + 1) as s, "
               f"-element_at({idl}, i + 1) as nb))")
     return F.expr(
         f"transform(slice(reverse(array_sort({scored})), 1, {nprobe}), "
@@ -343,15 +291,11 @@ def collect_centroids(
 ) -> list[tuple[int, list[float]]]:
     """Long-form (bucket, dim, centroid) -> [(bucket, vector)] — the tiny
     driver-side index handle (nlist × dim), NOT the data."""
-    rows = centroids_df.select(bucket_col, "dim", "centroid").collect()
     by_bucket: dict[int, dict[int, float]] = {}
-    for r in rows:
-        by_bucket.setdefault(int(r[0]), {})[int(r[1])] = float(r[2])
-    out = []
-    for b in sorted(by_bucket):
-        dims = by_bucket[b]
-        out.append((b, [dims[i] for i in range(len(dims))]))
-    return out
+    for b, d, c in centroids_df.select(bucket_col, "dim", "centroid").collect():
+        by_bucket.setdefault(int(b), {})[int(d)] = float(c)
+    return [(b, [dims[i] for i in range(len(dims))])
+            for b, dims in sorted(by_bucket.items())]
 
 
 def numpy_probe_assign(df: DataFrame, vec_col: str,
@@ -367,7 +311,6 @@ def numpy_probe_assign(df: DataFrame, vec_col: str,
     may differ from the fold in the final ULP, so a borderline row can
     land in an adjacent cell — parity checks stay on the fold path."""
     import numpy as np
-    import pandas as pd
 
     pairs = sorted(((int(b), [float(x) for x in v]) for b, v in centroids),
                    key=lambda t: t[0])  # argmax FIRST max = smallest id
@@ -376,29 +319,11 @@ def numpy_probe_assign(df: DataFrame, vec_col: str,
     inv = 1.0 / np.sqrt((C * C).sum(axis=1))
     inv[~np.isfinite(inv)] = 1.0  # zero centroid: same 'or 1.0' as fold
     Cn = C * inv[:, None]
-    out_schema = (", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                            for f in df.schema.fields)
-                  + f", {cell_col} int")
 
-    def assign(batches):
-        for pdf in batches:
-            mask = pdf[vec_col].notna().to_numpy()
-            cells = [None] * len(pdf)
-            if mask.any():
-                V = np.asarray([np.asarray(x, dtype=np.float64)
-                                for x in pdf[vec_col][mask]])
-                best = (V @ Cn.T).argmax(axis=1)
-                picked = cell_ids[best]
-                j = 0
-                for i, m in enumerate(mask):
-                    if m:
-                        cells[i] = int(picked[j])
-                        j += 1
-            pdf = pdf.copy()
-            pdf[cell_col] = pd.array(cells, dtype="Int32")
-            yield pdf
+    def assign(V):
+        return {cell_col: cell_ids[(V @ Cn.T).argmax(axis=1)]}
 
-    return df.mapInPandas(assign, out_schema)
+    return map_vectors(df, vec_col, {cell_col: "int"}, assign)
 
 
 def ivf_topk_trained(
@@ -430,40 +355,14 @@ def ivf_topk_trained(
     assign_backend = resolve_backend(assign_backend, "gram",
                                      allowed=FOLD_GRAM, lane="assign_backend")
     if assign_backend == "gram":
-        c = (numpy_probe_assign(
-                corpus.select(F.col(id_col), F.col(vec_col)),
-                vec_col, centroids, "__cell")
-             .select(F.col(id_col).alias("neighbor_id"),
-                     F.col(vec_col).alias("cv"),
-                     F.col("__cell").alias("cb"))
-             .withColumn("cn", norm_expr("cv")))
+        corpus = numpy_probe_assign(
+            corpus.select(F.col(id_col), F.col(vec_col)), vec_col, centroids)
+        cell = F.col("__cell")
     else:
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
-            centroid_probe_expr(vec_col, centroids, nprobe=1)[0].alias("cb"),
-            norm_expr(vec_col).alias("cn"))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        F.explode(centroid_probe_expr(vec_col, centroids, nprobe=nprobe))
-        .alias("qb"),
-        norm_expr(vec_col).alias("qn"))
-    scored = (
-        c.join(F.broadcast(q), F.col("cb") == F.col("qb"))
-        .withColumn("cosine", _cosine_with_norms("cv", "qv", "cn", "qn"))
-    )
-    if exclude_self:
-        scored = scored.where(F.col("neighbor_id") != F.col("query_id"))
-    # NULL/zero-norm vectors (NULL/NaN/inf cosine) never rank — NaN sorts
-    # FIRST under desc in Spark, so an unfiltered noise row wins rank 1
-    scored = scored.where(F.col("cosine").isNotNull()
-                          & ~F.isnan("cosine")
-                          & (F.abs("cosine") != float("inf")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine"))
-    )
+        cell = centroid_probe_expr(vec_col, centroids, nprobe=1)[0]
+    probes = F.explode(centroid_probe_expr(vec_col, centroids, nprobe=nprobe))
+    return _cosine_topk(corpus, queries, id_col, vec_col, k, exclude_self,
+                        cell, probes)
 
 
 def kmeans_train(
@@ -484,21 +383,35 @@ def kmeans_train(
     posexplode/groupBy mean (bucket_centroids); only the nlist × dim
     centroid table ever reaches the driver. Empty cells keep their previous
     centroid."""
+    cents = [(i, [float(x) for x in r[1]])
+             for i, r in enumerate(_seed_rows(df, id_col, vec_col, k))]
+    return _lloyd(df, vec_col, cents, iters, lambda d, cs: d.select(
+        F.col(vec_col),
+        centroid_probe_expr(vec_col, cs, nprobe=1)[0].alias("__cell")))
+
+
+def _seed_rows(df: DataFrame, id_col: str, vec_col: str, n: int) -> list:
+    """The ``n`` (id, vector) rows with the smallest portable affine id
+    hash — the deterministic k-means seed and training sample.
+    ``orderBy(hash).limit(n)`` compiles to TakeOrderedAndProject
+    (per-partition top-n merged on the driver, no global sort)."""
     from sparvi_spark.operators.sampling import hash_expr
 
-    seed_rows = (
-        df.select(F.col(id_col), F.col(vec_col))
-        .orderBy(hash_expr(id_col), F.col(id_col))
-        .limit(k)
-        .collect()
-    )
-    cents = [(i, [float(x) for x in r[1]]) for i, r in enumerate(seed_rows)]
+    return (df.select(F.col(id_col), F.col(vec_col))
+            .orderBy(hash_expr(id_col), F.col(id_col))
+            .limit(n)
+            .collect())
+
+
+def _lloyd(df: DataFrame, vec_col: str, cents: list, iters: int,
+           assign) -> list[tuple[int, list[float]]]:
+    """Lloyd's iterations from ``cents`` [(cell, vector)]: a map-only
+    ``assign(df, cents)`` -> (``vec_col``, __cell), then the decimal-exact
+    cell means at 9 dp. Empty cells keep their previous centroid."""
     for _ in range(iters):
-        assigned = df.select(
-            F.col(vec_col),
-            centroid_probe_expr(vec_col, cents, nprobe=1)[0].alias("__cell"))
         new = collect_centroids(
-            bucket_centroids(assigned, "__cell", vec_col, round_to=9),
+            bucket_centroids(assign(df, cents), "__cell", vec_col,
+                             round_to=9),
             bucket_col="__cell")
         merged = dict(cents)
         merged.update(dict(new))
@@ -533,22 +446,17 @@ def kmeans_train_sampled(
     """
     import numpy as np
 
-    from sparvi_spark.operators.sampling import hash_expr
-
     # NULL vectors carry no training signal and would crash the numpy
     # stack — drop them BEFORE the top-k sample so a sparse corpus still
     # fills the sample with real rows
-    rows = (df.select(F.col(id_col), F.col(vec_col))
-            .where(F.col(vec_col).isNotNull())
-            .orderBy(hash_expr(id_col), F.col(id_col))
-            .limit(sample_size)
-            .collect())
+    rows = _seed_rows(df.where(F.col(vec_col).isNotNull()), id_col, vec_col,
+                      sample_size)
     if len(rows) < k:
         raise ValueError(
             f"kmeans_train_sampled: need at least k={k} rows to seed "
             f"k clusters, sample holds {len(rows)} — lower k or grow "
             f"the input")
-    x = np.array([[float(v) for v in r[1]] for r in rows], dtype="float64")
+    _mask, x = vector_rows([r[1] for r in rows])
     cents = x[:k].copy()  # rows arrive in hash order — same init rule
     xsq = (x ** 2).sum(axis=1)[:, None]
     for _ in range(iters):
@@ -625,18 +533,19 @@ def _l2_dists_expr(vec_expr: str, centroids: list[list[float]]) -> str:
     parity with the DuckDB oracle holds because both engines evaluate the
     fold left-associated from a 0.0 seed over terms in index order —
     exactly the order the unrolled chain used."""
-    books = ", ".join(
-        "array(" + ", ".join(_f(x) for x in c) + ")" for c in centroids)
-    return (
-        f"transform(array({books}), c -> "
-        f"aggregate(zip_with({vec_expr}, c, "
-        f"(x, y) -> (cast(x as double) - y) * (cast(x as double) - y)), "
-        f"cast(0 as double), (acc, v) -> acc + v))")
+    return (f"transform({array_sql(centroids)}, c -> " + fold_dot_sql(
+        vec_expr, "c", "(cast(x as double) - y) * (cast(x as double) - y)")
+        + ")")
 
 
-def _subslice(vec_col: str, s: int, sub_dim: int) -> str:
-    # Spark slice() is 1-based
-    return f"slice({vec_col}, {s * sub_dim + 1}, {sub_dim})"
+def _subspace_dists(vec_col: str, codebooks: list[list[list[float]]],
+                    prefix: str) -> list[Column]:
+    """One ``_l2_dists_expr`` column per PQ subspace (``{prefix}{s}``) over
+    the matching slice of ``vec_col`` (Spark slice() is 1-based)."""
+    sub_dim = len(codebooks[0][0])
+    return [F.expr(_l2_dists_expr(
+                f"slice({vec_col}, {s * sub_dim + 1}, {sub_dim})", book))
+            .alias(f"{prefix}{s}") for s, book in enumerate(codebooks)]
 
 
 def pq_train(
@@ -657,8 +566,6 @@ def pq_train(
     their centroid. m×iters small jobs total — training is one-off and
     amortized, exactly like the IVF trainer.
     """
-    from sparvi_spark.operators.sampling import hash_expr
-
     first = df.select(F.col(vec_col)).first()
     if first is None:
         raise ValueError("pq_train: empty input")
@@ -667,30 +574,21 @@ def pq_train(
         raise ValueError(f"pq_train: dim {dim} not divisible by m {m}")
     sub_dim = dim // m
 
-    seed_rows = (
-        df.select(F.col(id_col), F.col(vec_col))
-        .orderBy(hash_expr(id_col), F.col(id_col))
-        .limit(k)
-        .collect()
-    )
+    def assign(sub, cents):
+        dists = F.expr(_l2_dists_expr("__sub", [v for _i, v in cents]))
+        return (sub.select("__sub", dists.alias("__d"))
+                .select("__sub", l2_argmin_expr("__d").alias("__cell")))
+
+    seed_rows = _seed_rows(df, id_col, vec_col, k)
     books: list[list[list[float]]] = []
     for s in range(m):
         lo = s * sub_dim
-        cents = [[float(x) for x in r[1][lo:lo + sub_dim]] for r in seed_rows]
-        sub = df.select(F.expr(_subslice(vec_col, s, sub_dim)).alias("__sub"))
-        for _ in range(iters):
-            assigned = (
-                sub.select(
-                    "__sub",
-                    F.expr(_l2_dists_expr("__sub", cents)).alias("__d"))
-                .select("__sub", l2_argmin_expr("__d").alias("__cell")))
-            new = collect_centroids(
-                bucket_centroids(assigned, "__cell", "__sub", round_to=9),
-                bucket_col="__cell")
-            merged = {i: c for i, c in enumerate(cents)}
-            merged.update(dict(new))
-            cents = [merged[i] for i in sorted(merged)]
-        books.append(cents)
+        sub = df.select(F.expr(f"slice({vec_col}, {lo + 1}, {sub_dim})")
+                        .alias("__sub"))
+        cents = [(i, [float(x) for x in r[1][lo:lo + sub_dim]])
+                 for i, r in enumerate(seed_rows)]
+        books.append([v for _i, v in _lloyd(sub, "__sub", cents, iters,
+                                            assign)])
     return books
 
 
@@ -705,12 +603,10 @@ def pq_encode(
     subspace — m literal-centroid argmin projections, zero shuffle, the
     map-only pass that turns a 100 TB float corpus into a byte-coded one.
     ``keep_cols`` pass through unchanged (e.g. the IVF cell)."""
-    sub_dim = len(codebooks[0][0])
     staged = df.select(
         F.col(id_col).alias("vec_id"),
         *[F.col(c) for c in keep_cols],
-        *[F.expr(_l2_dists_expr(_subslice(vec_col, s, sub_dim), book))
-          .alias(f"__d{s}") for s, book in enumerate(codebooks)])
+        *_subspace_dists(vec_col, codebooks, "__d"))
     codes = F.array(*[l2_argmin_expr(f"__d{s}")
                       for s in range(len(codebooks))])
     return staged.select("vec_id", *keep_cols, codes.alias("codes"))
@@ -735,27 +631,27 @@ def pq_topk(
     re-ranking the top candidates with exact distance is the standard
     refinement and composes as cosine_topk over the returned ids.
     """
-    sub_dim = len(codebooks[0][0])
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        *[F.expr(_l2_dists_expr(_subslice(vec_col, s, sub_dim), book))
-          .alias(f"__qt{s}") for s, book in enumerate(codebooks)])
+    q = queries.select(F.col(id_col).alias("query_id"),
+                       F.col(vec_col).alias("__qv"))
+    return _adc_topk(corpus_codes, q, codebooks, F.lit(True), k,
+                     exclude_self)
+
+
+def _adc_topk(codes: DataFrame, q: DataFrame, codebooks, on: Column,
+              k: int, exclude_self: bool) -> DataFrame:
+    """The one ADC tail: per query row (query_id[, join keys], __qv — the
+    vector PQ coded), m distance tables; broadcast join to the coded
+    corpus ``on``; score = m table lookups; rank ascending."""
+    qt = q.select(*[c for c in q.columns if c != "__qv"],
+                  *_subspace_dists("__qv", codebooks, "__qt"))
     score = " + ".join(
         f"element_at(__qt{s}, codes[{s}] + 1)" for s in range(len(codebooks)))
-    scored = (
-        corpus_codes.join(F.broadcast(q),
-                          F.col("vec_id") != F.col("query_id")
-                          if exclude_self else F.lit(True))
-        .withColumn("adc_dist", F.expr(score))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"),
-                                               F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "rank",
-                F.round("adc_dist", 6).alias("adc_dist"))
-    )
+    scored = (codes.join(F.broadcast(qt), on)
+              .withColumn("adc_dist", F.expr(score)))
+    if exclude_self:
+        scored = scored.where(F.col("vec_id") != F.col("query_id"))
+    return _rank_tail(scored, "adc_dist", F.asc("adc_dist"), k,
+                      neighbor="vec_id")
 
 
 # ---------------------------------------------------------------------------
@@ -797,18 +693,19 @@ def _residual_frame(
     df: DataFrame, centroids, id_col: str, vec_col: str
 ) -> DataFrame:
     """(id, __cell, __res): assigned coarse cell + residual vector, one
-    projection (literal centroids, zip_with subtraction)."""
-    cent_arr = "array(" + ", ".join(
-        "array(" + ", ".join(_f(x) for x in vec) + ")"
-        for _b, vec in sorted(centroids)) + ")"
-    assigned = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        centroid_probe_expr(vec_col, centroids, nprobe=1)[0].alias("__cell"))
-    return assigned.select(
-        id_col, "__cell",
-        F.expr(f"zip_with({vec_col}, element_at({cent_arr}, __cell + 1), "
-               f"(x, c) -> cast(x as double) - c)").alias("__res"))
+    projection."""
+    cell = centroid_probe_expr(vec_col, centroids, nprobe=1)[0]
+    return (df.select(F.col(id_col), F.col(vec_col), cell.alias("__cell"))
+            .select(id_col, "__cell",
+                    _residual(vec_col, "__cell", centroids).alias("__res")))
+
+
+def _residual(vec_col: str, cell_col: str, centroids) -> Column:
+    """``vec_col`` minus its cell's centroid (literal centroids in cell
+    order, zip_with subtraction)."""
+    cents = array_sql([vec for _b, vec in sorted(centroids)])
+    return F.expr(f"zip_with({vec_col}, element_at({cents}, {cell_col} + 1), "
+                  f"(x, c) -> cast(x as double) - c)")
 
 
 def ivfpq_encode(
@@ -840,36 +737,11 @@ def ivfpq_topk(
     computed in-plan, per (query, cell)); the equi-join on cell prunes the
     corpus; scoring is m array lookups. Returns (query_id, neighbor_id,
     rank, adc_dist)."""
-    sub_dim = len(codebooks[0][0])
-    cent_arr = "array(" + ", ".join(
-        "array(" + ", ".join(_f(x) for x in vec) + ")"
-        for _b, vec in sorted(centroids)) + ")"
     probes = centroid_probe_expr(vec_col, centroids, nprobe=nprobe)
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"),
         F.explode(probes).alias("qcell"))
-    qres = q.select(
-        "query_id", "qcell",
-        F.expr(f"zip_with(__qv, element_at({cent_arr}, qcell + 1), "
-               f"(x, c) -> cast(x as double) - c)").alias("__qres"))
-    qt = qres.select(
-        "query_id", "qcell",
-        *[F.expr(_l2_dists_expr(_subslice("__qres", s, sub_dim), book))
-          .alias(f"__qt{s}") for s, book in enumerate(codebooks)])
-    score = " + ".join(
-        f"element_at(__qt{s}, codes[{s}] + 1)" for s in range(len(codebooks)))
-    scored = (
-        corpus_index.join(F.broadcast(qt),
-                          F.col("cell") == F.col("qcell"))
-        .withColumn("adc_dist", F.expr(score))
-    )
-    if exclude_self:
-        scored = scored.where(F.col("vec_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"),
-                                               F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "rank",
-                F.round("adc_dist", 6).alias("adc_dist"))
-    )
+    qres = q.select("query_id", "qcell",
+                    _residual("__qv", "qcell", centroids).alias("__qv"))
+    return _adc_topk(corpus_index, qres, codebooks,
+                     F.col("cell") == F.col("qcell"), k, exclude_self)

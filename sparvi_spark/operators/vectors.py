@@ -17,12 +17,77 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sparvi_spark.functions import ident
+
+_DOT = "cast(x as double) * cast(y as double)"
+
+
+def _f(x: float) -> str:
+    """Full-precision float literal (repr round-trips IEEE doubles)."""
+    return repr(float(x))
+
+
+def array_sql(values) -> str:
+    """Nested ``array(...)`` literal text over ``_f`` leaves. Trained state
+    (centroids, codebooks, PCA components) rides a plan as this SQL text,
+    not as Column-API lits: PySpark expands a Python list literal into one
+    py4j Literal call PER ELEMENT, where this text parses JVM-side in one
+    call and ConstantFolding collapses each foldable ``array(...)`` to a
+    single Literal node before codegen."""
+    return "array(%s)" % ", ".join(
+        array_sql(v) if isinstance(v, (list, tuple)) else _f(v)
+        for v in values)
+
+
+def fold_dot_sql(a: str, b: str, term: str = _DOT) -> str:
+    """``term`` over ``zip_with(a, b)`` summed left from a 0.0 seed in
+    index order — the deterministic summation the DuckDB oracles repeat.
+    The default term is the dot product over doubles."""
+    return (f"aggregate(zip_with({a}, {b}, (x, y) -> {term}), "
+            f"cast(0 as double), (acc, v) -> acc + v)")
+
+
+def vector_rows(cells):
+    """(mask, V): which array cells of a batch are non-NULL, and those
+    cells as one float64 row matrix — every numpy vector kernel's input."""
+    import numpy as np
+    import pandas as pd
+
+    cells = pd.Series(cells, dtype=object)
+    mask = cells.notna().to_numpy()
+    return mask, np.asarray([np.asarray(x, dtype=np.float64)
+                             for x in cells[mask]])
+
+
+def map_vectors(df: DataFrame, vec_col: str, cols: dict[str, str],
+                fn) -> DataFrame:
+    """Append ``cols`` ({name: "int" | "double"}) via ``mapInPandas``:
+    ``fn(V)`` maps each batch's ``vector_rows`` matrix to {name: values};
+    rows with a NULL vector get NULL."""
+    import numpy as np
+    import pandas as pd
+
+    out_schema = ", ".join(
+        [f"{ident(f.name)} {f.dataType.simpleString()}"
+         for f in df.schema.fields] + [f"{n} {t}" for n, t in cols.items()])
+
+    def run(batches):
+        for pdf in batches:
+            mask, V = vector_rows(pdf[vec_col])
+            got = fn(V) if mask.any() else {}
+            pdf = pdf.copy()
+            for name, typ in cols.items():
+                vals = np.full(len(pdf), np.nan)
+                vals[mask] = got.get(name, ())
+                pdf[name] = pd.array(vals, "Int32") if typ == "int" else vals
+            yield pdf
+
+    return df.mapInPandas(run, out_schema)
+
 
 def l2_normalize_expr(vec_col: str) -> Column:
     """Unit-norm copy of a float-array column (zero vectors pass through)."""
-    norm = (f"sqrt(aggregate(zip_with({vec_col}, {vec_col}, "
-            f"(x, y) -> cast(x as double) * y), cast(0 as double), "
-            f"(acc, v) -> acc + v))")
+    norm = f"sqrt({fold_dot_sql(vec_col, vec_col)})"
     return F.expr(
         f"case when {norm} = 0.0 then transform({vec_col}, x -> cast(x as double)) "
         f"else transform({vec_col}, x -> cast(x as double) / {norm}) end")
@@ -32,7 +97,7 @@ def gram_matrix(df: DataFrame, vec_col: str = "embedding"):
     """(count, mean vector, covariance matrix) of a vector column as numpy
     arrays — the KB-sized training statistics.
 
-    Plan: one mapInPandas pass emits per-batch (n, sum, flattened X^T X);
+    Plan: one mapInPandas pass emits per-batch [n, sum, flattened X^T X];
     a posexplode + groupBy folds them element-wise (shuffle carries
     d + d^2 rows per batch, not data); the driver assembles covariance
     = E[xx^T] - mean mean^T from the single folded row set.
@@ -43,34 +108,22 @@ def gram_matrix(df: DataFrame, vec_col: str = "embedding"):
         import pandas as pd
 
         for pdf in batches:
-            mat = np.array(pdf[vec_col].tolist(), dtype="float64")
-            if mat.size == 0:
-                continue
-            yield pd.DataFrame({
-                "n": [int(mat.shape[0])],
-                "s": [mat.sum(axis=0).tolist()],
-                "g": [(mat.T @ mat).ravel().tolist()],
-            })
+            _mask, mat = vector_rows(pdf[vec_col])
+            if mat.size:  # one row per batch: [n, sum..., X^T X...]
+                yield pd.DataFrame({"v": [np.concatenate((
+                    [mat.shape[0]], mat.sum(axis=0), (mat.T @ mat).ravel()
+                )).tolist()]})
 
-    parts = df.select(vec_col).where(F.col(vec_col).isNotNull()).mapInPandas(
-        batch_stats, "n long, s array<double>, g array<double>")
-    folded = (
-        parts.select(
-            "n",
-            F.posexplode(
-                F.concat(F.col("s"), F.col("g"))).alias("i", "v"))
-        .groupBy("i").agg(F.sum("v").alias("v"),
-                          F.sum(F.when(F.col("i") == 0, F.col("n"))
-                                .otherwise(0)).alias("__n"))
-    )
-    rows = folded.collect()
-    total_n = int(sum(r["__n"] for r in rows))
-    if total_n == 0:
+    flat = dict(df.select(vec_col).where(F.col(vec_col).isNotNull())
+                .mapInPandas(batch_stats, "v array<double>")
+                .select(F.posexplode("v").alias("i", "v"))
+                .groupBy("i").agg(F.sum("v")).collect())
+    if not flat:
         raise ValueError("gram_matrix: no vectors")
-    flat = {r["i"]: r["v"] for r in rows}
-    d = int(round((-1 + (1 + 4 * len(flat)) ** 0.5) / 2))  # d + d^2 entries
-    s = np.array([flat[i] for i in range(d)])
-    g = np.array([flat[d + i] for i in range(d * d)]).reshape(d, d)
+    total_n = int(flat[0])
+    d = int(round((-1 + (4 * len(flat) - 3) ** 0.5) / 2))  # 1 + d + d^2
+    s = np.array([flat[1 + i] for i in range(d)])
+    g = np.array([flat[1 + d + i] for i in range(d * d)]).reshape(d, d)
     mean = s / total_n
     cov = g / total_n - np.outer(mean, mean)
     return total_n, mean, cov
@@ -102,16 +155,10 @@ def pca_project_expr(
     """array<double> of PCA coordinates — a map-only projection with the
     trained mean/components inlined as array literals (fold per component,
     same compact-literal pattern as the PQ distance tables)."""
-    from sparvi_spark.operators.similarity import _f
-
-    mean_lit = "array(" + ", ".join(_f(x) for x in mean) + ")"
-    comp_lits = ", ".join(
-        "array(" + ", ".join(_f(x) for x in c) + ")" for c in components)
-    centered = (f"zip_with({vec_col}, {mean_lit}, "
+    centered = (f"zip_with({vec_col}, {array_sql(mean)}, "
                 f"(x, m) -> cast(x as double) - m)")
-    proj = (f"transform(array({comp_lits}), c -> "
-            f"aggregate(zip_with({centered}, c, (x, w) -> x * w), "
-            f"cast(0 as double), (acc, v) -> acc + v))")
+    proj = (f"transform({array_sql(components)}, c -> "
+            f"{fold_dot_sql(centered, 'c')})")
     if round_to is not None:
         proj = f"transform({proj}, x -> round(x, {round_to}))"
     return F.expr(proj)

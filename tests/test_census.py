@@ -195,15 +195,11 @@ TEST_ONLY = {
     "sparvi_spark/operators/classify.py:train_nb_classifier",
     "sparvi_spark/operators/classify.py:save_classifier",
     "sparvi_spark/operators/classify.py:load_classifier",
-    "sparvi_spark/operators/corpus.py:corpus_diff_summary",
     "sparvi_spark/operators/incremental.py:incremental_profile",
     "sparvi_spark/operators/incremental.py:bucket_bounds",
     "sparvi_spark/operators/joins.py:salted_join",
     "sparvi_spark/operators/joins.py:broadcast_threshold_join",
-    "sparvi_spark/operators/multimodal.py:resize_images",
-    "sparvi_spark/operators/multimodal.py:sample_frames",
     "sparvi_spark/operators/sampling.py:temperature_sample",
-    "sparvi_spark/operators/similarity.py:lsh_topk",
     "sparvi_spark/operators/text.py:repetition_features",
     "sparvi_spark/operators/text.py:dedup_lines_in_doc",
     "sparvi_spark/operators/text.py:pack_summary",

@@ -203,3 +203,53 @@ def test_hostile_column_names_profile_and_schema_like_plain_twins(
             ("column_removed", "_t", None, True),
             ("column_added", "_new", None, False)}
     assert by_col == {n: want for n in names}
+
+
+def test_hostile_column_names_melt_like_plain_twins(spark, tmp_path):
+    """Every operator that melts columns into (column_name, value) rows,
+    the exact-percentile refine pass and both numeric histograms give a
+    hostile-named column exactly the plain-named twin's answer: the melt
+    renders names through ``functions.melt_sql`` (string literal plus
+    quoted identifier), not by hand."""
+    from pyspark.sql import types as T
+
+    from sparvi_spark.engine import Engine
+    from sparvi_spark.functions import local_df
+    from sparvi_spark.operators import drift, profile
+
+    names = ["plain"] + HOSTILE_NAMES
+    nums = [1.5, None, 2.25, 1.5, -3.0, 0.0, 1.5, 4.0]
+    schema = T.StructType([T.StructField(n, T.DoubleType()) for n in names])
+    df = local_df(spark, [(v,) * len(names) for v in nums], schema)
+    later = local_df(spark, [(None if v is None else v + 1.0,) * len(names)
+                             for v in nums], schema)
+
+    def by_name(rows, key="column_name"):
+        out: dict = {}
+        for r in rows:
+            d = r.asDict()
+            out.setdefault(d.pop(key), []).append(tuple(sorted(d.items())))
+        return {k: sorted(v) for k, v in out.items()}
+
+    engine = Engine(spark, str(tmp_path / "wh"))
+    engine.save_drift_baseline(df, "hostile", names, bins=4,
+                               as_of="2026-01-01 00:00:00")
+    results = {
+        "exact_percentiles": profile.exact_percentiles(df, names),
+        "exact_percentiles_refine": profile.exact_percentiles_refine(
+            df, names, bracket_cache=False),
+        "exact_percentiles_refine_window": profile.exact_percentiles_refine(
+            df, names, tie_shortcut=False, bracket_cache=False),
+        "drift.numeric_histogram": drift.numeric_histogram(df, names, 4),
+        "run_drift_check": engine.run_drift_check(
+            later, "hostile", as_of="2026-01-02 00:00:00"),
+    }
+    for op, frame in results.items():
+        got = by_name(frame.collect())
+        assert set(got) == set(names), op
+        assert got["plain"], op
+        for n in HOSTILE_NAMES:
+            assert got[n] == got["plain"], (op, n)
+    plain = profile.numeric_histogram(df, "plain", bins=4).collect()
+    for n in HOSTILE_NAMES:
+        assert profile.numeric_histogram(df, n, bins=4).collect() == plain, n
