@@ -1,12 +1,17 @@
-"""Dump .explain("formatted") for every declared check to plans/<tag>/.
+"""Dump .explain("formatted") for every graded and EXTRA check to plans/<tag>/.
 
 Usage: python scripts/dump_plans.py <tag> [suffix] [name_prefix ...]
-Writes plans/<tag>/<check>_<suffix>.txt (suffix default "before").
+Writes plans/<tag>/<check>_<suffix>.txt (suffix default "before"), with
+expression ids (``#123``) written as ``#`` and exchange ids
+(``plan_id=123``) as ``plan_id=``, so two dumps of the same tree are
+byte-identical: ``diff -r plans/<parent> plans/<change>`` lists the
+checks whose physical plan a change moved.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -20,7 +25,7 @@ def main() -> None:
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     prefixes = sys.argv[3:]
 
-    from sparvi_spark.checks import collect_all_checks
+    from sparvi_spark.checks import collect_all_checks, collect_extra_checks
     from sparvi_spark.session import get_spark
 
     out_dir = os.path.join(ROOT, "plans", tag)
@@ -29,13 +34,16 @@ def main() -> None:
     spark = get_spark("dump_plans")
     spark.sparkContext.setLogLevel("ERROR")
 
-    for name, (fn, _sql) in sorted(collect_all_checks(prepared=False).items()):
+    checks = collect_all_checks(prepared=False)
+    checks.update(collect_extra_checks())
+    for name, (fn, _sql) in sorted(checks.items()):
         if prefixes and not any(name.startswith(p) for p in prefixes):
             continue
         try:
             df = fn(spark, SF_DIR)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted")
+            plan = re.sub(r"(#|plan_id=)\d+", r"\1", plan)
         except Exception as exc:
             plan = f"ERROR building {name}: {exc}"
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:

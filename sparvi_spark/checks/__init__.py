@@ -197,10 +197,12 @@ def melted_check(parts):
 # check frames with NO action costs the same wall as build+execute). Hot
 # builders therefore render ONE Spark-SQL statement over pre-registered
 # temp views of the testdata tables and call spark.sql once: one round
-# trip, one analysis of the final plan. The resolved plan is the same one
-# the chained form produced — the expression text is shared with (or
-# copied verbatim from) the operator modules — so every value is
-# bit-identical; scripts/snapshot_checks.py pins that across refactors.
+# trip, one analysis of the final plan. The expression text is the
+# operator modules' own SQL-text builders (anomalies, profile,
+# schema_diff, trends, drift), so a statement resolves to the plan the
+# operator builds and every value is bit-identical;
+# scripts/snapshot_checks.py pins that across refactors. The few parts
+# still written by hand are listed in merged_checks.py's docstring.
 _VIEWS: dict[tuple[int, str], dict[str, str]] = {}
 _VIEW_LOCK = None  # created lazily; threading import kept off the hot path
 

@@ -36,18 +36,32 @@ clf_pr, e18/e19 (vocabulary drift + TVD) as x24_drift parts vocab /
 vocab_tvd. The AUC and PR parts deliberately derive from ONE identical
 grouped subplan (classify._score_class_counts) so the union's physical
 plan ReusedExchange runs the scoring pass once for both.
+
+Spark sides: the a01, t02, t03, x24 and the retention and metric-history
+parts render the operators' own SQL-text builders (operators/anomalies.py,
+operators/trends.py, operators/drift.py), so a graded slot and the
+operator it grades run one text. The x13 sampling and dedup-corpus parts,
+the p14 preview and top-tokens parts and the x27 evaluation parts are
+still hand-written copies of their operators.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from sparvi_spark.checks import aligned_union_check, melted_check, union_check
+from sparvi_spark.checks import (
+    aligned_union_check,
+    melt_part_sql,
+    melted_check,
+    table_views,
+    union_check,
+)
 from sparvi_spark.checks.anomaly_checks import (
     SQL_IQR_GLOBAL,
     SQL_IQR_ROLLING,
     SQL_ZSCORE_GLOBAL,
     SQL_ZSCORE_ROLLING,
+    _series_view,
     q_anomaly_scores_4way,
     q_iqr_global,
     q_iqr_rolling,
@@ -114,12 +128,25 @@ from sparvi_spark.checks.trend_checks import (
     SQL_HEALTH_SUMMARY,
     SQL_METRIC_HISTORY,
     SQL_RETENTION,
+    anomaly_summary_combined_sql,
+    daily_rollup_sql,
+    dashboard_sql,
+    health_summary_sql,
+    metric_history_sql,
     q_anomaly_summary_combined,
     q_daily_rollup,
     q_dashboard_combined,
     q_health_summary,
     q_metric_history,
     q_retention,
+    retention_sql,
+)
+from sparvi_spark.functions import ident, sql_str
+from sparvi_spark.operators.drift import (
+    categorical_drift_sql,
+    numeric_drift_sql,
+    vocab_drift_sql,
+    vocab_tvd_sql,
 )
 
 _PAIR_PAD = {"shared": "CAST(NULL AS DOUBLE)", "sz_a": "CAST(NULL AS DOUBLE)",
@@ -282,7 +309,7 @@ def q_doc_scores_fused(spark, sf_dir):
     materializations from a 2-thread pool (guide §2.6) was tried and
     measured a wash with extra variance — the jobs are too short for
     tail back-fill to pay on this workload — so they stay sequential."""
-    from sparvi_spark.checks import dir_tag, melt_part_sql
+    from sparvi_spark.checks import dir_tag
     from sparvi_spark.checks.pipeline_checks import (
         CLF_BIAS,
         _clf_weights,
@@ -356,175 +383,63 @@ def q_doc_scores_fused(spark, sf_dir):
         "clf_auc": auc,
         "clf_pr": pr,
     }
-    sql = " UNION ALL ".join(
-        melt_part_sql(part_sqls[tag_], tag_, keys, nums, strs)
-        for tag_, _f, _sql, keys, nums, strs in _X27_PARTS)
-    return spark.sql(sql)
+    return _melt_statement(spark, _X27_PARTS, part_sqls)
 
 
 # ---------------------------------------------------------------------------
-# r12 one-statement Spark builders for the remaining hot slots: each slot
-# renders ONE Spark-SQL statement over per-(session, sf_dir) temp views
-# (see checks/__init__ _VIEWS comment) and calls spark.sql once, replacing
-# 15-40 chained Dataset creations (each a py4j round trip + eager
-# re-analysis). The anomaly parts call the detector and format builders
-# of operators/anomalies.py, the one text both the operators and the
-# checks run. The other parts mirror their part builders' expression text
-# stage for stage, so every value is bit-identical — pinned by
-# scripts/snapshot_checks.py at all three SFs, and by the unchanged
-# DuckDB oracle SQL (still generated from the same part specs).
+# r12 one-statement Spark builders: each slot renders ONE Spark-SQL
+# statement over per-(session, sf_dir) temp views (see checks/__init__
+# _VIEWS comment) and calls spark.sql once, replacing 15-40 chained
+# Dataset creations (each a py4j round trip + eager re-analysis). The
+# anomaly, trend and drift parts render the SQL-text builders of
+# operators/anomalies.py, operators/trends.py and operators/drift.py (the
+# trend compositions through trend_checks.py) — the same text the
+# operators and the EXTRA checks run, so the slot grades the operator.
+# The sampling, dedup-corpus and top-tokens parts and the preview are
+# still written here. Values are pinned by scripts/snapshot_checks.py at
+# all three SFs, and the DuckDB oracle SQL is generated from the same
+# part specs.
 # ---------------------------------------------------------------------------
 
-from sparvi_spark.checks import melt_part_sql, table_views  # noqa: E402
-from sparvi_spark.checks.anomaly_checks import _series_view  # noqa: E402
-from sparvi_spark.checks.trend_checks import (  # noqa: E402
-    SPINE_END,
-    SPINE_START,
-)
-from sparvi_spark.operators.anomalies import format_sql, zscore_sql  # noqa: E402
-from sparvi_spark.operators.trends import spine_sql  # noqa: E402
-
-_HS = ("case when (passing + failing) > 0 then "
-       "round(passing * cast(100 as double) / (passing + failing), 2) end")
+def _melt_statement(spark, parts, texts):
+    """ONE spark.sql statement: each part's text ``texts[tag]`` melted
+    the way ``melted_check`` melts that part's frame."""
+    return spark.sql(" UNION ALL ".join(
+        melt_part_sql(texts[tag], tag, keys, nums, strs)
+        for tag, _f, _sql, keys, nums, strs in parts))
 
 
-def _sp_results(events: str) -> str:
-    # trend_checks._results: validation-result emulation over events
-    return (f"SELECT user_id AS rule_id, event_id, ts AS run_at, "
-            f"(event_type != 'error') AS is_valid FROM {events}")
-
-
-def _sp_latest(src: str, part_keys: str, extra_cols: str = "") -> str:
-    # trends.retain_latest(keys, run_at, 1, tiebreak=[event_id])
-    return (f"SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY "
-            f"{part_keys} ORDER BY run_at DESC, event_id DESC) AS __rn "
-            f"FROM ({src})) WHERE __rn = 1")
-
-
-def _sp_daily_rollup(events: str) -> str:
-    results = (f"SELECT user_id AS rule_id, event_id, ts AS run_at, "
-               f"(event_type != 'error') AS is_valid, to_date(ts) AS day "
-               f"FROM {events}")
-    latest = _sp_latest(results, "rule_id, day")
-    per_day = (f"SELECT day, count(case when is_valid then 1 end) AS passed, "
-               f"count(case when not is_valid then 1 end) AS failed, "
-               f"count(1) AS seen FROM ({latest}) GROUP BY day")
-    spine = spine_sql(SPINE_START, SPINE_END)
-    return (
-        f"SELECT date_format(spine.day, 'yyyy-MM-dd') AS day, "
-        f"coalesce(passed, 0) AS passed, coalesce(failed, 0) AS failed, "
-        f"coalesce(seen, 0) AS seen, "
-        f"case when coalesce(passed, 0) + coalesce(failed, 0) > 0 then "
-        f"round(passed * cast(100 as double) / (passed + failed), 2) end "
-        f"AS health_score "
-        f"FROM ({spine}) spine LEFT JOIN ({per_day}) per_day "
-        f"ON spine.day = per_day.day")
-
-
-def _sp_anomalies(series: str) -> str:
-    # trend_checks._anomalies: zscore @ sensitivity 2 + format_anomalies
-    det = zscore_sql(series, ["metric_name"], sensitivity=2.0)
-    return format_sql(f"({det})", "zscore", ["metric_name"])
-
-
-def _sp_dashboard_combined(events: str, series: str) -> str:
-    daily = (f"SELECT to_date(ts) AS day, count(1) AS total, "
-             f"count(case when severity = 'high' then 1 end) AS high, "
-             f"count(case when severity = 'medium' then 1 end) AS medium, "
-             f"count(case when severity = 'low' then 1 end) AS low "
-             f"FROM ({_sp_anomalies(series)}) GROUP BY to_date(ts)")
-    spine = spine_sql(SPINE_START, SPINE_END)
-    trend = (f"SELECT date_format(day, 'yyyy-MM-dd') AS day, total, high, "
-             f"medium, low FROM (SELECT spine.day, "
-             f"coalesce(total, 0) AS total, coalesce(high, 0) AS high, "
-             f"coalesce(medium, 0) AS medium, coalesce(low, 0) AS low "
-             f"FROM ({spine}) spine LEFT JOIN ({daily}) daily "
-             f"ON spine.day = daily.day)")
-    dd = (f"SELECT date_format(to_date(ts), 'yyyy-MM-dd') AS day, "
-          f"round(cast(sum(cast(value as decimal(18,2))) as double) "
-          f"/ count(value), 4) AS avg_value, "
-          f"count(distinct user_id) AS n_entities, count(1) AS n_rows "
-          f"FROM {events} GROUP BY date_format(to_date(ts), 'yyyy-MM-dd')")
-    return (f"SELECT day, total, high, medium, low, avg_value, n_entities, "
-            f"n_rows FROM ({trend}) LEFT JOIN ({dd}) USING (day)")
-
-
-def _sp_health_summary(events: str) -> str:
-    latest = _sp_latest(_sp_results(events), "rule_id")
-    agg = (f"SELECT count(1) AS total_rules, "
-           f"count(case when is_valid then 1 end) AS passing, "
-           f"count(case when not is_valid then 1 end) AS failing, "
-           f"date_format(max(run_at), 'yyyy-MM-dd HH:mm:ss') AS last_run "
-           f"FROM ({latest})")
-    res2 = (f"SELECT event_type AS grp, user_id AS rule_id, event_id, "
-            f"ts AS run_at, (value > 100) AS is_valid FROM {events}")
-    latest2 = _sp_latest(res2, "grp, rule_id")
-    agg2 = (f"SELECT grp, count(1) AS total_rules, "
-            f"count(case when is_valid then 1 end) AS passing, "
-            f"count(case when not is_valid then 1 end) AS failing, "
-            f"date_format(max(run_at), 'yyyy-MM-dd HH:mm:ss') AS last_run "
-            f"FROM ({latest2}) GROUP BY grp")
-    return (f"SELECT '__overall__' AS grp, total_rules, passing, failing, "
-            f"last_run, {_HS} AS health_score FROM ({agg}) "
-            f"UNION ALL "
-            f"SELECT grp, total_rules, passing, failing, last_run, "
-            f"{_HS} AS health_score FROM ({agg2})")
-
-
-def _sp_anomaly_summary_combined(series: str) -> str:
-    anom = _sp_anomalies(series)
-    sev = (f"SELECT 'severity' AS section, severity AS key, cnt FROM ("
-           f"SELECT severity, count(1) AS cnt FROM ({anom}) "
-           f"GROUP BY severity)")
-    top = (f"SELECT 'top_metric' AS section, metric_name AS key, cnt FROM ("
-           f"SELECT metric_name, cnt FROM (SELECT *, row_number() OVER ("
-           f"ORDER BY cnt DESC, metric_name ASC) AS __rn FROM ("
-           f"SELECT metric_name, count(1) AS cnt FROM ({anom}) "
-           f"GROUP BY metric_name)) WHERE __rn <= 3)")
-    return f"{sev} UNION ALL {top}"
+_T02_PARTS = [
+    ("daily_rollup", q_daily_rollup, SQL_DAILY_ROLLUP, ["day"],
+     ["passed", "failed", "seen", "health_score"], []),
+    ("dashboard_daily", q_dashboard_combined, SQL_DASHBOARD_COMBINED,
+     ["day"],
+     ["total", "high", "medium", "low", "avg_value", "n_entities",
+      "n_rows"], []),
+]
 
 
 def q_rollups_fused(spark, sf_dir):
-    v = table_views(spark, sf_dir, ["events"])
-    series = _series_view(spark, sf_dir)
-    sql = " UNION ALL ".join([
-        melt_part_sql(_sp_daily_rollup(v["events"]), "daily_rollup",
-                      ["day"], ["passed", "failed", "seen", "health_score"],
-                      []),
-        melt_part_sql(_sp_dashboard_combined(v["events"], series),
-                      "dashboard_daily", ["day"],
-                      ["total", "high", "medium", "low", "avg_value",
-                       "n_entities", "n_rows"], []),
-    ])
-    return spark.sql(sql)
+    ev = table_views(spark, sf_dir, ["events"])["events"]
+    return _melt_statement(spark, _T02_PARTS, {
+        "daily_rollup": daily_rollup_sql(ev),
+        "dashboard_daily": dashboard_sql(ev, _series_view(spark, sf_dir))})
+
+
+_T03_PARTS = [
+    ("health_summary", q_health_summary, SQL_HEALTH_SUMMARY, ["grp"],
+     ["total_rules", "passing", "failing", "health_score"], ["last_run"]),
+    ("anomaly_summary", q_anomaly_summary_combined,
+     SQL_ANOMALY_SUMMARY_COMBINED, ["section", "key"], ["cnt"], []),
+]
 
 
 def q_summaries_fused(spark, sf_dir):
-    v = table_views(spark, sf_dir, ["events"])
-    series = _series_view(spark, sf_dir)
-    sql = " UNION ALL ".join([
-        melt_part_sql(_sp_health_summary(v["events"]), "health_summary",
-                      ["grp"],
-                      ["total_rules", "passing", "failing", "health_score"],
-                      ["last_run"]),
-        melt_part_sql(_sp_anomaly_summary_combined(series),
-                      "anomaly_summary", ["section", "key"], ["cnt"], []),
-    ])
-    return spark.sql(sql)
-
-
-def _sp_metric_history(events: str) -> str:
-    from sparvi_spark.checks.trend_checks import FETCH_LIMIT, FETCH_SINCE
-
-    base = (f"SELECT event_type AS metric_name, event_id, "
-            f"value AS metric_value, ts FROM {events}")
-    fetched = (f"SELECT * FROM ({base}) WHERE metric_name = 'click' "
-               f"AND ts >= cast('{FETCH_SINCE}' as timestamp) "
-               f"ORDER BY ts DESC, event_id DESC LIMIT {FETCH_LIMIT}")
-    return (f"SELECT metric_name, event_id, "
-            f"round(metric_value, 4) AS metric_value, "
-            f"date_format(ts, 'yyyy-MM-dd HH:mm:ss') AS ts_s "
-            f"FROM ({fetched})")
+    ev = table_views(spark, sf_dir, ["events"])["events"]
+    return _melt_statement(spark, _T03_PARTS, {
+        "health_summary": health_summary_sql(ev),
+        "anomaly_summary": anomaly_summary_combined_sql(
+            _series_view(spark, sf_dir))})
 
 
 def _sp_top_tokens(documents: str) -> str:
@@ -539,21 +454,22 @@ def _sp_top_tokens(documents: str) -> str:
             f"token ASC) AS rank FROM ({topk})")
 
 
+_P14_PARTS = [
+    ("preview", q_preview, SQL_PREVIEW, ["c_custkey"],
+     ["c_nationkey", "c_acctbal"], ["c_name", "c_mktsegment"]),
+    ("metric_history", q_metric_history, SQL_METRIC_HISTORY,
+     ["metric_name", "event_id"], ["metric_value"], ["ts_s"]),
+    ("top_tokens", q_top_tokens, SQL_TOP_TOKENS, ["token"],
+     ["cnt", "rank"], []),
+]
+
+
 def q_misc_small_fused(spark, sf_dir):
     v = table_views(spark, sf_dir, ["events", "customer", "documents"])
-    sql = " UNION ALL ".join([
-        melt_part_sql(f"SELECT * FROM {v['customer']} "
-                      f"ORDER BY c_custkey LIMIT 50",
-                      "preview", ["c_custkey"],
-                      ["c_nationkey", "c_acctbal"],
-                      ["c_name", "c_mktsegment"]),
-        melt_part_sql(_sp_metric_history(v["events"]), "metric_history",
-                      ["metric_name", "event_id"], ["metric_value"],
-                      ["ts_s"]),
-        melt_part_sql(_sp_top_tokens(v["documents"]), "top_tokens",
-                      ["token"], ["cnt", "rank"], []),
-    ])
-    return spark.sql(sql)
+    return _melt_statement(spark, _P14_PARTS, {
+        "preview": f"SELECT * FROM {v['customer']} ORDER BY c_custkey LIMIT 50",
+        "metric_history": metric_history_sql(v["events"]),
+        "top_tokens": _sp_top_tokens(v["documents"])})
 
 
 # -- x13: fused sampling + dedup_corpus + retention, one statement ---------
@@ -605,14 +521,6 @@ def _sp_dedup_corpus(documents: str) -> str:
             f"AND doc_id NOT IN ({dups}) GROUP BY source")
 
 
-def _sp_retention(events: str) -> str:
-    kept = (f"SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY "
-            f"user_id ORDER BY ts DESC, event_id DESC) AS __rn "
-            f"FROM {events}) WHERE __rn <= 10")
-    return (f"SELECT user_id, count(1) AS kept, "
-            f"sum(event_id) AS id_checksum FROM ({kept}) GROUP BY user_id")
-
-
 def q_id_checksums_fused_sql(spark, sf_dir):
     v = table_views(spark, sf_dir, ["documents", "events"])
     stmts = [_sp_sampling_fused(v["documents"])]
@@ -622,172 +530,59 @@ def q_id_checksums_fused_sql(spark, sf_dir):
     stmts.append(
         f"SELECT 'retention' as part, CAST(user_id AS STRING) AS key, "
         f"kept AS n, id_checksum AS id_checksum "
-        f"FROM ({_sp_retention(v['events'])})")
+        f"FROM ({retention_sql(v['events'])})")
     return spark.sql(" UNION ALL ".join(stmts))
 
 
 # -- x24: numeric + categorical + vocab drift, one statement ---------------
 
-def _sp_numeric_drift(orders: str) -> str:
+_X24_PARTS = [
+    ("numeric", q_numeric_drift, _sql_numeric_drift(), ["column_name"],
+     ["n_expected", "n_actual", "tvd", "chi2"], []),
+    ("categorical", q_categorical_drift, _sql_categorical_drift(),
+     ["category"], ["p_expected", "p_actual", "delta", "abs_delta"], []),
+    # r10: the round-9 vocabulary-drift family, previously EXTRA-only
+    # (e18/e19) — now driver-graded in the drift slot it belongs to
+    ("vocab", q_vocab_drift, _sql_vocab_drift(), ["token"],
+     ["n_a", "n_b", "p_a", "p_b", "delta"], []),
+    ("vocab_tvd", q_vocab_tvd, _sql_vocab_tvd(), [],
+     ["tvd", "n_tokens_union"], []),
+]
+
+
+def q_drift_fused(spark, sf_dir):
+    """x24 Spark side: the drift builders over tagged relations, each
+    ONE scan with a CASE side (the oracle's declared construction; a
+    filtered scan per side reads the table twice per pass). A NULL order
+    date lands on the actual side of the numeric melt (the oracle's
+    CASE) and on neither side of the categorical counts (its per-side
+    WHEREs); a NULL source matches neither ``= 'src0'`` nor
+    ``<> 'src0'``. The vocab and vocab_tvd parts share one counts
+    subplan, so ReusedExchange runs the token pass once."""
     from sparvi_spark.checks.pipeline_checks import (
         DRIFT_BINS,
         DRIFT_COLS,
         DRIFT_SPLIT,
-    )
-    from sparvi_spark.operators.drift import _DEC, bucket_expr
-
-    b = DRIFT_BINS
-    split = f"cast('{DRIFT_SPLIT}' as timestamp)"
-
-    # ONE scan per pass with a CASE side (r12) — the previous two
-    # per-side filtered scans read orders twice per pass (4x per
-    # statement, since m feeds both edges and binned). This is also the
-    # DECLARED construction: the oracle melt is `CASE WHEN o_orderdate <
-    # split THEN 'e' ELSE 'a' END` over one scan (NULL order dates land
-    # in 'a' on both engines; the old per-side WHERE dropped them).
-    # Keys are INTS end to end (r12): the melt emits a column INDEX and
-    # side flag instead of name/'e' strings — string group keys force
-    # every hash aggregate off the fixed-width fast map (the p01 lesson:
-    # 0.81s -> 0.049s for an identical plan at sf0.1); the name attaches
-    # back via a CASE over the final per-column rows.
-    stack = ", ".join(f"{i}, cast(`{c}` as double)"
-                      for i, c in enumerate(DRIFT_COLS))
-    name_case = ("case " + " ".join(
-        f"when __ci = {i} then '{c}'" for i, c in enumerate(DRIFT_COLS))
-        + " end")
-    m = (f"SELECT __ci, v, __e FROM ("
-         f"SELECT stack({len(DRIFT_COLS)}, {stack}) as (__ci, v), "
-         f"case when o_orderdate < {split} then 1 else 0 end as __e "
-         f"FROM {orders}) WHERE v is not null")
-    edges = (f"SELECT __ci, "
-             f"min(case when __e = 1 then v end) AS mn, "
-             f"max(case when __e = 1 then v end) AS mx "
-             f"FROM ({m}) GROUP BY __ci")
-    binned = (f"SELECT /*+ BROADCAST(edges) */ __ci, __e, "
-              f"{bucket_expr(b)} AS b FROM ({m}) m JOIN ({edges}) edges "
-              f"USING (__ci)")
-    counts = (f"SELECT __ci, b, "
-              f"count(case when __e = 1 then 1 end) AS ce, "
-              f"count(case when __e = 0 then 1 end) AS ca "
-              f"FROM ({binned}) GROUP BY __ci, b")
-    pe = (f"((cast(ce as double) + 0.5d) / "
-          f"(cast(ne as double) + 0.5d * {b}))")
-    pa = (f"((cast(ca as double) + 0.5d) / "
-          f"(cast(na as double) + 0.5d * {b}))")
-    terms = (f"SELECT __ci, ne, na, "
-             f"cast(round(abs({pa} - {pe}), 15) as {_DEC}) AS __tvd_t, "
-             f"cast(round(({pa} - {pe}) * ({pa} - {pe}) / {pe}, 15) "
-             f"as {_DEC}) AS __chi2_t FROM ("
-             f"SELECT __ci, ce, ca, "
-             f"sum(ce) OVER (PARTITION BY __ci) AS ne, "
-             f"sum(ca) OVER (PARTITION BY __ci) AS na "
-             f"FROM ({counts}))")
-    pe0 = f"(0.5d / (cast(max(ne) as double) + 0.5d * {b}))"
-    pa0 = f"(0.5d / (cast(max(na) as double) + 0.5d * {b}))"
-    miss = f"cast({b} - count(1) as double)"
-    return (f"SELECT {name_case} AS column_name, n_expected, n_actual, "
-            f"tvd, chi2 FROM (SELECT __ci, "
-            f"max(ne) AS n_expected, max(na) AS n_actual, "
-            f"round(cast((sum(__tvd_t) + cast(round({miss} * "
-            f"abs({pa0} - {pe0}), 15) as {_DEC})) * 0.5 as double), 9) "
-            f"AS tvd, "
-            f"round(cast(sum(__chi2_t) + cast(round({miss} * "
-            f"(({pa0} - {pe0}) * ({pa0} - {pe0}) / {pe0}), 15) "
-            f"as {_DEC}) as double), 9) AS chi2 "
-            f"FROM ({terms}) GROUP BY __ci)")
-
-
-def _sp_categorical_drift(orders: str) -> str:
-    from sparvi_spark.checks.pipeline_checks import DRIFT_SPLIT
-
-    split = f"cast('{DRIFT_SPLIT}' as timestamp)"
-
-    # ONE scan + ONE groupBy (r12) — replaces two per-side scans and a
-    # full-outer join of the per-side aggregates. CASE-counting both
-    # sides in one aggregation yields the same (category, c_e, c_a)
-    # rows: a NULL order date counts in NEITHER case branch (exactly the
-    # oracle's per-side WHERE), and the HAVING reproduces the full-outer
-    # row set (the oracle emits a category iff it has rows on at least
-    # one side; a hypothetical category whose rows all have NULL dates
-    # would otherwise appear here as (0, 0)).
-    both = (f"SELECT category, "
-            f"count(case when o_orderdate < {split} then 1 end) AS c_e, "
-            f"count(case when o_orderdate >= {split} then 1 end) AS c_a "
-            f"FROM (SELECT "
-            f"coalesce(cast(`o_orderpriority` as string), '<<NULL>>') "
-            f"AS category, o_orderdate FROM {orders}) "
-            f"GROUP BY category HAVING c_e > 0 OR c_a > 0")
-    p = (f"SELECT category, "
-         f"round(cast(c_e as double) / ne, 9) AS p_expected, "
-         f"round(cast(c_a as double) / na, 9) AS p_actual, "
-         f"round(cast(c_a as double) / na - cast(c_e as double) / ne, 9) "
-         f"AS delta FROM (SELECT category, c_e, c_a, "
-         f"sum(c_e) OVER () AS ne, sum(c_a) OVER () AS na FROM ({both}))")
-    return (f"SELECT category, p_expected, p_actual, delta, "
-            f"abs(delta) AS abs_delta FROM ({p}) "
-            f"ORDER BY abs_delta DESC, category")
-
-
-def _sp_vocab_base(documents: str) -> str:
-    from sparvi_spark.operators.dedup import tokens_expr
-
-    toks = tokens_expr("text")
-    # ONE scan with a CASE tag (r12; was a two-scan union). The explicit
-    # NOT NULL filter preserves the per-side WHERE semantics both the
-    # old form and the oracle share: a NULL source matches neither
-    # `= 'src0'` nor `<> 'src0'`.
-    tagged = (f"SELECT case when source = 'src0' then 1 else 0 end AS __a, "
-              f"{toks} AS __t FROM {documents} WHERE source IS NOT NULL")
-    counts = (f"SELECT token, cast(sum(__a) as bigint) AS n_a, "
-              f"cast(sum(1 - __a) as bigint) AS n_b FROM ("
-              f"SELECT __a, explode(__t) AS token FROM ({tagged})) "
-              f"GROUP BY token")
-    return (f"SELECT /*+ BROADCAST(tot) */ * FROM ({counts}) CROSS JOIN "
-            f"(SELECT sum(n_a) AS ta, sum(n_b) AS tb FROM ({counts})) tot")
-
-
-def _sp_vocab_drift(documents: str) -> str:
-    from sparvi_spark.checks.pipeline_checks import (
         VOCAB_MIN_COUNT,
         VOCAB_TOP_K,
     )
 
-    pa = "cast(n_a as double) / ta"
-    pb = "cast(n_b as double) / tb"
-    return (f"SELECT token, n_a, n_b, p_a, p_b, delta FROM ("
-            f"SELECT token, n_a, n_b, round({pa}, 9) AS p_a, "
-            f"round({pb}, 9) AS p_b, round({pa} - {pb}, 9) AS delta, "
-            f"abs({pa} - {pb}) AS __absd "
-            f"FROM ({_sp_vocab_base(documents)}) "
-            f"WHERE n_a >= {VOCAB_MIN_COUNT} or n_b >= {VOCAB_MIN_COUNT} "
-            f"ORDER BY __absd DESC, token ASC LIMIT {VOCAB_TOP_K})")
-
-
-def _sp_vocab_tvd(documents: str) -> str:
-    from sparvi_spark.operators.drift import _DEC
-
-    return (f"SELECT round(cast(sum(__t) as double) / 2.0d, 9) AS tvd, "
-            f"count(1) AS n_tokens_union FROM (SELECT "
-            f"cast(round(abs(cast(n_a as double) / ta "
-            f"- cast(n_b as double) / tb), 15) as {_DEC}) AS __t "
-            f"FROM ({_sp_vocab_base(documents)}))")
-
-
-def q_drift_fused(spark, sf_dir):
     v = table_views(spark, sf_dir, ["orders", "documents"])
-    sql = " UNION ALL ".join([
-        melt_part_sql(_sp_numeric_drift(v["orders"]), "numeric",
-                      ["column_name"],
-                      ["n_expected", "n_actual", "tvd", "chi2"], []),
-        melt_part_sql(_sp_categorical_drift(v["orders"]), "categorical",
-                      ["category"],
-                      ["p_expected", "p_actual", "delta", "abs_delta"], []),
-        melt_part_sql(_sp_vocab_drift(v["documents"]), "vocab", ["token"],
-                      ["n_a", "n_b", "p_a", "p_b", "delta"], []),
-        melt_part_sql(_sp_vocab_tvd(v["documents"]), "vocab_tvd", [],
-                      ["tvd", "n_tokens_union"], []),
-    ])
-    return spark.sql(sql)
+    split = f"cast({sql_str(DRIFT_SPLIT)} as timestamp)"
+    cols = ", ".join(ident(c) for c in DRIFT_COLS)
+    num = (f"(SELECT {cols}, case when o_orderdate < {split} then 1 "
+           f"else 0 end AS __side FROM {v['orders']})")
+    cat = (f"(SELECT o_orderpriority, case when o_orderdate < {split} "
+           f"then 1 when o_orderdate >= {split} then 0 end AS __side "
+           f"FROM {v['orders']})")
+    docs = (f"(SELECT text, case when source = 'src0' then 1 else 0 end "
+            f"AS __side FROM {v['documents']} WHERE source IS NOT NULL)")
+    return _melt_statement(spark, _X24_PARTS, {
+        "numeric": numeric_drift_sql(num, DRIFT_COLS, DRIFT_BINS),
+        "categorical": categorical_drift_sql(cat, "o_orderpriority"),
+        "vocab": vocab_drift_sql(docs, "text", VOCAB_TOP_K, VOCAB_MIN_COUNT),
+        "vocab_tvd": vocab_tvd_sql(docs),
+    })
 
 
 CHECKS = {
@@ -797,43 +592,11 @@ CHECKS = {
     # r12: the five slots below keep their generated oracle SQL but build
     # the Spark side as ONE spark.sql statement (see the r12 comment above)
     "x13_id_checksums": (q_id_checksums_fused_sql, _X13_SQL),
-    "t02_rollups": (q_rollups_fused, melted_check([
-        ("daily_rollup", q_daily_rollup, SQL_DAILY_ROLLUP, ["day"],
-         ["passed", "failed", "seen", "health_score"], []),
-        ("dashboard_daily", q_dashboard_combined, SQL_DASHBOARD_COMBINED,
-         ["day"],
-         ["total", "high", "medium", "low", "avg_value", "n_entities",
-          "n_rows"], []),
-    ])[1]),
-    "t03_summaries": (q_summaries_fused, melted_check([
-        ("health_summary", q_health_summary, SQL_HEALTH_SUMMARY, ["grp"],
-         ["total_rules", "passing", "failing", "health_score"],
-         ["last_run"]),
-        ("anomaly_summary", q_anomaly_summary_combined,
-         SQL_ANOMALY_SUMMARY_COMBINED, ["section", "key"], ["cnt"], []),
-    ])[1]),
-    "p14_misc_small": (q_misc_small_fused, melted_check([
-        ("preview", q_preview, SQL_PREVIEW, ["c_custkey"],
-         ["c_nationkey", "c_acctbal"], ["c_name", "c_mktsegment"]),
-        ("metric_history", q_metric_history, SQL_METRIC_HISTORY,
-         ["metric_name", "event_id"], ["metric_value"], ["ts_s"]),
-        ("top_tokens", q_top_tokens, SQL_TOP_TOKENS, ["token"],
-         ["cnt", "rank"], []),
-    ])[1]),
+    "t02_rollups": (q_rollups_fused, melted_check(_T02_PARTS)[1]),
+    "t03_summaries": (q_summaries_fused, melted_check(_T03_PARTS)[1]),
+    "p14_misc_small": (q_misc_small_fused, melted_check(_P14_PARTS)[1]),
     # -- round-5 LLM-pipeline families, now driver-graded ----------------
-    "x24_drift": (q_drift_fused, melted_check([
-        ("numeric", q_numeric_drift, _sql_numeric_drift(), ["column_name"],
-         ["n_expected", "n_actual", "tvd", "chi2"], []),
-        ("categorical", q_categorical_drift, _sql_categorical_drift(),
-         ["category"],
-         ["p_expected", "p_actual", "delta", "abs_delta"], []),
-        # r10: the round-9 vocabulary-drift family, previously EXTRA-only
-        # (e18/e19) — now driver-graded in the drift slot it belongs to
-        ("vocab", q_vocab_drift, _sql_vocab_drift(), ["token"],
-         ["n_a", "n_b", "p_a", "p_b", "delta"], []),
-        ("vocab_tvd", q_vocab_tvd, _sql_vocab_tvd(), [],
-         ["tvd", "n_tokens_union"], []),
-    ])[1]),
+    "x24_drift": (q_drift_fused, melted_check(_X24_PARTS)[1]),
     "x27_doc_scores": (q_doc_scores_fused, _X27_SQL),
     "x26_shard_split": aligned_union_check([
         ("shard_plan", q_shard_plan, _sql_shard_plan(),

@@ -3,6 +3,13 @@
 State-table inputs are emulated deterministically from the events table:
 each event acts as a validation result (rule = user_id, outcome = event_type
 != 'error'), and the anomaly metric series doubles as historical metrics.
+
+The compositions the graded t02/t03/p14/x13 slots melt (daily rollup,
+health summary, dashboard, anomaly summary, metric history, retention)
+are written once, as SQL text over the events and series views
+(``daily_rollup_sql`` ...), from the builders of operators/trends.py.
+The standalone EXTRA checks here and the slot parts in merged_checks.py
+render the same text.
 """
 
 from __future__ import annotations
@@ -10,16 +17,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparvi_spark.checks.anomaly_checks import SERIES_CTE, metric_series
-from sparvi_spark.operators.anomalies import format_anomalies, zscore_anomalies
+from sparvi_spark.checks import table_views
+from sparvi_spark.checks.anomaly_checks import (
+    SERIES_CTE,
+    _series_view,
+    metric_series,
+)
+from sparvi_spark.operators.anomalies import format_sql, zscore_sql
 from sparvi_spark.operators.trends import (
     anomaly_daily_trend,
-    anomaly_summary,
+    anomaly_daily_trend_sql,
+    anomaly_summary_sql,
     anomaly_top_tables,
+    anomaly_top_tables_sql,
     change_frequency,
-    date_spine,
+    change_frequency_sql,
+    fetch_metric_history_sql,
     high_impact_objects,
-    retain_latest,
+    retain_latest_sql,
+    spine_sql,
 )
 from sparvi_spark.testdata import load_table
 
@@ -31,14 +47,21 @@ RESULTS_CTE = (
 )
 
 
-def _results(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, "events", sf_dir)
-    return ev.select(
-        F.col("user_id").alias("rule_id"),
-        F.col("event_id"),
-        F.col("ts").alias("run_at"),
-        (F.col("event_type") != "error").alias("is_valid"),
-    )
+def _events(spark: SparkSession, sf_dir: str) -> str:
+    return table_views(spark, sf_dir, ["events"])["events"]
+
+
+def _results_sql(events: str, valid: str = "event_type != 'error'",
+                 grp: bool = False) -> str:
+    """Each event as a validation result (rule = user_id), optionally
+    grouped by event_type as ``grp``."""
+    return (f"(SELECT {'event_type AS grp, ' if grp else ''}user_id AS "
+            f"rule_id, event_id, ts AS run_at, ({valid}) AS is_valid "
+            f"FROM {events})")
+
+
+def _score(passed: str, failed: str) -> str:
+    return f"round({passed} * cast(100 as double) / ({passed} + {failed}), 2)"
 
 
 # ---------------------------------------------------------------------------
@@ -78,33 +101,25 @@ FROM series GROUP BY metric_name
 # T3 validation daily rollup (latest-per-rule-per-day + date spine densify)
 # ---------------------------------------------------------------------------
 
-def q_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    res = _results(spark, sf_dir)
-    daily = retain_latest(
-        res.withColumn("day", F.to_date("run_at")),
-        ["rule_id", "day"], "run_at", 1, tiebreak=["event_id"],
-    )
-    per_day = daily.groupBy("day").agg(
-        F.count(F.when(F.col("is_valid"), 1)).alias("passed"),
-        F.count(F.when(~F.col("is_valid"), 1)).alias("failed"),
-        F.count(F.lit(1)).alias("seen"),
-    )
-    spine = date_spine(spark, SPINE_START, SPINE_END)
+def daily_rollup_sql(events: str) -> str:
+    latest = retain_latest_sql(
+        f"(SELECT *, to_date(run_at) AS day FROM {_results_sql(events)})",
+        ["rule_id", "day"], "run_at", 1, ["event_id"])
+    per_day = (f"SELECT day, count(case when is_valid then 1 end) AS passed, "
+               f"count(case when not is_valid then 1 end) AS failed, "
+               f"count(1) AS seen FROM ({latest}) GROUP BY day")
     return (
-        spine.join(per_day, "day", "left")
-        .select(
-            F.date_format("day", "yyyy-MM-dd").alias("day"),
-            F.coalesce("passed", F.lit(0)).alias("passed"),
-            F.coalesce("failed", F.lit(0)).alias("failed"),
-            F.coalesce("seen", F.lit(0)).alias("seen"),
-            F.when(
-                (F.coalesce(F.col("passed"), F.lit(0))
-                 + F.coalesce(F.col("failed"), F.lit(0))) > 0,
-                F.round(F.col("passed") * F.lit(100.0)
-                        / (F.col("passed") + F.col("failed")), 2),
-            ).alias("health_score"),
-        )
-    )
+        f"SELECT date_format(spine.day, 'yyyy-MM-dd') AS day, "
+        f"coalesce(passed, 0) AS passed, coalesce(failed, 0) AS failed, "
+        f"coalesce(seen, 0) AS seen, "
+        f"case when coalesce(passed, 0) + coalesce(failed, 0) > 0 then "
+        f"{_score('passed', 'failed')} end AS health_score "
+        f"FROM ({spine_sql(SPINE_START, SPINE_END)}) spine "
+        f"LEFT JOIN ({per_day}) per_day ON spine.day = per_day.day")
+
+
+def q_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.sql(daily_rollup_sql(_events(spark, sf_dir)))
 
 
 SQL_DAILY_ROLLUP = f"""
@@ -130,17 +145,14 @@ FROM spine LEFT JOIN per_day ON spine.day = per_day.day
 # ---------------------------------------------------------------------------
 
 def q_current_health(spark: SparkSession, sf_dir: str) -> DataFrame:
-    res = _results(spark, sf_dir)
-    latest = retain_latest(res, ["rule_id"], "run_at", 1, tiebreak=["event_id"])
-    return latest.agg(
-        F.count(F.when(F.col("is_valid"), 1)).alias("passed"),
-        F.count(F.when(~F.col("is_valid"), 1)).alias("failed"),
-    ).select(
-        "passed", "failed",
-        F.when((F.col("passed") + F.col("failed")) > 0,
-               F.round(F.col("passed") * F.lit(100.0)
-                       / (F.col("passed") + F.col("failed")), 2)).alias("health_score"),
-    )
+    latest = retain_latest_sql(_results_sql(_events(spark, sf_dir)),
+                               ["rule_id"], "run_at", 1, ["event_id"])
+    return spark.sql(
+        f"SELECT passed, failed, case when (passed + failed) > 0 then "
+        f"{_score('passed', 'failed')} end AS health_score FROM (SELECT "
+        f"count(case when is_valid then 1 end) AS passed, "
+        f"count(case when not is_valid then 1 end) AS failed "
+        f"FROM ({latest}))")
 
 
 SQL_CURRENT_HEALTH = f"""
@@ -159,28 +171,6 @@ FROM agg
 # ---------------------------------------------------------------------------
 # T5 per-group validation summary
 # ---------------------------------------------------------------------------
-
-def q_group_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, "events", sf_dir)
-    res = ev.select(
-        F.col("event_type").alias("grp"), F.col("user_id").alias("rule_id"),
-        F.col("event_id"), F.col("ts").alias("run_at"),
-        (F.col("value") > 100).alias("is_valid"),
-    )
-    latest = retain_latest(res, ["grp", "rule_id"], "run_at", 1,
-                           tiebreak=["event_id"])
-    return latest.groupBy("grp").agg(
-        F.count(F.lit(1)).alias("total_rules"),
-        F.count(F.when(F.col("is_valid"), 1)).alias("passing"),
-        F.count(F.when(~F.col("is_valid"), 1)).alias("failing"),
-        F.date_format(F.max("run_at"), "yyyy-MM-dd HH:mm:ss").alias("last_run"),
-    ).withColumn(
-        "health_score",
-        F.when((F.col("passing") + F.col("failing")) > 0,
-               F.round(F.col("passing") * F.lit(100.0)
-                       / (F.col("passing") + F.col("failing")), 2)),
-    )
-
 
 SQL_GROUP_SUMMARY = """
 WITH res AS (SELECT event_type AS grp, user_id AS rule_id, event_id,
@@ -203,18 +193,6 @@ FROM agg
 # T6 dashboard daily metrics (decimal-exact mean)
 # ---------------------------------------------------------------------------
 
-def q_dashboard_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, "events", sf_dir)
-    return ev.groupBy(F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day")).agg(
-        F.round(
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
-            / F.count("value"), 4
-        ).alias("avg_value"),
-        F.countDistinct("user_id").alias("n_entities"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-
-
 SQL_DASHBOARD_DAILY = """
 SELECT strftime(cast(ts as date), '%Y-%m-%d') AS day,
   round(cast(sum(cast(value as decimal(18,2))) as double) / count(value), 4)
@@ -227,9 +205,14 @@ FROM events GROUP BY 1
 # T7 anomaly summary + top tables (from zscore anomalies @ sensitivity 2)
 # ---------------------------------------------------------------------------
 
+def anomalies_sql(series: str) -> str:
+    """zscore @ sensitivity 2 over the series view, formatted."""
+    det = zscore_sql(series, ["metric_name"], sensitivity=2.0)
+    return format_sql(f"({det})", "zscore", ["metric_name"])
+
+
 def _anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    res = zscore_anomalies(metric_series(spark, sf_dir), ["metric_name"], sensitivity=2.0)
-    return format_anomalies(res, "zscore", ["metric_name"])
+    return spark.sql(anomalies_sql(_series_view(spark, sf_dir)))
 
 
 _ANOM_CTE = f"""
@@ -243,11 +226,6 @@ anom AS (SELECT metric_name, ts, value,
  FROM stats WHERE n >= 2
    AND (case when s = 0 then 0.0 else abs((value - m)/s) end) > 1.5)
 """.strip()
-
-
-def q_anomaly_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    an = _anomalies(spark, sf_dir)
-    return anomaly_summary(an)
 
 
 SQL_ANOMALY_SUMMARY = f"""
@@ -332,13 +310,14 @@ QUALIFY row_number() OVER (ORDER BY change_ratio DESC, user_id ASC) <= 10
 # T14 retention (keep newest N per key)
 # ---------------------------------------------------------------------------
 
+def retention_sql(events: str) -> str:
+    kept = retain_latest_sql(events, ["user_id"], "ts", 10, ["event_id"])
+    return (f"SELECT user_id, count(1) AS kept, "
+            f"sum(event_id) AS id_checksum FROM ({kept}) GROUP BY user_id")
+
+
 def q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, "events", sf_dir)
-    kept = retain_latest(ev, ["user_id"], "ts", 10, tiebreak=["event_id"])
-    return kept.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("kept"),
-        F.sum("event_id").alias("id_checksum"),
-    )
+    return spark.sql(retention_sql(_events(spark, sf_dir)))
 
 
 SQL_RETENTION = """
@@ -359,23 +338,9 @@ CURRENT_INTERVAL_H = 24.0
 
 
 def q_refresh_suggestion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, "events", sf_dir)
-    freq = change_frequency(
-        ev.withColumn("changed", F.col("value") > 100),
-        ["event_type"], "ts", "changed",
-    )
-    cur = F.lit(CURRENT_INTERVAL_H)
-    raw = (
-        F.when(F.col("frequency") == "high",
-               F.coalesce(F.col("avg_hours_between_changes") / 3, cur / 2))
-        .when(F.col("frequency") == "low", cur * 2)
-        .otherwise(cur)
-    )
-    return freq.select(
-        "event_type", "frequency",
-        F.round(F.greatest(F.lit(1.0), F.least(F.lit(168.0), raw)), 4)
-        .alias("suggested_interval_hours"),
-    )
+    """T11 alone: the suggestion columns of the t09 statement."""
+    return q_change_analytics(spark, sf_dir).select(
+        "event_type", "frequency", "suggested_interval_hours")
 
 
 SQL_REFRESH_SUGGESTION = """
@@ -440,25 +405,20 @@ FETCH_SINCE = "2024-01-05 00:00:00"
 FETCH_LIMIT = 200
 
 
-def q_metric_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sparvi_spark.operators.trends import fetch_metric_history
-
-    ev = load_table(spark, "events", sf_dir)
-    metrics = ev.select(
-        F.col("event_type").alias("metric_name"),
-        F.col("event_id"),
-        F.col("value").alias("metric_value"),
-        F.col("ts"),
-    )
-    out = fetch_metric_history(
+def metric_history_sql(events: str) -> str:
+    metrics = (f"(SELECT event_type AS metric_name, event_id, "
+               f"value AS metric_value, ts FROM {events})")
+    fetched = fetch_metric_history_sql(
         metrics, metric_name="click", since=FETCH_SINCE, limit=FETCH_LIMIT,
-        ts_col="ts", tiebreak=("event_id",),
-    )
-    return out.select(
-        "metric_name", "event_id",
-        F.round("metric_value", 4).alias("metric_value"),
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
-    )
+        ts_col="ts", tiebreak=("event_id",))
+    return (f"SELECT metric_name, event_id, "
+            f"round(metric_value, 4) AS metric_value, "
+            f"date_format(ts, 'yyyy-MM-dd HH:mm:ss') AS ts_s "
+            f"FROM ({fetched})")
+
+
+def q_metric_history(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.sql(metric_history_sql(_events(spark, sf_dir)))
 
 
 SQL_METRIC_HISTORY = f"""
@@ -478,25 +438,28 @@ ORDER BY ts DESC, event_id DESC LIMIT {FETCH_LIMIT}
 # importable for local runs and the engine API.
 # ---------------------------------------------------------------------------
 
-def q_health_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+def health_summary_sql(events: str) -> str:
     """T4 current health (reshaped to T5's schema as grp='__overall__') +
     T5 per-group summary, unioned."""
-    res = _results(spark, sf_dir)
-    latest = retain_latest(res, ["rule_id"], "run_at", 1, tiebreak=["event_id"])
-    overall = latest.agg(
-        F.count(F.lit(1)).alias("total_rules"),
-        F.count(F.when(F.col("is_valid"), 1)).alias("passing"),
-        F.count(F.when(~F.col("is_valid"), 1)).alias("failing"),
-        F.date_format(F.max("run_at"), "yyyy-MM-dd HH:mm:ss").alias("last_run"),
-    ).select(
-        F.lit("__overall__").alias("grp"),
-        "total_rules", "passing", "failing", "last_run",
-        F.when((F.col("passing") + F.col("failing")) > 0,
-               F.round(F.col("passing") * F.lit(100.0)
-                       / (F.col("passing") + F.col("failing")), 2))
-        .alias("health_score"),
-    )
-    return overall.unionAll(q_group_summary(spark, sf_dir))
+    overall = retain_latest_sql(_results_sql(events), ["rule_id"], "run_at",
+                                1, ["event_id"])
+    per_grp = retain_latest_sql(_results_sql(events, "value > 100", True),
+                                ["grp", "rule_id"], "run_at", 1, ["event_id"])
+    aggs = ("count(1) AS total_rules, "
+            "count(case when is_valid then 1 end) AS passing, "
+            "count(case when not is_valid then 1 end) AS failing, "
+            "date_format(max(run_at), 'yyyy-MM-dd HH:mm:ss') AS last_run")
+    cols = (f"total_rules, passing, failing, last_run, "
+            f"case when (passing + failing) > 0 then "
+            f"{_score('passing', 'failing')} end AS health_score")
+    return (f"SELECT '__overall__' AS grp, {cols} "
+            f"FROM (SELECT {aggs} FROM ({overall})) UNION ALL "
+            f"SELECT grp, {cols} "
+            f"FROM (SELECT grp, {aggs} FROM ({per_grp}) GROUP BY grp)")
+
+
+def q_health_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.sql(health_summary_sql(_events(spark, sf_dir)))
 
 
 SQL_HEALTH_SUMMARY = f"""
@@ -518,11 +481,25 @@ SELECT * FROM ({SQL_GROUP_SUMMARY}) gs
 """.strip()
 
 
-def q_dashboard_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
+def dashboard_sql(events: str, series: str) -> str:
     """T8 anomaly daily trend (spine-densified) LEFT JOIN T6 dashboard
     dailies on day — the reference renders both on one dashboard."""
-    return q_anomaly_daily_trend(spark, sf_dir).join(
-        q_dashboard_daily(spark, sf_dir), "day", "left")
+    trend = anomaly_daily_trend_sql(f"({anomalies_sql(series)})",
+                                    SPINE_START, SPINE_END)
+    dd = (f"SELECT date_format(to_date(ts), 'yyyy-MM-dd') AS day, "
+          f"round(cast(sum(cast(value as decimal(18,2))) as double) "
+          f"/ count(value), 4) AS avg_value, "
+          f"count(distinct user_id) AS n_entities, count(1) AS n_rows "
+          f"FROM {events} GROUP BY date_format(to_date(ts), 'yyyy-MM-dd')")
+    return (f"SELECT day, total, high, medium, low, avg_value, n_entities, "
+            f"n_rows FROM (SELECT date_format(day, 'yyyy-MM-dd') AS day, "
+            f"total, high, medium, low FROM ({trend})) "
+            f"LEFT JOIN ({dd}) USING (day)")
+
+
+def q_dashboard_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.sql(dashboard_sql(_events(spark, sf_dir),
+                                   _series_view(spark, sf_dir)))
 
 
 SQL_DASHBOARD_COMBINED = (
@@ -533,13 +510,17 @@ SQL_DASHBOARD_COMBINED = (
 )
 
 
-def q_anomaly_summary_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
+def anomaly_summary_combined_sql(series: str) -> str:
     """T7 severity summary + top-K tables, both (key, cnt) shaped."""
-    sev = q_anomaly_summary(spark, sf_dir).select(
-        F.lit("severity").alias("section"), F.col("severity").alias("key"), "cnt")
-    top = q_anomaly_top(spark, sf_dir).select(
-        F.lit("top_metric").alias("section"), F.col("metric_name").alias("key"), "cnt")
-    return sev.unionAll(top)
+    anom = f"({anomalies_sql(series)})"
+    return (f"SELECT 'severity' AS section, severity AS key, cnt "
+            f"FROM ({anomaly_summary_sql(anom)}) UNION ALL "
+            f"SELECT 'top_metric' AS section, metric_name AS key, cnt "
+            f"FROM ({anomaly_top_tables_sql(anom, 'metric_name', 3)})")
+
+
+def q_anomaly_summary_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.sql(anomaly_summary_combined_sql(_series_view(spark, sf_dir)))
 
 
 SQL_ANOMALY_SUMMARY_COMBINED = (
@@ -553,34 +534,12 @@ SQL_ANOMALY_SUMMARY_COMBINED = (
 
 def q_change_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T9 change frequency + T11 refresh-interval suggestion — same grain
-    (per event_type), one change_frequency pass feeds both.
-
-    r12: ONE spark.sql statement (was ~30 chained Dataset creations via
-    ``change_frequency`` + the select — each a py4j round trip + eager
-    re-analysis, GIL-serialized under the suite pool; build 0.415s →
-    one call). Expression text mirrors ``operators.trends.
-    change_frequency`` stage for stage — double literals carry the
-    ``d`` suffix so nothing re-types through DECIMAL — and the operator
-    keeps the generic API. Output verified row-identical at 3 SFs."""
-    from sparvi_spark.checks import table_views
-
-    ev = table_views(spark, sf_dir, ["events"])["events"]
+    (per event_type), one ``change_frequency_sql`` pass feeds both, in
+    ONE spark.sql statement over the events view."""
     cur = f"{CURRENT_INTERVAL_H!r}d"
-    flagged = f"SELECT event_type, ts, value > 100 AS changed FROM {ev}"
-    gaps = (f"SELECT event_type, (cast(cast(ts as timestamp) as double) "
-            f"- cast(cast(lag(ts) OVER (PARTITION BY event_type "
-            f"ORDER BY ts) as timestamp) as double)) / 3600.0d AS __gap_h, "
-            f"ts FROM ({flagged}) WHERE changed")
-    gap_stats = (f"SELECT event_type, round(avg(__gap_h), 4) "
-                 f"AS avg_hours_between_changes, max(ts) AS last_change "
-                 f"FROM ({gaps}) GROUP BY event_type")
-    totals = (f"SELECT event_type, count(1) AS total_checks, "
-              f"count(case when changed then 1 end) AS changes "
-              f"FROM ({flagged}) GROUP BY event_type")
-    freq = (f"SELECT *, case when change_ratio >= 0.5d then 'high' "
-            f"when change_ratio >= 0.1d then 'medium' else 'low' end "
-            f"AS frequency FROM (SELECT *, round(changes * cast(1 as "
-            f"double) / total_checks, 4) AS change_ratio FROM ({totals}))")
+    flagged = (f"(SELECT event_type, ts, value > 100 AS changed "
+               f"FROM {_events(spark, sf_dir)})")
+    freq = change_frequency_sql(flagged, ["event_type"], "ts", "changed")
     raw = (f"case when frequency = 'high' then "
            f"coalesce(avg_hours_between_changes / 3, {cur} / 2) "
            f"when frequency = 'low' then {cur} * 2 else {cur} end")
@@ -590,8 +549,7 @@ def q_change_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"AS avg_hours_between_changes, "
         f"date_format(last_change, 'yyyy-MM-dd HH:mm:ss') AS last_change, "
         f"round(greatest(1.0d, least(168.0d, {raw})), 4) "
-        f"AS suggested_interval_hours "
-        f"FROM ({freq}) t LEFT JOIN ({gap_stats}) g USING (event_type)")
+        f"AS suggested_interval_hours FROM ({freq})")
 
 
 SQL_CHANGE_ANALYTICS = """

@@ -22,7 +22,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparvi_spark.functions import local_df, melt_sql
+from sparvi_spark.functions import ident, local_df, melt_sql
 from sparvi_spark.operators.anomalies import detect_anomalies
 from sparvi_spark.operators.profile import profile_table
 from sparvi_spark.operators.schema_diff import (
@@ -686,7 +686,7 @@ class Engine:
                     .withColumnRenamed("text_clean", text_col))
         if curated:
             docs = docs.where(
-                f"`{text_col}` is not null and trim(`{text_col}`) <> ''")
+                f"{ident(text_col)} is not null and trim({ident(text_col)}) <> ''")
             docs = docs.persist()
         try:
             summary = self.screen_corpus(
@@ -730,8 +730,8 @@ class Engine:
             kept = kept.join(pos, id_col, "left_semi")
         deduped = (kept.withColumn(
             "__rn", F.expr(
-                f"row_number() OVER (PARTITION BY xxhash64(`{text_col}`) "
-                f"ORDER BY `{id_col}`)"))
+                f"row_number() OVER (PARTITION BY xxhash64({ident(text_col)}) "
+                f"ORDER BY {ident(id_col)})"))
             .where("__rn = 1").drop("__rn"))
 
         manifest = export_shards(deduped, path, id_col, n_shards,
@@ -783,7 +783,7 @@ class Engine:
                         enc.withColumn(
                             "__shard",
                             F.expr(
-                                f"pmod(xxhash64(`{id_col}`), {n_shards})")),
+                                f"pmod(xxhash64({ident(id_col)}), {n_shards})")),
                         pack_ctx, id_col=id_col, shard_col="__shard")
                 else:
                     raise ValueError(

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sparvi_spark.functions import melt_sql
+from sparvi_spark.functions import ident, melt_sql
 
 # NULL partition keys are first-class: every state row, change-detection
 # compare, scan filter, and purge keys on this sentinel instead of SQL NULL
@@ -37,7 +37,7 @@ NULL_PARTITION = "<<NULL>>"
 
 def partition_key(partition_col: str) -> F.Column:
     """The canonical NULL-safe string partition key."""
-    return F.coalesce(F.col(partition_col).cast("string"),
+    return F.coalesce(F.col(ident(partition_col)).cast("string"),
                       F.lit(NULL_PARTITION))
 
 
@@ -50,8 +50,9 @@ def partition_stats(df: DataFrame, partition_col: str,
             partition_key(partition_col).alias("partition_value"))
             .agg(
                 F.count(F.lit(1)).alias("cnt"),
-                F.count(F.when(F.col(c).isNull(), 1)).alias("nulls"),
-                F.sum(F.col(c).cast("decimal(28,8)")).cast("decimal(38,8)")
+                F.count(F.when(F.col(ident(c)).isNull(), 1)).alias("nulls"),
+                F.sum(F.col(ident(c)).cast("decimal(28,8)"))
+                .cast("decimal(38,8)")
                 .alias("sum_dec"),
                 # decimal(19,4) x decimal(18,4): exact scale-8 product up
                 # to |value| < 10^15 (see validation._STATS_SXX); TRY
@@ -59,15 +60,15 @@ def partition_stats(df: DataFrame, partition_col: str,
                 # crash — rollup_profile reports stddev as NULL for any
                 # column with overflowed rows rather than a wrong value
                 F.sum(F.expr(
-                    f"try_multiply(try_cast(`{c}` as decimal(19,4)), "
-                    f"try_cast(`{c}` as decimal(18,4)))"))
+                    f"try_multiply(try_cast({ident(c)} as decimal(19,4)), "
+                    f"try_cast({ident(c)} as decimal(18,4)))"))
                 .cast("decimal(38,8)").alias("sumsq_dec"),
                 F.count(F.when(
-                    F.col(c).isNotNull() & F.expr(
-                        f"try_cast(`{c}` as decimal(19,4))").isNull(), 1))
+                    F.col(ident(c)).isNotNull() & F.expr(
+                        f"try_cast({ident(c)} as decimal(19,4))").isNull(), 1))
                 .alias("sq_ovfl"),
-                F.min(F.col(c)).cast("double").alias("min_val"),
-                F.max(F.col(c)).cast("double").alias("max_val"),
+                F.min(F.col(ident(c))).cast("double").alias("min_val"),
+                F.max(F.col(ident(c))).cast("double").alias("max_val"),
             ).select("partition_value", F.lit(c).alias("column_name"),
                      "cnt", "nulls", "sum_dec", "sumsq_dec", "sq_ovfl",
                      "min_val", "max_val"))

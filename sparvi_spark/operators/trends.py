@@ -2,68 +2,122 @@
 
 These run over state tables (profiles, validation results, historical
 metrics, schema changes). The reference does them in SQL-over-Postgres or
-Python loops; here each is a declarative DataFrame job: latest-per-key via
+Python loops; here each is a declarative job: latest-per-key via
 row_number windows (deterministic tiebreak — SURVEY §7.9), date spines via
-``F.sequence`` + explode (broadcastable), daily groupBys with
-count(when(...)) pivots.
+``sequence`` + explode (broadcastable), daily groupBys with
+count(case when ...) pivots.
+
+One implementation, two callers: latest-N-per-key, the anomaly summaries
+and daily trend, change frequency, high-impact objects and the metric
+history fetch are each ONE SQL-text builder (``retain_latest_sql`` ...
+``fetch_metric_history_sql``) over a relation ``src`` — a view name or a
+parenthesized query. The DataFrame operators render that text over their
+input; the graded trend checks call the same builders over their event
+and series views. Identifiers go through ``functions.ident`` and
+literals through ``functions.sql_str``, so any column name works.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from sparvi_spark.functions import ident, rel, render_sql, sql_str
+
+# stands in for the input relation while an operator builds its text
+_SRC = rel("src")
+
+
+def _cols(names) -> str:
+    return ", ".join(ident(c) for c in names)
 
 
 def spine_sql(start: str, end: str) -> str:
     """Dense daily spine [start, end] as one ``day`` column (reference:
-    generate_series, core/anomalies/api.py:590-594)."""
-    return (f"SELECT explode(sequence(date '{start}', date '{end}', "
-            f"interval 1 day)) AS day")
+    generate_series, core/anomalies/api.py:590-594). Tiny — broadcast by
+    the optimizer."""
+    return (f"SELECT explode(sequence(date {sql_str(start)}, "
+            f"date {sql_str(end)}, interval 1 day)) AS day")
 
 
-def date_spine(spark: SparkSession, start: str, end: str) -> DataFrame:
-    """``spine_sql`` as a DataFrame. Tiny — broadcast by the optimizer."""
-    return spark.sql(spine_sql(start, end))
+def anomaly_summary_sql(src: str) -> str:
+    """T7 (core/anomalies/api.py:356-488): anomaly counts by severity."""
+    return f"SELECT severity, count(1) AS cnt FROM {src} GROUP BY severity"
 
 
 def anomaly_summary(anomalies: DataFrame) -> DataFrame:
-    """T7 (core/anomalies/api.py:356-488): counts by severity. (Per-table
-    grouping lives in ``anomaly_top_tables``; this function deliberately
-    has no table parameter.)"""
-    return anomalies.groupBy("severity").agg(F.count(F.lit(1)).alias("cnt"))
+    """``anomaly_summary_sql`` over ``anomalies``. (Per-table grouping
+    lives in ``anomaly_top_tables``; this function deliberately has no
+    table parameter.)"""
+    return render_sql(anomalies.sparkSession, anomaly_summary_sql(_SRC),
+                      src=anomalies)
+
+
+def anomaly_top_tables_sql(src: str, table_col: str = "metric_name",
+                           k: int = 10) -> str:
+    """T7 top-K tables by anomaly count (deterministic tiebreak)."""
+    t = ident(table_col)
+    counted = f"SELECT {t}, count(1) AS cnt FROM {src} GROUP BY {t}"
+    return (f"SELECT {t}, cnt FROM (SELECT *, row_number() OVER ("
+            f"ORDER BY cnt DESC, {t} ASC) AS __rn FROM ({counted})) "
+            f"WHERE __rn <= {int(k)}")
 
 
 def anomaly_top_tables(
     anomalies: DataFrame, table_col: str = "metric_name", k: int = 10
 ) -> DataFrame:
-    """T7 top-K tables by anomaly count (deterministic tiebreak)."""
-    counted = anomalies.groupBy(table_col).agg(F.count(F.lit(1)).alias("cnt"))
-    w = Window.orderBy(F.desc("cnt"), F.asc(table_col))
-    return (
-        counted.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k).drop("__rn")
-    )
+    """``anomaly_top_tables_sql`` over ``anomalies``."""
+    return render_sql(anomalies.sparkSession,
+                      anomaly_top_tables_sql(_SRC, table_col, k),
+                      src=anomalies)
+
+
+def anomaly_daily_trend_sql(src: str, start: str, end: str,
+                            ts_col: str = "ts") -> str:
+    """T8 (api.py:569-624): day spine LEFT JOIN daily severity-filtered
+    counts."""
+    day = f"to_date({ident(ts_col)})"
+    sev = ", ".join(f"count(case when severity = {sql_str(s)} then 1 end) "
+                    f"AS {s}" for s in ("high", "medium", "low"))
+    daily = (f"SELECT {day} AS day, count(1) AS total, {sev} "
+             f"FROM {src} GROUP BY {day}")
+    return (f"SELECT spine.day, coalesce(total, 0) AS total, "
+            f"coalesce(high, 0) AS high, coalesce(medium, 0) AS medium, "
+            f"coalesce(low, 0) AS low FROM ({spine_sql(start, end)}) spine "
+            f"LEFT JOIN ({daily}) daily ON spine.day = daily.day")
 
 
 def anomaly_daily_trend(
     anomalies: DataFrame, spark: SparkSession, start: str, end: str,
     ts_col: str = "ts",
 ) -> DataFrame:
-    """T8 (api.py:569-624): day spine LEFT JOIN daily severity-filtered counts."""
-    daily = anomalies.groupBy(F.to_date(ts_col).alias("day")).agg(
-        F.count(F.lit(1)).alias("total"),
-        F.count(F.when(F.col("severity") == "high", 1)).alias("high"),
-        F.count(F.when(F.col("severity") == "medium", 1)).alias("medium"),
-        F.count(F.when(F.col("severity") == "low", 1)).alias("low"),
-    )
-    spine = date_spine(spark, start, end)
-    return spine.join(daily, spine.day == daily.day, "left").select(
-        spine.day,
-        F.coalesce("total", F.lit(0)).alias("total"),
-        F.coalesce("high", F.lit(0)).alias("high"),
-        F.coalesce("medium", F.lit(0)).alias("medium"),
-        F.coalesce("low", F.lit(0)).alias("low"),
-    )
+    """``anomaly_daily_trend_sql`` over ``anomalies``."""
+    return render_sql(spark, anomaly_daily_trend_sql(_SRC, start, end, ts_col),
+                      src=anomalies)
+
+
+def change_frequency_sql(src: str, keys: list[str], ts_col: str,
+                         changed_col: str = "change_detected") -> str:
+    """T9 (core/metadata/change_analytics.py:80-177): per object,
+    change_ratio = changes/checks bucketed high(>=0.5)/medium(>=0.1)/low,
+    avg hours between changes (lag window), most recent change. Double
+    literals carry the ``d`` suffix so nothing re-types through DECIMAL."""
+    k, ts, changed = _cols(keys), ident(ts_col), ident(changed_col)
+    gaps = (f"SELECT {k}, (cast(cast({ts} as timestamp) as double) "
+            f"- cast(cast(lag({ts}) OVER (PARTITION BY {k} "
+            f"ORDER BY {ts}) as timestamp) as double)) / 3600.0d AS __gap_h, "
+            f"{ts} FROM {src} WHERE {changed}")
+    gap_stats = (f"SELECT {k}, round(avg(__gap_h), 4) "
+                 f"AS avg_hours_between_changes, max({ts}) AS last_change "
+                 f"FROM ({gaps}) GROUP BY {k}")
+    totals = (f"SELECT {k}, count(1) AS total_checks, "
+              f"count(case when {changed} then 1 end) AS changes "
+              f"FROM {src} GROUP BY {k}")
+    freq = (f"SELECT *, case when change_ratio >= 0.5d then 'high' "
+            f"when change_ratio >= 0.1d then 'medium' else 'low' end "
+            f"AS frequency FROM (SELECT *, round(changes * cast(1 as "
+            f"double) / total_checks, 4) AS change_ratio FROM ({totals}))")
+    return f"SELECT * FROM ({freq}) t LEFT JOIN ({gap_stats}) g USING ({k})"
 
 
 def change_frequency(
@@ -72,51 +126,33 @@ def change_frequency(
     ts_col: str,
     changed_col: Column | str = "change_detected",
 ) -> DataFrame:
-    """T9 (core/metadata/change_analytics.py:80-177): per object,
-    change_ratio = changes/checks bucketed high(>=0.5)/medium(>=0.1)/low,
-    avg hours between changes (lag window), most recent change."""
-    changed = F.col(changed_col) if isinstance(changed_col, str) else changed_col
-    w = Window.partitionBy(*keys).orderBy(ts_col)
-    gaps = (
-        df.where(changed)
-        .withColumn("__prev", F.lag(ts_col).over(w))
-        .withColumn(
-            "__gap_h",
-            (F.col(ts_col).cast("timestamp").cast("double")
-             - F.col("__prev").cast("timestamp").cast("double")) / 3600.0,
-        )
-    )
-    gap_stats = gaps.groupBy(*keys).agg(
-        F.round(F.avg("__gap_h"), 4).alias("avg_hours_between_changes"),
-        F.max(ts_col).alias("last_change"),
-    )
-    totals = df.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("total_checks"),
-        F.count(F.when(changed, 1)).alias("changes"),
-    ).withColumn(
-        "change_ratio",
-        F.round(F.col("changes") * F.lit(1.0) / F.col("total_checks"), 4),
-    ).withColumn(
-        "frequency",
-        F.when(F.col("change_ratio") >= 0.5, "high")
-        .when(F.col("change_ratio") >= 0.1, "medium")
-        .otherwise("low"),
-    )
-    return totals.join(gap_stats, keys, "left")
+    """``change_frequency_sql`` over ``df``; a Column flag rides in as
+    the ``__changed`` column."""
+    if isinstance(changed_col, Column):
+        df, changed_col = df.withColumn("__changed", changed_col), "__changed"
+    return render_sql(df.sparkSession,
+                      change_frequency_sql(_SRC, keys, ts_col, changed_col),
+                      src=df)
+
+
+def high_impact_objects_sql(src: str, keys: list[str], min_changes: int = 5,
+                            k: int = 10) -> str:
+    """T10 (change_analytics.py:295-323): HAVING changes>=N, top-K by
+    ratio (deterministic tiebreak on key) over ``change_frequency_sql``
+    rows."""
+    order = ", ".join(f"{ident(c)} ASC" for c in keys)
+    return (f"SELECT * EXCEPT (__rn) FROM (SELECT *, row_number() OVER ("
+            f"ORDER BY change_ratio DESC, {order}) AS __rn FROM {src} "
+            f"WHERE changes >= {int(min_changes)}) WHERE __rn <= {int(k)}")
 
 
 def high_impact_objects(
     freq: DataFrame, keys: list[str], min_changes: int = 5, k: int = 10
 ) -> DataFrame:
-    """T10 (change_analytics.py:295-323): HAVING changes>=N, top-K by ratio
-    (deterministic tiebreak on key)."""
-    w = Window.orderBy(F.desc("change_ratio"), *[F.asc(c) for c in keys])
-    return (
-        freq.where(F.col("changes") >= min_changes)
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    """``high_impact_objects_sql`` over ``freq``."""
+    return render_sql(freq.sparkSession,
+                      high_impact_objects_sql(_SRC, keys, min_changes, k),
+                      src=freq)
 
 
 def usage_patterns(
@@ -157,6 +193,32 @@ def usage_patterns(
     return out
 
 
+def fetch_metric_history_sql(
+    src: str,
+    metric_name: str | None = None,
+    table_name: str | None = None,
+    column_name: str | None = None,
+    since: str | None = None,
+    limit: int | None = None,
+    ts_col: str = "timestamp",
+    tiebreak: tuple[str, ...] = (),
+) -> str:
+    """T13 (historical_metrics.py:165-217): filter + order + limit.
+
+    ``tiebreak`` columns make the LIMIT cutoff deterministic under equal
+    timestamps (SURVEY §7.9 latest-per-key discipline).
+    """
+    conds = [f"{ident(c)} = {sql_str(v)}" for c, v in (
+        ("metric_name", metric_name), ("table_name", table_name),
+        ("column_name", column_name)) if v is not None]
+    if since is not None:
+        conds.append(f"{ident(ts_col)} >= cast({sql_str(since)} as timestamp)")
+    where = f" WHERE {' AND '.join(conds)}" if conds else ""
+    order = ", ".join(f"{ident(c)} DESC" for c in (ts_col, *tiebreak))
+    lim = f" LIMIT {int(limit)}" if limit is not None else ""
+    return f"SELECT * FROM {src}{where} ORDER BY {order}{lim}"
+
+
 def fetch_metric_history(
     metrics: DataFrame,
     metric_name: str | None = None,
@@ -167,42 +229,43 @@ def fetch_metric_history(
     ts_col: str = "timestamp",
     tiebreak: tuple[str, ...] = (),
 ) -> DataFrame:
-    """T13 (historical_metrics.py:165-217): filter + order + limit.
+    """``fetch_metric_history_sql`` over ``metrics``."""
+    return render_sql(metrics.sparkSession, fetch_metric_history_sql(
+        _SRC, metric_name, table_name, column_name, since, limit, ts_col,
+        tiebreak), src=metrics)
 
-    ``tiebreak`` columns make the LIMIT cutoff deterministic under equal
-    timestamps (SURVEY §7.9 latest-per-key discipline).
-    """
-    out = metrics
-    if metric_name is not None:
-        out = out.where(F.col("metric_name") == metric_name)
-    if table_name is not None:
-        out = out.where(F.col("table_name") == table_name)
-    if column_name is not None:
-        out = out.where(F.col("column_name") == column_name)
-    if since is not None:
-        out = out.where(F.col(ts_col) >= F.lit(since).cast("timestamp"))
-    out = out.orderBy(F.col(ts_col).desc(), *[F.col(c).desc() for c in tiebreak])
-    if limit is not None:
-        out = out.limit(limit)
-    return out
+
+def latest_rank_sql(keys: list[str], order_col: str,
+                    tiebreak: list[str] | None = None) -> str:
+    """Newest-first row number per key: ``order_col`` then ``tiebreak``,
+    all descending."""
+    order = ", ".join(f"{ident(c)} DESC" for c in [order_col, *(tiebreak or [])])
+    return f"row_number() OVER (PARTITION BY {_cols(keys)} ORDER BY {order})"
+
+
+def retain_latest_sql(src: str, keys: list[str], order_col: str, n: int,
+                      tiebreak: list[str] | None = None) -> str:
+    """Keep the newest ``n`` rows per key — T14 retention
+    (supabase_manager.py:275-305) and, with ``n=1``, latest-per-key
+    (``ORDER BY run_at DESC LIMIT 1`` per rule, backend/app.py:4462-4471,
+    4556-4596). ``tiebreak`` columns, also descending, make the cutoff
+    deterministic under equal ``order_col`` values (SURVEY §7.9)."""
+    return (f"SELECT * EXCEPT (__rn) FROM (SELECT *, "
+            f"{latest_rank_sql(keys, order_col, tiebreak)} AS __rn "
+            f"FROM {src}) WHERE __rn <= {int(n)}")
 
 
 def retain_latest(
     df: DataFrame, keys: list[str], order_col: str, n: int,
     tiebreak: list[str] | None = None,
 ) -> DataFrame:
-    """Keep the newest ``n`` rows per key — T14 retention
-    (supabase_manager.py:275-305) and, with ``n=1``, latest-per-key
-    (``ORDER BY run_at DESC LIMIT 1`` per rule, backend/app.py:4462-4471,
-    4556-4596). ``tiebreak`` columns, also descending, make the cutoff
-    deterministic under equal ``order_col`` values (SURVEY §7.9)."""
-    order = [F.col(order_col).desc()] + [F.col(c).desc() for c in (tiebreak or [])]
-    w = Window.partitionBy(*keys).orderBy(*order)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= n)
-        .drop("__rn")
-    )
+    """``retain_latest_sql`` over ``df``. The rank text applies through
+    ``F.expr`` rather than a render: ``Engine.run_anomaly_detection`` and
+    ``StateStore.retain_latest`` call this on every run, and a render
+    registers a temp view per call."""
+    return (df.withColumn("__rn", F.expr(latest_rank_sql(keys, order_col,
+                                                          tiebreak)))
+            .where(F.col("__rn") <= n).drop("__rn"))
 
 
 def profile_trends(

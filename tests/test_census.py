@@ -204,6 +204,8 @@ TEST_ONLY = {
     "sparvi_spark/operators/text.py:dedup_lines_in_doc",
     "sparvi_spark/operators/text.py:pack_summary",
     "sparvi_spark/operators/text.py:binpack_summary",
+    "sparvi_spark/operators/trends.py:anomaly_summary",
+    "sparvi_spark/operators/trends.py:fetch_metric_history",
     "sparvi_spark/operators/validation.py:evaluate_rule",
     "sparvi_spark/operators/vectors.py:l2_normalize_expr",
     "sparvi_spark/operators/vectors.py:pca_train",

@@ -8,7 +8,7 @@ from sparvi_spark.functions import (
     not_regexp,
     similar_to,
 )
-from sparvi_spark.operators.trends import date_spine
+from sparvi_spark.operators.trends import spine_sql
 
 
 def test_similar_to_is_anchored(spark):
@@ -52,5 +52,6 @@ def test_generate_series_days(spark):
     """Postgres generate_series(date, date, interval '1 day'): both ends
     inclusive, one row per day."""
     days = [r["day"].isoformat() for r in
-            date_spine(spark, "2026-01-30", "2026-02-02").orderBy("day").collect()]
+            spark.sql(spine_sql("2026-01-30", "2026-02-02")).orderBy("day")
+            .collect()]
     assert days == ["2026-01-30", "2026-01-31", "2026-02-01", "2026-02-02"]

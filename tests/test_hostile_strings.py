@@ -253,3 +253,88 @@ def test_hostile_column_names_melt_like_plain_twins(spark, tmp_path):
     plain = profile.numeric_histogram(df, "plain", bins=4).collect()
     for n in HOSTILE_NAMES:
         assert profile.numeric_histogram(df, n, bins=4).collect() == plain, n
+
+
+def test_hostile_column_names_incremental_profile_like_plain_twins(spark):
+    """The incremental profiler gives a hostile-named numeric column, and
+    runs on a hostile-named partition column, exactly like the plain
+    twin: both resolve through ``functions.ident``."""
+    from pyspark.sql import types as T
+
+    from sparvi_spark.functions import ident, local_df
+    from sparvi_spark.operators.incremental import incremental_profile_full
+
+    names = ["plain"] + HOSTILE_NAMES
+    nums = [1.5, None, 2.25, 1.5, -3.0, 0.0, 1.5, 4.0]
+    parts = ["p0", "p0", "p1", None, "p1", "p2", "p2", "p0"]
+    schema = T.StructType([T.StructField("part", T.StringType())] + [
+        T.StructField(n, T.DoubleType()) for n in names])
+    df = local_df(spark, [(p,) + (v,) * len(names)
+                          for p, v in zip(parts, nums)], schema)
+
+    _, prof = incremental_profile_full(df, "part", names)
+    got = {r["column_name"]: sorted((k, v) for k, v in r.asDict().items()
+                                    if k != "column_name")
+           for r in prof.collect()}
+    assert set(got) == set(names)
+    for n in HOSTILE_NAMES:
+        assert got[n] == got["plain"], n
+
+    def by_partition(pcol):
+        states, prof = incremental_profile_full(
+            df.selectExpr(f"part AS {ident(pcol)}", "plain AS x"), pcol,
+            ["x"])
+        return (sorted(tuple(r) for r in states["stats"].collect()),
+                [tuple(r) for r in prof.collect()])
+
+    want = by_partition("plain")
+    for n in HOSTILE_NAMES:
+        assert by_partition(n) == want, n
+
+
+def test_hostile_column_names_trend_and_drift_operators_like_plain_twins(
+        spark):
+    """Every trend and drift operator quotes its key, order, flag and
+    text columns through ``functions.ident``: with each column renamed to
+    a hostile name, the operators give the plain-named frame's rows."""
+    from datetime import datetime
+
+    from sparvi_spark.functions import ident, local_df
+    from sparvi_spark.operators import drift, trends
+
+    keys = ["u1", "u1", "u1", "u2", "u2", "u3", "u1", "u2"]
+    rows = [(k, i, datetime(2024, 1, 1 + i % 3, i), i % 2 == 0, i * 1.5,
+             f"tok{i % 3} tok{i % 2} w", ["low", "high"][i % 2])
+            for i, k in enumerate(keys)]
+    base = local_df(spark, rows, "k string, id bigint, ts timestamp, "
+                                 "flag boolean, v double, txt string, "
+                                 "severity string")
+
+    def results(n):
+        c = {x: n if x == "k" else f"{n}_{x}"
+             for x in ("k", "id", "ts", "flag", "v", "txt")}
+        df = base.selectExpr(*[f"{x} AS {ident(c[x])}" for x in c],
+                             "severity")
+        e, a = df.where(f"{ident(c['id'])} < 5"), df.where(
+            f"{ident(c['id'])} >= 3")
+        freq = trends.change_frequency(df, [n], c["ts"], c["flag"])
+        frames = [
+            trends.retain_latest(df, [n], c["ts"], 2, [c["id"]]),
+            freq,
+            trends.high_impact_objects(freq, [n], min_changes=1, k=2),
+            trends.anomaly_top_tables(df, n, k=2),
+            trends.anomaly_daily_trend(df, spark, "2024-01-01",
+                                       "2024-01-04", c["ts"]),
+            trends.fetch_metric_history(df, since="2024-01-02", limit=3,
+                                        ts_col=c["ts"], tiebreak=(c["id"],)),
+            drift.numeric_drift(e, a, [c["v"]], bins=4).drop("column_name"),
+            drift.categorical_drift(e, a, n),
+            drift.vocab_drift(e, a, c["txt"], top_k=5),
+            drift.vocab_tvd(e, a, c["txt"]),
+        ]
+        return [sorted(map(tuple, f.collect()), key=repr) for f in frames]
+
+    want = results("plain")
+    assert all(want)
+    for n in HOSTILE_NAMES:
+        assert results(n) == want, n
